@@ -454,91 +454,74 @@ object Ann {
     searchWithProbes(store, embCol, idCol, probes, qidCol, k)
   }
 
-  /** Two-stage search over an int8-quantized store: candidates by
-    * cosine on the DEQUANTIZED codes (the 4×-smaller artifact a
-    * 100 TB deployment scans — derived inline here so the query stays
-    * self-contained; an [[graft.sources.IndexStore]] would persist
-    * (codes, mn, scale) and never read the fp vectors in stage one),
-    * then exact-cosine rerank of the top `k·candMult` survivors only.
-    * Both stages are TakeOrderedAndProject with (score desc, id)
-    * total order, so results are deterministic and oracle-checkable;
-    * quantization arithmetic is identical to the s3 fidelity query.
-    * Recall is governed by candMult — the exact stage restores order
-    * among survivors but cannot resurrect a candidate the quantized
-    * metric dropped (measured in AnnSpec against exact kNN). */
-  def quantizedSearch(corpus: DataFrame, embCol: String, idCol: String,
-                      queryVec: Column, k: Int, candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    val emb = col(embCol).cast("array<double>")
-    val cand = corpus
-      .withColumn("__mn", array_min(emb))
-      .withColumn("__mx", array_max(emb))
-      .withColumn("__sc", when(col("__mx") === col("__mn"), lit(1.0))
-        .otherwise((col("__mx") - col("__mn")) / 255.0))
-      // the stored artifact: int codes + (mn, scale) per vector
-      .withColumn("__codes", transform(emb, x =>
-        round((x - col("__mn")) / col("__sc"), 0).cast("int")))
-      .withColumn("__deq", transform(col("__codes"), c =>
-        c.cast("double") * col("__sc") + col("__mn")))
-      .withColumn("approx_cos", VectorFunctions.cosine(col("__deq"), queryVec))
-      .orderBy(desc("approx_cos"), col(idCol))
-      .limit(k * candMult)
-    cand
-      .withColumn("cos", VectorFunctions.cosine(emb, queryVec))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("approx_cos"), col("cos"))
-  }
+  // ---------------------------------------------------------------------
+  // int8 (scalar) quantization: per-vector affine codes 0..255, 4×
+  // smaller than fp32. Stage one ranks by cosine on the dequantized
+  // codes; the arithmetic is identical to the s3 fidelity query.
+  // ---------------------------------------------------------------------
 
-  /** The int8 artifact [[quantizedSearch]] derives inline, as a
-    * write-once table: per-vector affine codes 0..255 plus the (mn,
-    * scale) pair needed to dequantize. Stored, this is the 4×-smaller
-    * representation a 100 TB deployment scans in stage one — the s3
-    * fidelity query measures exactly this round-trip. */
+  /** The int8 artifact as a write-once table: per-vector affine codes
+    * 0..255 plus the (mn, scale) pair needed to dequantize. Stored,
+    * this is the 4×-smaller representation a 100 TB deployment scans
+    * in stage one — the s3 fidelity query measures exactly this
+    * round-trip. */
   def quantizedEncode(corpus: DataFrame, embCol: String,
-                      idCol: String): DataFrame = {
+                      idCol: String): DataFrame =
+    int8Codes(corpus, embCol)
+      .select(col(idCol), col("q_codes"), col("q_mn"), col("q_scale"))
+
+  /** `corpus` with its int8 artifact columns (q_codes, q_mn, q_scale)
+    * appended — [[quantizedEncode]]'s table, or the inline code table
+    * of [[quantizedSearch]]. */
+  private def int8Codes(corpus: DataFrame, embCol: String): DataFrame = {
     val emb = col(embCol).cast("array<double>")
     corpus
-      .withColumn("__mn", array_min(emb))
+      .withColumn("q_mn", array_min(emb))
       .withColumn("__mx", array_max(emb))
-      .withColumn("__sc", when(col("__mx") === col("__mn"), lit(1.0))
-        .otherwise((col("__mx") - col("__mn")) / 255.0))
-      .select(col(idCol),
-        transform(emb, x =>
-          round((x - col("__mn")) / col("__sc"), 0).cast("int")).as("q_codes"),
-        col("__mn").as("q_mn"), col("__sc").as("q_scale"))
+      .withColumn("q_scale", when(col("__mx") === col("q_mn"), lit(1.0))
+        .otherwise((col("__mx") - col("q_mn")) / 255.0))
+      .withColumn("q_codes", transform(emb, x =>
+        round((x - col("q_mn")) / col("q_scale"), 0).cast("int")))
+      .drop("__mx")
   }
 
-  /** Two-stage search SERVED from a stored [[quantizedEncode]] table
-    * (the s8 treatment applied to the int8 family): stage one scans
-    * ONLY the code table — 4× smaller than the fp corpus, and the fp
-    * vectors are never read — stage two fetches the k·candMult
-    * survivors' exact vectors by broadcast join and reranks. Same
-    * dequantize arithmetic, same (score desc, id) total orders and
-    * cuts as [[quantizedSearch]], so the two are row-identical by
-    * construction and share one oracle. Null codes fail loudly via
-    * the same null-first hazard guard as [[pqSearchEncoded]]. */
+  /** The int8 rung: approximate cosine on the dequantized codes, exact
+    * cosine rerank (AnnSpec measures its recall against exact kNN). */
+  private def int8(who: String): Quantizer = Quantizer(who, "q_codes",
+    prep = identity,
+    approx = qv => VectorFunctions.cosine(transform(col("q_codes"), c =>
+      c.cast("double") * col("q_scale") + col("q_mn")), qv),
+    width = qv => (size(qv), concat(lit(" components but the query has "),
+      size(qv).cast("string"),
+      lit(" — the table was encoded at a different dimension; id "))),
+    queryDim = None,
+    approxScore = Score("approx_cos", asc = false),
+    exact = VectorFunctions.cosine, exactScore = Score("cos", asc = false))
+
+  /** int8 rung over codes derived inline from `corpus`. */
+  def quantizedSearch(corpus: DataFrame, embCol: String, idCol: String,
+                      queryVec: Column, k: Int, candMult: Int = 4): DataFrame =
+    serveQuantized(int8("quantizedSearch"), int8Codes(corpus, embCol), None,
+      embCol, idCol, OneColumn(queryVec), k, candMult)
+
+  /** int8 rung served from a stored [[quantizedEncode]] table. */
   def quantizedSearchEncoded(encoded: DataFrame, vectors: DataFrame,
                              embCol: String, idCol: String,
                              queryVec: Column, k: Int,
-                             candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    val deq = transform(col("q_codes"), c =>
-      c.cast("double") * col("q_scale") + col("q_mn"))
-    val survivors = encoded
-      .filter(col("q_codes").isNotNull)
-      .select(col(idCol),
-        VectorFunctions.cosine(deq, queryVec).as("approx_cos"))
-      .orderBy(desc("approx_cos"), col(idCol))
-      .limit(k * candMult)
-    broadcast(survivors)
-      .join(vectors.select(col(idCol), col(embCol)), Seq(idCol))
-      .withColumn("cos",
-        VectorFunctions.cosine(col(embCol).cast("array<double>"), queryVec))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("approx_cos"), col("cos"))
-  }
+                             candMult: Int = 4): DataFrame =
+    serveQuantized(int8("quantizedSearchEncoded"), encoded, Some(vectors),
+      embCol, idCol, OneColumn(queryVec), k, candMult)
+
+  /** int8 rung served from a stored [[quantizedEncode]] table, for a
+    * query frame. */
+  def quantizedSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
+                                  embCol: String, idCol: String,
+                                  queries: DataFrame, qidCol: String,
+                                  qvecCol: String, k: Int,
+                                  candMult: Int = 4): DataFrame =
+    serveQuantized(int8("quantizedSearchEncodedBatch"), encoded,
+      Some(vectors), embCol, idCol, QueryFrame(queries, qidCol, qvecCol),
+      k, candMult)
 
   // ---------------------------------------------------------------------
   // Product quantization (Jégou, Douze, Schmid 2011: "Product
@@ -550,9 +533,13 @@ object Ann {
   // Search is ADC (asymmetric distance computation): the query
   // precomputes an m×k lookup table of subspace squared distances ONCE,
   // and each stored vector's approximate distance is m table lookups —
-  // no decode, no per-vector arithmetic beyond m adds.
+  // no decode, no per-vector arithmetic beyond m adds. IVF+PQ is the
+  // paper's IVFADC composition (FAISS's IndexIVFPQ): the coarse
+  // quantizer prunes to `nprobe` clusters, PQ scores inside them, and
+  // over a partitionBy(cluster_id) code table the two prunings
+  // multiply — the scan reads only probed directories, and in them only
+  // the m-byte codes.
   // ---------------------------------------------------------------------
-
   /** Slice `emb` into subspace `j` of `m` equal parts (1-based slice;
     * caller guarantees dim % m == 0 — enforced at codebook build). */
   private def subvec(emb: Column, j: Int, subDim: Int): Column =
@@ -683,175 +670,93 @@ object Ann {
     corpus.withColumn("pq_codes", enc(col(embCol).cast("array<double>")))
   }
 
-  /** Two-stage PQ search: ADC candidates from the m-byte codes, exact
-    * rerank of the top `k·candMult` survivors. The query-side LUT
-    * (subspace squared distance to every codeword — m·kCodes doubles)
-    * inlines as literal arrays, so the ADC score is m element_at
-    * lookups + adds per row: narrow, codegen'd, and the ONLY thing
-    * stage one reads is `pq_codes` (at 100 TB: a ~1% scan). Codes are
-    * derived inline here so the query stays self-contained — a real
-    * deployment persists `pq_codes` at index-build time ([[pqEncode]]'s
-    * artifact) and stage one never touches the fp vectors. Both cuts
-    * are total-ordered ((dist asc, id) — [[quantizedSearch]]'s
-    * contract), so the result is deterministic and oracle-checkable.
-    * Recall is governed by candMult and codebook quality (measured in
-    * AnnSpec against exact kNN, the v9/v10 pattern). */
+  /** The PQ rung: ADC distance from the query's m × nCodes lookup
+    * table, exact L2 rerank. The table is subspace squared L2 by the
+    * same left fold as [[l2sqStrict]] (vector_l2sq); the ADC sum is j
+    * ascending, left-assoc adds, sqrt last — the fold the oracles
+    * mirror. Recall is governed by candMult and codebook quality
+    * (AnnSpec measures it against exact kNN). */
+  private def pq(who: String, codebooks: DataFrame): Quantizer = {
+    val cbs = collectCodebooks(codebooks)
+    val (m, subDim) = (cbs.length, cbs(0)(0).length)
+    Quantizer(who, "pq_codes",
+      prep = qv => array(cbs.indices.map(j =>
+        transform(typedlit(cbs(j).toSeq.map(_.toSeq)), cw =>
+          VectorFunctions.l2Sq(subvec(qv, j, subDim), cw))): _*),
+      approx = lut => sqrt(cbs.indices.map(j => element_at(element_at(lut, j + 1),
+        element_at(col("pq_codes"), j + 1) + 1)).reduce(_ + _)),
+      width = _ => (lit(m), lit(s" codes but the codebook has $m subspaces — " +
+        "the table was encoded with a different codebook; id ")),
+      queryDim = Some(QueryDim(m * subDim)),
+      approxScore = Score("approx_dist", asc = true, "ADC distance"),
+      exact = VectorFunctions.l2, exactScore = RerankL2)
+  }
+
+  /** PQ rung over codes derived inline from `corpus`. Encoding is
+    * ~90% of this query (s8 serves the stored table instead); it uses
+    * [[pqEncodeBig]] because the expression encoder is too wide for
+    * whole-stage codegen (sf0.1, m=4, kCodes=16: 2.76 s vs 0.11 s). */
   def pqSearch(corpus: DataFrame, embCol: String, idCol: String,
                codebooks: DataFrame, queryVec: Array[Double],
-               k: Int, candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    val cbs = collectCodebooks(codebooks)
-    val subDim = cbs(0)(0).length
-    require(queryVec.length == cbs.length * subDim,
-      s"query dim ${queryVec.length} != ${cbs.length}·$subDim")
-    val luts = cbs.indices.map { j =>
-      val qSub = queryVec.slice(j * subDim, (j + 1) * subDim)
-      typedlit(cbs(j).map(cw => l2sqStrict(qSub, cw)).toSeq)
-    }
-    // j ascending, left-assoc adds — the oracle mirrors this exact fold
-    val adc = cbs.indices
-      .map(j => element_at(luts(j), element_at(col("pq_codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val emb = col(embCol).cast("array<double>")
-    // null embeddings carry null pq_codes (pqEncode's contract) → null
-    // approx_dist, which Spark's ASC default sorts FIRST — they would
-    // displace true neighbors from the candidate cut. A null vector is
-    // never a neighbor: drop before the cut.
-    // pqEncodeBig, not pqEncode (round 21): the expression form builds
-    // m·kCodes struct l2Sq subtrees per row — too wide for whole-stage
-    // codegen, so it evaluates interpreted with per-row slice
-    // allocations. Measured at sf0.1 (2000 rows, m=4, kCodes=16):
-    // 2.76 s expression vs 0.11 s tight-loop — identical codes by
-    // AnnSpec's pqEncode≡pqEncodeBig assertion, identical null/dim
-    // contracts (null -> null codes, mismatch fails loudly).
-    val cand = pqEncodeBig(corpus, embCol, codebooks)
-      .filter(col("pq_codes").isNotNull)
-      .withColumn("approx_dist", sqrt(adc))
-      .orderBy(col("approx_dist"), col(idCol))
-      .limit(k * candMult)
-    // a null rerank distance (possible only via artifact inconsistency;
-    // encode-side dim checks cover the inline path) would sort first
-    // under ASC — fail loudly instead of returning a poisoned top-k
-    cand
-      .withColumn("dist", rerankDist(emb, queryVec, col(idCol), "pqSearch"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("approx_dist"), col("dist"))
-  }
+               k: Int, candMult: Int = 4): DataFrame =
+    serveQuantized(pq("pqSearch", codebooks),
+      pqEncodeBig(corpus, embCol, codebooks), None, embCol, idCol,
+      OneVector(queryVec), k, candMult)
 
-  /** Exact rerank distance with a loud null guard shared by
-    * [[pqSearch]] and [[pqSearchEncoded]]. */
-  private def rerankDist(emb: Column, queryVec: Array[Double],
-                         id: Column, who: String): Column = {
-    val d = VectorFunctions.l2(emb, typedlit(queryVec.toSeq))
-    when(d.isNull, raise_error(concat(
-      lit(s"$who: null rerank distance (dim mismatch or null vector) for id "),
-      id.cast("string")))).otherwise(d)
-  }
-
-  /** [[pqSearch]] against a PRE-ENCODED code table — the serving path
-    * the scaladoc above promises. `encoded` is [[pqEncode]]/
-    * [[pqEncodeBig]] output persisted at index-build time (idCol +
-    * `pq_codes`); `vectors` holds the full-precision column for the
-    * rerank. Stage one's scan touches ONLY (id, pq_codes) — column
-    * pruning reaches the parquet reader because the fp vectors live
-    * behind a separate scan — and the rerank fetches ≤ k·candMult
-    * vectors through a broadcast semi-lookup, never a corpus pass.
-    * Encode cost (the dominant term when [[pqSearch]] derives codes
-    * inline — measured 20×: encode ≈ 90% of the query) is paid once
-    * per index build instead of once per query. Same cuts, same
-    * tie-breaks, row-identical to [[pqSearch]] (AnnSpec asserts). */
+  /** PQ rung served from a stored [[pqEncode]]/[[pqEncodeBig]] table
+    * (idCol, pq_codes). */
   def pqSearchEncoded(encoded: DataFrame, vectors: DataFrame,
                       embCol: String, idCol: String,
                       codebooks: DataFrame, queryVec: Array[Double],
-                      k: Int, candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    val cbs = collectCodebooks(codebooks)
-    val subDim = cbs(0)(0).length
-    require(queryVec.length == cbs.length * subDim,
-      s"query dim ${queryVec.length} != ${cbs.length}·$subDim")
-    val luts = cbs.indices.map { j =>
-      val qSub = queryVec.slice(j * subDim, (j + 1) * subDim)
-      typedlit(cbs(j).map(cw => l2sqStrict(qSub, cw)).toSeq)
-    }
-    val adc = cbs.indices
-      .map(j => element_at(luts(j), element_at(col("pq_codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val survivors = encoded
-      .filter(col("pq_codes").isNotNull) // same null-first hazard as pqSearch
-      .select(col(idCol), sqrt(adc).as("approx_dist"))
-      .orderBy(col("approx_dist"), col(idCol))
-      .limit(k * candMult)
-    broadcast(survivors)
-      .join(vectors.select(col(idCol), col(embCol)), Seq(idCol))
-      .withColumn("dist", rerankDist(col(embCol).cast("array<double>"),
-        queryVec, col(idCol), "pqSearchEncoded"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("approx_dist"), col("dist"))
-  }
+                      k: Int, candMult: Int = 4): DataFrame =
+    serveQuantized(pq("pqSearchEncoded", codebooks), encoded,
+      Some(vectors), embCol, idCol, OneVector(queryVec), k, candMult)
 
-  /** IVF+PQ (the Jégou et al. IVFADC composition, the architecture
-    * behind FAISS's IndexIVFPQ): coarse quantizer prunes the corpus to
-    * `nprobe` clusters, product quantizer scores the survivors by ADC,
-    * exact rerank restores true order among the top k·candMult. At
-    * 100 TB the two stages multiply: the scan reads only the probed
-    * cluster partitions (partition pruning when the assigned table is
-    * stored partitionBy(cluster_id) — [[ivfSearchStore]]'s layout),
-    * and within them only the m-byte codes. `assigned` is
-    * [[ivfAssign]]/[[ivfAssignBig]] output; probe selection is the
-    * [[ivfSearch]] rule (L2 to centroid, min-cid tie-break), so the
-    * whole composition stays deterministic and oracle-checkable. */
+  /** PQ rung served from a stored [[pqEncodeBig]] table, for a query
+    * frame. */
+  def pqSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
+                           embCol: String, idCol: String,
+                           codebooks: DataFrame, queries: DataFrame,
+                           qidCol: String, qvecCol: String, k: Int,
+                           candMult: Int = 4): DataFrame =
+    serveQuantized(pq("pqSearchEncodedBatch", codebooks), encoded,
+      Some(vectors), embCol, idCol, QueryFrame(queries, qidCol, qvecCol),
+      k, candMult)
+
+  /** IVF-PQ rung over codes derived inline from an [[ivfAssign]]ed
+    * table, probing the `nprobe` clusters nearest the query. */
   def ivfPqSearch(assigned: DataFrame, embCol: String, idCol: String,
                   centroids: DataFrame, cidCol: String, cvecCol: String,
                   codebooks: DataFrame, queryVec: Array[Double],
-                  k: Int, nprobe: Int, candMult: Int = 4): DataFrame = {
-    // nprobe = 0 would return an empty result silently — loud, like
-    // every other parameter guard in this family
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val probed = centroids
-      .withColumn("__qdist",
-        VectorFunctions.l2(col(cvecCol), typedlit(queryVec.toSeq)))
-      .orderBy(col("__qdist"), col(cidCol))
-      .limit(nprobe)
-      .select(col(cidCol).as("cluster_id"))
-    pqSearch(
-      assigned.join(broadcast(probed), Seq("cluster_id"), "left_semi"),
-      embCol, idCol, codebooks, queryVec, k, candMult)
-  }
+                  k: Int, nprobe: Int, candMult: Int = 4): DataFrame =
+    serveQuantized(pq("ivfPqSearch", codebooks),
+      pqEncodeBig(assigned, embCol, codebooks), None, embCol, idCol,
+      OneVector(queryVec), k, candMult,
+      Some(Probe(centroids, cidCol, cvecCol, nprobe)))
 
-  /** [[ivfPqSearch]] against a PRE-ENCODED, cluster-keyed code table —
-    * the IVFADC serving path. `encoded` is index-build output carrying
-    * (cluster_id, idCol, pq_codes), ideally WRITTEN partitionBy
-    * (cluster_id); the probe list is collected driver-side (bounded by
-    * construction: nprobe rows of a k-row centroid table — the
-    * [[ivfSearchStore]] pattern) so the filter is a STATIC
-    * PartitionFilters predicate at the parquet reader, listing only
-    * the probed cluster directories (AnnSpec asserts via the scan's
-    * numPartitions metric); within them the scan touches only the
-    * m-byte codes. The two index-time prunings multiply exactly as in
-    * [[ivfPqSearch]], but BOTH the coarse assignment and the PQ encode
-    * are paid once at build time — per query, this path reads codes in
-    * nprobe partitions and reranks ≤ k·candMult vectors. Same probe
-    * rule, same cuts, same tie-breaks: row-identical to
-    * [[ivfPqSearch]] (AnnSpec asserts). */
+  /** IVF-PQ rung served from a stored (cluster_id, idCol, pq_codes)
+    * table, ideally written partitionBy(cluster_id). */
   def ivfPqSearchEncoded(encoded: DataFrame, vectors: DataFrame,
                          embCol: String, idCol: String,
                          centroids: DataFrame, cidCol: String, cvecCol: String,
                          codebooks: DataFrame, queryVec: Array[Double],
-                         k: Int, nprobe: Int, candMult: Int = 4): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val probed = centroids
-      .withColumn("__qdist",
-        VectorFunctions.l2(col(cvecCol), typedlit(queryVec.toSeq)))
-      .orderBy(col("__qdist"), col(cidCol))
-      .limit(nprobe)
-      .select(col(cidCol).cast("long"))
-      .collect().map(_.getLong(0))
-    pqSearchEncoded(
-      encoded.filter(col("cluster_id").isin(probed: _*)),
-      vectors, embCol, idCol, codebooks, queryVec, k, candMult)
-  }
+                         k: Int, nprobe: Int, candMult: Int = 4): DataFrame =
+    serveQuantized(pq("ivfPqSearchEncoded", codebooks), encoded,
+      Some(vectors), embCol, idCol, OneVector(queryVec), k, candMult,
+      Some(Probe(centroids, cidCol, cvecCol, nprobe)))
+
+  /** IVF-PQ rung served from a stored (cluster_id, idCol, pq_codes)
+    * table, for a query frame. */
+  def ivfPqSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
+                              embCol: String, idCol: String,
+                              centroids: DataFrame, cidCol: String,
+                              cvecCol: String, codebooks: DataFrame,
+                              queries: DataFrame, qidCol: String,
+                              qvecCol: String, k: Int, nprobe: Int,
+                              candMult: Int = 4): DataFrame =
+    serveQuantized(pq("ivfPqSearchEncodedBatch", codebooks), encoded,
+      Some(vectors), embCol, idCol, QueryFrame(queries, qidCol, qvecCol),
+      k, candMult, Some(Probe(centroids, cidCol, cvecCol, nprobe)))
 
   /** IVF search: probe the `nprobe` centroids nearest to the query,
     * exact top-k inside those clusters only. `assigned` is the output
@@ -1301,7 +1206,8 @@ object Ann {
           col(idCol).cast("string")).as("sign_code"))
   }
 
-  /** Driver-side twin of [[signEncode]] for the (1-row) query vector. */
+  /** Driver-side twin of [[signEncode]]'s packing for one vector — the
+    * reference the sign rung's in-plan query packing is checked against. */
   def signCode(vec: Array[Double]): Array[Long] = {
     val out = new Array[Long]((vec.length + 63) / 64)
     var i = 0
@@ -1312,161 +1218,50 @@ object Ann {
     out
   }
 
-  /** Two-stage search served from a stored [[signEncode]] table: stage
-    * one scans ONLY the packed codes and ranks by Hamming distance —
-    * per word one XOR against the broadcast-constant query code and
-    * one `bit_count`, all codegen'd, summed statically across words
-    * (no HOF) — keeping a (hamming, id)-ordered k·candMult heap per
-    * partition (TakeOrderedAndProject; only k·candMult rows ever leave
-    * the executors). Stage two broadcast-joins the survivors back to
-    * the fp corpus and reranks by exact cosine. Both stages are
-    * total-ordered ((hamming, id) then (cos desc, id)), so the cuts
-    * are deterministic and the oracle replays them stage for stage.
-    * Hamming ties are MASSIVE by construction (integer distances on a
-    * 64-bit code) — the id tie-break is what makes the candidate cut
-    * an exact contract rather than a races-with-the-scheduler one.
-    *
-    * `dim` is the ENCODED dimension (what [[signEncode]] was built
-    * with) and the query must match it exactly: deriving the word
-    * count from the query instead would let a SHORT query silently
-    * ignore the stored codes' trailing words. The stored width is
-    * ALSO asserted inside the plan (size(sign_code) == word count),
-    * so a table encoded at a different dimension than the caller's
-    * `dim` fails loudly at scan time in both directions — the
-    * contract does not rest on the caller passing the right dim. */
+  /** The sign rung: Hamming distance between packed sign codes — per
+    * word one XOR and one `bit_count`, summed statically over the words
+    * `dim` packs to (no HOF) — then exact cosine rerank. The query packs
+    * by [[signCode]]'s rule inside the plan. `dim` is the ENCODED
+    * dimension and the query must match it exactly: a shorter query
+    * would silently ignore the stored codes' trailing words. Hamming
+    * ties are massive (integer distances), so the id tie-break is what
+    * makes the candidate cut a contract. */
+  private def sign(who: String, dim: Int): Quantizer = {
+    require(dim >= 1, "dim must be >= 1")
+    val words = (dim + 63) / 64
+    Quantizer(who, "sign_code",
+      prep = qv => array((0 until words).map(w =>
+        (w * 64 until math.min(dim, w * 64 + 64)).map(i =>
+          when(element_at(qv, i + 1) > 0, lit(1L << (i % 64))).otherwise(lit(0L)))
+          .reduce(_ bitwiseOR _)): _*),
+      approx = qc => (0 until words).map(w => bit_count(
+        element_at(col("sign_code"), w + 1).bitwiseXOR(element_at(qc, w + 1))))
+        .reduce(_ + _).cast("long"),
+      width = _ => (lit(words), lit(s" words but dim=$dim packs to $words — " +
+        "the table was encoded at a different dimension; id ")),
+      queryDim = Some(QueryDim(dim)),
+      approxScore = Score("hamming", asc = true, "hamming (word-count mismatch)"),
+      exact = VectorFunctions.cosine, exactScore = Score("cos", asc = false))
+  }
+
+  /** Sign rung served from a stored [[signEncode]] table. */
   def signSearchEncoded(encoded: DataFrame, vectors: DataFrame,
                         embCol: String, idCol: String,
                         queryVec: Array[Double], dim: Int, k: Int,
-                        candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1 && dim >= 1,
-      "k, candMult and dim must be >= 1")
-    require(queryVec.length == dim,
-      s"signSearchEncoded: query vector has ${queryVec.length} components " +
-        s"but the encoded dimension is $dim — a shorter query would " +
-        "silently ignore the stored codes' trailing dimensions")
-    val q = signCode(queryVec)
-    val ham = q.indices.map { w =>
-      bit_count(element_at(col("sign_code"), w + 1).bitwiseXOR(lit(q(w))))
-    }.reduce(_ + _).cast("long")
-    // Plan-level width contract: the stored code must pack to EXACTLY
-    // the query's word count. The null-hamming guard below only trips
-    // when the query is LONGER than the stored code (element_at past
-    // the end); a stored code with MORE words (encoded at dim=128,
-    // searched at dim=64) would otherwise silently ignore its trailing
-    // Hamming words — so the width itself is asserted first.
-    val survivors = encoded
-      .filter(col("sign_code").isNotNull)
-      .select(col(idCol),
-        when(size(col("sign_code")) =!= q.length,
-          raise_error(concat(
-            lit("signSearchEncoded: stored sign_code has "),
-            size(col("sign_code")).cast("string"),
-            lit(s" words but dim=$dim packs to ${q.length} — the table " +
-              "was encoded at a different dimension; id "),
-            col(idCol).cast("string"))))
-        .when(ham.isNull,
-          raise_error(concat(
-            lit("signSearchEncoded: null hamming (word-count mismatch) for id "),
-            col(idCol).cast("string"))))
-          .otherwise(ham).as("hamming"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(k * candMult)
-    broadcast(survivors)
-      .join(vectors.select(col(idCol), col(embCol)), Seq(idCol))
-      .withColumn("cos", VectorFunctions.cosine(
-        col(embCol).cast("array<double>"),
-        typedlit(queryVec.toSeq)))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("hamming"), col("cos"))
-  }
+                        candMult: Int = 4): DataFrame =
+    serveQuantized(sign("signSearchEncoded", dim), encoded, Some(vectors),
+      embCol, idCol, OneVector(queryVec), k, candMult)
 
-  /** Batch form of [[signSearchEncoded]] (the v19 treatment): ONE scan
-    * of the stored code table serves a whole query set. The bounded
-    * query set packs driver-side and broadcasts as (qid, code-words);
-    * Hamming stays the static codegen'd XOR+bit_count sum (the word
-    * count comes from `dim`, not per-row data); the per-query
-    * candidate cut is the bounded TopK aggregation (map-side partial
-    * heaps — only nq·k·candMult (hamming, id) entries cross the
-    * exchange, never one row per (query, vector) pair); the exact
-    * rerank joins the ≤ nq·k·candMult survivors back to the fp corpus
-    * by broadcast and cuts per query with the same (cos desc, id)
-    * total order as the single-query form. */
+  /** Sign rung served from a stored [[signEncode]] table, for a query
+    * frame. */
   def signSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
                              embCol: String, idCol: String,
                              queries: DataFrame, qidCol: String,
                              qvecCol: String, dim: Int, k: Int,
-                             candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1 && dim >= 1,
-      "k, candMult and dim must be >= 1")
-    // The bounded TopK aggregator carries ids as long, so the id and
-    // qid columns are CAST — under non-ANSI casts a non-numeric id
-    // would become null and its rows silently vanish from the heap.
-    // Require integral ids loudly instead (the single-query form keeps
-    // arbitrary id types; use it for non-numeric ids).
-    def requireIntegral(df: DataFrame, c: String, role: String): Unit = {
-      import org.apache.spark.sql.types._
-      val dt = df.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"signSearchEncodedBatch: $role column $c is $dt — non-integral " +
-          "ids would be nulled by the internal long cast and their rows " +
-          "silently dropped from TopK; use signSearchEncoded (which keeps " +
-          "the id column untyped) for non-numeric ids")
-    }
-    requireIntegral(encoded, idCol, "id")
-    requireIntegral(queries, qidCol, "query id")
-    val sp = encoded.sparkSession
-    import sp.implicits._
-    val qrows: Seq[(Long, Seq[Long])] = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .collect().toSeq
-      .map { r =>
-        val v = r.getSeq[Double](1).toArray
-        require(v.length == dim,
-          s"query ${r.getLong(0)}: expected dim $dim, got ${v.length}")
-        (r.getLong(0), signCode(v).toSeq)
-      }
-    require(qrows.nonEmpty, "query set must be non-empty")
-    val qdf = broadcast(qrows.toDF(qidCol, "__qcode"))
-    val words = (dim + 63) / 64
-    val ham = (0 until words).map { w =>
-      bit_count(element_at(col("sign_code"), w + 1)
-        .bitwiseXOR(element_at(col("__qcode"), w + 1)))
-    }.reduce(_ + _).cast("double")
-    // Same stored-width contract as the single-query form: a code
-    // table encoded at a wider dim than `dim` would silently drop its
-    // trailing Hamming words, so the width is asserted in the plan.
-    val hamChecked =
-      when(size(col("sign_code")) =!= words,
-        raise_error(concat(
-          lit("signSearchEncodedBatch: stored sign_code has "),
-          size(col("sign_code")).cast("string"),
-          lit(s" words but dim=$dim packs to $words — the table was " +
-            "encoded at a different dimension; id "),
-          col(idCol).cast("string"))))
-        .otherwise(ham)
-    val survivors = encoded.filter(col("sign_code").isNotNull)
-      .crossJoin(qdf)
-      .select(col(qidCol), hamChecked.as("__h"), col(idCol).cast("long").as("__id"))
-      .groupBy(qidCol)
-      .agg(TopK.topK(k * candMult)(col("__h"), col("__id")).as("__cand"))
-      .select(col(qidCol), explode(col("__cand")).as("__e"))
-      .select(col(qidCol), col("__e.id").as(idCol),
-        col("__e.dist").cast("long").as("hamming"))
-    val qvecs = broadcast(queries.select(col(qidCol),
-      col(qvecCol).cast("array<double>").as("__qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qidCol).orderBy(desc("cos"), col(idCol))
-    broadcast(survivors)
-      .join(vectors.select(col(idCol), col(embCol)), Seq(idCol))
-      .join(qvecs, Seq(qidCol))
-      .withColumn("cos", VectorFunctions.cosine(
-        col(embCol).cast("array<double>"), col("__qv")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= k)
-      .select(col(qidCol), col("knn_rank"), col(idCol),
-        col("hamming"), col("cos"))
-  }
+                             candMult: Int = 4): DataFrame =
+    serveQuantized(sign("signSearchEncodedBatch", dim), encoded,
+      Some(vectors), embCol, idCol, QueryFrame(queries, qidCol, qvecCol),
+      k, candMult)
 
   // ---------------------------------------------------------------------
   // Matryoshka (prefix-dimension) serving — Kusupati et al. 2022,
@@ -1497,67 +1292,271 @@ object Ann {
           .as("prefix_vec"))
   }
 
-  /** Two-stage search served from a stored [[prefixEncode]] table:
-    * stage one ranks by L2 over the prefix (narrow scan of the small
-    * artifact; per-partition k·candMult heap), stage two broadcast-
-    * joins survivors to the fp corpus and reranks by full-dimension
-    * L2. Total orders ((prefix_dist, id), then (dist, id)) make both
-    * cuts deterministic; the oracle replays them over array slices.
-    *
-    * Recall caveat, measured (round-14 candMult sweep, PLANS.md): the
-    * prefix cut only ranks well when the embedding model concentrates
-    * information in the leading components (matryoshka/MRL-trained
-    * embeddings — Kusupati et al. 2022). On embeddings WITHOUT that
-    * training the prefix rung can trail even the 8× smaller sign rung
-    * (0.16→0.57 recall@10 over candMult 1→16 on the synthetic corpus,
-    * vs sign's 0.19→0.69 and int8's 1.00 at candMult=2) — pick this
-    * rung for its bytes only when the model is MRL-trained, and prefer
-    * the int8 rung when 80 B/vec is affordable. */
+  /** The prefix rung: L2 over the stored prefix, full-dimension L2
+    * rerank. Recall caveat, measured (round-14 candMult sweep,
+    * PLANS.md): the prefix cut only ranks well when the embedding model
+    * concentrates information in the leading components (MRL-trained).
+    * On embeddings WITHOUT that training this rung can trail even the
+    * 8× smaller sign rung (0.16→0.57 recall@10 over candMult 1→16 on
+    * the synthetic corpus, vs sign's 0.19→0.69 and int8's 1.00 at
+    * candMult=2) — pick it for its bytes only when the model is
+    * MRL-trained, and prefer the int8 rung when 80 B/vec is affordable. */
+  private def prefix(who: String, prefixDim: Int): Quantizer = {
+    require(prefixDim >= 1, "prefixDim must be >= 1")
+    Quantizer(who, "prefix_vec",
+      prep = qv => slice(qv, 1, prefixDim),
+      approx = qp => VectorFunctions.l2(col("prefix_vec"), qp),
+      width = _ => (lit(prefixDim), lit(s" components but prefixDim is " +
+        s"$prefixDim — the table was encoded at a different prefix width; id ")),
+      queryDim = Some(QueryDim(prefixDim, atLeast = true)),
+      approxScore = Score("prefix_dist", asc = true, "prefix distance"),
+      exact = VectorFunctions.l2, exactScore = RerankL2)
+  }
+
+  /** Prefix rung served from a stored [[prefixEncode]] table. */
   def prefixSearchEncoded(encoded: DataFrame, vectors: DataFrame,
                           embCol: String, idCol: String,
                           queryVec: Array[Double], prefixDim: Int,
-                          k: Int, candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    require(queryVec.length >= prefixDim,
-      s"query vector shorter than prefixDim $prefixDim")
-    val pd = VectorFunctions.l2(col("prefix_vec"),
-      typedlit(queryVec.take(prefixDim).toSeq))
-    val survivors = encoded
-      .filter(col("prefix_vec").isNotNull)
-      .select(col(idCol),
-        when(pd.isNull,
-          raise_error(concat(
-            lit("prefixSearchEncoded: null prefix distance for id "),
-            col(idCol).cast("string"))))
-          .otherwise(pd).as("prefix_dist"))
-      .orderBy(col("prefix_dist"), col(idCol))
-      .limit(k * candMult)
-    broadcast(survivors)
-      .join(vectors.select(col(idCol), col(embCol)), Seq(idCol))
-      .withColumn("dist", VectorFunctions.l2(
-        col(embCol).cast("array<double>"), typedlit(queryVec.toSeq)))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("prefix_dist"), col("dist"))
-  }
+                          k: Int, candMult: Int = 4): DataFrame =
+    serveQuantized(prefix("prefixSearchEncoded", prefixDim), encoded,
+      Some(vectors), embCol, idCol, OneVector(queryVec), k, candMult)
+
+  /** Prefix rung served from a stored [[prefixEncode]] table, for a
+    * query frame. */
+  def prefixSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
+                               embCol: String, idCol: String,
+                               queries: DataFrame, qidCol: String,
+                               qvecCol: String, prefixDim: Int, k: Int,
+                               candMult: Int = 4): DataFrame =
+    serveQuantized(prefix("prefixSearchEncodedBatch", prefixDim), encoded,
+      Some(vectors), embCol, idCol, QueryFrame(queries, qidCol, qvecCol),
+      k, candMult)
 
   // ---------------------------------------------------------------------
-  // Batch serving forms for the int8 and prefix rungs — the
-  // signSearchEncodedBatch treatment applied to the rest of the
-  // quantizer ladder, with the round-14 top-k idiom: the per-query cut
-  // is a `row_number <= k·candMult` rank-limit window, which Spark's
-  // InferWindowGroupLimit executes as a map-side PARTIAL group-limit —
-  // the code-table × queries pair stream never shuffles (only ≤ cut
-  // rows per map partition per query do). Wall-clock-equal to the
-  // TopK Aggregator on identical pair streams (PLANS.md round-14
-  // correction); chosen because it is native end-to-end and the
-  // partial group-limit is plan-auditable. Shared guard contract:
-  // integral ids (non-ANSI long casts would null non-numeric ids and
-  // silently drop their rows), and the stored artifact's width
-  // asserted IN THE PLAN against each query's width, so a table
-  // encoded at a different dimension fails loudly at scan time in
-  // both directions.
+  // The quantizer serving core. Every compressed rung — int8, PQ (and
+  // IVF-PQ), sign, prefix — serves one algorithm: score a small stored
+  // artifact approximately, cut to k·candMult, fetch those vectors,
+  // rerank exactly, cut to k. A [[Quantizer]] holds what differs
+  // between rungs; [[serveQuantized]] is the algorithm, for one query
+  // vector and for a query frame alike.
   // ---------------------------------------------------------------------
+
+  /** A score of the core and its cut direction. An ascending score
+    * fails loudly on null, `noun` naming it in the error: an ascending
+    * cut puts NULLS FIRST, so an unguarded null would take a top-k slot
+    * ahead of every true neighbor. A descending cut puts nulls last,
+    * where they displace nothing. */
+  private final case class Score(name: String, asc: Boolean, noun: String = "") {
+    def order: Column = if (asc) col(name) else desc(name)
+  }
+
+  private val RerankL2 =
+    Score("dist", asc = true, "rerank distance (dim mismatch or null vector)")
+
+  /** The query length a rung accepts: exactly `n`, or at least `n`. */
+  private final case class QueryDim(n: Int, atLeast: Boolean = false) {
+    def ok(len: Int): Boolean = if (atLeast) len >= n else len == n
+    def ok(len: Column): Column = if (atLeast) len >= n else len === n
+    def rule: String =
+      if (atLeast) s"shorter than prefixDim $n" else s"the encoded dimension is $n"
+  }
+
+  /** What one quantizer rung contributes to [[serveQuantized]]. */
+  private final case class Quantizer(
+      who: String,                          // entry point; starts every error
+      code: String,                         // the stored code column
+      prep: Column => Column,               // query vector → query-side artifact
+      approx: Column => Column,             // artifact → approximate score of `code`
+      width: Column => (Column, Column),    // artifact → (code width, message tail)
+      queryDim: Option[QueryDim],           // accepted query length; None: any
+      approxScore: Score,
+      exact: (Column, Column) => Column,    // (fp vector, query vector) → metric
+      exactScore: Score)
+
+  private sealed trait Queries
+  /** One query vector as an expression over the code table's rows. */
+  private final case class OneColumn(vec: Column) extends Queries
+  private final case class OneVector(vec: Array[Double]) extends Queries
+  private final case class QueryFrame(df: DataFrame, qidCol: String,
+                                      qvecCol: String) extends Queries
+
+  /** IVF pruning: serve only the `nprobe` clusters nearest each query. */
+  private final case class Probe(centroids: DataFrame, cidCol: String,
+                                 cvecCol: String, nprobe: Int)
+
+  /** The two-stage core behind every quantizer serve function. Stage
+    * one scores the stored code table (`encoded`) with the rung's
+    * approximate metric and cuts each query to k·candMult; stage two
+    * fetches those survivors' fp vectors from `vectors` by broadcast
+    * join, reranks them by the exact metric and cuts to k. With
+    * `vectors` None the code table was derived inline from the corpus
+    * and carries the vectors itself. Contract:
+    *
+    *  - Total orders. Both cuts order by (score, id), so results are
+    *    deterministic and the oracles replay them stage for stage.
+    *    Recall is governed by candMult: the exact stage restores order
+    *    among survivors but cannot resurrect one the approximate metric
+    *    dropped.
+    *  - NULLS FIRST. Null codes are dropped before stage one (a null
+    *    vector is never a neighbor), and every ascending score fails
+    *    loudly on null ([[Score]]).
+    *  - Width, asserted in the plan. Each stored code's width must equal
+    *    what the rung's parameters (or, for int8, the query) pack to,
+    *    so a table encoded at another dimension or with another
+    *    codebook fails at scan time in both directions instead of
+    *    silently ignoring trailing components.
+    *  - One query vector. A served form's stage one reads only the code
+    *    table (column pruning reaches the parquet reader; the fp vectors
+    *    are touched only for the ≤ k·candMult survivors), an array
+    *    query's preparation is evaluated once on the driver into one
+    *    literal ([[constant]]), IVF probing is a static `isin` (the
+    *    reader prunes partitions), and both cuts are a global
+    *    orderBy.limit — TakeOrderedAndProject, no shuffle. Ids keep
+    *    their type.
+    *  - A query frame: one scan of the code table serves every query.
+    *    The frame is collected once, guarded and prepared per query,
+    *    and broadcast;
+    *    IVF probing is the union `isin` plus the (qid, cluster) probe
+    *    join, so each code row is scored only for the queries probing
+    *    its cluster; both cuts are per-qid `row_number <= n` windows,
+    *    which InferWindowGroupLimit runs as map-side partial
+    *    group-limits (round 14 measured them equal to the TopK
+    *    aggregator). Output gains qid and knn_rank. Ids and qids must
+    *    be integral: the internal long cast would null any other id and
+    *    silently drop its rows. */
+  private def serveQuantized(q: Quantizer, encoded: DataFrame,
+                             vectors: Option[DataFrame], embCol: String,
+                             idCol: String, queries: Queries, k: Int,
+                             candMult: Int,
+                             probe: Option[Probe] = None): DataFrame = {
+    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
+    probe.foreach { p =>
+      require(p.nprobe >= 1, s"nprobe ${p.nprobe} must be >= 1")
+      require(encoded.columns.contains("cluster_id"),
+        s"${q.who} needs a cluster-assigned code table (cluster_id column)")
+    }
+    val (approxCol, exactCol) = (q.approxScore.name, q.exactScore.name)
+    val emb = col(embCol).cast("array<double>")
+    def guarded(s: Score, x: Column, id: Column): Column =
+      if (!s.asc) x
+      else when(x.isNull, raise_error(concat(
+        lit(s"${q.who}: null ${s.noun} for id "), id.cast("string")))).otherwise(x)
+    def approx(prepped: Column): Column = {
+      val (width, tail) = q.width(prepped)
+      val code = col(q.code)
+      when(size(code) =!= width, raise_error(concat(
+          lit(s"${q.who}: stored ${q.code} has "), size(code).cast("string"),
+          tail, col(idCol).cast("string"))))
+        .otherwise(guarded(q.approxScore, q.approx(prepped), col(idCol)))
+        .as(approxCol)
+    }
+    // An inline code table is derived from the vectors, so its codes
+    // are null exactly when the vector is: filter on the vector there.
+    // A filter on the derived codes would be pushed below their
+    // projection and recompute the whole encoding per row.
+    val stored = encoded.filter(
+      col(if (vectors.isEmpty) embCol else q.code).isNotNull)
+    def one(qv: Column, prepped: Column): DataFrame = {
+      val pruned = probe.fold(stored)(p =>
+        stored.filter(col("cluster_id").isin(probeList(p, qv): _*)))
+      val survivors = pruned
+        .select(if (vectors.isEmpty) col("*") else col(idCol), approx(prepped))
+        .orderBy(q.approxScore.order, col(idCol))
+        .limit(k * candMult)
+      vectors.fold(survivors)(v => broadcast(survivors)
+          .join(v.select(col(idCol), col(embCol)), Seq(idCol)))
+        .withColumn(exactCol, guarded(q.exactScore, q.exact(emb, qv), col(idCol)))
+        .orderBy(q.exactScore.order, col(idCol))
+        .limit(k)
+        .select(col(idCol), col(approxCol), col(exactCol))
+    }
+    queries match {
+      case OneColumn(qv) => one(qv, q.prep(qv))
+      case OneVector(v) =>
+        q.queryDim.foreach(d => require(d.ok(v.length),
+          s"${q.who}: query vector has ${v.length} components — ${d.rule}"))
+        val qv = typedlit(v.toSeq)
+        one(qv, constant(encoded.sparkSession, q.prep(qv)))
+      case QueryFrame(df, qidCol, qvecCol) =>
+        requireIntegralId(encoded, idCol, q.who, "id")
+        requireIntegralId(df, qidCol, q.who, "query id")
+        val qv = col(qvecCol).cast("array<double>")
+        val checked = df.select(col(qidCol).cast("long").as("__qid"),
+          q.queryDim.fold(qv)(d => when(!d.ok(size(qv)), raise_error(concat(
+            lit(s"${q.who}: query "), col(qidCol).cast("string"), lit(" has "),
+            size(qv).cast("string"), lit(s" components — ${d.rule}"))))
+            .otherwise(qv)).as("__qv"))
+          .withColumn("__qp", q.prep(col("__qv")))
+        // The query frame is broadcast anyway, so it is bounded: collect
+        // it once, guarded and prepared, and let the probe ranking and
+        // both stages read that local relation instead of rescanning
+        // the caller's frame.
+        val sp = encoded.sparkSession
+        val rows = checked.collect()
+        val qdf = sp.createDataFrame(java.util.Arrays.asList(rows: _*), checked.schema)
+        val prepped = broadcast(qdf.select(col("__qid"), col("__qp")))
+        val pairs = probe match {
+          case None => stored.crossJoin(prepped)
+          case Some(p) =>
+            import sp.implicits._
+            // [[probeList]]'s rule per query — L2 (sqrt of the same left
+            // fold), ties by cid — on the driver, where the queries and
+            // the k-row centroid table both are: ≤ nq·nprobe pairs
+            val cents = collectCentroids(p.centroids, p.cidCol, p.cvecCol)
+            val probes = rows.toSeq.flatMap { r =>
+              val v = r.getSeq[Double](1).toArray
+              cents.map { case (cid, cv) => (math.sqrt(l2sqStrict(cv, v)), cid) }
+                .sorted.take(p.nprobe).map { case (_, cid) => (r.getLong(0), cid) }
+            }
+            stored.filter(col("cluster_id").isin(probes.map(_._2).distinct: _*))
+              .join(broadcast(probes.toDF("__qid", "__pcid")),
+                col("cluster_id").cast("long") === col("__pcid"))
+              .join(prepped, Seq("__qid"))
+        }
+        val survivors = topPerQuery(pairs.select(col("__qid"),
+            col(idCol).cast("long").as("__id"), approx(col("__qp"))),
+          q.approxScore, k * candMult).drop("knn_rank")
+        topPerQuery(broadcast(survivors)
+            .join(vectors.getOrElse(encoded)
+              .select(col(idCol).cast("long").as("__id"), col(embCol)), Seq("__id"))
+            .join(broadcast(qdf.select(col("__qid"), col("__qv"))), Seq("__qid"))
+            .withColumn(exactCol,
+              guarded(q.exactScore, q.exact(emb, col("__qv")), col("__id"))),
+          q.exactScore, k)
+          .select(col("__qid").as(qidCol), col("knn_rank"),
+            col("__id").as(idCol), col(approxCol), col(exactCol))
+    }
+  }
+
+  /** A constant expression evaluated once on the driver (a projection
+    * of a one-row local relation runs no job) and returned as ONE
+    * literal, so a large constant tree — a PQ lookup table is m·nCodes
+    * l2sq terms, referenced by every subspace lookup and guard — stays
+    * out of the plans built on it. */
+  private def constant(sp: org.apache.spark.sql.SparkSession, c: Column): Column = {
+    val plan = sp.createDataFrame(java.util.List.of(org.apache.spark.sql.Row()),
+      org.apache.spark.sql.types.StructType(Nil)).select(c).queryExecution.executedPlan
+    val dt = plan.schema.head.dataType
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal(plan.executeCollect()(0).get(0, dt), dt))
+  }
+
+  /** A query frame's cut: the first `n` rows of each `__qid` by
+    * (score, id), numbered 1.. in `knn_rank`. */
+  private def topPerQuery(df: DataFrame, s: Score, n: Int): DataFrame =
+    df.withColumn("knn_rank", row_number().over(
+        Window.partitionBy("__qid").orderBy(s.order, col("__id"))))
+      .filter(col("knn_rank") <= n)
+
+  /** The `nprobe` centroids nearest `queryVec` (L2, ties by centroid
+    * id), collected: nprobe rows of a k-row table. */
+  private def probeList(p: Probe, queryVec: Column): Array[Long] =
+    p.centroids
+      .withColumn("__qdist", VectorFunctions.l2(col(p.cvecCol), queryVec))
+      .orderBy(col("__qdist"), col(p.cidCol))
+      .limit(p.nprobe)
+      .select(col(p.cidCol).cast("long"))
+      .collect().map(_.getLong(0))
 
   private[operators] def requireIntegralId(df: DataFrame, c: String,
                                            who: String, role: String): Unit = {
@@ -1568,306 +1567,5 @@ object Ann {
         "by the internal long cast and their rows silently dropped; use " +
         "the single-query form (which keeps the id column untyped) for " +
         "non-numeric ids")
-  }
-
-  /** [[quantizedSearchEncoded]] for a BATCH of queries: stage one
-    * scans the stored int8 code table ONCE against all queries
-    * (dequantized cosine per pair, per-query rank-limit cut), stage
-    * two reranks the ≤ k·candMult survivors per query exactly.
-    * Output: (qid, knn_rank, id, approx_cos, cos) — per-query rows
-    * identical to the single-query form's (AnnSpec asserts). */
-  def quantizedSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
-                                  embCol: String, idCol: String,
-                                  queries: DataFrame, qidCol: String,
-                                  qvecCol: String, k: Int,
-                                  candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    requireIntegralId(encoded, idCol, "quantizedSearchEncodedBatch", "id")
-    requireIntegralId(queries, qidCol, "quantizedSearchEncodedBatch",
-      "query id")
-    val qdf = broadcast(queries.select(col(qidCol).cast("long").as("__qid"),
-      col(qvecCol).cast("array<double>").as("__qv")))
-    val deq = transform(col("q_codes"), c =>
-      c.cast("double") * col("q_scale") + col("q_mn"))
-    val approx =
-      when(size(col("q_codes")) =!= size(col("__qv")),
-        raise_error(concat(
-          lit("quantizedSearchEncodedBatch: stored q_codes has "),
-          size(col("q_codes")).cast("string"),
-          lit(" components but the query has "),
-          size(col("__qv")).cast("string"),
-          lit(" — the table was encoded at a different dimension; id "),
-          col(idCol).cast("string"))))
-        .otherwise(VectorFunctions.cosine(deq, col("__qv")))
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(desc("approx_cos"), col("__id"))
-    val survivors = encoded.filter(col("q_codes").isNotNull)
-      .crossJoin(qdf)
-      .select(col("__qid"), col(idCol).cast("long").as("__id"),
-        approx.as("approx_cos"))
-      .withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") <= k * candMult)
-      .drop("__rn")
-    val w2 = Window.partitionBy("__qid").orderBy(desc("cos"), col("__id"))
-    broadcast(survivors)
-      .join(vectors.select(col(idCol).cast("long").as("__id"), col(embCol)),
-        Seq("__id"))
-      .join(qdf, Seq("__qid"))
-      .withColumn("cos", VectorFunctions.cosine(
-        col(embCol).cast("array<double>"), col("__qv")))
-      .withColumn("knn_rank", row_number().over(w2))
-      .filter(col("knn_rank") <= k)
-      .select(col("__qid").as(qidCol), col("knn_rank"),
-        col("__id").as(idCol), col("approx_cos"), col("cos"))
-  }
-
-  /** [[pqSearchEncoded]] for a BATCH of queries — the last rung of the
-    * batch-serving ladder. Each query's ADC lookup table (m × nCodes
-    * subspace squared distances) is computed DRIVER-SIDE from the
-    * collected codebooks — the same per-query cost the single form
-    * pays — and broadcast as an array-of-arrays column; stage one then
-    * scans the stored code table once for all queries (m table lookups
-    * + adds per pair, per-query rank-limit cut), stage two reranks the
-    * bounded survivors by exact L2. Stored code width is asserted in
-    * the plan; a null rerank distance fails loudly (artifact
-    * inconsistency), as in the single form. Output: (qid, knn_rank,
-    * id, approx_dist, dist). */
-  def pqSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
-                           embCol: String, idCol: String,
-                           codebooks: DataFrame, queries: DataFrame,
-                           qidCol: String, qvecCol: String, k: Int,
-                           candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    requireIntegralId(encoded, idCol, "pqSearchEncodedBatch", "id")
-    requireIntegralId(queries, qidCol, "pqSearchEncodedBatch", "query id")
-    val cbs = collectCodebooks(codebooks)
-    val subDim = cbs(0)(0).length
-    val m = cbs.length
-    val sp = encoded.sparkSession
-    import sp.implicits._
-    val qrows: Seq[(Long, Seq[Seq[Double]], Seq[Double])] = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .collect().toSeq
-      .map { r =>
-        val v = r.getSeq[Double](1).toArray
-        require(v.length == m * subDim,
-          s"query ${r.getLong(0)}: expected dim ${m * subDim}, got ${v.length}")
-        val luts = cbs.indices.map { j =>
-          val qSub = v.slice(j * subDim, (j + 1) * subDim)
-          cbs(j).map(cw => l2sqStrict(qSub, cw)).toSeq
-        }
-        (r.getLong(0), luts, v.toSeq)
-      }
-    require(qrows.nonEmpty, "query set must be non-empty")
-    val qdf = broadcast(qrows.toDF("__qid", "__luts", "__qv"))
-    // j ascending, left-assoc adds — the oracle mirrors this fold
-    val adc = (0 until m)
-      .map(j => element_at(element_at(col("__luts"), j + 1),
-        element_at(col("pq_codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val approx =
-      when(size(col("pq_codes")) =!= m,
-        raise_error(concat(
-          lit("pqSearchEncodedBatch: stored pq_codes has "),
-          size(col("pq_codes")).cast("string"),
-          lit(s" codes but the codebook has $m subspaces — the table was " +
-            "encoded with a different codebook; id "),
-          col(idCol).cast("string"))))
-        .otherwise(sqrt(adc))
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(col("approx_dist"), col("__id"))
-    val survivors = encoded.filter(col("pq_codes").isNotNull)
-      .crossJoin(qdf)
-      .select(col("__qid"), col(idCol).cast("long").as("__id"),
-        approx.as("approx_dist"))
-      .withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") <= k * candMult)
-      .drop("__rn")
-    val d0 = VectorFunctions.l2(col(embCol).cast("array<double>"), col("__qv"))
-    val distChecked = when(d0.isNull, raise_error(concat(
-        lit("pqSearchEncodedBatch: null rerank distance (dim mismatch or " +
-          "null vector) for id "),
-        col("__id").cast("string")))).otherwise(d0)
-    val w2 = Window.partitionBy("__qid").orderBy(col("dist"), col("__id"))
-    broadcast(survivors)
-      .join(vectors.select(col(idCol).cast("long").as("__id"), col(embCol)),
-        Seq("__id"))
-      .join(qdf.select("__qid", "__qv"), Seq("__qid"))
-      .withColumn("dist", distChecked)
-      .withColumn("knn_rank", row_number().over(w2))
-      .filter(col("knn_rank") <= k)
-      .select(col("__qid").as(qidCol), col("knn_rank"),
-        col("__id").as(idCol), col("approx_dist"), col("dist"))
-  }
-
-  /** [[ivfPqSearchEncoded]] for a BATCH of queries — IVFADC serving
-    * with BOTH prunings per query: each query's probe list (nprobe
-    * nearest centroids, the ivfSearch tie-break) and its ADC lookup
-    * table are computed driver-side (centroids and codebooks are
-    * k-row tables by definition) and broadcast; the stored code table
-    * is first filtered to the UNION of all probed clusters — a static
-    * partition filter the parquet reader prunes on under the
-    * partitionBy(cluster_id) layout — then equi-joined to the
-    * (qid, cluster) probe map so each code row is ADC-scored only for
-    * the queries that probe its cluster. Per-query cuts are rank-limit
-    * windows; the exact rerank touches the bounded survivors. Output:
-    * (qid, knn_rank, id, approx_dist, dist) — per-query rows identical
-    * to [[ivfPqSearchEncoded]] (AnnSpec asserts). */
-  def ivfPqSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
-                              embCol: String, idCol: String,
-                              centroids: DataFrame, cidCol: String,
-                              cvecCol: String, codebooks: DataFrame,
-                              queries: DataFrame, qidCol: String,
-                              qvecCol: String, k: Int, nprobe: Int,
-                              candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1 && nprobe >= 1,
-      "k, candMult and nprobe must be >= 1")
-    require(encoded.columns.contains("cluster_id"),
-      "ivfPqSearchEncodedBatch needs a cluster-assigned code table " +
-        "(cluster_id column)")
-    requireIntegralId(encoded, idCol, "ivfPqSearchEncodedBatch", "id")
-    requireIntegralId(queries, qidCol, "ivfPqSearchEncodedBatch", "query id")
-    val cbs = collectCodebooks(codebooks)
-    val subDim = cbs(0)(0).length
-    val m = cbs.length
-    val cents = collectCentroids(centroids, cidCol, cvecCol)
-    val sp = encoded.sparkSession
-    import sp.implicits._
-    val qrows: Seq[(Long, Seq[Seq[Double]], Seq[Double], Seq[Long])] =
-      queries
-        .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-        .collect().toSeq
-        .map { r =>
-          val v = r.getSeq[Double](1).toArray
-          require(v.length == m * subDim,
-            s"query ${r.getLong(0)}: expected dim ${m * subDim}, " +
-              s"got ${v.length}")
-          val luts = cbs.indices.map { j =>
-            val qSub = v.slice(j * subDim, (j + 1) * subDim)
-            cbs(j).map(cw => l2sqStrict(qSub, cw)).toSeq
-          }
-          val probed = cents
-            .map { case (cid, cv) => (cid, l2sqStrict(cv, v)) }
-            .sortBy { case (cid, dd) => (dd, cid) }
-            .take(nprobe).map(_._1)
-          (r.getLong(0), luts, v.toSeq, probed)
-        }
-    require(qrows.nonEmpty, "query set must be non-empty")
-    val qdf = broadcast(qrows.map { case (q, l, v, _) => (q, l, v) }
-      .toDF("__qid", "__luts", "__qv"))
-    val probeMap = broadcast(qrows
-      .flatMap { case (q, _, _, probed) => probed.map(c => (q, c)) }
-      .toDF("__qid", "__pcid"))
-    val allProbed = qrows.flatMap(_._4).distinct
-    val adc = (0 until m)
-      .map(j => element_at(element_at(col("__luts"), j + 1),
-        element_at(col("pq_codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val approx =
-      when(size(col("pq_codes")) =!= m,
-        raise_error(concat(
-          lit("ivfPqSearchEncodedBatch: stored pq_codes has "),
-          size(col("pq_codes")).cast("string"),
-          lit(s" codes but the codebook has $m subspaces — the table was " +
-            "encoded with a different codebook; id "),
-          col(idCol).cast("string"))))
-        .otherwise(sqrt(adc))
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(col("approx_dist"), col("__id"))
-    val survivors = encoded
-      .filter(col("cluster_id").isin(allProbed: _*)) // reader pruning
-      .filter(col("pq_codes").isNotNull)
-      .join(probeMap, col("cluster_id").cast("long") === col("__pcid"))
-      .join(qdf, Seq("__qid"))
-      .select(col("__qid"), col(idCol).cast("long").as("__id"),
-        approx.as("approx_dist"))
-      .withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") <= k * candMult)
-      .drop("__rn")
-    val d0 = VectorFunctions.l2(col(embCol).cast("array<double>"), col("__qv"))
-    val distChecked = when(d0.isNull, raise_error(concat(
-        lit("ivfPqSearchEncodedBatch: null rerank distance (dim mismatch " +
-          "or null vector) for id "),
-        col("__id").cast("string")))).otherwise(d0)
-    val w2 = Window.partitionBy("__qid").orderBy(col("dist"), col("__id"))
-    broadcast(survivors)
-      .join(vectors.select(col(idCol).cast("long").as("__id"), col(embCol)),
-        Seq("__id"))
-      .join(qdf.select("__qid", "__qv"), Seq("__qid"))
-      .withColumn("dist", distChecked)
-      .withColumn("knn_rank", row_number().over(w2))
-      .filter(col("knn_rank") <= k)
-      .select(col("__qid").as(qidCol), col("knn_rank"),
-        col("__id").as(idCol), col("approx_dist"), col("dist"))
-  }
-
-  /** [[prefixSearchEncoded]] for a BATCH of queries: stage one scans
-    * the stored prefix table ONCE against all queries (prefix L2 per
-    * pair, per-query rank-limit cut), stage two reranks by
-    * full-dimension L2. Stored prefix width and each query's length
-    * are asserted in the plan, and a null prefix/rerank distance fails
-    * loudly (both cuts are ascending NULLS FIRST, so an unguarded null
-    * would silently occupy the top-k — same guard as the pq/ivfpq
-    * batch forms). Output: (qid, knn_rank, id, prefix_dist, dist). */
-  def prefixSearchEncodedBatch(encoded: DataFrame, vectors: DataFrame,
-                               embCol: String, idCol: String,
-                               queries: DataFrame, qidCol: String,
-                               qvecCol: String, prefixDim: Int, k: Int,
-                               candMult: Int = 4): DataFrame = {
-    require(k >= 1 && candMult >= 1 && prefixDim >= 1,
-      "k, candMult and prefixDim must be >= 1")
-    requireIntegralId(encoded, idCol, "prefixSearchEncodedBatch", "id")
-    requireIntegralId(queries, qidCol, "prefixSearchEncodedBatch",
-      "query id")
-    val qdf = broadcast(queries.select(col(qidCol).cast("long").as("__qid"),
-      when(size(col(qvecCol)) < prefixDim,
-        raise_error(concat(
-          lit(s"prefixSearchEncodedBatch: query shorter than prefixDim " +
-            s"$prefixDim — qid "),
-          col(qidCol).cast("string"))))
-        .otherwise(col(qvecCol).cast("array<double>")).as("__qv")))
-    val pd0 = VectorFunctions.l2(col("prefix_vec"),
-      slice(col("__qv"), 1, prefixDim))
-    val pd =
-      when(size(col("prefix_vec")) =!= prefixDim,
-        raise_error(concat(
-          lit("prefixSearchEncodedBatch: stored prefix_vec has "),
-          size(col("prefix_vec")).cast("string"),
-          lit(s" components but prefixDim is $prefixDim — the table was " +
-            "encoded at a different prefix width; id "),
-          col(idCol).cast("string"))))
-        // null prefix distance (null vector element): both cuts order
-        // ascending with NULLS FIRST, so an unguarded null would occupy
-        // the top-k silently — fail loudly like the single-query form
-        // and the pq/ivfpq batch forms.
-        .when(pd0.isNull,
-          raise_error(concat(
-            lit("prefixSearchEncodedBatch: null prefix distance for id "),
-            col(idCol).cast("string"))))
-        .otherwise(pd0)
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(col("prefix_dist"), col("__id"))
-    val survivors = encoded.filter(col("prefix_vec").isNotNull)
-      .crossJoin(qdf)
-      .select(col("__qid"), col(idCol).cast("long").as("__id"),
-        pd.as("prefix_dist"))
-      .withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") <= k * candMult)
-      .drop("__rn")
-    val d0 = VectorFunctions.l2(col(embCol).cast("array<double>"), col("__qv"))
-    val distChecked = when(d0.isNull, raise_error(concat(
-        lit("prefixSearchEncodedBatch: null rerank distance (dim mismatch " +
-          "or null vector) for id "),
-        col("__id").cast("string")))).otherwise(d0)
-    val w2 = Window.partitionBy("__qid").orderBy(col("dist"), col("__id"))
-    broadcast(survivors)
-      .join(vectors.select(col(idCol).cast("long").as("__id"), col(embCol)),
-        Seq("__id"))
-      .join(qdf, Seq("__qid"))
-      .withColumn("dist", distChecked)
-      .withColumn("knn_rank", row_number().over(w2))
-      .filter(col("knn_rank") <= k)
-      .select(col("__qid").as(qidCol), col("knn_rank"),
-        col("__id").as(idCol), col("prefix_dist"), col("dist"))
   }
 }

@@ -64,13 +64,14 @@ final class MultiStageSearch(
     corpus: DataFrame, idCol: String, textCol: String, embCol: String,
     cfg: CascadeConfig = CascadeConfig(),
     profile: UserProfile = UserProfile.empty,
-    // Pluggable candidate source for the per-stage kNN (stage pred,
-    // query vector, k) → (idCol, textCol, dist). Default: exact scan
-    // over `corpus`. A served deployment passes an ANN-index reader
-    // here (c5: IVF-probed partitions of the stored index) — the
-    // cascade POLICY (stage list, gates, dedup, rerank) is identical
+    // Pluggable per-query candidate pool: query vector → the rows
+    // (idCol, textCol, embCol) every stage ranks. Default: `corpus`
+    // itself. A served deployment passes an ANN-index reader here (c5:
+    // the IVF-probed partitions of the stored index); the cascade
+    // scores, null-filters and cuts the pool itself, so the POLICY
+    // (stage list, gates, dedup, rerank) and the distance are identical
     // either way, which is exactly what c5's identity gate pins.
-    knnBackend: Option[(Option[Column], Column, Int) => DataFrame] = None) {
+    knnBackend: Option[Column => DataFrame] = None) {
 
   private val (queryNer, synonyms, _) = SemanticSuite.default
 
@@ -121,55 +122,67 @@ final class MultiStageSearch(
       round(lit(5.0) * hits / condToks.length, 0).cast("double")
     }
 
-  /** Per-search-call candidate source: (stage predicate, k) → the
-    * stage's ≤k rows. Null-distance rows (null embedding, null
-    * element, dim mismatch) are excluded BEFORE the top-k cut (the
+  /** The per-search-call scored pool: (id, text, dist) over the
+    * `knnBackend` pool for `queryVec` (or the whole corpus), computed
+    * ONCE per call and checkpointed; every stage is then
+    * filter ∘ TakeOrderedAndProject over this narrow materialized
+    * frame ([[knnStage]]). Null-distance rows (null embedding, null
+    * element, dim mismatch) are excluded BEFORE any top-k cut (the
     * [[Knn.exactDefined]] contract): Spark's ascending sort is NULLS
     * FIRST, so they would otherwise rank at the top and eat the
     * stage's k — and the batch forms exclude them by construction, so
     * this is also what keeps `batch == per-query` on corpora with null
-    * embeddings (CascadeBatchSpec pins it). A custom `knnBackend` owns
-    * the same contract: never surface null-dist rows.
+    * embeddings (CascadeBatchSpec pins it). Default and served pools
+    * take this one code path, so a backend cannot score a different
+    * vector than the one the call searches.
     *
-    * The default (exact-scan) source computes the scored corpus —
-    * (id, text, dist) — ONCE per search call and lazily checkpoints
-    * it; every stage is then filter ∘ TakeOrderedAndProject over the
-    * narrow materialized frame (round 22, guide §2.4 "remove shuffles/
-    * passes outright"): the multi-stage cascade previously re-scanned
-    * the corpus AND recomputed the query distance once PER STAGE
-    * (7× for the flagship ladder), when the only thing that differs
-    * between stages is a text predicate and k. Stage results are
-    * bit-identical: distance is the same expression computed on the
-    * same rows (filter ∘ dist commutes per-row), and the (dist, id)
-    * top-k order is unchanged. The materialized frame holds the three
-    * narrow columns only — never the embeddings — and spills to disk
-    * via the localCheckpoint storage level; at corpus scale that one
-    * narrow materialization replaces nStages full scans each paying
-    * the distance arithmetic over every embedding.
+    * Scoring once replaced a per-stage scan (round 22): the cascade
+    * previously re-scanned the corpus AND recomputed the query distance
+    * once PER STAGE (7× for the flagship ladder), when the only thing
+    * that differs between stages is a text predicate and k. Stage
+    * results are bit-identical: distance is the same expression
+    * computed on the same rows (filter ∘ dist commutes per-row), and
+    * the (dist, id) top-k order is unchanged. The materialized frame
+    * holds the three narrow columns only — never the embeddings — and
+    * spills to disk via the localCheckpoint storage level; at corpus
+    * scale that one narrow materialization replaces nStages full scans
+    * each paying the distance arithmetic over every embedding.
     *
     * EAGER checkpoint, deliberately: [[searchGated]]'s gate-count
     * broadcasts execute their subtrees as CONCURRENT jobs, and a lazy
     * checkpoint dedupes nothing until its first computation finishes —
     * measured 7-way duplicate scan+distance races (c7 2.1 s → 3.4 s
     * under the lazy form; 0.6 s eager). One synchronous job here,
-    * cached blocks for every stage after. */
-  private def stageSource(queryVec: Column)
-      : (Option[Column], Int) => DataFrame = knnBackend match {
-    case Some(backend) => (pred, k) => backend(pred, queryVec, k)
-    case None =>
-      val scored = corpus
-        .withColumn("dist", VectorFunctions.l2(col(embCol), queryVec))
-        .filter(col("dist").isNotNull)
-        .select(col(idCol), col(textCol), col("dist"))
-        .localCheckpoint(true)
-      (pred, k) => pred.fold(scored)(scored.filter)
-        .orderBy(col("dist"), col(idCol)).limit(k)
-  }
+    * cached blocks for every stage after.
+    *
+    * Lifetime: [[search]] collects every stage, so it releases the
+    * checkpoint before returning ([[release]]). The plan-returning
+    * forms ([[searchFixed]], [[searchGated]]) cannot: their result
+    * reads the checkpoint lazily, so its blocks live until the JVM
+    * collects the frame (ContextCleaner) or the caller drops cached
+    * blocks. Truncated lineage also means such a frame cannot be
+    * recomputed after the executor holding a block is lost — the read
+    * then fails loudly; it never returns wrong rows. */
+  private def scoredPool(queryVec: Column): DataFrame =
+    knnBackend.fold(corpus)(_(queryVec))
+      .withColumn("dist", VectorFunctions.l2(col(embCol), queryVec))
+      .filter(col("dist").isNotNull)
+      .select(col(idCol), col(textCol), col("dist"))
+      .localCheckpoint(true)
 
-  /** One cascade stage's candidates, tagged with its rank. */
-  private def knnStage(source: (Option[Column], Int) => DataFrame,
-                       pred: Option[Column], k: Int, stage: Int): DataFrame =
-    source(pred, k).withColumn("stage_rank", lit(stage))
+  /** Drop a [[scoredPool]] checkpoint's blocks. Only for a caller that
+    * has already collected everything it reads from `scored`. */
+  private def release(scored: DataFrame): Unit =
+    scored.queryExecution.logical
+      .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+
+  /** One cascade stage's ≤k candidates, tagged with its rank. */
+  private def knnStage(scored: DataFrame, pred: Option[Column], k: Int,
+                       stage: Int): DataFrame =
+    pred.fold(scored)(scored.filter)
+      .orderBy(col("dist"), col(idCol)).limit(k)
+      .withColumn("stage_rank", lit(stage))
 
   /** Run the cascade. `queryVec` is the embedded query (the embedding
     * model is an external boundary — SURVEY.md §2.1 S5). */
@@ -187,12 +200,16 @@ final class MultiStageSearch(
     // so only a few KB move. Keep-first dedup (A1: first stage wins,
     // then ascending distance — /root/reference/main.py:173-181) and
     // the gating counts run over this driver-side list for free.
-    val source = stageSource(queryVec)
+    // Every stage is collected before the rerank tail, which reads only
+    // the driver-side rows, so the scored pool is released right after
+    // the last stage. The pool is local to this call: concurrent calls
+    // on one instance never release each other's blocks.
+    val scored = scoredPool(queryVec)
     var collected = Vector.empty[Row]
     var rowSchema: StructType = null
     var nextStage = 1
     def addStage(pred: Option[Column], k: Int): Unit = {
-      val df = knnStage(source, pred, k, nextStage)
+      val df = knnStage(scored, pred, k, nextStage)
         .select(col(idCol), col(textCol), col("dist"), col("stage_rank"))
       if (rowSchema == null) rowSchema = df.schema
       collected ++= df.collect()
@@ -206,30 +223,32 @@ final class MultiStageSearch(
     }
     def count(): Long = accumulatedRows().size.toLong
 
-    // S1 strict AND (main.py:341-347)
-    (region, job) match {
-      case (Some(r), Some(j)) => addStage(Some(contains(r) && contains(j)), cfg.topK)
-      case (Some(r), None)    => addStage(Some(contains(r)), cfg.topK)
-      case (None, Some(j))    => addStage(Some(contains(j)), cfg.topK)
-      case _                  => addStage(None, cfg.topK)
-    }
-    // S2 OR relaxation (main.py:351-360)
-    if (count() < cfg.relaxThreshold && region.isDefined && job.isDefined)
-      addStage(Some(contains(region.get) || contains(job.get)), cfg.topK)
-    // S3 single-field passes (main.py:363-383)
-    if (count() < cfg.relaxThreshold) {
-      region.foreach(r => addStage(Some(contains(r)), cfg.topK))
-      job.foreach(j => addStage(Some(contains(j)), cfg.topK))
-    }
-    // S4 synonym expansion (main.py:386-397)
-    job.foreach { j =>
-      synonyms(j).foreach { syn =>
-        val p = region.map(r => contains(r) && contains(syn)).getOrElse(contains(syn))
-        addStage(Some(p), cfg.topK)
+    try {
+      // S1 strict AND (main.py:341-347)
+      (region, job) match {
+        case (Some(r), Some(j)) => addStage(Some(contains(r) && contains(j)), cfg.topK)
+        case (Some(r), None)    => addStage(Some(contains(r)), cfg.topK)
+        case (None, Some(j))    => addStage(Some(contains(j)), cfg.topK)
+        case _                  => addStage(None, cfg.topK)
       }
-    }
-    // S5 unfiltered fallback (main.py:400-407)
-    if (count() < cfg.fallbackThreshold) addStage(None, cfg.fallbackK)
+      // S2 OR relaxation (main.py:351-360)
+      if (count() < cfg.relaxThreshold && region.isDefined && job.isDefined)
+        addStage(Some(contains(region.get) || contains(job.get)), cfg.topK)
+      // S3 single-field passes (main.py:363-383)
+      if (count() < cfg.relaxThreshold) {
+        region.foreach(r => addStage(Some(contains(r)), cfg.topK))
+        job.foreach(j => addStage(Some(contains(j)), cfg.topK))
+      }
+      // S4 synonym expansion (main.py:386-397)
+      job.foreach { j =>
+        synonyms(j).foreach { syn =>
+          val p = region.map(r => contains(r) && contains(syn)).getOrElse(contains(syn))
+          addStage(Some(p), cfg.topK)
+        }
+      }
+      // S5 unfiltered fallback (main.py:400-407)
+      if (count() < cfg.fallbackThreshold) addStage(None, cfg.fallbackK)
+    } finally release(scored)
 
     // dedup → hybrid rerank → top-N → rank (main.py:410,455-469)
     val spark = corpus.sparkSession
@@ -268,15 +287,18 @@ final class MultiStageSearch(
     * count gating disabled — every stage always runs — which makes the
     * whole flagship composition ONE declarative Catalyst plan
     * (union-all of per-stage top-k → keep-first window dedup → rerank
-    * → top-N + rank) with no driver-side collect at all. This is the
-    * oracle-checkable twin of the adaptive cascade: identical
+    * → top-N + rank) with no stage collected to the driver. This is
+    * the oracle-checkable twin of the adaptive cascade: identical
     * union/dedup/rerank/rank semantics (main.py:329-411), minus the
     * adaptivity that SQL cannot express.
     *
-    * Scale shape: each stage is an independent filter ∘ distance ∘
-    * TakeOrderedAndProject over the corpus (no corpus shuffle); the
-    * union carries ≤ Σk rows, so dedup + rerank are driver-scale
-    * relational ops on a tiny relation. */
+    * Scale shape: the call runs ONE eager job at call time, the
+    * [[scoredPool]] checkpoint (one narrow scan of the pool); each
+    * stage is then filter ∘ TakeOrderedAndProject over that
+    * checkpoint (no corpus shuffle), and the union carries ≤ Σk rows,
+    * so dedup + rerank are driver-scale relational ops on a tiny
+    * relation. The returned plan reads the checkpoint lazily; see
+    * [[scoredPool]] for its lifetime. */
   def searchFixed(queryText: String, queryVec: Column): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
     val ner = resolvedNer(queryText)
@@ -309,9 +331,9 @@ final class MultiStageSearch(
     val s5 = (None: Option[Column]) -> cfg.fallbackK
 
     val stages = (Seq(s1) ++ s2.toSeq ++ s3.toSeq ++ s4.toSeq ++ syn :+ s5)
-    val source = stageSource(queryVec)
+    val scored = scoredPool(queryVec)
     val perStage = stages.zipWithIndex.map { case ((pred, k), i) =>
-      knnStage(source, pred, k, i + 1)
+      knnStage(scored, pred, k, i + 1)
         .select(col(idCol), col(textCol), col("dist"), col("stage_rank"))
     }
     val unioned = perStage.reduce(_ unionByName _)
@@ -354,7 +376,7 @@ final class MultiStageSearch(
     def contains(term: String): Column =
       lower(col(textCol)).contains(term.toLowerCase)
 
-    val source = stageSource(queryVec)
+    val scored = scoredPool(queryVec)
     // EAGER ≤k-row checkpoints (round 22): each stage frame is read up
     // to 3× (two gate counts + the union), and as LAZY checkpoints the
     // gate-count broadcasts materialized them as a swarm of ~50
@@ -364,7 +386,7 @@ final class MultiStageSearch(
     // count and the union then reads ≤k cached rows, and the final
     // plan shrinks from repeated stage subtrees to ExistingRDD scans.
     def stageFrame(pred: Option[Column], k: Int): DataFrame =
-      knnStage(source, pred, k, 0)
+      knnStage(scored, pred, k, 0)
         .select(col(idCol), col(textCol), col("dist"))
         .localCheckpoint(true)
     // Each 1-ROW count frame is eagerly checkpointed (round 22): n1/n2/

@@ -17,13 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Round-22 measurement hook for [[graft.AbEager]] interleaved A/Bs:
-    * eager (true) vs lazy checkpointing of the multi-consumer gram
-    * frames in [[duplicateSpans]] / [[contamination]]. See the A/B
-    * notes at the use sites for the measured decision. */
-  private[graft] var eagerGramMaterialize = true
-
-
   private val Ws = "[ \t\n]+"
 
   /** Non-distinct word n-grams (repetition COUNTS matter here, unlike
@@ -412,8 +405,7 @@ object Curation {
     // an interleaved min-over-3 A/B measured the EAGER form slower on
     // wall (d9 2.75 vs 2.31 s): on an under-utilized box the racing
     // duplicate is wall-free while the eager job serializes. Kept
-    // lazy; eagerGramMaterialize=true re-enables for cluster-scale
-    // deployments where duplicate compute is real spend.
+    // lazy.
     val grams = spread.select(col(idCol).cast("long").as("doc_id"),
         posexplode(ngramsFast(col(textCol), k)).as(Seq("pos0", "gram")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("gram"))
@@ -554,10 +546,9 @@ object Curation {
     // 7.8 s copies of the same gram stage). Interleaved min-over-3 A/B
     // favored eager HERE (t11 2.69 vs 3.17 s) — unlike duplicateSpans,
     // the duplicated pass is the whole train corpus, large enough to
-    // contend even on an idle box. eagerGramMaterialize is the
-    // re-measurement hook.
+    // contend even on an idle box.
     val tGrams = sideGrams(train, "train", idCol, textCol, k)
-      .localCheckpoint(eagerGramMaterialize)
+      .localCheckpoint(true)
     val nGrams = tGrams.groupBy("train_doc")
       .agg(count(lit(1)).as("n_train_grams"))
     tGrams.join(sideGrams(eval, "eval", idCol, textCol, k), Seq("gram"))

@@ -23,22 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Round-22 measurement hook for [[graft.AbEager]] interleaved A/Bs:
-    * true adds an upfront cache materialization (count) to
-    * [[shinglePipeline]]. Measured SLOWER at sf0.1 (d2 1.67 vs 1.14 s,
-    * d4 2.04 vs 1.37 s, d14 2.35 vs 2.20 s min-of-3 interleaved): the
-    * duplicated concurrent computation the count would eliminate is
-    * wall-free on an under-utilized box, while the serial count job
-    * adds its full wall cost. Kept false; the hook stays for
-    * re-measurement at larger scale, where duplicate compute is real
-    * cluster spend. */
-  private[graft] var eagerShingleMaterialize = false
-
-  /** Round-22 measurement hook ([[graft.AbSpread]]): toggles the
-    * doc_id spread exchange below [[simhashBits]]' word explode.
-    * Always true outside interleaved A/Bs. */
-  private[graft] var spreadSimhashWords = true
-
   /** A1: keep the first row per `key` under an explicit priority order.
     * `orderBy` must be a total order (break ties!) for determinism. */
   def keepFirst(df: DataFrame, key: Seq[String], orderBy: Seq[Column]): DataFrame = {
@@ -114,11 +98,10 @@ object Dedup {
       // recompute the explode (profiled on d14: five ~7-13 s copies,
       // 50.8 s executor total for a 3.3 s query). An upfront count()
       // eliminates the duplicates but measured SLOWER on wall clock at
-      // bench scale (see [[eagerShingleMaterialize]]) — duplicate
-      // concurrent compute is free on an under-utilized box. At
-      // cluster scale the trade reverses; the hook below re-enables
-      // the eager materialization for such deployments.
-      if (eagerShingleMaterialize) rows.count()
+      // sf0.1 (d2 1.67 vs 1.14 s, d4 2.04 vs 1.37 s, d14 2.35 vs
+      // 2.20 s, min-of-3 interleaved): duplicate concurrent compute is
+      // free on an under-utilized box while the serial count adds its
+      // full wall cost. So the materialization stays lazy.
     }
     rows
   }
@@ -497,12 +480,8 @@ object Dedup {
     // single-task (profiled on d10/d21 as serial 300-450 ms stages).
     // The exchange moves raw documents once and pre-co-partitions the
     // groupBy(doc_id), which then needs no exchange of its own.
-    // spreadSimhashWords is the AbSpread measurement hook.
-    val src0 = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    val src =
-      if (spreadSimhashWords) src0.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      else src0
+    val src = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
     val words = src.select(col("doc_id"),
       explode(split(trim(col("__text")), "[ \t\n]+")).as("w"))
       .filter(length(col("w")) > 0)

@@ -432,9 +432,9 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
   private val s14 = QuerySpec("s14_sign_batch_served",
     // s11's batch form (the v19 treatment): one scan of the stored
     // sign-code table serves 5 queries — the broadcast query set
-    // rides as packed code words, per-query candidate cuts come from
-    // the bounded TopK aggregation (map-side partial heaps; only
-    // nq·40 entries cross the exchange), and the exact-cosine rerank
+    // rides as packed code words, per-query candidate cuts are
+    // rank-limit windows (map-side partial group-limits; only nq·40
+    // rows per partition cross the exchange), and the exact-cosine rerank
     // joins the bounded survivor set back by broadcast. The oracle
     // replays every query's ladder with per-qid row_number twins of
     // both cuts.
@@ -568,8 +568,9 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     // s8's batch form — with s14/s15/s16 this completes batch serving
     // across the WHOLE quantizer ladder (sign/int8/prefix/PQ): one
     // scan of the stored m-byte code table serves 3 queries. Each
-    // query's ADC lookup table is computed driver-side from the shared
-    // deterministic codebook and broadcast; per-query cuts are
+    // query's ADC lookup table is computed once per query on the
+    // broadcast query frame from the shared deterministic codebook;
+    // per-query cuts are
     // rank-limit windows (map-side WindowGroupLimit partials), and the
     // exact rerank touches only the bounded survivors. The oracle
     // shares cb/enc/wide (query-independent encode) with the s6/s8

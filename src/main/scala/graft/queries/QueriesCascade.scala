@@ -330,47 +330,21 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     (idx, cent)
   }
 
-  /** Served candidate source for [[MultiStageSearch]]: the probe list
-    * is computed ONCE per query (nprobe nearest centroids — a
-    * k-row driver sort, the ivfSearchStore rule), then every stage
-    * reads only the probed partitions of the stored index (static
-    * PartitionFilters) and runs filter ∘ distance ∘ top-k inside
-    * them. `extraFilter` narrows the pool itself (the identity
-    * fixture); a stage's own predicate arrives per call. */
-  private def servedKnnBackend(index: DataFrame,
-      cent: DataFrame, qv: Column, nprobe: Int,
-      extraFilter: Option[Column])
-      : (Option[Column], Column, Int) => DataFrame = {
-    val probed = cent
-      .withColumn("__qd", VectorFunctions.l2(col("cvec"), qv))
-      .orderBy(col("__qd"), col("cid")).limit(nprobe)
-      .select(col("cid").cast("long")).collect().map(_.getLong(0)).toSeq
-    val pool0 = index.filter(col("cluster_id").isin(probed: _*))
-    val pool = extraFilter.fold(pool0)(pool0.filter)
-    // Scored pool computed ONCE per query (round 22, the stageSource
-    // treatment applied to the served backend): every cascade stage
-    // previously re-read the probed partitions and recomputed the
-    // query distance — the only per-stage deltas are a text predicate
-    // and k, so the narrow (id, text, dist) frame is materialized once
-    // (lazy localCheckpoint) and stages are filter ∘ top-k over it.
-    // The null-dist filter is the knnStage contract (exactDefined's):
-    // probed pools exclude null-cluster rows today, but the backend
-    // must enforce the contract itself rather than lean on that
-    // coincidence. The per-stage qvec argument is deliberately
-    // ignored: every stage of one cascade searches the SAME query
-    // vector (the closed-over qv the probe list was derived from) —
-    // a stage-varying vector would have to re-probe anyway.
-    // EAGER checkpoint: searchGated's gate broadcasts run concurrent
-    // jobs, and a lazy checkpoint would let them race on duplicate
-    // scans (the stageSource note in Cascade.scala).
-    val scored = pool
-      .withColumn("dist", VectorFunctions.l2(col("embedding"), qv))
-      .filter(col("dist").isNotNull)
-      .select(col("doc_id"), col("text"), col("dist"))
-      .localCheckpoint(true)
-    (pred, qvec, k) => pred.fold(scored)(scored.filter)
-      .orderBy(col("dist"), col("doc_id")).limit(k)
-  }
+  /** Served candidate pool for [[MultiStageSearch]]: per query, the
+    * nprobe nearest centroids (a k-row driver sort, the ivfSearchStore
+    * rule, ties by cid) select the probed partitions of the stored
+    * index as a static `isin`, so every stage reads only those
+    * directories (PartitionFilters). The cascade scores and cuts the
+    * pool itself. */
+  private def servedKnnBackend(index: DataFrame, cent: DataFrame,
+                               nprobe: Int): Column => DataFrame =
+    qv => {
+      val probed = cent
+        .withColumn("__qd", VectorFunctions.l2(col("cvec"), qv))
+        .orderBy(col("__qd"), col("cid")).limit(nprobe)
+        .select(col("cid").cast("long")).collect().map(_.getLong(0)).toSeq
+      index.filter(col("cluster_id").isin(probed: _*))
+    }
 
   private def cascadeQueryVec(s: SparkSession, d: String): Column =
     typedlit(t(s, d, "embeddings").filter(col("vec_id") === 0)
@@ -398,7 +372,7 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
       val (servedCorpus, cent) = cascadePair(s, d)
       val qv = cascadeQueryVec(s, d)
       val q = "looking for a join job in the row area"
-      val backend = servedKnnBackend(servedCorpus, cent, qv, nprobe = 8, None)
+      val backend = servedKnnBackend(servedCorpus, cent, nprobe = 8)
       val served = new MultiStageSearch(servedCorpus, "doc_id", "text",
         "embedding", knnBackend = Some(backend))
       val servedDf = served.search(q, qv)
@@ -465,7 +439,7 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     (s, d) => {
       val (servedCorpus, cent) = cascadePair(s, d)
       val qv = cascadeQueryVec(s, d)
-      val backend = servedKnnBackend(servedCorpus, cent, qv, nprobe = 8, None)
+      val backend = servedKnnBackend(servedCorpus, cent, nprobe = 8)
       new MultiStageSearch(servedCorpus, "doc_id",
           "text", "embedding", knnBackend = Some(backend))
         .searchFixed("looking for a join job in the row area", qv)
@@ -506,7 +480,7 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     (s, d) => {
       val (servedCorpus, cent) = cascadePair(s, d)
       val qv = cascadeQueryVec(s, d)
-      val backend = servedKnnBackend(servedCorpus, cent, qv, nprobe = 8, None)
+      val backend = servedKnnBackend(servedCorpus, cent, nprobe = 8)
       new MultiStageSearch(servedCorpus, "doc_id",
           "text", "embedding", knnBackend = Some(backend))
         .searchGated("looking for a join job in the row area", qv)

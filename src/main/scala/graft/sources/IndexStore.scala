@@ -455,31 +455,35 @@ object IndexStore {
   def storedNprobe(spark: SparkSession, root: String): Option[Int] =
     currentPairMeta(spark, root).flatMap(_.nprobe)
 
-  private val pairMetaAtCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Option[PairMeta])]
+  private val pairMetaAtCache = scala.collection.concurrent.TrieMap
+    .empty[String, ((Long, Long), Option[PairMeta])]
   private val PairMetaAtCacheMaxEntries = 1024
 
-  /** [[pairMetaAt]] with a per-session mtime-token cache (round 22,
-    * closing the r20 advice note on per-call meta reads): repeat
-    * serving against one pinned version dir pays ONE getFileStatus per
-    * call — the same freshness class as [[loadCurrentWithCentroidsCached]]'s
-    * listing — instead of an open + read + parse. A missing meta file
-    * caches as None under token -1 and re-checks existence each call
-    * (getFileStatus throws → miss), so a meta appearing later is
-    * picked up immediately. Bounded like the pair cache: past
-    * [[PairMetaAtCacheMaxEntries]] distinct dirs the map clears —
-    * serving loops touch a handful of roots, so eviction is
-    * theoretical. */
+  /** [[pairMetaAt]] with a per-session (mtime, length) token cache:
+    * repeat serving against one pinned version dir pays ONE
+    * getFileStatus per call — the same freshness class as
+    * [[loadCurrentWithCentroidsCached]]'s listing — instead of an
+    * open + read + parse. Assumes write-once version dirs: a committed
+    * `_meta.json` is never rewritten in place. The length in the token
+    * narrows what a violation can hide — a rewrite within the
+    * filesystem's mtime granularity (1 s on HDFS and many object
+    * stores) is still seen unless it keeps the exact byte length. A
+    * missing meta file caches as None under token (-1, -1) and
+    * re-checks existence each call (getFileStatus throws → miss), so
+    * a meta appearing later is picked up immediately. Bounded like the
+    * pair cache: past [[PairMetaAtCacheMaxEntries]] distinct dirs the
+    * map clears — serving loops touch a handful of roots, so eviction
+    * is theoretical. */
   def pairMetaAtCached(spark: SparkSession, dir: String): Option[PairMeta] = {
     val (fs, p) = fsOf(spark, dir)
     val mp = new org.apache.hadoop.fs.Path(p, PairMetaFile)
     val token =
-      try fs.getFileStatus(mp).getModificationTime
-      catch { case _: java.io.FileNotFoundException => -1L }
+      try { val st = fs.getFileStatus(mp); (st.getModificationTime, st.getLen) }
+      catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
     pairMetaAtCache.get(dir) match {
       case Some((t, m)) if t == token => m
       case _ =>
-        val m = if (token == -1L) None else pairMetaAt(spark, dir)
+        val m = if (token._1 == -1L) None else pairMetaAt(spark, dir)
         if (pairMetaAtCache.size >= PairMetaAtCacheMaxEntries)
           pairMetaAtCache.clear()
         pairMetaAtCache.put(dir, (token, m))

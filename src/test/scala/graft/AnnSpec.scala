@@ -928,6 +928,64 @@ class AnnSpec extends SparkSpec {
     assert(e4.getMessage.contains("null rerank distance"))
   }
 
+  test("every quantizer rung: a 1-row query frame equals the single-query form; the width guard names the rung") {
+    import org.apache.spark.sql.DataFrame
+    val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", dim = 8, m = 4,
+      kCodes = 16, seed = 7L)
+    val int8Enc = Ann.quantizedEncode(signCorpus, "embedding", "vec_id")
+    val pqEnc = Ann.pqEncodeBig(pqCorpus, "embedding", cb).select("vec_id", "pq_codes")
+    val signEnc = Ann.signEncode(signCorpus, "embedding", "vec_id", dim = 64)
+    val prefEnc = Ann.prefixEncode(signCorpus, "embedding", "vec_id", prefixDim = 16)
+    // one row per rung: its single-query form, its frame form, and a
+    // code table whose stored width disagrees with the search
+    final case class Rung(name: String, corpus: DataFrame, enc: DataFrame,
+                          broken: DataFrame,
+                          single: (DataFrame, Array[Double]) => DataFrame,
+                          frame: (DataFrame, DataFrame) => DataFrame)
+    val rungs = Seq(
+      Rung("quantizedSearchEncoded", signCorpus, int8Enc,
+        int8Enc.withColumn("q_codes", slice($"q_codes", 1, 32)),
+        (enc, v) => Ann.quantizedSearchEncoded(enc, signCorpus, "embedding",
+          "vec_id", typedlit(v.toSeq), k = 4, candMult = 2),
+        (enc, qs) => Ann.quantizedSearchEncodedBatch(enc, signCorpus,
+          "embedding", "vec_id", qs, "qid", "qv", k = 4, candMult = 2)),
+      Rung("pqSearchEncoded", pqCorpus, pqEnc,
+        pqEnc.withColumn("pq_codes", slice($"pq_codes", 1, 2)),
+        (enc, v) => Ann.pqSearchEncoded(enc, pqCorpus, "embedding", "vec_id",
+          cb, v, k = 4, candMult = 2),
+        (enc, qs) => Ann.pqSearchEncodedBatch(enc, pqCorpus, "embedding",
+          "vec_id", cb, qs, "qid", "qv", k = 4, candMult = 2)),
+      Rung("signSearchEncoded", signCorpus, signEnc,
+        signEnc.withColumn("sign_code", concat($"sign_code", $"sign_code")),
+        (enc, v) => Ann.signSearchEncoded(enc, signCorpus, "embedding",
+          "vec_id", v, dim = 64, k = 4, candMult = 2),
+        (enc, qs) => Ann.signSearchEncodedBatch(enc, signCorpus, "embedding",
+          "vec_id", qs, "qid", "qv", dim = 64, k = 4, candMult = 2)),
+      Rung("prefixSearchEncoded", signCorpus, prefEnc,
+        prefEnc.withColumn("prefix_vec", slice($"prefix_vec", 1, 8)),
+        (enc, v) => Ann.prefixSearchEncoded(enc, signCorpus, "embedding",
+          "vec_id", v, prefixDim = 16, k = 4, candMult = 2),
+        (enc, qs) => Ann.prefixSearchEncodedBatch(enc, signCorpus,
+          "embedding", "vec_id", qs, "qid", "qv", prefixDim = 16, k = 4,
+          candMult = 2)))
+    rungs.foreach { r =>
+      val qs = r.corpus.filter($"vec_id" === 1L)
+        .select($"vec_id".as("qid"), $"embedding".as("qv"))
+      val qv = qs.select($"qv".cast("array<double>")).as[Seq[Double]].head().toArray
+      val single = r.single(r.enc, qv).collect().toSeq.zipWithIndex
+        .map { case (row, i) => (1L, i + 1, row.get(0), row.get(1), row.get(2)) }
+      val frame = r.frame(r.enc, qs).orderBy("knn_rank").collect().toSeq
+        .map(row => (row.getLong(0), row.getInt(1), row.get(2), row.get(3), row.get(4)))
+      assert(single.size == 4 && frame == single, r.name)
+      Seq(r.name -> (() => r.single(r.broken, qv)),
+          s"${r.name}Batch" -> (() => r.frame(r.broken, qs))).foreach {
+        case (form, run) =>
+          val e = intercept[Exception](run().collect())
+          assert(e.getMessage.contains(s"$form: stored "), s"$form: ${e.getMessage}")
+      }
+    }
+  }
+
   test("signSearchEncoded rejects a query shorter (or longer) than the encoded dim") {
     val enc = Ann.signEncode(signCorpus, "embedding", "vec_id", dim = 64)
     // a 32-component query would sum fewer Hamming words and silently

@@ -126,13 +126,8 @@ class CascadeBatchSpec extends SparkSpec {
             (cid, math.sqrt(cv.zip(qvArr).map { case (a, b) =>
               (a - b) * (a - b) }.sum))
           }.sortBy { case (cid, d) => (d, cid) }.take(nprobe).map(_._1)
-        val backend: (Option[org.apache.spark.sql.Column],
-            org.apache.spark.sql.Column, Int) =>
-            org.apache.spark.sql.DataFrame = (pred, qvec, k) => {
-          val pool = assigned.filter(col("cluster_id").isin(probed: _*))
-          graft.operators.Knn.exact(pred.fold(pool)(pool.filter),
-            "embedding", "doc_id", qvec, k)
-        }
+        val backend = (_: org.apache.spark.sql.Column) =>
+          assigned.filter(col("cluster_id").isin(probed: _*))
         val single = new MultiStageSearch(assigned, "doc_id", "text",
             "embedding", cfg, knnBackend = Some(backend))
           .searchGated(t, typedlit(qvSeq))
@@ -367,8 +362,7 @@ class CascadeBatchSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("duplicate"))
     val served = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
-      knnBackend = Some((_, qv, k) =>
-        graft.operators.Knn.exact(corpus, "embedding", "doc_id", qv, k)))
+      knnBackend = Some(_ => corpus))
     val e2 = intercept[IllegalArgumentException] {
       served.searchGatedBatch(queriesDf, "qid", "qtext", "qvec")
     }

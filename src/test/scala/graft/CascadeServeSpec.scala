@@ -421,4 +421,24 @@ class CascadeServeSpec extends SparkSpec {
     assert(starved != reference,
       "fixture too weak: nprobe 1 vs 3 must differ for the floor to mean anything")
   }
+
+  test("pairMetaAtCached re-reads a _meta.json rewritten with the same mtime but a new length") {
+    import IndexStore.PairMeta
+    val dir = Files.createTempDirectory("graft_meta_token").toFile
+    val meta = new java.io.File(dir, "_meta.json")
+    val mtime = 1700000000000L
+    def stamp(json: String): Unit = {
+      Files.writeString(meta.toPath, json)
+      assert(meta.setLastModified(mtime))
+    }
+    stamp("""{"indexRows": 10, "nClusters": 4}""")
+    assert(IndexStore.pairMetaAtCached(spark, dir.toString)
+      .contains(PairMeta(10, 4)))
+    // an in-place rewrite inside the mtime granularity: only the length
+    // tells the two files apart
+    stamp("""{"indexRows": 10, "nClusters": 4, "nprobe": 8}""")
+    assert(meta.lastModified == mtime)
+    assert(IndexStore.pairMetaAtCached(spark, dir.toString)
+      .contains(PairMeta(10, 4, Some(8))))
+  }
 }

@@ -163,14 +163,10 @@ class CascadeSpec extends SparkSpec {
       corpus.withColumn("cluster_id",
         when(col("doc_id") === 5, 9L).otherwise(col("doc_id") % 2)), dir)
     val probed = Seq(0L, 1L)
-    val backend = (pred: Option[org.apache.spark.sql.Column],
-                   qv: org.apache.spark.sql.Column, k: Int) => {
-      val pool = graft.sources.IndexStore.load(spark, dir)
+    val backend = (_: org.apache.spark.sql.Column) =>
+      graft.sources.IndexStore.load(spark, dir)
         .filter(col("cluster_id").isin(probed: _*))
-      graft.operators.Knn.exact(
-        pred.fold(pool)(pool.filter), "embedding", "doc_id", qv, k)
-    }
-    val stagePlan = backend(None, col("qv"), 3)
+    val stagePlan = backend(col("qv"))
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cluster_id".r
         .findFirstIn(stagePlan).isDefined,
@@ -186,21 +182,31 @@ class CascadeSpec extends SparkSpec {
     val fixture = corpus.filter(
       !lower(col("text")).contains("join") && !lower(col("text")).contains("row"))
     // fixture narrows the POOL (before the top-k cut), as c5 does
-    val fixBackend = (pred: Option[org.apache.spark.sql.Column],
-                      qv: org.apache.spark.sql.Column, k: Int) => {
-      val pool = graft.sources.IndexStore.load(spark, dir)
+    val fixBackend = (_: org.apache.spark.sql.Column) =>
+      graft.sources.IndexStore.load(spark, dir)
         .filter(col("cluster_id").isin(probed: _*))
         .filter(!lower(col("text")).contains("join") &&
           !lower(col("text")).contains("row"))
-      graft.operators.Knn.exact(
-        pred.fold(pool)(pool.filter), "embedding", "doc_id", qv, k)
-    }
     val fixSearch = new MultiStageSearch(fixture, "doc_id", "text",
       "embedding", CascadeConfig(topK = 3, finalN = 5),
       knnBackend = Some(fixBackend))
     val a = fixSearch.search(q, col("qv")).collect().toSeq
     val f = fixSearch.searchFixed(q, col("qv")).collect().toSeq
     assert(a.nonEmpty && a == f)
+  }
+
+  test("search releases its scored pool: repeated calls retain no cached RDDs") {
+    // a serving loop calls search once per request; each call's
+    // corpus-sized checkpoint must not outlive the call
+    val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
+      CascadeConfig(topK = 3, finalN = 5))
+    SessionHygiene.dropCachedBlocks(spark)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1 to 5).foreach { _ =>
+      assert(search.search("looking for a join job in the row area", col("qv"))
+        .collect().nonEmpty)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("F4: blank query returns the typed empty response without running any stage") {
