@@ -1564,8 +1564,8 @@ object Ann {
     val dt = df.schema(c).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
       s"$who: $role column $c is $dt — non-integral ids would be nulled " +
-        "by the internal long cast and their rows silently dropped; use " +
-        "the single-query form (which keeps the id column untyped) for " +
-        "non-numeric ids")
+        "by the internal long cast and their rows silently dropped; for " +
+        "non-numeric ids use a single-query form, which keeps the id " +
+        "column untyped (for the cascade: search or searchFixed)")
   }
 }

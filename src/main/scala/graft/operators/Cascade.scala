@@ -12,19 +12,21 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   * (/root/reference/main.py:329-411 — SURVEY.md §3.1).
   *
   * The cascade is deliberately DRIVER-SIDE adaptive control flow over
-  * small per-stage DataFrame plans (SURVEY.md §4): each stage is a
-  * filter ∘ distance ∘ top-k plan (no corpus shuffle — top-k is
-  * `TakeOrderedAndProject`), and each stage's ≤k result rows are
-  * MATERIALIZED to the driver exactly once — the corpus is scanned
-  * once per stage, never re-scanned for gating counts or the final
-  * union (gating and keep-first dedup run over the collected ≤~100
-  * rows in driver memory). The expensive side (the corpus scan) is
+  * small per-stage DataFrame plans (SURVEY.md §4): the candidate pool
+  * is scanned and scored ONCE per call into a narrow checkpoint
+  * (`scoredPool`), each stage is a filter ∘ top-k plan over it (no
+  * corpus shuffle — top-k is `TakeOrderedAndProject`), and each
+  * stage's ≤k result rows are MATERIALIZED to the driver exactly once
+  * — gating and keep-first dedup run over the collected ≤~100 rows in
+  * driver memory. The expensive side (the scan and the distance) is
   * Catalyst's; only the orchestration is imperative — the same split
   * the reference reaches by accident, made explicit as policy.
   *
-  * Both reference compositions (main.py strict-first and
-  * main_remind.py scan-then-filter — SURVEY.md §3.4) are expressible
-  * by configuring the stage list.
+  * The flagship ladder exists twice: `search` for one request and
+  * `gatedBatchCore` for a query log. `searchFixed` and `searchGated`
+  * are calls into those two. Both reference compositions (main.py
+  * strict-first and main_remind.py scan-then-filter — SURVEY.md §3.4)
+  * are expressible by configuring the stage list.
   */
 /** `semanticDriverBatchMax`: batch-cascade query logs at most this
   * large resolve NER/synonyms on the DRIVER (the reference's
@@ -104,6 +106,11 @@ final class MultiStageSearch(
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
+  /** Case-insensitive substring test on the doc text: every stage
+    * predicate of the per-query forms. */
+  private def contains(term: String): Column =
+    lower(col(textCol)).contains(term.toLowerCase)
+
   /** L1 double, columnar: deterministic rule-NER over the doc text —
     * first vocabulary hit per field (job/region). */
   private def docNer(text: Column): (Column, Column) = {
@@ -148,21 +155,18 @@ final class MultiStageSearch(
     * scale that one narrow materialization replaces nStages full scans
     * each paying the distance arithmetic over every embedding.
     *
-    * EAGER checkpoint, deliberately: [[searchGated]]'s gate-count
-    * broadcasts execute their subtrees as CONCURRENT jobs, and a lazy
-    * checkpoint dedupes nothing until its first computation finishes —
-    * measured 7-way duplicate scan+distance races (c7 2.1 s → 3.4 s
-    * under the lazy form; 0.6 s eager). One synchronous job here,
-    * cached blocks for every stage after.
+    * EAGER checkpoint: one synchronous job here, cached blocks for
+    * every stage after — also for the several stages one union collect
+    * runs at once, each of which would otherwise recompute a lazy
+    * checkpoint that has not landed yet.
     *
-    * Lifetime: [[search]] collects every stage, so it releases the
-    * checkpoint before returning ([[release]]). The plan-returning
-    * forms ([[searchFixed]], [[searchGated]]) cannot: their result
-    * reads the checkpoint lazily, so its blocks live until the JVM
-    * collects the frame (ContextCleaner) or the caller drops cached
-    * blocks. Truncated lineage also means such a frame cannot be
-    * recomputed after the executor holding a block is lost — the read
-    * then fails loudly; it never returns wrong rows. */
+    * Lifetime: only [[search]] (and so [[searchFixed]]) uses the pool.
+    * It collects every stage to the driver and always releases the
+    * checkpoint before returning ([[release]]), on success and on
+    * failure alike, so no call leaves blocks behind. A block lost to an
+    * executor failure during the call cannot be recomputed (truncated
+    * lineage): that stage's collect fails loudly; it never returns
+    * wrong rows. */
   private def scoredPool(queryVec: Column): DataFrame =
     knnBackend.fold(corpus)(_(queryVec))
       .withColumn("dist", VectorFunctions.l2(col(embCol), queryVec))
@@ -186,34 +190,49 @@ final class MultiStageSearch(
 
   /** Run the cascade. `queryVec` is the embedded query (the embedding
     * model is an external boundary — SURVEY.md §2.1 S5). */
-  def search(queryText: String, queryVec: Column): DataFrame = {
+  def search(queryText: String, queryVec: Column): DataFrame =
+    search(queryText, queryVec, cfg)
+
+  /** The adaptive ladder with the count gates of `gates`
+    * (`relaxThreshold`, `fallbackThreshold`); everything else follows
+    * the instance's config. */
+  private def search(queryText: String, queryVec: Column,
+                     gates: CascadeConfig): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
     val ner: QueryNer = resolvedNer(queryText)
     val region = ner.region
     val job = ner.job
 
-    def contains(term: String): Column =
-      lower(col(textCol)).contains(term.toLowerCase)
-
-    // Each stage collects its ≤k candidate rows (id, text, dist, stage)
-    // to the driver ONCE; the embedding column is pruned before collect
-    // so only a few KB move. Keep-first dedup (A1: first stage wins,
-    // then ascending distance — /root/reference/main.py:173-181) and
-    // the gating counts run over this driver-side list for free.
+    // Stage rows (id, text, dist, stage) are collected to the driver
+    // ONCE; the embedding column is pruned before collect so only a few
+    // KB move. Keep-first dedup (A1: first stage wins, then ascending
+    // distance — /root/reference/main.py:173-181) and the gating counts
+    // run over this driver-side list for free. An included stage waits
+    // in `pending` until a gate needs its rows; the pending stages are
+    // then collected as ONE union job (they run in parallel instead of
+    // as sequential jobs). A gate needs them only when the bound cannot
+    // decide it: pending stages add at most Σk distinct ids, so
+    // `count < t` is true without them when count + Σk < t (always, for
+    // a gate at Int.MaxValue) and false when count alone reaches t.
     // Every stage is collected before the rerank tail, which reads only
     // the driver-side rows, so the scored pool is released right after
     // the last stage. The pool is local to this call: concurrent calls
     // on one instance never release each other's blocks.
     val scored = scoredPool(queryVec)
     var collected = Vector.empty[Row]
+    var pending = Vector.empty[(DataFrame, Int)] // (stage rows, k)
     var rowSchema: StructType = null
     var nextStage = 1
     def addStage(pred: Option[Column], k: Int): Unit = {
-      val df = knnStage(scored, pred, k, nextStage)
-        .select(col(idCol), col(textCol), col("dist"), col("stage_rank"))
+      pending :+= knnStage(scored, pred, k, nextStage)
+        .select(col(idCol), col(textCol), col("dist"), col("stage_rank")) -> k
+      nextStage += 1
+    }
+    def flush(): Unit = if (pending.nonEmpty) {
+      val df = pending.map(_._1).reduce(_ unionByName _)
       if (rowSchema == null) rowSchema = df.schema
       collected ++= df.collect()
-      nextStage += 1
+      pending = Vector.empty
     }
     def accumulatedRows(): Seq[Row] = {
       val seen = scala.collection.mutable.HashSet.empty[Any]
@@ -222,6 +241,10 @@ final class MultiStageSearch(
         .filter(r => seen.add(r.get(0)))
     }
     def count(): Long = accumulatedRows().size.toLong
+    def below(t: Int): Boolean = {
+      val n = count()
+      n < t && (n + pending.map(_._2.toLong).sum < t || { flush(); count() < t })
+    }
 
     try {
       // S1 strict AND (main.py:341-347)
@@ -232,10 +255,10 @@ final class MultiStageSearch(
         case _                  => addStage(None, cfg.topK)
       }
       // S2 OR relaxation (main.py:351-360)
-      if (count() < cfg.relaxThreshold && region.isDefined && job.isDefined)
+      if (region.isDefined && job.isDefined && below(gates.relaxThreshold))
         addStage(Some(contains(region.get) || contains(job.get)), cfg.topK)
       // S3 single-field passes (main.py:363-383)
-      if (count() < cfg.relaxThreshold) {
+      if (below(gates.relaxThreshold)) {
         region.foreach(r => addStage(Some(contains(r)), cfg.topK))
         job.foreach(j => addStage(Some(contains(j)), cfg.topK))
       }
@@ -247,7 +270,8 @@ final class MultiStageSearch(
         }
       }
       // S5 unfiltered fallback (main.py:400-407)
-      if (count() < cfg.fallbackThreshold) addStage(None, cfg.fallbackK)
+      if (below(gates.fallbackThreshold)) addStage(None, cfg.fallbackK)
+      flush()
     } finally release(scored)
 
     // dedup → hybrid rerank → top-N → rank (main.py:410,455-469)
@@ -283,204 +307,52 @@ final class MultiStageSearch(
         .orderBy(desc("score"), asc("dist"), asc(idCol))))
   }
 
-  /** Fixed-policy cascade: the SAME stage list as [[search]] but with
-    * count gating disabled — every stage always runs — which makes the
-    * whole flagship composition ONE declarative Catalyst plan
-    * (union-all of per-stage top-k → keep-first window dedup → rerank
-    * → top-N + rank) with no stage collected to the driver. This is
-    * the oracle-checkable twin of the adaptive cascade: identical
-    * union/dedup/rerank/rank semantics (main.py:329-411), minus the
-    * adaptivity that SQL cannot express.
-    *
-    * Scale shape: the call runs ONE eager job at call time, the
-    * [[scoredPool]] checkpoint (one narrow scan of the pool); each
-    * stage is then filter ∘ TakeOrderedAndProject over that
-    * checkpoint (no corpus shuffle), and the union carries ≤ Σk rows,
-    * so dedup + rerank are driver-scale relational ops on a tiny
-    * relation. The returned plan reads the checkpoint lazily; see
-    * [[scoredPool]] for its lifetime. */
-  def searchFixed(queryText: String, queryVec: Column): DataFrame = {
-    if (isBlank(queryText)) return emptyResponse
-    val ner = resolvedNer(queryText)
-    val region = ner.region
-    val job = ner.job
-    def contains(term: String): Column =
-      lower(col(textCol)).contains(term.toLowerCase)
+  /** [[search]] with its count gates open: `relaxThreshold` and
+    * `fallbackThreshold` at `Int.MaxValue`, so every stage of the
+    * flagship list always runs — the static stage list c3/c6 replay in
+    * DuckDB (union of per-stage top-k → keep-first dedup → rerank →
+    * top-N + rank), minus the adaptivity. It IS [[search]]: same scored
+    * pool (released before returning), same stage collects, same
+    * rerank tail; only the gate thresholds differ. */
+  def searchFixed(queryText: String, queryVec: Column): DataFrame =
+    search(queryText, queryVec,
+      cfg.copy(relaxThreshold = Int.MaxValue, fallbackThreshold = Int.MaxValue))
 
-    // S1 strict AND (or best available single field)
-    val s1: (Option[Column], Int) = ((region, job) match {
-      case (Some(r), Some(j)) => Some(contains(r) && contains(j))
-      case (Some(r), None)    => Some(contains(r))
-      case (None, Some(j))    => Some(contains(j))
-      case _                  => None
-    }) -> cfg.topK
-    // S2 OR relaxation — always on (gating disabled)
-    val s2 = (for { r <- region; j <- job } yield contains(r) || contains(j))
-      .map(p => (Some(p): Option[Column]) -> cfg.topK)
-    // S3 single-field passes, region then job (search()'s order)
-    val s3 = region.map(r => (Some(contains(r)): Option[Column]) -> cfg.topK)
-    val s4 = job.map(j => (Some(contains(j)): Option[Column]) -> cfg.topK)
-    // S4 synonym expansion
-    val syn = job.toSeq.flatMap { j =>
-      synonyms(j).map { sy =>
-        val p = region.map(r => contains(r) && contains(sy)).getOrElse(contains(sy))
-        (Some(p): Option[Column]) -> cfg.topK
-      }
-    }
-    // S5 unfiltered fallback — always on
-    val s5 = (None: Option[Column]) -> cfg.fallbackK
-
-    val stages = (Seq(s1) ++ s2.toSeq ++ s3.toSeq ++ s4.toSeq ++ syn :+ s5)
-    val scored = scoredPool(queryVec)
-    val perStage = stages.zipWithIndex.map { case ((pred, k), i) =>
-      knnStage(scored, pred, k, i + 1)
-        .select(col(idCol), col(textCol), col("dist"), col("stage_rank"))
-    }
-    val unioned = perStage.reduce(_ unionByName _)
-    val deduped = Dedup.keepFirst(unioned, Seq(idCol),
-      Seq(col("stage_rank"), col("dist"), col(idCol)))
-    rerankTail(deduped, ner)
-  }
-
-  /** [[search]] WITH its count gates, as one declarative plan — the
-    * c4 single-gate idiom generalized to the flagship's full gate
-    * ladder. The key observation making this expressible: a stage's
-    * RESULT never depends on earlier stages (each is an independent
-    * filter ∘ distance ∘ top-k over the corpus) — only a stage's
-    * INCLUSION does, through the running distinct-id count. So every
-    * stage plan is built unconditionally, each gate becomes a 1-row
-    * count aggregate over the (bounded, ≤k-row) earlier stage frames,
-    * and a gated stage keeps or drops ALL its rows by broadcast-
-    * crossing that count in — `adaptive ≡ gated` on ANY corpus, which
-    * is exactly the identity c1 pins (and the gated plan itself is
-    * DuckDB-replayable: stage CTEs + gates as scalar-subquery
-    * predicates — c7).
+  /** [[search]] as ONE declarative plan: the batch core
+    * ([[gatedBatchCore]]) over a one-row query log. The query resolves
+    * on the driver ([[MultiStageSearch.resolveQuery]], the batch
+    * prelude's driver path); every pool row (the `knnBackend` pool, or
+    * the corpus) carries the query id, the resolved NER fields and
+    * `queryVec` itself — a column of the pool, so a query vector that
+    * is a corpus column works too — and the rerank text is read from
+    * the same pool. The result is a lazy plan with no checkpoint, so
+    * repeated calls retain nothing. `search ≡ searchGated` row for row
+    * on any corpus (CascadeSpec pins it; c1/c5 assert it on the real
+    * corpora).
     *
-    * Stage numbering is the one adaptivity left: [[search]] numbers
-    * only the stages that RAN. Mirrored declaratively — each stage's
-    * `stage_rank` is 1 + the number of included stages before it,
-    * computed from the same broadcast gate flags (a skipped gate
-    * contributes 0), so the output is row-identical to [[search]]'s
-    * including the rank column.
-    *
-    * Scale shape: per-stage TakeOrderedAndProject keeps ≤k rows; each
-    * stage frame is localCheckpointed (bounded ≤15 rows) because the
-    * count ladder and the final union reference it up to 3× — one
-    * corpus scan per stage, same as the adaptive form. The gate
-    * aggregates and flag frame are 1-row broadcasts. */
+    * Needs an INTEGRAL corpus id: the core ranks on a long-cast id, so
+    * a string id fails here, at call time ([[Ann.requireIntegralId]]);
+    * [[search]] and [[searchFixed]] keep the id column untyped. */
   def searchGated(queryText: String, queryVec: Column): DataFrame = {
-    if (isBlank(queryText)) return emptyResponse
-    val ner = resolvedNer(queryText)
-    val region = ner.region
-    val job = ner.job
-    def contains(term: String): Column =
-      lower(col(textCol)).contains(term.toLowerCase)
-
-    val scored = scoredPool(queryVec)
-    // EAGER ≤k-row checkpoints (round 22): each stage frame is read up
-    // to 3× (two gate counts + the union), and as LAZY checkpoints the
-    // gate-count broadcasts materialized them as a swarm of ~50
-    // concurrent duplicate jobs (profiled: 59 jobs, most re-running
-    // stage subtrees before any checkpoint landed). Eager = exactly one
-    // tiny job per stage over the cached scored source; every gate
-    // count and the union then reads ≤k cached rows, and the final
-    // plan shrinks from repeated stage subtrees to ExistingRDD scans.
-    def stageFrame(pred: Option[Column], k: Int): DataFrame =
-      knnStage(scored, pred, k, 0)
-        .select(col(idCol), col(textCol), col("dist"))
-        .localCheckpoint(true)
-    // Each 1-ROW count frame is eagerly checkpointed (round 22): n1/n2/
-    // n6 are referenced up to 3× each (stage gates + the gflags rank
-    // frame), and as live subtrees every reference re-embedded the
-    // whole union-of-stages aggregate — the final plan carried ~3.9k
-    // operator lines and Catalyst spent a profiled ~0.7 s optimizing
-    // it. As ExistingRDD leaves the same plan is ~200 lines; the gate
-    // algebra itself is unchanged and still entirely in-plan.
-    def distinctIds(dfs: Seq[DataFrame]): DataFrame =
-      dfs.map(_.select(col(idCol))).reduce(_ unionByName _)
-        .agg(count_distinct(col(idCol)).as("__n"))
-        .localCheckpoint(true)
-
-    // S1 (always): strict AND, or the best available single field
-    val st1 = stageFrame((region, job) match {
-      case (Some(r), Some(j)) => Some(contains(r) && contains(j))
-      case (Some(r), None)    => Some(contains(r))
-      case (None, Some(j))    => Some(contains(j))
-      case _                  => None
-    }, cfg.topK)
-    // gate g2 = |ids after S1| < relaxThreshold (S2 exists only when
-    // both fields resolved — a STATIC fact of the query, not a gate)
-    val n1 = distinctIds(Seq(st1))
-    val st2 = (for { r <- region; j <- job } yield contains(r) || contains(j))
-      .map(p => stageFrame(Some(p), cfg.topK)
-        .crossJoin(broadcast(n1)).filter(col("__n") < cfg.relaxThreshold)
-        .drop("__n"))
-    // gate g3 = |ids after S1 ∪ gated S2| < relaxThreshold; it admits
-    // BOTH single-field stages (search() checks the count once)
-    val n2 = distinctIds(Seq(st1) ++ st2.toSeq)
-    def g3(df: DataFrame) = df.crossJoin(broadcast(n2))
-      .filter(col("__n") < cfg.relaxThreshold).drop("__n")
-    val st3 = region.map(r => g3(stageFrame(Some(contains(r)), cfg.topK)))
-    val st4 = job.map(j => g3(stageFrame(Some(contains(j)), cfg.topK)))
-    // synonym stages: ungated
-    val syn = job.toSeq.flatMap { j =>
-      synonyms(j).map { sy =>
-        val p = region.map(r => contains(r) && contains(sy))
-          .getOrElse(contains(sy))
-        stageFrame(Some(p), cfg.topK)
+    Ann.requireIntegralId(corpus, idCol, "searchGated", "corpus id")
+    MultiStageSearch.resolveQuery(queryNer, synonyms, profile, 0L, queryText)
+      .fold(emptyResponse) { q =>
+        val spark = corpus.sparkSession
+        import spark.implicits._
+        val nerDf = broadcast(
+          Seq(q).toDF("__qid", "__job", "__region", "__age", "__syns"))
+        val pool = knnBackend.fold(corpus)(_(queryVec))
+        gatedBatchCore("__qid", nerDf, q._5.length,
+          pool.crossJoin(nerDf).withColumn("__qv", queryVec), pool)
+          .drop("__qid")
       }
-    }
-    // gate g5 = |ids after everything included so far| < fallbackThreshold
-    val n6 = distinctIds(Seq(st1) ++ st2.toSeq ++ st3.toSeq ++ st4.toSeq ++ syn)
-    val st7 = stageFrame(None, cfg.fallbackK)
-      .crossJoin(broadcast(n6)).filter(col("__n") < cfg.fallbackThreshold)
-      .drop("__n")
-
-    // dynamic stage ranks from one broadcast 1-row flag frame: a
-    // stage's rank = 1 + included stages before it
-    val gflags = broadcast(
-      n1.select((col("__n") < cfg.relaxThreshold).as("__g2"))
-        .crossJoin(n2.select((col("__n") < cfg.relaxThreshold).as("__g3")))
-        .crossJoin(n6.select((col("__n") < cfg.fallbackThreshold).as("__g5"))))
-    val s2exists = st2.isDefined
-    val nSingle = st3.size + st4.size
-    val g2i: Column =
-      if (s2exists) when(col("__g2"), 1).otherwise(0) else lit(0)
-    val g3i: Column =
-      if (nSingle > 0) when(col("__g3"), nSingle).otherwise(0) else lit(0)
-    // Only stages whose rank actually reads a gate indicator pay the
-    // gflags crossJoin — st1/st2 (and st3+ when the relevant gates
-    // collapse to lit(0)) carry pure-literal ranks and join nothing.
-    // A rank reads gflags exactly when one of its indicator terms is
-    // non-literal: g2i when st2 exists, g3i when any single-term stage
-    // exists — decided here statically (the ranks are built right
-    // below) rather than by introspecting the Column's expression.
-    val g2Reads = s2exists
-    val g3Reads = nSingle > 0
-    def at(df: DataFrame, rank: Column, readsGate: Boolean): DataFrame = {
-      val base = if (readsGate) df.crossJoin(gflags) else df
-      base.withColumn("stage_rank", rank.cast("int"))
-        .select(col(idCol), col(textCol), col("dist"), col("stage_rank"))
-    }
-    val parts =
-      Seq(at(st1, lit(1), readsGate = false)) ++
-        st2.map(at(_, lit(2), readsGate = false)).toSeq ++
-        st3.map(at(_, lit(2) + g2i, g2Reads)).toSeq ++
-        st4.map(at(_, lit(2) + g2i + lit(st3.size), g2Reads)).toSeq ++
-        syn.zipWithIndex.map { case (df, m) =>
-          at(df, lit(2 + m) + g2i + g3i, g2Reads || g3Reads)
-        } ++
-        Seq(at(st7, lit(2 + syn.size) + g2i + g3i, g2Reads || g3Reads))
-    val unioned = parts.reduce(_ unionByName _)
-    val deduped = Dedup.keepFirst(unioned, Seq(idCol),
-      Seq(col("stage_rank"), col("dist"), col(idCol)))
-    rerankTail(deduped, ner)
   }
 
-  /** [[searchGated]] for a BATCH of queries, as ONE data-parallel
-    * plan — queries are rows, not driver round-trips. The per-query
-    * form scans the corpus once per stage per query (7·|Q| scans for a
-    * query log); this form scans it TWICE TOTAL regardless of |Q|:
+  /** The gated cascade for a BATCH of queries, as ONE data-parallel
+    * plan — queries are rows, not driver round-trips. [[search]] scans
+    * the pool once per query (|Q| scans plus 7·|Q| stage jobs for a
+    * query log); this form scans the corpus TWICE TOTAL regardless of
+    * |Q|:
     *
     *  1. candidates: corpus ⨯ broadcast(queries) computes each pair's
     *     distance ONCE, tags it with the stage slots whose predicate
@@ -496,11 +368,11 @@ final class MultiStageSearch(
     * pivoted stage heaps (one row per qid): running distinct-id counts
     * via array_distinct/concat, gated stages kept or emptied by
     * when(), ran-only stage renumbering from the same gate indicators
-    * — the exact algebra of [[searchGated]], evaluated |Q| times in
-    * one narrow map instead of |Q| driver plans. Per-query results are
-    * row-identical to [[searchGated]] (CascadeBatchSpec pins the
-    * identity across all four query structures; c9 hash-checks the
-    * batch against per-query DuckDB replays).
+    * — [[search]]'s driver-side gates, evaluated |Q| times in one
+    * narrow map instead of |Q| driver plans. Per-query results are
+    * row-identical to [[search]] (CascadeBatchSpec pins the identity
+    * across all four query structures; c9 hash-checks the batch
+    * against per-query DuckDB replays).
     *
     * The semantic boundary is scale-dispatched (see [[batchPrelude]]):
     * request-sized batches resolve NER/synonyms on the driver from the
@@ -509,8 +381,8 @@ final class MultiStageSearch(
     * `mapPartitions` — the driver never holds the texts. Vectors never
     * go near the boundary either way. Blank queries contribute zero
     * rows (the F4 guard, batch-shaped). Integral ids are REQUIRED on
-    * both sides (the
-    * candidate entry is (double, long)) and enforced eagerly
+    * both sides (the candidate entry is (double, long)) and enforced
+    * eagerly
     * ([[Ann.requireIntegralId]]) — the internal non-ANSI long cast
     * would null non-numeric ids and silently drop their rows; not
     * available with a custom `knnBackend` — the batch plan IS the
@@ -530,7 +402,7 @@ final class MultiStageSearch(
                        qtextCol: String, qvecCol: String): DataFrame = {
     require(knnBackend.isEmpty,
       "searchGatedBatch builds its own batched candidate plan and cannot " +
-        "honor a custom knnBackend — use per-query searchGated for served " +
+        "honor a custom knnBackend — use per-query search for served " +
         "backends, or searchGatedBatchServed over a cluster-assigned index")
     Ann.requireIntegralId(corpus, idCol, "searchGatedBatch", "corpus id")
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatch", "query id")
@@ -539,7 +411,7 @@ final class MultiStageSearch(
         case Left(empty) => empty
         case Right((nerDf, maxSyn, qframe)) =>
           gatedBatchCore(qidCol, nerDf, maxSyn,
-            corpus.crossJoin(broadcast(qframe)))
+            corpus.crossJoin(broadcast(qframe)), corpus)
       }
     sliceDispatch(queries, qidCol, qtextCol, qvecCol)(one)
       .getOrElse(one(queries))
@@ -555,7 +427,7 @@ final class MultiStageSearch(
     * meets only the queries probing its cluster — the pair stream
     * shrinks by ~nprobe/k and, over a stored partitioned index, the
     * scan itself prunes to the union of probed clusters. Per-query
-    * results are row-identical to [[searchGated]] with the equivalent
+    * results are row-identical to [[search]] with the equivalent
     * served backend (CascadeBatchSpec pins it); the gate ladder,
     * dedup, and rerank are [[gatedBatchCore]]'s, unchanged. Same
     * deterministic-query-source requirement as [[searchGatedBatch]]
@@ -593,7 +465,7 @@ final class MultiStageSearch(
           val qprobe = qframe.join(probeMap, "__qid")
           gatedBatchCore(qidCol, nerDf, maxSyn,
             corpus.join(broadcast(qprobe),
-              col("cluster_id").cast("long") === col("__cid")))
+              col("cluster_id").cast("long") === col("__cid")), corpus)
       }
     // the served form's broadcast frame is qprobe — |Q| · nprobe rows,
     // not |Q| — so its slice budget divides by nprobe (the exact form
@@ -794,11 +666,12 @@ final class MultiStageSearch(
   /** The batched gate-ladder pipeline over an already-joined
     * (corpus row × query) pair stream: slot masks → windowed top-k per
     * (qid, slot) → per-qid gate algebra → keep-first dedup → text
-    * fetch → rerank. Shared verbatim by the exact and the served batch
-    * — only the pair stream differs, which is exactly the
-    * backend-independence the single-query identity gates pin. */
+    * fetch from `texts` → rerank. Shared verbatim by the exact batch,
+    * the served batch and [[searchGated]] (a one-row log over its
+    * pool) — only the pair stream and the text source differ, which
+    * is exactly the backend-independence the identity gates pin. */
   private def gatedBatchCore(qidCol: String, nerDf: DataFrame, maxSyn: Int,
-                             paired: DataFrame): DataFrame = {
+                             paired: DataFrame, texts: DataFrame): DataFrame = {
     val lt = lower(col(textCol))
     def cterm(t: Column): Column = lt.contains(lower(t))
     val cr = col("__region").isNotNull && cterm(col("__region"))
@@ -872,8 +745,8 @@ final class MultiStageSearch(
       .agg(slotAgg.head, slotAgg.tail: _*)
       .join(nerDf, "__qid")
 
-    // -- the gate ladder, per qid, as array expressions (searchGated's
-    //    exact algebra: counts over gated unions, ran-only renumbering)
+    // -- the gate ladder, per qid, as array expressions (search()'s
+    //    gates: counts over gated unions, ran-only renumbering)
     val s2exists = col("__job").isNotNull && col("__region").isNotNull
     val n1 = size(array_distinct(ids(nn(col("__a1")))))
     val g2 = s2exists && (n1 < cfg.relaxThreshold)
@@ -918,7 +791,7 @@ final class MultiStageSearch(
     val deduped = Dedup.keepFirst(cand, Seq("__qid", "__id"),
       Seq(col("stage_rank"), col("dist"), col("__id")))
     val withText = broadcast(deduped)
-      .join(corpus.select(col(idCol).cast("long").as("__id"),
+      .join(texts.select(col(idCol).cast("long").as("__id"),
         col(textCol)), "__id")
       .join(nerDf, "__qid")
     val jb = lower(col("__job"))
@@ -958,8 +831,6 @@ final class MultiStageSearch(
                    scanK: Int = 1000): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
     val ner = resolvedNer(queryText)
-    def contains(term: String): Column =
-      lower(col(textCol)).contains(term.toLowerCase)
 
     val pool = Knn.exact(corpus, embCol, idCol, queryVec, scanK)
       .select(col(idCol), col(textCol), col("dist"))
@@ -995,11 +866,8 @@ final class MultiStageSearch(
     * unfiltered pool), and a single count-gate over a single pool IS
     * relationally expressible: flag matching pool rows, aggregate the
     * flag count (1 row), broadcast it back over the pool, and keep
-    * `match=1 OR count<threshold`. No driver-side collect, and —
-    * unlike [[searchFixed]] — the ADAPTIVITY itself sits inside the
-    * oracle-checked plan (the multi-stage cascade's sequential gates
-    * stay driver-side: each later stage's existence depends on the
-    * previous counts, which SQL cannot express without recursion).
+    * `match=1 OR count<threshold`. No driver-side collect, and the
+    * ADAPTIVITY itself sits inside the oracle-checked plan (c4).
     *
     * Scale shape: the pool is one filter ∘ distance ∘
     * TakeOrderedAndProject (≤scanK rows); everything after operates on
@@ -1008,8 +876,6 @@ final class MultiStageSearch(
                         scanK: Int = 1000): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
     val ner = resolvedNer(queryText)
-    def contains(term: String): Column =
-      lower(col(textCol)).contains(term.toLowerCase)
     val pool = Knn.exact(corpus, embCol, idCol, queryVec, scanK)
       .select(col(idCol), col(textCol), col("dist"))
     // keep(r): null text never matches; absent NER fields don't filter

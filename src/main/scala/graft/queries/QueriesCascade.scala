@@ -21,24 +21,21 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
 
   def cascade(s: SparkSession, d: String): DataFrame = {
     // lazy localCheckpoint (the shared-subtree pattern): this entry
-    // executes the adaptive cascade (a count action per stage) and,
-    // under the identity gate, the gated declarative twin — each would
-    // re-run the docs⋈embeddings join otherwise. The joined corpus is
-    // bounded by |embeddings| rows.
+    // executes the adaptive cascade and, under the identity gate, the
+    // batch core over a one-row log — each would re-run the
+    // docs⋈embeddings join otherwise. The joined corpus is bounded by
+    // |embeddings| rows.
     val corpus = t(s, d, "documents")
       .join(t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
       .crossJoin(broadcast(queryVec(s, d, 0)))
       .localCheckpoint(false)
     val q = "looking for a join job in the row area"
-    // Identity gate (round-12 judge ask #1, upgrading the round-9
-    // fixture check): searchGated expresses the flagship's WHOLE gate
-    // ladder declaratively (the c4 single-gate idiom generalized), so
-    // adaptive ≡ gated holds on ANY corpus — not just the
-    // all-gates-fire fixture — and the gated twin at the same config
-    // is c7's hash-checked query. Asserting row-identity HERE, on the
-    // real corpus, makes c1 transitively oracle-checked:
-    // c1 ≡ searchGated ≡ DuckDB. (CascadeSpec still drives the
-    // all-gates-fire fixture through search/searchFixed/searchGated.)
+    // Identity gate: the two ladders that serve traffic must agree on
+    // the real corpus. search() is the per-request ladder (c7 checks
+    // it against DuckDB directly); searchGated is the batch core
+    // (c9/c10's ladder) over a one-row log. Asserting row-identity
+    // HERE pins adaptive ≡ batch core on ANY corpus, not just the
+    // CascadeSpec fixtures.
     val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
     def proj(df: DataFrame, stamp: Boolean): DataFrame =
       df.select(col("rank"), col("doc_id"), col("stage_rank"),
@@ -65,10 +62,10 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
 
 
   private val c3 = QuerySpec("c3_cascade_fixed",
-    // The flagship cascade with count gating DISABLED (every stage
-    // always runs): the whole union→keep-first-dedup→rerank→top-5+rank
-    // tail as ONE declarative plan, which makes it fully
-    // SQL-expressible — the oracle-checkable twin of c1. Query NER on
+    // The flagship cascade with its count gates OPEN (searchFixed:
+    // search() with both thresholds at Int.MaxValue, so every stage
+    // always runs): the static stage list, union→keep-first-dedup→
+    // rerank→top-5+rank, is plain SQL. Query NER on
     // "looking for a join job in the row area" → job=join, region=row,
     // synonyms(join)=[merge,hash], so the static stage list is:
     //   1 row∧join  2 row∨join  3 row  4 join  5 row∧merge
@@ -227,18 +224,16 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
   }
 
   private val c7 = QuerySpec("c7_cascade_gated",
-    // The flagship cascade's GATED oracle twin (round-12 judge ask
-    // #1): MultiStageSearch.searchGated — the same stage list as c1
-    // WITH the count-gate ladder, as one declarative plan — against
-    // the DuckDB replay whose gates are scalar-subquery counts. This
-    // is the query c1's identity gate points at: together they close
-    // the last unchecked surface (the 5-gate adaptive policy itself).
+    // The flagship cascade WITH its count-gate ladder, hash-checked:
+    // MultiStageSearch.search — the per-request path c1 serves —
+    // against the DuckDB replay whose gates are scalar-subquery
+    // counts. This checks the 5-gate adaptive policy itself.
     (s, d) => {
       val corpus = t(s, d, "documents")
         .join(t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
         .crossJoin(broadcast(queryVec(s, d, 0)))
       new MultiStageSearch(corpus, "doc_id", "text", "embedding")
-        .searchGated("looking for a join job in the row area", col("qv"))
+        .search("looking for a join job in the row area", col("qv"))
         .select(col("rank"), col("doc_id"), col("stage_rank"),
           round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
     },
@@ -357,13 +352,11 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     // cluster-partitioned index through the nprobe=8 probe rule
     // instead of scanning the corpus — reference lifecycle §3.1 (build
     // the store once, serve every query from it). Gated like c1:
-    //   1. identity: the served ADAPTIVE cascade must equal the served
-    //      GATED declarative cascade (searchGated over the SAME
-    //      backend) row for row, on the REAL served corpus — the gate
-    //      ladder is backend-independent, and the gated twin over this
-    //      backend is c8's hash-checked query, so c5 is transitively
-    //      oracle-checked end-to-end (round-12 ask #1 applied to the
-    //      serving shape);
+    //   1. identity: the served ADAPTIVE cascade (search, the path
+    //      c8 hash-checks) must equal the batch core over a one-row
+    //      log (searchGated over the SAME backend) row for row, on
+    //      the REAL served corpus — the two ladders that serve traffic
+    //      agree on the production index;
     //   2. recall floor: the served final top-5 must overlap the
     //      exact-scan cascade's top-5 by ≥ 0.4 (broken-serving alarm;
     //      the rerank tail is score-dominated, so served-vs-exact
@@ -429,8 +422,8 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
         JOIN probe ON cl.cluster_id = probe.cluster_id CROSS JOIN q)"""
 
   private val c6 = QuerySpec("c6_cascade_served_fixed",
-    // c5's declarative twin, HASH-CHECKED: the fixed-policy cascade
-    // (c3's stage list) served from the trained stored index, with the
+    // c5 with its gates open, HASH-CHECKED: searchFixed (c3's static
+    // stage list) served from the trained stored index, with the
     // ENTIRE serving path replayed in DuckDB over the v14 centroid
     // sidecar — argmin assignment, the nprobe=8 probe rule, then each
     // stage's filter ∘ distance ∘ top-k restricted to the probed
@@ -468,22 +461,21 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     })
 
   private val c8 = QuerySpec("c8_cascade_served_gated",
-    // c5's declarative twin, HASH-CHECKED: searchGated — the flagship
-    // stage list WITH its count-gate ladder — served from the trained
-    // stored index, the whole composition replayed in DuckDB over the
-    // v14 centroid sidecar: assignment, the nprobe=8 probe rule, each
+    // c5's adaptive cascade, HASH-CHECKED: search — the flagship stage
+    // list WITH its count-gate ladder — served from the trained stored
+    // index, the whole composition replayed in DuckDB over the v14
+    // centroid sidecar: assignment, the nprobe=8 probe rule, each
     // stage's filter ∘ distance ∘ top-k over the probed clusters, the
     // scalar-subquery gates, ran-only stage numbering, keep-first
     // dedup, rerank tail. c7 pins the gated cascade over the exact
-    // scan; this pins it over the production index — and it is the
-    // twin c5's real-corpus identity gate points at.
+    // scan; this pins it over the production index.
     (s, d) => {
       val (servedCorpus, cent) = cascadePair(s, d)
       val qv = cascadeQueryVec(s, d)
       val backend = servedKnnBackend(servedCorpus, cent, nprobe = 8)
       new MultiStageSearch(servedCorpus, "doc_id",
           "text", "embedding", knnBackend = Some(backend))
-        .searchGated("looking for a join job in the row area", qv)
+        .search("looking for a join job in the row area", qv)
         .select(col("rank"), col("doc_id"), col("stage_rank"),
           round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
     },
@@ -657,7 +649,7 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     // oracle — per-query gated blocks UNION ALL'd — hash-checks every
     // slot-mask shape, the per-structure gate ladders, and the
     // ran-only renumbering in one row set. CascadeBatchSpec separately
-    // pins batch == per-query searchGated row-for-row.
+    // pins batch == per-query search row-for-row.
     (s, d) => {
       import s.implicits._
       val corpus = t(s, d, "documents")

@@ -3,10 +3,13 @@ package graft
 import graft.operators.{CascadeConfig, MultiStageSearch}
 import org.apache.spark.sql.functions._
 
-/** Batch cascade == per-query searchGated, row for row, across every
+/** Batch cascade == per-query search, row for row, across every
   * query STRUCTURE (both terms + synonyms, region-only, job-only,
   * no-terms) and across gate-fired and gate-closed configs; blank
-  * queries contribute zero rows; guards are loud. */
+  * queries contribute zero rows; guards are loud. The per-query side
+  * is `search`, the request ladder: `searchGated` is the batch core
+  * itself on a one-row log, so the identity tests named after it
+  * compare the two ladders that serve traffic. */
 class CascadeBatchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,7 +56,7 @@ class CascadeBatchSpec extends SparkSpec {
     qtexts.foreach { case (qid, t) =>
       val qv = typedlit((0 until 2).map(j =>
         Seq(0.1, 0.05)(j) * qtexts.indexWhere(_._1 == qid)))
-      val single = search.searchGated(t, qv)
+      val single = search.search(t, qv)
         .select("rank", "doc_id", "text", "dist", "stage_rank",
           "judge_score", "rule_score", "score")
         .collect().toSeq.sortBy(_.getAs[Int]("rank"))
@@ -100,7 +103,7 @@ class CascadeBatchSpec extends SparkSpec {
 
   test("served batch == per-query searchGated with the equivalent served backend") {
     // cluster the corpus with 3 hand-placed centroids, then compare
-    // searchGatedBatchServed against per-query searchGated wired to
+    // searchGatedBatchServed against per-query search wired to
     // the c5-style served backend (probe nprobe nearest centroids,
     // pool = probed clusters, exact kNN inside) — for a probing that
     // PRUNES (nprobe=2 of 3) and one that covers everything (nprobe=3)
@@ -130,7 +133,7 @@ class CascadeBatchSpec extends SparkSpec {
           assigned.filter(col("cluster_id").isin(probed: _*))
         val single = new MultiStageSearch(assigned, "doc_id", "text",
             "embedding", cfg, knnBackend = Some(backend))
-          .searchGated(t, typedlit(qvSeq))
+          .search(t, typedlit(qvSeq))
           .select("rank", "doc_id", "text", "dist", "stage_rank",
             "judge_score", "rule_score", "score")
           .collect().toSeq.sortBy(_.getAs[Int]("rank"))
@@ -351,6 +354,17 @@ class CascadeBatchSpec extends SparkSpec {
           Seq((0L, Array(0.0, 0.0))).toDF("cid", "cvec"), "cid", "cvec", 1)
     }
     assert(e3.getMessage.contains("corpus id"))
+    // searchGated is the batch core on a one-row log: it refuses at
+    // call time too, while the request ladder keeps string ids working
+    val sSearch = new MultiStageSearch(sCorpus, "doc_id", "text", "embedding")
+    val q = qtexts.head._2
+    val e4 = intercept[IllegalArgumentException] {
+      sSearch.searchGated(q, typedlit(Seq(0.0, 0.0)))
+    }
+    assert(e4.getMessage.contains("corpus id"))
+    assert(e4.getMessage.contains("searchFixed"))
+    assert(sSearch.search(q, typedlit(Seq(0.0, 0.0))).collect().nonEmpty)
+    assert(sSearch.searchFixed(q, typedlit(Seq(0.0, 0.0))).collect().nonEmpty)
   }
 
   test("guards are loud: duplicate qids, custom knnBackend") {

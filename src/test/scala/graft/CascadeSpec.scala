@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{CascadeConfig, MultiStageSearch}
 import graft.semantic.UserProfile
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** §3.1 flagship cascade: adaptive relaxation + priority dedup +
@@ -197,15 +198,20 @@ class CascadeSpec extends SparkSpec {
 
   test("search releases its scored pool: repeated calls retain no cached RDDs") {
     // a serving loop calls search once per request; each call's
-    // corpus-sized checkpoint must not outlive the call
+    // corpus-sized checkpoint must not outlive the call. searchFixed
+    // (search with open gates) and searchGated (the batch core, a lazy
+    // plan) must retain nothing either — checked WITHOUT a forced GC,
+    // so a checkpoint left for the ContextCleaner would show here
     val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
       CascadeConfig(topK = 3, finalN = 5))
     SessionHygiene.dropCachedBlocks(spark)
     val before = spark.sparkContext.getPersistentRDDs.size
-    (1 to 5).foreach { _ =>
-      assert(search.search("looking for a join job in the row area", col("qv"))
-        .collect().nonEmpty)
-    }
+    val q = "looking for a join job in the row area"
+    Seq[(String, Column) => DataFrame](
+        search.search, search.searchFixed, search.searchGated)
+      .foreach { form =>
+        (1 to 5).foreach(_ => assert(form(q, col("qv")).collect().nonEmpty))
+      }
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
