@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   * then runs exact top-k inside nprobe clusters — candidates shrink by
   * ~k/nprobe versus a full scan while the plan stays
   * filter ∘ distance ∘ TakeOrderedAndProject with no shuffle.
+  *
+  * Every IVF path — exact and quantized, single-vector and frame, the
+  * cascade's served forms and streaming — probes by ONE rule, written
+  * once as two functions side by side: [[probeCells]] ranks a collected
+  * centroid array (driver loops, and frame forms through
+  * [[probeCellsUdf]]), [[probeList]] is its plan twin for one query
+  * vector. The five single-vector exact forms share one core,
+  * [[exactInCells]].
   */
 object Ann {
 
@@ -84,17 +92,21 @@ object Ann {
         lit(cid).as("cid"))
     }.toIndexedSeq: _*))
 
-  /** Collect a centroid table to a sorted driver array (k rows by
-    * definition) — shared by [[ivfAssignBig]] and the streaming probe
-    * path ([[graft.streaming.QueryServe.serveIvf]]) so their
-    * tie-breaks cannot drift apart; [[ivfSearchStore]] selects probes
-    * via the equivalent declarative orderBy(dist, cid) instead. */
+  /** Collect a centroid table to a driver array sorted by cid (k rows
+    * by definition) — what [[ivfAssignBig]]'s argmin and [[probeCells]]
+    * iterate, so assignment and probing break ties alike. A null
+    * vector or element fails loudly: unboxed, it would read as 0.0. */
   private[graft] def collectCentroids(centroids: DataFrame, cidCol: String,
                                       cvecCol: String): Array[(Long, Array[Double])] = {
     val cents = centroids
       .select(col(cidCol).cast("long"), col(cvecCol).cast("array<double>"))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .map { r =>
+        val v = r.getSeq[java.lang.Double](1)
+        require(v != null && !v.contains(null),
+          s"$cidCol ${r.getLong(0)}: null vector or null element")
+        (r.getLong(0), v.map(_.doubleValue).toArray)
+      }
       .sortBy(_._1)
     require(cents.nonEmpty, "centroid table is empty")
     cents
@@ -181,29 +193,22 @@ object Ann {
                      embCol: String, idCol: String,
                      centroids: DataFrame, cidCol: String, cvecCol: String,
                      queryVec: Column, k: Int, nprobe: Int,
-                     adoptStampedNprobe: Boolean = false): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val np = flooredNprobe(spark, path, nprobe, adoptStampedNprobe)
-    val probed = centroids
-      .withColumn("__qdist", VectorFunctions.l2(col(cvecCol), queryVec))
-      .orderBy(col("__qdist"), col(cidCol))
-      .limit(np)
-      .select(col(cidCol).cast("long"))
-      .collect().map(_.getLong(0))
-    Knn.exact(
-      graft.sources.IndexStore.load(spark, path)
-        .filter(col("cluster_id").isin(probed: _*)),
+                     adoptStampedNprobe: Boolean = false): DataFrame =
+    exactInCells(graft.sources.IndexStore.load(spark, path),
+      probeList(Probe(centroids, cidCol, cvecCol,
+        flooredNprobe(spark, path, nprobe, adoptStampedNprobe)), queryVec),
       embCol, idCol, queryVec, k)
-  }
 
   /** The batch-side adoption of the stamped probe floor — one tiny
     * meta read when opted in, shared by every `ivfSearchStore*` form;
     * the algebra itself lives in ONE place
     * ([[graft.sources.IndexStore.effectiveNprobe]]), so streaming and
-    * batch serving cannot drift. */
+    * batch serving cannot drift. The configured budget must be >= 1
+    * whatever the stamp says. */
   private def flooredNprobe(spark: org.apache.spark.sql.SparkSession,
                             path: String, nprobe: Int,
-                            adopt: Boolean): Int =
+                            adopt: Boolean): Int = {
+    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
     if (!adopt) nprobe
     else graft.sources.IndexStore.effectiveNprobe(nprobe,
       // the served path is usually one pinned version DIRECTORY
@@ -217,6 +222,7 @@ object Ann {
       // anyway), so it stays uncached.
       graft.sources.IndexStore.pairMetaAtCached(spark, path)
         .orElse(graft.sources.IndexStore.currentPairMeta(spark, path)))
+  }
 
   /** ADAPTIVE-nprobe serving from the partitioned store: probe the
     * FEWEST nearest clusters whose stored occupancies cover
@@ -236,19 +242,30 @@ object Ann {
     * [[ivfSearchStore]]. Emits the chosen probe count as `n_probed`:
     * the dial a serving monitor watches for occupancy drift pushing
     * probe fan-out (and latency) up, and the trigger for
-    * [[IndexMaintenance]] when it trends toward maxProbe. */
+    * [[IndexMaintenance]] when it trends toward maxProbe.
+    *
+    * `sizes` is [[clusterSizes]] of the stored index: a full-index
+    * occupancy pass, so serving loops compute it once per index
+    * version (the v20 harness entry does). Ranking only the `maxProbe`
+    * nearest cells decides the same count as ranking all of them: the
+    * count never exceeds `maxProbe`. */
   def ivfSearchStoreAdaptive(spark: org.apache.spark.sql.SparkSession,
                              path: String, embCol: String, idCol: String,
                              centroids: DataFrame, cidCol: String,
                              cvecCol: String, queryVec: Column, k: Int,
-                             candMult: Int, maxProbe: Int): DataFrame = {
-    // Self-computing variant: pays a full-index occupancy pass PER
-    // CALL. Occupancy is a property of the stored index, so serving
-    // loops should compute [[clusterSizes]] once per index version
-    // and use the sizes overload (the v20 harness entry does).
-    ivfSearchStoreAdaptive(spark, path, embCol, idCol, centroids,
-      cidCol, cvecCol, queryVec, k, candMult, maxProbe,
-      clusterSizes(spark, path))
+                             candMult: Int, maxProbe: Int,
+                             sizes: Map[Long, Long]): DataFrame = {
+    require(k >= 1, s"k $k must be >= 1")
+    require(candMult >= 1, s"candMult $candMult must be >= 1")
+    require(maxProbe >= 1, s"maxProbe $maxProbe must be >= 1")
+    val ranked = probeList(Probe(centroids, cidCol, cvecCol, maxProbe), queryVec)
+    require(ranked.nonEmpty, "centroid table is empty")
+    val cums = ranked.scanLeft(0L)((acc, cid) => acc + sizes.getOrElse(cid, 0L)).tail
+    val covered = cums.indexWhere(_ >= k.toLong * candMult)
+    val p = if (covered < 0) ranked.length else covered + 1
+    exactInCells(graft.sources.IndexStore.load(spark, path), ranked.take(p),
+        embCol, idCol, queryVec, k)
+      .withColumn("n_probed", lit(p.toLong))
   }
 
   /** Per-cluster occupancy of a stored index — the sizes input the
@@ -264,37 +281,6 @@ object Ann {
       .groupBy(col("cluster_id").cast("long").as("cluster_id"))
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  def ivfSearchStoreAdaptive(spark: org.apache.spark.sql.SparkSession,
-                             path: String, embCol: String, idCol: String,
-                             centroids: DataFrame, cidCol: String,
-                             cvecCol: String, queryVec: Column, k: Int,
-                             candMult: Int, maxProbe: Int,
-                             sizes: Map[Long, Long]): DataFrame = {
-    require(k >= 1, s"k $k must be >= 1")
-    require(candMult >= 1, s"candMult $candMult must be >= 1")
-    require(maxProbe >= 1, s"maxProbe $maxProbe must be >= 1")
-    val ranked = centroids
-      .withColumn("__qdist", VectorFunctions.l2(col(cvecCol), queryVec))
-      .orderBy(col("__qdist"), col(cidCol))
-      .select(col(cidCol).cast("long"))
-      .collect().map(_.getLong(0))
-    require(ranked.nonEmpty, "centroid table is empty")
-    val target = k.toLong * candMult
-    val cums = ranked.scanLeft(0L)((acc, cid) =>
-      acc + sizes.getOrElse(cid, 0L)).tail
-    val wanted = cums.indexWhere(_ >= target) match {
-      case -1 => ranked.length
-      case i  => i + 1
-    }
-    val p = math.max(1, math.min(wanted, maxProbe))
-    val probed = ranked.take(p)
-    Knn.exact(
-      graft.sources.IndexStore.load(spark, path)
-        .filter(col("cluster_id").isin(probed: _*)),
-      embCol, idCol, queryVec, k)
-      .withColumn("n_probed", lit(p.toLong))
-  }
 
   /** Metadata-FILTERED IVF serving — the "vector search with a
     * predicate" shape every production vector store exposes (tenant,
@@ -322,20 +308,11 @@ object Ann {
                           centroids: DataFrame, cidCol: String, cvecCol: String,
                           queryVec: Column, k: Int, nprobe: Int,
                           predicate: Column,
-                          adoptStampedNprobe: Boolean = false): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val np = flooredNprobe(spark, path, nprobe, adoptStampedNprobe)
-    val probed = centroids
-      .withColumn("__qdist", VectorFunctions.l2(col(cvecCol), queryVec))
-      .orderBy(col("__qdist"), col(cidCol))
-      .limit(np)
-      .select(col(cidCol).cast("long"))
-      .collect().map(_.getLong(0))
-    Knn.exact(
-      graft.sources.IndexStore.load(spark, path)
-        .filter(col("cluster_id").isin(probed: _*) && predicate),
-      embCol, idCol, queryVec, k)
-  }
+                          adoptStampedNprobe: Boolean = false): DataFrame =
+    exactInCells(graft.sources.IndexStore.load(spark, path),
+      probeList(Probe(centroids, cidCol, cvecCol,
+        flooredNprobe(spark, path, nprobe, adoptStampedNprobe)), queryVec),
+      embCol, idCol, queryVec, k, _.filter(predicate))
 
   /** Tombstone-aware serving: [[ivfSearchStore]] honoring a DELETE
     * set. A cluster-partitioned index can't be rebuilt per delete;
@@ -356,23 +333,16 @@ object Ann {
                               nprobe: Int, tombstones: DataFrame,
                               tombIdCol: String,
                               adoptStampedNprobe: Boolean = false): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val np = flooredNprobe(spark, path, nprobe, adoptStampedNprobe)
-    val probed = centroids
-      .withColumn("__qdist", VectorFunctions.l2(col(cvecCol), queryVec))
-      .orderBy(col("__qdist"), col(cidCol))
-      .limit(np)
-      .select(col(cidCol).cast("long"))
-      .collect().map(_.getLong(0))
     val tomb = tombstones.select(col(tombIdCol).as("__tomb_id")).distinct()
-    val live = graft.sources.IndexStore.load(spark, path)
-      .filter(col("cluster_id").isin(probed: _*))
-      .join(broadcast(tomb), col(idCol) === col("__tomb_id"), "left_anti")
-    Knn.exact(live, embCol, idCol, queryVec, k)
+    exactInCells(graft.sources.IndexStore.load(spark, path),
+      probeList(Probe(centroids, cidCol, cvecCol,
+        flooredNprobe(spark, path, nprobe, adoptStampedNprobe)), queryVec),
+      embCol, idCol, queryVec, k,
+      _.join(broadcast(tomb), col(idCol) === col("__tomb_id"), "left_anti"))
   }
 
-  /** Batch IVF search: per-query probe selection over the broadcast
-    * centroid table (queries × k rows — both small), then exact top-k
+  /** Batch IVF search: per-query probe selection against the broadcast
+    * centroid array ([[probeCellsUdf]]), then exact top-k
     * INSIDE the probed clusters via the bounded [[TopK]] aggregation:
     * partial heaps map-side, the exchange carries ≤k rows per
     * (partition × query). The candidate join is keyed on cluster_id,
@@ -383,32 +353,21 @@ object Ann {
   def ivfSearchBatch(assigned: DataFrame, embCol: String, idCol: String,
                      centroids: DataFrame, cidCol: String, cvecCol: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
-                     k: Int, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val probes = batchProbes(queries, qidCol, qvecCol,
-      centroids, cidCol, cvecCol, nprobe)
-    searchWithProbes(assigned, embCol, idCol, probes, qidCol, k)
-  }
+                     k: Int, nprobe: Int): DataFrame =
+    searchWithProbes(assigned, embCol, idCol, batchProbes(queries, qidCol,
+      qvecCol, Probe(centroids, cidCol, cvecCol, nprobe)), qidCol, k)
 
   /** Per-query probe table: (__qid, __qvec, cluster_id), nprobe rows
-    * per query — queries × centroids are both broadcast-small.
+    * per query ([[probeCellsUdf]], exploded).
     * The query frame's columns are renamed to reserved __q* names up
     * front: if the caller's qidCol/qvecCol collide with a column of
-    * the corpus or `centroids` (e.g. both vector columns named
-    * "embedding"), an un-renamed join would be ambiguous or silently
-    * bind the wrong side. */
+    * the corpus (e.g. both vector columns named "embedding"), an
+    * un-renamed join would be ambiguous or silently bind the wrong
+    * side. */
   private def batchProbes(queries: DataFrame, qidCol: String, qvecCol: String,
-                          centroids: DataFrame, cidCol: String,
-                          cvecCol: String, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(qidCol).as("__qid"), col(qvecCol).as("__qvec"))
-    val probeW = Window.partitionBy("__qid").orderBy(col("__qdist"), col(cidCol))
-    q.crossJoin(broadcast(centroids))
-      .withColumn("__qdist", VectorFunctions.l2(col(cvecCol), col("__qvec")))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nprobe)
-      .select(col("__qid"), col("__qvec"), col(cidCol).as("cluster_id"))
-  }
+                          p: Probe): DataFrame =
+    queries.select(col(qidCol).as("__qid"), col(qvecCol).as("__qvec"))
+      .withColumn("cluster_id", explode(probeCellsUdf(p)(col("__qvec"))))
 
   private def searchWithProbes(assigned: DataFrame, embCol: String,
                                idCol: String, probes: DataFrame,
@@ -443,10 +402,8 @@ object Ann {
                           qidCol: String, qvecCol: String,
                           k: Int, nprobe: Int,
                           adoptStampedNprobe: Boolean = false): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val np = flooredNprobe(spark, path, nprobe, adoptStampedNprobe)
-    val probes = batchProbes(queries, qidCol, qvecCol,
-      centroids, cidCol, cvecCol, np)
+    val probes = batchProbes(queries, qidCol, qvecCol, Probe(centroids,
+      cidCol, cvecCol, flooredNprobe(spark, path, nprobe, adoptStampedNprobe)))
     val probed = probes.select(col("cluster_id").cast("long")).distinct()
       .collect().map(_.getLong(0)) // bounded by queries × nprobe
     val store = graft.sources.IndexStore.load(spark, path)
@@ -763,19 +720,10 @@ object Ann {
     * of [[ivfAssign]] (ideally written partitioned by cluster_id). */
   def ivfSearch(assigned: DataFrame, embCol: String, idCol: String,
                 centroids: DataFrame, cidCol: String, cvecCol: String,
-                queryVec: Column, k: Int, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val probed = centroids
-      .withColumn("__qdist", VectorFunctions.l2(col(cvecCol), queryVec))
-      .orderBy(col("__qdist"), col(cidCol))
-      .limit(nprobe)
-      .select(col(cidCol).as("cluster_id"))
-    // nprobe cluster ids → broadcast semi-join = partition pruning when
-    // the assigned table is stored partitioned by cluster_id.
-    Knn.exact(
-      assigned.join(broadcast(probed), Seq("cluster_id"), "left_semi"),
+                queryVec: Column, k: Int, nprobe: Int): DataFrame =
+    exactInCells(assigned,
+      probeList(Probe(centroids, cidCol, cvecCol, nprobe), queryVec),
       embCol, idCol, queryVec, k)
-  }
 
   /** Embedding-space drift between two corpus snapshots — the vector
     * twin of [[Curation.distributionDrift]] (t22). Both snapshots are
@@ -1381,8 +1329,10 @@ object Ann {
                                       qvecCol: String) extends Queries
 
   /** IVF pruning: serve only the `nprobe` clusters nearest each query. */
-  private final case class Probe(centroids: DataFrame, cidCol: String,
-                                 cvecCol: String, nprobe: Int)
+  private[graft] final case class Probe(centroids: DataFrame, cidCol: String,
+                                        cvecCol: String, nprobe: Int) {
+    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
+  }
 
   /** The two-stage core behind every quantizer serve function. Stage
     * one scores the stored code table (`encoded`) with the rung's
@@ -1430,11 +1380,8 @@ object Ann {
                              candMult: Int,
                              probe: Option[Probe] = None): DataFrame = {
     require(k >= 1 && candMult >= 1, "k and candMult must be >= 1")
-    probe.foreach { p =>
-      require(p.nprobe >= 1, s"nprobe ${p.nprobe} must be >= 1")
-      require(encoded.columns.contains("cluster_id"),
-        s"${q.who} needs a cluster-assigned code table (cluster_id column)")
-    }
+    probe.foreach(_ => require(encoded.columns.contains("cluster_id"),
+      s"${q.who} needs a cluster-assigned code table (cluster_id column)"))
     val (approxCol, exactCol) = (q.approxScore.name, q.exactScore.name)
     val emb = col(embCol).cast("array<double>")
     def guarded(s: Score, x: Column, id: Column): Column =
@@ -1499,15 +1446,11 @@ object Ann {
           case None => stored.crossJoin(prepped)
           case Some(p) =>
             import sp.implicits._
-            // [[probeList]]'s rule per query — L2 (sqrt of the same left
-            // fold), ties by cid — on the driver, where the queries and
-            // the k-row centroid table both are: ≤ nq·nprobe pairs
+            // the queries and the k-row centroid table are both on the
+            // driver here: ≤ nq·nprobe pairs
             val cents = collectCentroids(p.centroids, p.cidCol, p.cvecCol)
-            val probes = rows.toSeq.flatMap { r =>
-              val v = r.getSeq[Double](1).toArray
-              cents.map { case (cid, cv) => (math.sqrt(l2sqStrict(cv, v)), cid) }
-                .sorted.take(p.nprobe).map { case (_, cid) => (r.getLong(0), cid) }
-            }
+            val probes = rows.toSeq.flatMap(r => probeCells(cents,
+              r.getSeq[Double](1).toArray, p.nprobe).map((r.getLong(0), _)))
             stored.filter(col("cluster_id").isin(probes.map(_._2).distinct: _*))
               .join(broadcast(probes.toDF("__qid", "__pcid")),
                 col("cluster_id").cast("long") === col("__pcid"))
@@ -1548,15 +1491,67 @@ object Ann {
         Window.partitionBy("__qid").orderBy(s.order, col("__id"))))
       .filter(col("knn_rank") <= n)
 
-  /** The `nprobe` centroids nearest `queryVec` (L2, ties by centroid
-    * id), collected: nprobe rows of a k-row table. */
-  private def probeList(p: Probe, queryVec: Column): Array[Long] =
-    p.centroids
-      .withColumn("__qdist", VectorFunctions.l2(col(p.cvecCol), queryVec))
-      .orderBy(col("__qdist"), col(p.cidCol))
+  // ---------------------------------------------------------------------
+  // The IVF probe rule: probe the `nprobe` cells whose centroids are
+  // nearest the query. The distance is `sqrt` of the left-folded squared
+  // L2 in double (bit-equal to VectorFunctions.l2), ties go to the
+  // smaller cid, a length mismatch or null element fails loudly, and a
+  // null query vector probes no cell. Two functions hold it: one over a
+  // collected centroid array, one as a plan over the centroid table.
+  // ---------------------------------------------------------------------
+
+  /** The probe rule over a collected ([[collectCentroids]]) centroid
+    * array: the `nprobe` nearest cells, nearest first. */
+  private[graft] def probeCells(cents: Array[(Long, Array[Double])],
+                                q: Array[Double], nprobe: Int): Array[Long] =
+    cents.map { case (cid, c) => (math.sqrt(l2sqStrict(q, c)), cid) }
+      .sorted.take(nprobe).map(_._2)
+
+  /** The probe rule as a plan, for one query vector: an orderBy.limit
+    * over the centroid table that ships only the `nprobe` ids to the
+    * driver, not k×dim centroid doubles. */
+  private[graft] def probeList(p: Probe, queryVec: Column): Array[Long] = {
+    val d = VectorFunctions.l2(col(p.cvecCol), queryVec)
+    p.centroids.filter(queryVec.isNotNull)
+      .orderBy(when(d.isNull, raise_error(lit("IVF probe: null query-to-centroid " +
+          "distance (length mismatch or null element)"))).otherwise(d),
+        col(p.cidCol))
       .limit(p.nprobe)
       .select(col(p.cidCol).cast("long"))
       .collect().map(_.getLong(0))
+  }
+
+  /** [[probeCells]] as a column over query vectors, for frame forms:
+    * the centroid table is collected and broadcast once, and each row
+    * gets its cells as an array, nearest first — `explode` it into
+    * (query, cell) rows, or `posexplode` for the 0-based probe rank as
+    * well. A narrow map with no aggregation, so a streaming plan stays
+    * append-mode legal. */
+  private[graft] def probeCellsUdf(p: Probe): Column => Column = {
+    val bc = p.centroids.sparkSession.sparkContext.broadcast(
+      collectCentroids(p.centroids, p.cidCol, p.cvecCol))
+    val nprobe = p.nprobe // the closure must not capture the centroid frame
+    val cells = udf { (q: Seq[java.lang.Double]) =>
+      if (q == null) Array.empty[Long]
+      else {
+        require(!q.contains(null), "IVF probe: query vector has a null element")
+        probeCells(bc.value, q.map(_.doubleValue).toArray, nprobe)
+      }
+    }
+    qv => cells(qv.cast("array<double>"))
+  }
+
+  /** The core behind the five single-vector exact IVF forms: the rows
+    * of `source` in `cells`, narrowed by `restrict`, cut to the exact
+    * top-k. `cluster_id IN cells` is a static predicate, so over a
+    * store written partitionBy(cluster_id) the scan lists only those
+    * directories (PartitionFilters). */
+  private def exactInCells(source: DataFrame, cells: Array[Long],
+                           embCol: String, idCol: String, queryVec: Column,
+                           k: Int,
+                           restrict: DataFrame => DataFrame = identity): DataFrame =
+    Knn.exact(restrict(source.filter(col("cluster_id").isin(cells: _*))),
+      embCol, idCol, queryVec, k)
 
   private[operators] def requireIntegralId(df: DataFrame, c: String,
                                            who: String, role: String): Unit = {

@@ -420,13 +420,14 @@ final class MultiStageSearch(
   /** [[searchGatedBatch]] over a cluster-assigned (IVF) index — the
     * high-QPS serving shape: the exact batch's pair stream touches
     * |corpus|·|Q| rows, this one touches only the pairs whose corpus
-    * row lives in a cluster the query PROBES. The per-query probe list
-    * (nprobe nearest centroids, ties by centroid id — the c5/c8 rule,
-    * columnar) becomes a (qid, cluster_id) map; joining the index on
-    * cluster_id against it REPLACES the cross join, so each index row
-    * meets only the queries probing its cluster — the pair stream
-    * shrinks by ~nprobe/k and, over a stored partitioned index, the
-    * scan itself prunes to the union of probed clusters. Per-query
+    * row lives in a cluster the query PROBES. Each query's probe list
+    * ([[Ann.probeCellsUdf]], the rule c5/c8 apply through
+    * [[Ann.probeList]]) is exploded into the broadcast query frame, one
+    * row per (query, cell); joining the index on cluster_id against it
+    * REPLACES the cross join, so each index row meets only the queries
+    * probing its cluster — the pair stream shrinks by ~nprobe/k and,
+    * over a stored partitioned index, the scan itself prunes to the
+    * union of probed clusters. Per-query
     * results are row-identical to [[search]] with the equivalent
     * served backend (CascadeBatchSpec pins it); the gate ladder,
     * dedup, and rerank are [[gatedBatchCore]]'s, unchanged. Same
@@ -439,7 +440,7 @@ final class MultiStageSearch(
     require(knnBackend.isEmpty,
       "searchGatedBatchServed probes the cluster-assigned corpus itself " +
         "and cannot honor a custom knnBackend")
-    require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
+    val cells = Ann.probeCellsUdf(Ann.Probe(centroids, cidCol, cvecCol, nprobe))
     require(corpus.columns.contains("cluster_id"),
       "searchGatedBatchServed needs a cluster-assigned corpus " +
         "(cluster_id column, from Ann.ivfAssign*)")
@@ -452,17 +453,7 @@ final class MultiStageSearch(
           qvecCol) match {
         case Left(empty) => empty
         case Right((nerDf, maxSyn, qframe)) =>
-          val cent = centroids.select(col(cidCol).cast("long").as("__cid"),
-            col(cvecCol).cast("array<double>").as("__cvec"))
-          val wp = Window.partitionBy("__qid")
-            .orderBy(col("__cd"), col("__cid"))
-          val probeMap = qframe.select(col("__qid"), col("__qv"))
-            .crossJoin(broadcast(cent))
-            .withColumn("__cd", VectorFunctions.l2(col("__cvec"), col("__qv")))
-            .withColumn("__pr", row_number().over(wp))
-            .filter(col("__pr") <= nprobe)
-            .select(col("__qid"), col("__cid"))
-          val qprobe = qframe.join(probeMap, "__qid")
+          val qprobe = qframe.withColumn("__cid", explode(cells(col("__qv"))))
           gatedBatchCore(qidCol, nerDf, maxSyn,
             corpus.join(broadcast(qprobe),
               col("cluster_id").cast("long") === col("__cid")), corpus)

@@ -135,6 +135,14 @@ object Dedup {
         }: _*)).as(Seq("band_idx", "band_sig")))
   }
 
+  /** Corpus-row threshold for [[minhashNearDups]]' verify-shape gate
+    * (see the note in its body). Round-22 interleaved min-over-3 A/B on
+    * a quiet box: 5k docs (sf0.1) collect_set 0.95–1.12 s vs join-count
+    * 1.17–1.42 s; 20k docs (4×-replicated, dup-heavy) join-count
+    * 2.63 s vs collect_set 4.83 s. Crossover sits between; 10k splits
+    * the gap. */
+  private[graft] val JoinCountVerifyMinDocs = 10000L
+
   /** LSH banding: candidate pairs = docs sharing any band signature,
     * then verified with exact shingle-set Jaccard >= `threshold`.
     *
@@ -161,25 +169,7 @@ object Dedup {
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bandRows: Int = 4,
-      shingleK: Int = 3, threshold: Double = 0.5): DataFrame =
-    minhashNearDupsImpl(df, idCol, textCol, numHashes, bandRows, shingleK,
-      threshold, joinCountVerify = None)
-
-  /** Corpus-row threshold for [[minhashNearDups]]' verify-shape gate
-    * (see the impl note). Round-22 interleaved min-over-3 A/B on a
-    * quiet box: 5k docs (sf0.1) collect_set 0.95–1.12 s vs join-count
-    * 1.17–1.42 s; 20k docs (4×-replicated, dup-heavy) join-count
-    * 2.63 s vs collect_set 4.83 s. Crossover sits between; 10k splits
-    * the gap. */
-  private[graft] val JoinCountVerifyMinDocs = 10000L
-
-  /** `joinCountVerify`: None = gate on corpus size (the public form);
-    * Some(b) pins the verify shape — the round-22 A/B hook. */
-  private[graft] def minhashNearDupsImpl(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bandRows: Int,
-      shingleK: Int, threshold: Double,
-      joinCountVerify: Option[Boolean]): DataFrame = {
+      shingleK: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(numHashes % bandRows == 0, "bands must tile the signature")
     require(threshold > 0 && threshold <= 1,
       s"threshold $threshold must be in (0, 1]")
@@ -195,9 +185,9 @@ object Dedup {
     // large → join-count. Both verifies are oracle-bit-identical (each
     // was hash-green across rounds 20/21; integer-valued counts divide
     // identically in IEEE doubles), so the gate can never change rows.
-    val useJoinCount = joinCountVerify.getOrElse(
-      df.select(col(idCol)).limit(JoinCountVerifyMinDocs.toInt + 1).count()
-        > JoinCountVerifyMinDocs)
+    val useJoinCount =
+      df.select(col(idCol)).limit(JoinCountVerifyMinDocs.toInt + 1).count() >
+        JoinCountVerifyMinDocs
     val shingleRows = shinglePipeline(df, idCol, textCol, shingleK)
     val bands = minhashBandsOf(shingleRows, numHashes, bandRows)
     val cand = bands.select(col("band_idx"), col("band_sig"), col("doc_id").as("doc_a"))

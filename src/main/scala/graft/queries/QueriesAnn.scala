@@ -1295,13 +1295,8 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
           .groupBy("qid").agg((count(col("__hit")) / 10.0).as("recall"))
         val sizes = assigned.groupBy("cluster_id")
           .agg(count(lit(1)).as("csz"))
-        val pw = Window.partitionBy("qid")
-          .orderBy(col("__qd"), col("cid"))
-        val probes = qs.crossJoin(broadcast(cent))
-          .withColumn("__qd", VectorFunctions.l2(col("cvec"), col("qv")))
-          .withColumn("__pr", row_number().over(pw))
-          .filter(col("__pr") <= 2)
-          .select(col("qid"), col("cid").as("cluster_id"))
+        val probes = qs.select(col("qid"), explode(Ann.probeCellsUdf(
+          Ann.Probe(cent, "cid", "cvec", 2))(col("qv"))).as("cluster_id"))
         val cand = probes.join(sizes, Seq("cluster_id"))
           .groupBy("qid").agg(sum("csz").as("n_cand"))
         rec.join(cand, Seq("qid"))
@@ -1583,10 +1578,10 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       // spanning 2.85 s around 1.66 s of executor time, because each
       // of the 4 points re-ran probe selection AND the probed
       // candidate join, and the three lazily-checkpointed shared
-      // frames raced their consumers. Probe ranks are a PREFIX
-      // property (row_number at width 8 restricted to <= n equals
-      // row_number at width n — same (dist, cid) order), and a point's
-      // top-10 is the top-10 among candidates with probe rank <= n, so
+      // frames raced their consumers. Probe lists are PREFIXES (the
+      // first n cells at width 8 are the cells at width n — same
+      // (dist, cid) order), and a point's top-10 is the top-10 among
+      // candidates in its first n cells, so
       // ONE candidate pass at the widest probe, tagged with the rank,
       // serves every point: distances are the same expression on the
       // same rows and the (dist, id) cut order is unchanged, so each
@@ -1602,14 +1597,10 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
         .localCheckpoint(true)
       val sizes = assigned.groupBy("cluster_id")
         .agg(count(lit(1)).as("csz")).localCheckpoint(true)
-      val maxProbe = SweepProbes.max
-      val pw = Window.partitionBy("qid").orderBy(col("__qd"), col("cid"))
-      val probes = qs.crossJoin(broadcast(cent))
-        .withColumn("__qd", VectorFunctions.l2(col("cvec"), col("qv")))
-        .withColumn("__pr", row_number().over(pw))
-        .filter(col("__pr") <= maxProbe)
-        .select(col("qid"), col("qv"), col("cid").as("cluster_id"),
-          col("__pr"))
+      // __pr is the 0-based probe rank: width n keeps __pr < n
+      val probes = qs.select(col("qid"), col("qv"), posexplode(Ann.probeCellsUdf(
+          Ann.Probe(cent, "cid", "cvec", SweepProbes.max))(col("qv")))
+          .as(Seq("__pr", "cluster_id")))
         .localCheckpoint(true)
       val cands = assigned.join(broadcast(probes), Seq("cluster_id"))
         .select(col("qid"), col("__pr"),
@@ -1618,13 +1609,13 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
         .localCheckpoint(true)
       val points = SweepProbes.map { n =>
         val w = Window.partitionBy("qid").orderBy(col("__dist"), col("vec_id"))
-        val ivf = cands.filter(col("__pr") <= n)
+        val ivf = cands.filter(col("__pr") < n)
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") <= 10)
           .select(col("qid"), col("vec_id"), lit(1).as("__hit"))
         val rec = exact.join(ivf, Seq("qid", "vec_id"), "left")
           .groupBy("qid").agg((count(col("__hit")) / 10.0).as("recall"))
-        val cand = probes.filter(col("__pr") <= n)
+        val cand = probes.filter(col("__pr") < n)
           .select("qid", "cluster_id")
           .join(sizes, Seq("cluster_id"))
           .groupBy("qid").agg(sum("csz").as("n_cand"))

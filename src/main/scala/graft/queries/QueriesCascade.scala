@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TextAnalysis, TextFunctions, VectorFunctions}
+import graft.functions.{TextAnalysis, TextFunctions}
 import graft.multimodal.{DecodeStub, Multimodal}
 import graft.operators.{Ann, Bm25, Chunker, Curation, Dedup, HeavyHitters, Knn, LshAnn, Mmr, MultiStageSearch, Packing, QualityModel, Rerank, RetrievalEval}
 import graft.sources.JobCorpus
@@ -326,20 +326,14 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
   }
 
   /** Served candidate pool for [[MultiStageSearch]]: per query, the
-    * nprobe nearest centroids (a k-row driver sort, the ivfSearchStore
-    * rule, ties by cid) select the probed partitions of the stored
-    * index as a static `isin`, so every stage reads only those
-    * directories (PartitionFilters). The cascade scores and cuts the
-    * pool itself. */
+    * cells [[Ann.probeList]] picks (the engine's one IVF probe rule)
+    * select the probed partitions of the stored index as a static
+    * `isin`, so every stage reads only those directories
+    * (PartitionFilters). The cascade scores and cuts the pool itself. */
   private def servedKnnBackend(index: DataFrame, cent: DataFrame,
                                nprobe: Int): Column => DataFrame =
-    qv => {
-      val probed = cent
-        .withColumn("__qd", VectorFunctions.l2(col("cvec"), qv))
-        .orderBy(col("__qd"), col("cid")).limit(nprobe)
-        .select(col("cid").cast("long")).collect().map(_.getLong(0)).toSeq
-      index.filter(col("cluster_id").isin(probed: _*))
-    }
+    qv => index.filter(col("cluster_id").isin(
+      Ann.probeList(Ann.Probe(cent, "cid", "cvec", nprobe), qv): _*))
 
   private def cascadeQueryVec(s: SparkSession, d: String): Column =
     typedlit(t(s, d, "embeddings").filter(col("vec_id") === 0)

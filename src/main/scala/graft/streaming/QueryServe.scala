@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.VectorFunctions
-import graft.operators.TopK
+import graft.operators.{Ann, TopK}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,18 +49,22 @@ object QueryServe {
     * `assigned` is an IVF-assigned corpus ([[graft.operators.Ann]]
     * ivfAssign/ivfAssignBig output, ideally loaded from an
     * [[graft.sources.IndexStore]] written partitionBy(cluster_id)).
-    * Probe selection is a narrow map over the query stream (top-nprobe
-    * centroids per query via the broadcast centroid array — no
+    * Probe selection is the engine's one IVF probe rule
+    * ([[graft.operators.Ann.probeCellsUdf]]): a narrow map over the
+    * query stream against the broadcast centroid array — no
     * aggregation, so the plan keeps a single stateful op and stays
-    * append-mode legal), exploded to (query, probed cluster) rows and
+    * append-mode legal — exploded to (query, probed cluster) rows and
     * equi-joined to the corpus: distance work drops from |corpus|·|q|
     * to the probed clusters only, ~nprobe/k of the corpus per query.
-    * Results equal batch [[graft.operators.Ann.ivfSearch]] at the same
-    * nprobe (asserted in QueryServeSpec). For scan pruning on top of
-    * compute pruning, deploy via foreachBatch reading only the probed
-    * cluster partitions (`WHERE cluster_id IN (...)` over the
-    * partitioned store) — the join form here keeps the fully
-    * declarative streaming plan. */
+    * A null query vector probes NOTHING (the explode drops the record)
+    * instead of killing the whole streaming query — one malformed
+    * query must not take down serving. Results equal batch
+    * [[graft.operators.Ann.ivfSearch]] at the same nprobe (asserted in
+    * QueryServeSpec). For scan pruning on top of compute pruning,
+    * deploy via foreachBatch reading only the probed cluster
+    * partitions (`WHERE cluster_id IN (...)` over the partitioned
+    * store) — the join form here keeps the fully declarative streaming
+    * plan. */
   def serveIvf(queries: DataFrame, assigned: DataFrame, centroids: DataFrame,
                embCol: String, idCol: String,
                qidCol: String, tsCol: String, qvecCol: String,
@@ -68,25 +72,10 @@ object QueryServe {
                k: Int, nprobe: Int,
                watermark: String = "1 minute",
                windowLen: String = "1 minute"): DataFrame = {
-    // shared with Ann.ivfAssignBig so the tie-break (min dist, then
-    // min cid) cannot drift between the assign and serve paths
-    val cents = graft.operators.Ann.collectCentroids(centroids, cidCol, cvecCol)
-    val bc = queries.sparkSession.sparkContext.broadcast(cents)
-    // a null query vector probes NOTHING (empty array → explode drops
-    // the record) instead of NPE-killing the whole streaming query —
-    // one malformed query must not take down serving
-    val probes = udf { (qv: Seq[Double]) =>
-      if (qv == null) Array.empty[Long]
-      else {
-        val arr = qv.toArray
-        bc.value.map { case (cid, cv) =>
-          (graft.operators.Ann.l2sqStrict(arr, cv), cid)
-        }.sortBy(identity).take(nprobe).map(_._2)
-      }
-    }
+    val probes = Ann.probeCellsUdf(Ann.Probe(centroids, cidCol, cvecCol, nprobe))
     queries
       .withWatermark(tsCol, watermark)
-      .withColumn("__probe", explode(probes(col(qvecCol).cast("array<double>"))))
+      .withColumn("__probe", explode(probes(col(qvecCol))))
       .join(assigned, col("__probe") === col("cluster_id"))
       .select(col(qidCol), col(tsCol),
         VectorFunctions.l2(col(embCol), col(qvecCol)).as("__dist"),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Knn}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** IVF ANN scale path: assignment correctness + search vs exact oracle. */
@@ -117,9 +118,10 @@ class AnnSpec extends SparkSpec {
     val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
+    val sizes = Ann.clusterSizes(spark, dir)
     // cluster 0 holds 20 rows: target 5*2=10 ≤ 20 → adapts to P=1
     val near = Ann.ivfSearchStoreAdaptive(spark, dir, "embedding", "vec_id",
-      cents, "cid", "cvec", qv, k = 5, candMult = 2, maxProbe = 8)
+      cents, "cid", "cvec", qv, k = 5, candMult = 2, maxProbe = 8, sizes)
     assert(near.select("n_probed").distinct().as[Long].head() == 1L)
     assert(near.select("vec_id").as[Long].collect().toSeq ==
       Ann.ivfSearchStore(spark, dir, "embedding", "vec_id",
@@ -127,7 +129,7 @@ class AnnSpec extends SparkSpec {
         .select("vec_id").as[Long].collect().toSeq)
     // target 5*5=25 > 20 → must widen to P=2 (and equal the nprobe=2 twin)
     val wide = Ann.ivfSearchStoreAdaptive(spark, dir, "embedding", "vec_id",
-      cents, "cid", "cvec", qv, k = 5, candMult = 5, maxProbe = 8)
+      cents, "cid", "cvec", qv, k = 5, candMult = 5, maxProbe = 8, sizes)
     assert(wide.select("n_probed").distinct().as[Long].head() == 2L)
     assert(wide.select("vec_id").as[Long].collect().toSeq ==
       Ann.ivfSearchStore(spark, dir, "embedding", "vec_id",
@@ -135,7 +137,7 @@ class AnnSpec extends SparkSpec {
         .select("vec_id").as[Long].collect().toSeq)
     // maxProbe caps the widening even when the target is unreachable
     val capped = Ann.ivfSearchStoreAdaptive(spark, dir, "embedding", "vec_id",
-      cents, "cid", "cvec", qv, k = 5, candMult = 1000, maxProbe = 1)
+      cents, "cid", "cvec", qv, k = 5, candMult = 1000, maxProbe = 1, sizes)
     assert(capped.select("n_probed").distinct().as[Long].head() == 1L)
     // the adaptive scan keeps the static partition pruning shape
     val plan = near.queryExecution.executedPlan.toString
@@ -294,6 +296,101 @@ class AnnSpec extends SparkSpec {
     val exact = Knn.exact(corpus, "embedding", "vec_id", qv, 8)
       .select("vec_id").as[Long].collect().toSeq
     assert(ivf == exact)
+  }
+
+  // The probe-rule fixture: the query (1, 1) is EXACTLY equidistant
+  // from centroids 5 and 7 (squared L2 2.0 to both, bit for bit), listed
+  // with 7 first. Cell 7 holds the query's true nearest rows, so an
+  // entry point that broke the tie toward 7 would serve them.
+  private def tieCents = Seq((7L, Array(0.0, 2.0)), (5L, Array(2.0, 0.0)),
+    (9L, Array(10.0, 10.0))).toDF("cid", "cvec")
+  private def tieCorpus = Seq((50L, Array(2.0, 0.0)), (51L, Array(3.0, 0.0)),
+    (52L, Array(2.5, 0.1)), (70L, Array(0.4, 1.6)), (71L, Array(0.0, 2.5)),
+    (72L, Array(0.1, 3.0)), (90L, Array(10.0, 10.0))).toDF("vec_id", "embedding")
+
+  /** Every IVF serving entry point over the tie fixture at nprobe = 1,
+    * k = 3: query vector → served ids, best first. */
+  private def tieEntries: Seq[(String, Array[Double] => Seq[Long])] = {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val (cents, corpus) = (tieCents, tieCorpus)
+    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val dir = java.nio.file.Files.createTempDirectory("ivf_tie_").toString
+    graft.sources.IndexStore.write(assigned, dir)
+    val sizes = Ann.clusterSizes(spark, dir)
+    // one code per 1-dim subspace value: ADC is exact on this grid
+    val cb = Seq((0, 0L, Array(0.0)), (0, 1L, Array(2.0)),
+      (1, 0L, Array(0.0)), (1, 1L, Array(2.0))).toDF("sub_idx", "code", "subvec")
+    val pqEnc = Ann.pqEncodeBig(assigned, "embedding", cb)
+      .select("cluster_id", "vec_id", "pq_codes")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("vec_id").as[Long].collect().toSeq
+    def frame(q: Array[Double]) = Seq((1L, q)).toDF("qid", "qv")
+    def ranked(df: org.apache.spark.sql.DataFrame) = ids(df.orderBy("knn_rank"))
+    def single(f: Column => org.apache.spark.sql.DataFrame) =
+      (q: Array[Double]) => ids(f(typedlit(q.toSeq)))
+    Seq(
+      "ivfSearch" -> single(qv => Ann.ivfSearch(assigned, "embedding", "vec_id",
+        cents, "cid", "cvec", qv, k = 3, nprobe = 1)),
+      "ivfSearchStore" -> single(qv => Ann.ivfSearchStore(spark, dir,
+        "embedding", "vec_id", cents, "cid", "cvec", qv, k = 3, nprobe = 1)),
+      "ivfSearchStoreWhere" -> single(qv => Ann.ivfSearchStoreWhere(spark, dir,
+        "embedding", "vec_id", cents, "cid", "cvec", qv, k = 3, nprobe = 1, lit(true))),
+      "ivfSearchStoreExcluding" -> single(qv => Ann.ivfSearchStoreExcluding(
+        spark, dir, "embedding", "vec_id", cents, "cid", "cvec", qv, k = 3,
+        nprobe = 1, Seq.empty[Long].toDF("deleted_id"), "deleted_id")),
+      // target k·candMult = 3 is covered by the first cell: one probe
+      "ivfSearchStoreAdaptive" -> single(qv => Ann.ivfSearchStoreAdaptive(
+        spark, dir, "embedding", "vec_id", cents, "cid", "cvec", qv, k = 3,
+        candMult = 1, maxProbe = 2, sizes)),
+      "ivfSearchBatch" -> ((q: Array[Double]) => ranked(Ann.ivfSearchBatch(
+        assigned, "embedding", "vec_id", cents, "cid", "cvec", frame(q),
+        "qid", "qv", k = 3, nprobe = 1))),
+      "ivfSearchStoreBatch" -> ((q: Array[Double]) => ranked(Ann.ivfSearchStoreBatch(
+        spark, dir, "embedding", "vec_id", cents, "cid", "cvec", frame(q),
+        "qid", "qv", k = 3, nprobe = 1))),
+      "ivfPqSearch" -> ((q: Array[Double]) => ids(Ann.ivfPqSearch(assigned,
+        "embedding", "vec_id", cents, "cid", "cvec", cb, q, k = 3, nprobe = 1))),
+      "ivfPqSearchEncodedBatch" -> ((q: Array[Double]) => ranked(
+        Ann.ivfPqSearchEncodedBatch(pqEnc, corpus, "embedding", "vec_id", cents,
+          "cid", "cvec", cb, frame(q), "qid", "qv", k = 3, nprobe = 1))),
+      "QueryServe.serveIvf" -> { (q: Array[Double]) =>
+        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+        val stream = MemoryStream[(Long, Timestamp, Seq[Double])]
+        stream.addData(Seq((1L, Timestamp.valueOf("2026-01-01 10:00:00"), q.toSeq)))
+        // advances the watermark past the window so append mode emits
+        stream.addData(Seq((999L, Timestamp.valueOf("2026-01-01 10:10:00"),
+          Seq(10.0, 10.0))))
+        val name = s"tie_${java.util.UUID.randomUUID().toString.take(8)}"
+        val run = graft.streaming.QueryServe.serveIvf(
+            stream.toDF().toDF("qid", "ts", "qv"), assigned, cents, "embedding",
+            "vec_id", "qid", "ts", "qv", "cid", "cvec", k = 3, nprobe = 1)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()
+        try {
+          run.processAllAvailable()
+          spark.table(name).filter($"qid" === 1L)
+            .select($"topk".getField("id")).as[Seq[Long]].head()
+        } finally run.stop()
+      })
+  }
+
+  test("probe rule: an exact distance tie goes to the lower cid at every IVF entry point") {
+    val q = Array(1.0, 1.0)
+    val cents = Ann.collectCentroids(tieCents, "cid", "cvec")
+    Seq(1 -> Seq(5L), 2 -> Seq(5L, 7L), 3 -> Seq(5L, 7L, 9L)).foreach { case (n, want) =>
+      assert(Ann.probeCells(cents, q, n).toSeq == want, s"probeCells nprobe=$n")
+      assert(Ann.probeList(Ann.Probe(tieCents, "cid", "cvec", n),
+        typedlit(q.toSeq)).toSeq == want, s"probeList nprobe=$n")
+    }
+    // cell 5's rows by distance; cell 7's row 70 is nearer than all three
+    tieEntries.foreach { case (name, serve) =>
+      assert(serve(q) == Seq(50L, 52L, 51L), name)
+    }
+  }
+
+  test("a query one component short fails loudly at every IVF entry point") {
+    tieEntries.foreach { case (name, serve) =>
+      withClue(name)(intercept[Exception](serve(Array(1.0))))
+    }
   }
 
   test("ivfSearchBatch agrees with per-query ivfSearch") {
