@@ -6,21 +6,23 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** The flagship query: multi-stage retrieval with progressive filter
   * relaxation, priority dedup, hybrid rerank, top-N
   * (/root/reference/main.py:329-411 — SURVEY.md §3.1).
   *
-  * The cascade is deliberately DRIVER-SIDE adaptive control flow over
-  * small per-stage DataFrame plans (SURVEY.md §4): the candidate pool
-  * is scanned and scored ONCE per call into a narrow checkpoint
-  * (`scoredPool`), each stage is a filter ∘ top-k plan over it (no
-  * corpus shuffle — top-k is `TakeOrderedAndProject`), and each
-  * stage's ≤k result rows are MATERIALIZED to the driver exactly once
-  * — gating and keep-first dedup run over the collected ≤~100 rows in
-  * driver memory. The expensive side (the scan and the distance) is
-  * Catalyst's; only the orchestration is imperative — the same split
-  * the reference reaches by accident, made explicit as policy.
+  * The cascade is deliberately DRIVER-SIDE adaptive control flow
+  * (SURVEY.md §4) over ONE Spark job per request: a single pass over
+  * the candidate pool computes each row's distance once and ranks the
+  * top-k of EVERY stage the ladder could run ([[TopK.slotTopK]] — one
+  * bounded heap per stage per partition, no shuffle, no checkpoint);
+  * the ≤ partitions × Σk rows come to the driver, where the gates,
+  * keep-first dedup and the rerank run over them in memory. Ranking a
+  * stage a gate then skips costs only heap pushes inside the same
+  * scan. The expensive side (the scan and the distance) is Catalyst's;
+  * only the orchestration is imperative — the same split the reference
+  * reaches by accident, made explicit as policy.
   *
   * The flagship ladder exists twice: `search` for one request and
   * `gatedBatchCore` for a query log. `searchFixed` and `searchGated`
@@ -69,8 +71,8 @@ final class MultiStageSearch(
     // Pluggable per-query candidate pool: query vector → the rows
     // (idCol, textCol, embCol) every stage ranks. Default: `corpus`
     // itself. A served deployment passes an ANN-index reader here (c5:
-    // the IVF-probed partitions of the stored index); the cascade
-    // scores, null-filters and cuts the pool itself, so the POLICY
+    // the IVF-probed partitions of the stored index); the cascade's one
+    // pass scores, null-filters and cuts the pool itself, so the POLICY
     // (stage list, gates, dedup, rerank) and the distance are identical
     // either way, which is exactly what c5's identity gate pins.
     knnBackend: Option[Column => DataFrame] = None) {
@@ -92,9 +94,9 @@ final class MultiStageSearch(
   /** The typed empty response: the exact result schema every search
     * method returns, zero rows, built as a LOCAL empty relation — the
     * plan does not reference the corpus, so NO stage (not even a scan)
-    * can execute downstream of the guard. */
+    * can execute downstream of the guard, and collecting it runs no
+    * job. */
   private def emptyResponse: DataFrame = {
-    val spark = corpus.sparkSession
     val schema = StructType(Seq(
       corpus.schema(idCol), corpus.schema(textCol),
       StructField("dist", DoubleType, nullable = true),
@@ -103,7 +105,7 @@ final class MultiStageSearch(
       StructField("rule_score", DoubleType, nullable = true),
       StructField("score", DoubleType, nullable = true),
       StructField("rank", IntegerType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    corpus.sparkSession.createDataFrame(java.util.Collections.emptyList[Row], schema)
   }
 
   /** Case-insensitive substring test on the doc text: every stage
@@ -129,65 +131,6 @@ final class MultiStageSearch(
       round(lit(5.0) * hits / condToks.length, 0).cast("double")
     }
 
-  /** The per-search-call scored pool: (id, text, dist) over the
-    * `knnBackend` pool for `queryVec` (or the whole corpus), computed
-    * ONCE per call and checkpointed; every stage is then
-    * filter ∘ TakeOrderedAndProject over this narrow materialized
-    * frame ([[knnStage]]). Null-distance rows (null embedding, null
-    * element, dim mismatch) are excluded BEFORE any top-k cut (the
-    * [[Knn.exactDefined]] contract): Spark's ascending sort is NULLS
-    * FIRST, so they would otherwise rank at the top and eat the
-    * stage's k — and the batch forms exclude them by construction, so
-    * this is also what keeps `batch == per-query` on corpora with null
-    * embeddings (CascadeBatchSpec pins it). Default and served pools
-    * take this one code path, so a backend cannot score a different
-    * vector than the one the call searches.
-    *
-    * Scoring once replaced a per-stage scan (round 22): the cascade
-    * previously re-scanned the corpus AND recomputed the query distance
-    * once PER STAGE (7× for the flagship ladder), when the only thing
-    * that differs between stages is a text predicate and k. Stage
-    * results are bit-identical: distance is the same expression
-    * computed on the same rows (filter ∘ dist commutes per-row), and
-    * the (dist, id) top-k order is unchanged. The materialized frame
-    * holds the three narrow columns only — never the embeddings — and
-    * spills to disk via the localCheckpoint storage level; at corpus
-    * scale that one narrow materialization replaces nStages full scans
-    * each paying the distance arithmetic over every embedding.
-    *
-    * EAGER checkpoint: one synchronous job here, cached blocks for
-    * every stage after — also for the several stages one union collect
-    * runs at once, each of which would otherwise recompute a lazy
-    * checkpoint that has not landed yet.
-    *
-    * Lifetime: only [[search]] (and so [[searchFixed]]) uses the pool.
-    * It collects every stage to the driver and always releases the
-    * checkpoint before returning ([[release]]), on success and on
-    * failure alike, so no call leaves blocks behind. A block lost to an
-    * executor failure during the call cannot be recomputed (truncated
-    * lineage): that stage's collect fails loudly; it never returns
-    * wrong rows. */
-  private def scoredPool(queryVec: Column): DataFrame =
-    knnBackend.fold(corpus)(_(queryVec))
-      .withColumn("dist", VectorFunctions.l2(col(embCol), queryVec))
-      .filter(col("dist").isNotNull)
-      .select(col(idCol), col(textCol), col("dist"))
-      .localCheckpoint(true)
-
-  /** Drop a [[scoredPool]] checkpoint's blocks. Only for a caller that
-    * has already collected everything it reads from `scored`. */
-  private def release(scored: DataFrame): Unit =
-    scored.queryExecution.logical
-      .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false))
-
-  /** One cascade stage's ≤k candidates, tagged with its rank. */
-  private def knnStage(scored: DataFrame, pred: Option[Column], k: Int,
-                       stage: Int): DataFrame =
-    pred.fold(scored)(scored.filter)
-      .orderBy(col("dist"), col(idCol)).limit(k)
-      .withColumn("stage_rank", lit(stage))
-
   /** Run the cascade. `queryVec` is the embedded query (the embedding
     * model is an external boundary — SURVEY.md §2.1 S5). */
   def search(queryText: String, queryVec: Column): DataFrame =
@@ -195,7 +138,24 @@ final class MultiStageSearch(
 
   /** The adaptive ladder with the count gates of `gates`
     * (`relaxThreshold`, `fallbackThreshold`); everything else follows
-    * the instance's config. */
+    * the instance's config.
+    *
+    * Every stage the ladder COULD run is ranked in one pass over the
+    * pool (the `knnBackend` pool for `queryVec`, or the corpus): each
+    * row's distance is computed once, null distances (null embedding,
+    * null element, dim mismatch) are no candidates ([[Knn.exactDefined]]'s
+    * contract — the batch core excludes them too, which keeps
+    * `batch == per-query`), and each stage keeps its top-k by
+    * (dist, id) in Spark's ordering, so a string id ranks exactly as
+    * `orderBy` would rank it. Default and served pools take this one
+    * path, so a backend cannot score a different vector than the one
+    * the call searches. The pass is one job and leaves nothing cached.
+    *
+    * The ladder then walks the collected stage rows on the driver: a
+    * gate reads the number of distinct ids kept so far; keep-first
+    * dedup (A1: first stage wins, then ascending distance —
+    * main.py:173-181) keeps a doc's first occurrence;
+    * the stages that ran are numbered 1, 2, … in ladder order. */
   private def search(queryText: String, queryVec: Column,
                      gates: CascadeConfig): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
@@ -203,96 +163,56 @@ final class MultiStageSearch(
     val region = ner.region
     val job = ner.job
 
-    // Stage rows (id, text, dist, stage) are collected to the driver
-    // ONCE; the embedding column is pruned before collect so only a few
-    // KB move. Keep-first dedup (A1: first stage wins, then ascending
-    // distance — /root/reference/main.py:173-181) and the gating counts
-    // run over this driver-side list for free. An included stage waits
-    // in `pending` until a gate needs its rows; the pending stages are
-    // then collected as ONE union job (they run in parallel instead of
-    // as sequential jobs). A gate needs them only when the bound cannot
-    // decide it: pending stages add at most Σk distinct ids, so
-    // `count < t` is true without them when count + Σk < t (always, for
-    // a gate at Int.MaxValue) and false when count alone reaches t.
-    // Every stage is collected before the rerank tail, which reads only
-    // the driver-side rows, so the scored pool is released right after
-    // the last stage. The pool is local to this call: concurrent calls
-    // on one instance never release each other's blocks.
-    val scored = scoredPool(queryVec)
-    var collected = Vector.empty[Row]
-    var pending = Vector.empty[(DataFrame, Int)] // (stage rows, k)
-    var rowSchema: StructType = null
-    var nextStage = 1
-    def addStage(pred: Option[Column], k: Int): Unit = {
-      pending :+= knnStage(scored, pred, k, nextStage)
-        .select(col(idCol), col(textCol), col("dist"), col("stage_rank")) -> k
-      nextStage += 1
-    }
-    def flush(): Unit = if (pending.nonEmpty) {
-      val df = pending.map(_._1).reduce(_ unionByName _)
-      if (rowSchema == null) rowSchema = df.schema
-      collected ++= df.collect()
-      pending = Vector.empty
-    }
-    def accumulatedRows(): Seq[Row] = {
-      val seen = scala.collection.mutable.HashSet.empty[Any]
-      collected
-        .sortBy(r => (r.getInt(3), r.getDouble(2)))
-        .filter(r => seen.add(r.get(0)))
-    }
-    def count(): Long = accumulatedRows().size.toLong
-    def below(t: Int): Boolean = {
-      val n = count()
-      n < t && (n + pending.map(_._2.toLong).sum < t || { flush(); count() < t })
-    }
-
-    try {
+    // (gate, stages): a group runs when fewer than `gate` distinct ids
+    // are kept before it (Int.MaxValue: always), all its stages or none
+    val filtered = (p: Column) => (Some(p), cfg.topK)
+    val ladder: Seq[(Int, Seq[(Option[Column], Int)])] = Seq(
       // S1 strict AND (main.py:341-347)
-      (region, job) match {
-        case (Some(r), Some(j)) => addStage(Some(contains(r) && contains(j)), cfg.topK)
-        case (Some(r), None)    => addStage(Some(contains(r)), cfg.topK)
-        case (None, Some(j))    => addStage(Some(contains(j)), cfg.topK)
-        case _                  => addStage(None, cfg.topK)
-      }
+      Int.MaxValue -> Seq(((region, job) match {
+        case (Some(r), Some(j)) => Some(contains(r) && contains(j))
+        case _                  => region.orElse(job).map(contains)
+      }, cfg.topK)),
       // S2 OR relaxation (main.py:351-360)
-      if (region.isDefined && job.isDefined && below(gates.relaxThreshold))
-        addStage(Some(contains(region.get) || contains(job.get)), cfg.topK)
+      gates.relaxThreshold ->
+        (for (r <- region; j <- job) yield filtered(contains(r) || contains(j))).toSeq,
       // S3 single-field passes (main.py:363-383)
-      if (below(gates.relaxThreshold)) {
-        region.foreach(r => addStage(Some(contains(r)), cfg.topK))
-        job.foreach(j => addStage(Some(contains(j)), cfg.topK))
-      }
+      gates.relaxThreshold -> (region.toSeq ++ job).map(t => filtered(contains(t))),
       // S4 synonym expansion (main.py:386-397)
-      job.foreach { j =>
-        synonyms(j).foreach { syn =>
-          val p = region.map(r => contains(r) && contains(syn)).getOrElse(contains(syn))
-          addStage(Some(p), cfg.topK)
-        }
-      }
+      Int.MaxValue -> job.toSeq.flatMap(synonyms(_)).map(syn =>
+        filtered(region.fold(contains(syn))(r => contains(r) && contains(syn)))),
       // S5 unfiltered fallback (main.py:400-407)
-      if (below(gates.fallbackThreshold)) addStage(None, cfg.fallbackK)
-      flush()
-    } finally release(scored)
+      gates.fallbackThreshold -> Seq((None, cfg.fallbackK)))
 
-    // dedup → hybrid rerank → top-N → rank (main.py:410,455-469)
-    val spark = corpus.sparkSession
-    val acc = spark.createDataFrame(
-      spark.sparkContext.parallelize(accumulatedRows(), 1), rowSchema)
-    rerankTail(acc, ner)
+    val pool = knnBackend.fold(corpus)(_(queryVec))
+      .select(col(idCol), col(textCol),
+        VectorFunctions.l2(col(embCol), queryVec).as("dist"))
+    val ranked = TopK.slotTopK(pool, Seq("dist", idCol), ladder.flatMap(_._2))
+      .iterator
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    val kept = Vector.newBuilder[Row]
+    var stage = 0
+    ladder.foreach { case (gate, stages) =>
+      val rows = stages.map(_ => ranked.next())
+      if (seen.size < gate) rows.foreach { stageRows =>
+        stage += 1
+        stageRows.foreach(r =>
+          if (seen.add(r.get(0))) kept += Row(r.get(0), r.get(1), r.get(2), stage))
+      }
+    }
+
+    // hybrid rerank → top-N → rank (main.py:410,455-469)
+    rerankLocal(kept.result(), StructType(Seq(pool.schema(idCol),
+      pool.schema(textCol), StructField("dist", DoubleType, nullable = false),
+      StructField("stage_rank", IntegerType, nullable = false))), ner)
   }
 
-  /** Shared rerank tail (main.py:410,455-469): deterministic judge +
-    * NER-overlap rule score, weighted combine, top-N, rank. The rank
-    * window is global but runs over ≤finalN rows (post-limit), so the
-    * single-partition sort is a handful of rows, not a scale concern —
-    * this is the source of the "No Partition Defined for Window"
-    * warnings Verify logs: INTENTIONAL on these bounded final-rank
-    * projections (the r20 verdict's carry-over note; same pattern as
-    * [[graft.operators.Bm25.rankBounded]]). */
-  private def rerankTail(acc: DataFrame, ner: QueryNer): DataFrame = {
+  /** The rerank score columns (main.py:410,455-469): deterministic judge
+    * + NER-overlap rule score and their weighted combine, written once
+    * for both rerank tails. */
+  private def withScores(acc: DataFrame, ner: QueryNer): DataFrame = {
     val condToks = (ner.job.toSeq ++ ner.region.toSeq).map(_.toLowerCase).distinct
     val (dJob, dRegion) = docNer(col(textCol))
-    val ranked = acc
+    acc
       .withColumn("judge_score", judgeScore(col(textCol), condToks))
       .withColumn("rule_score", Rerank.nerOverlap(Seq(
         (ner.job.map(lit).getOrElse(lit("")), dJob),
@@ -300,20 +220,51 @@ final class MultiStageSearch(
         (ner.ageGroup.map(lit).getOrElse(lit("")), lit("")))))
       .withColumn("score",
         Rerank.combined(col("judge_score"), col("rule_score"), cfg.wJudge, cfg.wRule))
-      .orderBy(desc("score"), asc("dist"), asc(idCol))
-      .limit(cfg.finalN)
-    ranked.withColumn("rank",
-      row_number().over(Window.partitionBy(lit(0))
-        .orderBy(desc("score"), asc("dist"), asc(idCol))))
+  }
+
+  /** The final rank order: score desc, dist asc, id asc (`true` =
+    * ascending). */
+  private def rankKeys: Seq[(String, Boolean)] =
+    Seq("score" -> false, "dist" -> true, idCol -> true)
+
+  /** The rerank tail over rows already on the driver: the score columns
+    * over a LocalRelation of `kept` (the optimizer's
+    * ConvertToLocalRelation folds that projection on the driver, so its
+    * collect runs no job), then the [[rankKeys]] order in Spark's
+    * ordering ([[TopK.sortRows]]), top-N and rank 1..n — returned as a
+    * LocalRelation, so the caller's collect runs no job either. */
+  private def rerankLocal(kept: Seq[Row], schema: StructType,
+                          ner: QueryNer): DataFrame = {
+    val spark = corpus.sparkSession
+    val scored = withScores(spark.createDataFrame(kept.asJava, schema), ner)
+    val top = TopK.sortRows(scored.collect().toSeq, scored.schema, rankKeys)
+      .take(cfg.finalN)
+    spark.createDataFrame(
+      top.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1)) }.asJava,
+      scored.schema.add(StructField("rank", IntegerType, nullable = false)))
+  }
+
+  /** The rerank tail as a lazy plan, for [[searchRemindFixed]]: score
+    * columns, top-N, rank. The rank window is global but runs over
+    * ≤finalN rows (post-limit), so the single-partition sort is a
+    * handful of rows, not a scale concern — this is the source of the
+    * "No Partition Defined for Window" warnings Verify logs:
+    * INTENTIONAL on these bounded final-rank projections (the r20
+    * verdict's carry-over note; same pattern as
+    * [[graft.operators.Bm25.rankBounded]]). */
+  private def rerankTail(acc: DataFrame, ner: QueryNer): DataFrame = {
+    val order = rankKeys.map { case (c, ascending) => if (ascending) asc(c) else desc(c) }
+    withScores(acc, ner).orderBy(order: _*).limit(cfg.finalN)
+      .withColumn("rank", row_number().over(Window.partitionBy(lit(0)).orderBy(order: _*)))
   }
 
   /** [[search]] with its count gates open: `relaxThreshold` and
     * `fallbackThreshold` at `Int.MaxValue`, so every stage of the
     * flagship list always runs — the static stage list c3/c6 replay in
     * DuckDB (union of per-stage top-k → keep-first dedup → rerank →
-    * top-N + rank), minus the adaptivity. It IS [[search]]: same scored
-    * pool (released before returning), same stage collects, same
-    * rerank tail; only the gate thresholds differ. */
+    * top-N + rank), minus the adaptivity. It IS [[search]]: the same
+    * one-pass job over the pool, the same driver-side ladder and
+    * rerank; only the gate thresholds differ. */
   def searchFixed(queryText: String, queryVec: Column): DataFrame =
     search(queryText, queryVec,
       cfg.copy(relaxThreshold = Int.MaxValue, fallbackThreshold = Int.MaxValue))
@@ -350,9 +301,8 @@ final class MultiStageSearch(
 
   /** The gated cascade for a BATCH of queries, as ONE data-parallel
     * plan — queries are rows, not driver round-trips. [[search]] scans
-    * the pool once per query (|Q| scans plus 7·|Q| stage jobs for a
-    * query log); this form scans the corpus TWICE TOTAL regardless of
-    * |Q|:
+    * the pool once per query (|Q| scans in |Q| jobs for a query log);
+    * this form scans the corpus TWICE TOTAL regardless of |Q|:
     *
     *  1. candidates: corpus ⨯ broadcast(queries) computes each pair's
     *     distance ONCE, tags it with the stage slots whose predicate
@@ -839,15 +789,8 @@ final class MultiStageSearch(
     val filtered = poolRows.filter(keep)
     val kept = if (filtered.length >= cfg.relaxThreshold) filtered else poolRows
 
-    val spark = corpus.sparkSession
-    val schema = StructType(pool.schema.fields :+
-      org.apache.spark.sql.types.StructField("stage_rank",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    val tagged = kept.map(r => Row.fromSeq(r.toSeq :+ 1))
-    val acc = spark.createDataFrame(
-      spark.sparkContext.parallelize(tagged.toIndexedSeq, 1), schema)
-
-    rerankTail(acc, ner)
+    rerankLocal(kept.toSeq.map(r => Row.fromSeq(r.toSeq :+ 1)),
+      pool.schema.add(StructField("stage_rank", IntegerType, nullable = false)), ner)
   }
 
   /** [[searchRemind]] WITH its adaptive gate, as one declarative plan.

@@ -10,6 +10,24 @@ import org.apache.spark.sql.functions._
 class CascadeSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `f`'s result and the number of Spark jobs it started, counted by a
+    * job tag through the status tracker. The tracker is fed
+    * asynchronously, so the count is read once a marker job started
+    * after `f` has reached it. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"cascade-spec-${java.util.UUID.randomUUID}"
+    sc.addJobTag(tag)
+    val out = try f finally sc.removeJobTag(tag)
+    sc.addJobTag(tag + "-marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(tag + "-marker")
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getJobIdsForTag(tag + "-marker").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForTag(tag + "-marker").nonEmpty)
+    (out, sc.statusTracker.getJobIdsForTag(tag).length)
+  }
+
   private def corpus = {
     val docs = Seq(
       (0L, "join job in the row district", Array(0.0f, 0.0f)),
@@ -196,12 +214,12 @@ class CascadeSpec extends SparkSpec {
     assert(a.nonEmpty && a == f)
   }
 
-  test("search releases its scored pool: repeated calls retain no cached RDDs") {
-    // a serving loop calls search once per request; each call's
-    // corpus-sized checkpoint must not outlive the call. searchFixed
-    // (search with open gates) and searchGated (the batch core, a lazy
-    // plan) must retain nothing either — checked WITHOUT a forced GC,
-    // so a checkpoint left for the ContextCleaner would show here
+  test("repeated search calls retain no cached RDDs") {
+    // a serving loop calls search once per request; no call may leave
+    // cached blocks behind. searchFixed (search with open gates) and
+    // searchGated (the batch core, a lazy plan) must retain nothing
+    // either — checked WITHOUT a forced GC, so a checkpoint left for
+    // the ContextCleaner would show here
     val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
       CascadeConfig(topK = 3, finalN = 5))
     SessionHygiene.dropCachedBlocks(spark)
@@ -213,6 +231,65 @@ class CascadeSpec extends SparkSpec {
         (1 to 5).foreach(_ => assert(form(q, col("qv")).collect().nonEmpty))
       }
     assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("one Spark job per request: every query structure, gates open, a served pool; blank runs none") {
+    val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
+      CascadeConfig(topK = 3, finalN = 5))
+    val served = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
+      CascadeConfig(topK = 3, finalN = 5),
+      knnBackend = Some(_ => corpus.filter(col("doc_id") =!= 5L)))
+    SessionHygiene.dropCachedBlocks(spark)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val queries = Seq(
+      "looking for a join job in the row area", // region + job
+      "column stuff",                           // region only
+      "sort pipelines",                         // job only
+      "기타 문의")                               // no terms
+    for (q <- queries;
+         (name, form) <- Seq[(String, (String, Column) => DataFrame)](
+           "search" -> search.search, "searchFixed" -> search.searchFixed,
+           "served search" -> served.search)) {
+      val (rows, jobs) = jobsOf(form(q, col("qv")).collect())
+      assert(rows.nonEmpty, s"$name '$q'")
+      assert(jobs == 1, s"$name '$q' started $jobs jobs")
+    }
+    val (blank, blankJobs) = jobsOf(search.search("  ", col("qv")).collect())
+    assert(blank.isEmpty && blankJobs == 0, s"blank query started $blankJobs jobs")
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("ties at the stage-k and finalN cuts break by id in Spark's order, string ids too") {
+    // two docs with identical text and embedding tie on dist at every
+    // stage's k cut and on (score, dist) at the finalN cut; the string
+    // ids order one way as UTF-8 bytes (Spark) and the other way as
+    // UTF-16 units (String.compareTo): "｡" U+FF61 vs "😀" U+1F600
+    val (near, far) = ("join job in the row district", "unrelated document entirely")
+    def fixture(df: DataFrame) = df.toDF("doc_id", "text", "embedding")
+      .withColumn("qv", typedlit(Seq(0.0, 0.0)))
+    val fixtures = Seq(
+      fixture(Seq(("😀", near, Seq(1.0, 0.0)), ("｡", near, Seq(1.0, 0.0)),
+        ("z", far, Seq(9.0, 9.0))).toDF()),
+      fixture(Seq((7L, near, Seq(1.0, 0.0)), (3L, near, Seq(1.0, 0.0)),
+        (9L, far, Seq(9.0, 9.0))).toDF()))
+    val q = "join row"
+    for (docs <- fixtures) {
+      val sparkOrder = docs.filter(col("text").startsWith("join"))
+        .orderBy(col("doc_id")).select("doc_id").collect().map(_.get(0)).toSeq
+      for ((k, n) <- Seq((1, 1), (2, 1), (2, 2))) {
+        val ms = new MultiStageSearch(docs, "doc_id", "text", "embedding",
+          CascadeConfig(topK = k, fallbackK = k, finalN = n))
+        def ids(df: DataFrame) = df.orderBy("rank").select("doc_id")
+          .collect().map(_.get(0)).toSeq
+        val expected = sparkOrder.take(math.min(k, n))
+        assert(ids(ms.search(q, col("qv"))) == expected, s"search k=$k n=$n")
+        assert(ids(ms.searchRemind(q, col("qv"), scanK = k)) == expected,
+          s"searchRemind k=$k n=$n")
+        if (docs.schema("doc_id").dataType == org.apache.spark.sql.types.LongType)
+          assert(ms.search(q, col("qv")).collect().toSeq ==
+            ms.searchGated(q, col("qv")).collect().toSeq, s"searchGated k=$k n=$n")
+      }
+    }
   }
 
   test("F4: blank query returns the typed empty response without running any stage") {
