@@ -8,28 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
-/** The flagship query: multi-stage retrieval with progressive filter
-  * relaxation, priority dedup, hybrid rerank, top-N
-  * (/root/reference/main.py:329-411 — SURVEY.md §3.1).
-  *
-  * The cascade is deliberately DRIVER-SIDE adaptive control flow
-  * (SURVEY.md §4) over ONE Spark job per request: a single pass over
-  * the candidate pool computes each row's distance once and ranks the
-  * top-k of EVERY stage the ladder could run ([[TopK.slotTopK]] — one
-  * bounded heap per stage per partition, no shuffle, no checkpoint);
-  * the ≤ partitions × Σk rows come to the driver, where the gates,
-  * keep-first dedup and the rerank run over them in memory. Ranking a
-  * stage a gate then skips costs only heap pushes inside the same
-  * scan. The expensive side (the scan and the distance) is Catalyst's;
-  * only the orchestration is imperative — the same split the reference
-  * reaches by accident, made explicit as policy.
-  *
-  * The flagship ladder exists twice: `search` for one request and
-  * `gatedBatchCore` for a query log. `searchFixed` and `searchGated`
-  * are calls into those two. Both reference compositions (main.py
-  * strict-first and main_remind.py scan-then-filter — SURVEY.md §3.4)
-  * are expressible by configuring the stage list.
-  */
 /** `semanticDriverBatchMax`: batch-cascade query logs at most this
   * large resolve NER/synonyms on the DRIVER (the reference's
   * per-request shape — one external call per query); larger logs
@@ -64,6 +42,34 @@ final case class CascadeConfig(
     semanticDriverBatchMax: Int = 1024,
     broadcastQueryMax: Int = 0)
 
+/** The flagship query: multi-stage retrieval with progressive filter
+  * relaxation, priority dedup, hybrid rerank, top-N
+  * (/root/reference/main.py:329-411 — SURVEY.md §3.1).
+  *
+  * The cascade is deliberately DRIVER-SIDE adaptive control flow
+  * (SURVEY.md §4) over ONE Spark job per request: a single pass over
+  * the candidate pool computes each row's distance once and ranks the
+  * top-k of EVERY stage the ladder could run ([[TopK.slotTopK]] — one
+  * bounded heap per stage per partition, no shuffle, no checkpoint);
+  * the ≤ partitions × Σk rows come to the driver, where the gates,
+  * keep-first dedup and the rerank run over them in memory. Ranking a
+  * stage a gate then skips costs only heap pushes inside the same
+  * scan. The expensive side (the scan and the distance) is Catalyst's;
+  * only the orchestration is imperative — the same split the reference
+  * reaches by accident, made explicit as policy.
+  *
+  * The ladder policy is written once, in the companion:
+  * [[MultiStageSearch.ladder]] gives a query's stage groups and gates,
+  * [[MultiStageSearch.walk]] applies them to per-stage top-k lists, the
+  * stage predicates come from `slotPredicates` and the rerank scores
+  * from `withScores`. `search` walks the lists of its one pass on the
+  * driver; the batch core (`searchGatedBatch`, `searchGatedBatchServed`,
+  * `searchGated`) walks each query's windowed lists in a UDF.
+  * `searchFixed` is `search` with its gates open. Both reference
+  * compositions (main.py strict-first and main_remind.py
+  * scan-then-filter — SURVEY.md §3.4) are expressible by configuring
+  * the stage list.
+  */
 final class MultiStageSearch(
     corpus: DataFrame, idCol: String, textCol: String, embCol: String,
     cfg: CascadeConfig = CascadeConfig(),
@@ -108,8 +114,8 @@ final class MultiStageSearch(
     corpus.sparkSession.createDataFrame(java.util.Collections.emptyList[Row], schema)
   }
 
-  /** Case-insensitive substring test on the doc text: every stage
-    * predicate of the per-query forms. */
+  /** Case-insensitive substring test on the doc text: the remind
+    * composition's filter. */
   private def contains(term: String): Column =
     lower(col(textCol)).contains(term.toLowerCase)
 
@@ -121,15 +127,30 @@ final class MultiStageSearch(
     (firstHit(SemanticSuite.CorpusVocab), firstHit(SemanticSuite.RegionVocab))
   }
 
-  /** L4 double, columnar: deterministic judge — 0..5 by fraction of
-    * condition tokens contained in the doc text. */
-  private def judgeScore(text: Column, condToks: Seq[String]): Column =
-    if (condToks.isEmpty) lit(0.0)
-    else {
-      val hits = condToks.map(t => when(lower(text).contains(t), 1).otherwise(0))
-        .reduce(_ + _)
-      round(lit(5.0) * hits / condToks.length, 0).cast("double")
-    }
+  /** A query's NER fields (job, region, age) as string literals, null
+    * when absent: the column form [[slotPredicates]] and [[withScores]]
+    * read, which the batch core fills from its resolved query frame. */
+  private def nerLits(ner: QueryNer): (Column, Column, Column) = {
+    def str(v: Option[String]) = v.fold(lit(null).cast("string"))(lit)
+    (str(ner.job), str(ner.region), str(ner.ageGroup))
+  }
+
+  /** Each ladder slot's predicate on the doc text, slot s at index s
+    * (the numbering of [[MultiStageSearch.ladder]]), for NER fields as
+    * string columns, null when absent. A term matches as a
+    * case-insensitive substring; a null term or text makes the test
+    * null, which every consumer reads as false. Over literals the
+    * optimizer folds the absent-field tests away. */
+  private def slotPredicates(job: Column, region: Column,
+                             syns: Seq[Column]): Seq[Column] = {
+    def has(t: Column) = lower(col(textCol)).contains(lower(t))
+    val inRegion = region.isNull || has(region)
+    Seq(inRegion && (job.isNull || has(job)),                          // S1 strict AND
+      region.isNotNull && job.isNotNull && (has(region) || has(job)), // S2 OR
+      has(region), has(job),                                           // S3 single field
+      lit(true)) ++                                                    // S5 fallback
+      syns.map(syn => inRegion && has(syn))                            // S4 synonyms
+  }
 
   /** Run the cascade. `queryVec` is the embedded query (the embedding
     * model is an external boundary — SURVEY.md §2.1 S5). */
@@ -150,74 +171,50 @@ final class MultiStageSearch(
     * `orderBy` would rank it. Default and served pools take this one
     * path, so a backend cannot score a different vector than the one
     * the call searches. The pass is one job and leaves nothing cached.
-    *
-    * The ladder then walks the collected stage rows on the driver: a
-    * gate reads the number of distinct ids kept so far; keep-first
-    * dedup (A1: first stage wins, then ascending distance —
-    * main.py:173-181) keeps a doc's first occurrence;
-    * the stages that ran are numbered 1, 2, … in ladder order. */
+    * [[MultiStageSearch.walk]] then applies the gates, keep-first dedup
+    * and stage numbering to the collected stage rows on the driver. */
   private def search(queryText: String, queryVec: Column,
                      gates: CascadeConfig): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
     val ner: QueryNer = resolvedNer(queryText)
-    val region = ner.region
-    val job = ner.job
-
-    // (gate, stages): a group runs when fewer than `gate` distinct ids
-    // are kept before it (Int.MaxValue: always), all its stages or none
-    val filtered = (p: Column) => (Some(p), cfg.topK)
-    val ladder: Seq[(Int, Seq[(Option[Column], Int)])] = Seq(
-      // S1 strict AND (main.py:341-347)
-      Int.MaxValue -> Seq(((region, job) match {
-        case (Some(r), Some(j)) => Some(contains(r) && contains(j))
-        case _                  => region.orElse(job).map(contains)
-      }, cfg.topK)),
-      // S2 OR relaxation (main.py:351-360)
-      gates.relaxThreshold ->
-        (for (r <- region; j <- job) yield filtered(contains(r) || contains(j))).toSeq,
-      // S3 single-field passes (main.py:363-383)
-      gates.relaxThreshold -> (region.toSeq ++ job).map(t => filtered(contains(t))),
-      // S4 synonym expansion (main.py:386-397)
-      Int.MaxValue -> job.toSeq.flatMap(synonyms(_)).map(syn =>
-        filtered(region.fold(contains(syn))(r => contains(r) && contains(syn)))),
-      // S5 unfiltered fallback (main.py:400-407)
-      gates.fallbackThreshold -> Seq((None, cfg.fallbackK)))
-
+    val syns = ner.job.toSeq.flatMap(synonyms(_))
+    val ladder = MultiStageSearch.ladder(ner.job.isDefined,
+      ner.region.isDefined, syns.length, gates)
+    val (job, region, _) = nerLits(ner)
+    val preds = slotPredicates(job, region, syns.map(lit))
+    val stages = ladder.flatMap(_._2)
     val pool = knnBackend.fold(corpus)(_(queryVec))
       .select(col(idCol), col(textCol),
         VectorFunctions.l2(col(embCol), queryVec).as("dist"))
-    val ranked = TopK.slotTopK(pool, Seq("dist", idCol), ladder.flatMap(_._2))
-      .iterator
-    val seen = scala.collection.mutable.HashSet.empty[Any]
-    val kept = Vector.newBuilder[Row]
-    var stage = 0
-    ladder.foreach { case (gate, stages) =>
-      val rows = stages.map(_ => ranked.next())
-      if (seen.size < gate) rows.foreach { stageRows =>
-        stage += 1
-        stageRows.foreach(r =>
-          if (seen.add(r.get(0))) kept += Row(r.get(0), r.get(1), r.get(2), stage))
-      }
+    val ranked = stages.map(_._1).zip(TopK.slotTopK(pool, Seq("dist", idCol),
+      stages.map { case (slot, k) => (Some(preds(slot)), k) })).toMap
+    val kept = MultiStageSearch.walk(ladder, ranked)(_.get(0)).map {
+      case (r, stage) => Row(r.get(0), r.get(1), r.get(2), stage)
     }
 
     // hybrid rerank → top-N → rank (main.py:410,455-469)
-    rerankLocal(kept.result(), StructType(Seq(pool.schema(idCol),
+    rerankLocal(kept, StructType(Seq(pool.schema(idCol),
       pool.schema(textCol), StructField("dist", DoubleType, nullable = false),
       StructField("stage_rank", IntegerType, nullable = false))), ner)
   }
 
-  /** The rerank score columns (main.py:410,455-469): deterministic judge
-    * + NER-overlap rule score and their weighted combine, written once
-    * for both rerank tails. */
-  private def withScores(acc: DataFrame, ner: QueryNer): DataFrame = {
-    val condToks = (ner.job.toSeq ++ ner.region.toSeq).map(_.toLowerCase).distinct
+  /** The rerank score columns (main.py:410,455-469), written once for
+    * every rerank tail: the deterministic judge (L4 double: 0..5 by the
+    * fraction of the query's job/region terms the doc text contains),
+    * the NER-overlap rule score and their weighted combine. `ner` is
+    * (job, region, age) as string columns, null when absent. */
+  private def withScores(acc: DataFrame, ner: (Column, Column, Column)): DataFrame = {
+    val (job, region, age) = ner
+    val terms = Seq(job, region)
+    val hits = terms.map(t =>
+      when(lower(col(textCol)).contains(lower(t)), 1).otherwise(0)).reduce(_ + _)
+    val nTerms = terms.map(t => when(t.isNotNull, 1).otherwise(0)).reduce(_ + _)
     val (dJob, dRegion) = docNer(col(textCol))
     acc
-      .withColumn("judge_score", judgeScore(col(textCol), condToks))
+      .withColumn("judge_score", when(nTerms === 0, lit(0.0))
+        .otherwise(round(lit(5.0) * hits / nTerms, 0).cast("double")))
       .withColumn("rule_score", Rerank.nerOverlap(Seq(
-        (ner.job.map(lit).getOrElse(lit("")), dJob),
-        (ner.region.map(lit).getOrElse(lit("")), dRegion),
-        (ner.ageGroup.map(lit).getOrElse(lit("")), lit("")))))
+        (job, dJob), (region, dRegion), (age, lit("")))))
       .withColumn("score",
         Rerank.combined(col("judge_score"), col("rule_score"), cfg.wJudge, cfg.wRule))
   }
@@ -236,7 +233,7 @@ final class MultiStageSearch(
   private def rerankLocal(kept: Seq[Row], schema: StructType,
                           ner: QueryNer): DataFrame = {
     val spark = corpus.sparkSession
-    val scored = withScores(spark.createDataFrame(kept.asJava, schema), ner)
+    val scored = withScores(spark.createDataFrame(kept.asJava, schema), nerLits(ner))
     val top = TopK.sortRows(scored.collect().toSeq, scored.schema, rankKeys)
       .take(cfg.finalN)
     spark.createDataFrame(
@@ -254,7 +251,7 @@ final class MultiStageSearch(
     * [[graft.operators.Bm25.rankBounded]]). */
   private def rerankTail(acc: DataFrame, ner: QueryNer): DataFrame = {
     val order = rankKeys.map { case (c, ascending) => if (ascending) asc(c) else desc(c) }
-    withScores(acc, ner).orderBy(order: _*).limit(cfg.finalN)
+    withScores(acc, nerLits(ner)).orderBy(order: _*).limit(cfg.finalN)
       .withColumn("rank", row_number().over(Window.partitionBy(lit(0)).orderBy(order: _*)))
   }
 
@@ -314,15 +311,14 @@ final class MultiStageSearch(
     *  2. text fetch: the surviving ≤ Σk·|Q| candidate ids broadcast-
     *     join back to the corpus for the rerank text.
     *
-    * The gate ladder runs per query as ARRAY expressions over the
-    * pivoted stage heaps (one row per qid): running distinct-id counts
-    * via array_distinct/concat, gated stages kept or emptied by
-    * when(), ran-only stage renumbering from the same gate indicators
-    * — [[search]]'s driver-side gates, evaluated |Q| times in one
-    * narrow map instead of |Q| driver plans. Per-query results are
-    * row-identical to [[search]] (CascadeBatchSpec pins the identity
-    * across all four query structures; c9 hash-checks the batch
-    * against per-query DuckDB replays).
+    * Each query's stage lists are gathered into one row per qid, and
+    * [[MultiStageSearch.walk]] — the walk [[search]] runs on the
+    * driver — applies the gates, keep-first dedup and stage numbering
+    * to them inside a UDF, |Q| times in one narrow map instead of |Q|
+    * driver plans. Per-query results are row-identical to [[search]]
+    * (CascadeBatchSpec pins the identity across all four query
+    * structures; c9 hash-checks the batch against per-query DuckDB
+    * replays).
     *
     * The semantic boundary is scale-dispatched (see [[batchPrelude]]):
     * request-sized batches resolve NER/synonyms on the driver from the
@@ -606,32 +602,16 @@ final class MultiStageSearch(
 
   /** The batched gate-ladder pipeline over an already-joined
     * (corpus row × query) pair stream: slot masks → windowed top-k per
-    * (qid, slot) → per-qid gate algebra → keep-first dedup → text
-    * fetch from `texts` → rerank. Shared verbatim by the exact batch,
-    * the served batch and [[searchGated]] (a one-row log over its
-    * pool) — only the pair stream and the text source differ, which
-    * is exactly the backend-independence the identity gates pin. */
+    * (qid, slot) → one row per qid → [[MultiStageSearch.walk]] (gates,
+    * keep-first dedup, stage numbering) → text fetch from `texts` →
+    * [[withScores]] rerank. Shared verbatim by the exact batch, the
+    * served batch and [[searchGated]] (a one-row log over its pool) —
+    * only the pair stream and the text source differ, which is exactly
+    * the backend-independence the identity gates pin. */
   private def gatedBatchCore(qidCol: String, nerDf: DataFrame, maxSyn: Int,
                              paired: DataFrame, texts: DataFrame): DataFrame = {
-    val lt = lower(col(textCol))
-    def cterm(t: Column): Column = lt.contains(lower(t))
-    val cr = col("__region").isNotNull && cterm(col("__region"))
-    val cj = col("__job").isNotNull && cterm(col("__job"))
-    val s1ok = when(col("__region").isNotNull && col("__job").isNotNull, cr && cj)
-      .when(col("__region").isNotNull, cr)
-      .when(col("__job").isNotNull, cj)
-      .otherwise(lit(true))
-    val s2ok = col("__region").isNotNull && col("__job").isNotNull && (cr || cj)
-    val synOks = (0 until maxSyn).map { i =>
-      val sy = get(col("__syns"), lit(i)) // null-safe past the end
-      sy.isNotNull &&
-        when(col("__region").isNotNull, cr && cterm(sy)).otherwise(cterm(sy))
-    }
-    val fallbackSlot = 5 + maxSyn
-    val slots = Seq((1, s1ok), (2, s2ok), (3, cr), (4, cj)) ++
-      synOks.zipWithIndex.map { case (ok, i) => (5 + i, ok) } :+
-      ((fallbackSlot, lit(true): Column))
-    val maxK = math.max(cfg.topK, cfg.fallbackK)
+    val slots = slotPredicates(col("__job"), col("__region"),
+      (0 until maxSyn).map(i => get(col("__syns"), lit(i)))) // null past the end
     // null-embedding rows carry a null distance and are excluded from
     // every slot BEFORE the per-slot cut — the same contract the
     // single-query form's stages enforce via Knn.exactDefined (a null
@@ -642,7 +622,7 @@ final class MultiStageSearch(
       .select(col("__qid"),
         col(idCol).cast("long").as("__id"),
         VectorFunctions.l2(col(embCol), col("__qv")).as("__dist"),
-        array(slots.map { case (s, ok) =>
+        array(slots.zipWithIndex.map { case (ok, s) =>
           struct(lit(s).as("slot"), ok.as("ok"))
         }: _*).as("__slots"))
       .filter(col("__dist").isNotNull)
@@ -661,101 +641,32 @@ final class MultiStageSearch(
     // measured the two forms EQUAL on wall-clock; the window form is
     // kept because it is native end-to-end (no Aggregator buffer
     // tuning, plan-auditable via the WindowGroupLimit node), not
-    // because it is faster. array_sort on (dist, id) structs keeps
-    // the stored order total, as TopK did.
+    // because it is faster. The row number carries the (dist, id)
+    // order in Spark's ordering to the walk.
     val wTop = Window.partitionBy("__qid", "__slot")
       .orderBy(col("__dist"), col("__id"))
-    val grouped = pairs
+    val walked = pairs
       .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= maxK)
-      .groupBy("__qid", "__slot")
-      .agg(array_sort(collect_list(
-        struct(col("__dist").as("dist"), col("__id").as("id")))).as("__cand"))
-      .withColumn("__cand", slice(col("__cand"), lit(1),
-        when(col("__slot") === fallbackSlot, cfg.fallbackK)
-          .otherwise(cfg.topK)))
-
-    // -- pivot to one row per qid; absent slots coalesce to empty
-    val slotAgg = (1 to fallbackSlot).map(s =>
-      first(when(col("__slot") === s, col("__cand")), ignoreNulls = true)
-        .as(s"__a$s"))
-    val emptyArr = typedlit(Seq.empty[TopK.Entry])
-    def nn(c: Column): Column = coalesce(c, emptyArr)
-    def ids(c: Column): Column = transform(c, _.getField("id"))
-    val perQ = grouped.groupBy("__qid")
-      .agg(slotAgg.head, slotAgg.tail: _*)
+      .filter(col("__rn") <= math.max(cfg.topK, cfg.fallbackK))
+      .groupBy("__qid")
+      .agg(collect_list(struct(col("__slot"), col("__rn"), col("__dist"),
+        col("__id"))).as("__cand"))
       .join(nerDf, "__qid")
+      .select(col("__qid"), col("__job"), col("__region"), col("__age"),
+        explode(MultiStageSearch.walkUdf(cfg)(col("__job").isNotNull,
+          col("__region").isNotNull, size(col("__syns")), col("__cand"))).as("__e"))
+      .select(col("*"), col("__e._1").as("stage_rank"),
+        col("__e._2").as("dist"), col("__e._3").as("__id"))
+      .drop("__e")
 
-    // -- the gate ladder, per qid, as array expressions (search()'s
-    //    gates: counts over gated unions, ran-only renumbering)
-    val s2exists = col("__job").isNotNull && col("__region").isNotNull
-    val n1 = size(array_distinct(ids(nn(col("__a1")))))
-    val g2 = s2exists && (n1 < cfg.relaxThreshold)
-    val inc2 = when(g2, nn(col("__a2"))).otherwise(emptyArr)
-    val n2 = size(array_distinct(
-      concat(ids(nn(col("__a1"))), ids(inc2))))
-    val g3 = n2 < cfg.relaxThreshold
-    val inc3 = when(col("__region").isNotNull && g3, nn(col("__a3")))
-      .otherwise(emptyArr)
-    val inc4 = when(col("__job").isNotNull && g3, nn(col("__a4")))
-      .otherwise(emptyArr)
-    val incSyn = (0 until maxSyn).map(i =>
-      when(size(col("__syns")) > i, nn(col(s"__a${5 + i}")))
-        .otherwise(emptyArr))
-    val n6 = size(array_distinct(
-      (Seq(ids(nn(col("__a1"))), ids(inc2), ids(inc3), ids(inc4)) ++
-        incSyn.map(ids)).reduce(concat(_, _))))
-    val g5 = n6 < cfg.fallbackThreshold
-    val inc7 = when(g5, nn(col(s"__a$fallbackSlot"))).otherwise(emptyArr)
-    val i2 = when(g2, 1).otherwise(0)
-    val nSingle = when(col("__region").isNotNull, 1).otherwise(0) +
-      when(col("__job").isNotNull, 1).otherwise(0)
-    val i3 = when(g3, nSingle).otherwise(0)
-    def fr(rank: Column, arr: Column) =
-      struct(rank.cast("int").as("sr"), arr.as("arr"))
-    val frames = array(
-      Seq(fr(lit(1), nn(col("__a1"))),
-        fr(lit(2), inc2),
-        fr(lit(2) + i2, inc3),
-        fr(lit(2) + i2 + when(col("__region").isNotNull, 1).otherwise(0), inc4)) ++
-        incSyn.zipWithIndex.map { case (a, m) => fr(lit(2 + m) + i2 + i3, a) } :+
-        fr(lit(2) + size(col("__syns")) + i2 + i3, inc7): _*)
-    val cand = perQ
-      .select(col("__qid"), explode(frames).as("__f"))
-      .select(col("__qid"), col("__f").getField("sr").as("stage_rank"),
-        explode(col("__f").getField("arr")).as("__e"))
-      .select(col("__qid"), col("stage_rank"),
-        col("__e").getField("dist").as("dist"),
-        col("__e").getField("id").as("__id"))
-
-    // -- keep-first dedup per (qid, id), then pass 2 (text) + rerank
-    val deduped = Dedup.keepFirst(cand, Seq("__qid", "__id"),
-      Seq(col("stage_rank"), col("dist"), col("__id")))
-    val withText = broadcast(deduped)
+    // pass 2 (text) + rerank
+    val withText = broadcast(walked)
       .join(texts.select(col(idCol).cast("long").as("__id"),
         col(textCol)), "__id")
-      .join(nerDf, "__qid")
-    val jb = lower(col("__job"))
-    val rg = lower(col("__region"))
-    val hits = when(col("__job").isNotNull && lt.contains(jb), 1).otherwise(0) +
-      when(col("__region").isNotNull && lt.contains(rg), 1).otherwise(0)
-    val nTok = when(col("__job").isNotNull, 1).otherwise(0) +
-      when(col("__region").isNotNull, 1).otherwise(0)
-    val (dJob, dRegion) = docNer(col(textCol))
-    val scored = withText
-      .withColumn("judge_score",
-        when(nTok === 0, lit(0.0))
-          .otherwise(round(lit(5.0) * hits / nTok, 0).cast("double")))
-      .withColumn("rule_score", Rerank.nerOverlap(Seq(
-        (coalesce(col("__job"), lit("")), dJob),
-        (coalesce(col("__region"), lit("")), dRegion),
-        (coalesce(col("__age"), lit("")), lit("")))))
-      .withColumn("score",
-        Rerank.combined(col("judge_score"), col("rule_score"),
-          cfg.wJudge, cfg.wRule))
     val wq = Window.partitionBy("__qid")
       .orderBy(desc("score"), asc("dist"), asc("__id"))
-    scored.withColumn("rank", row_number().over(wq))
+    withScores(withText, (col("__job"), col("__region"), col("__age")))
+      .withColumn("rank", row_number().over(wq))
       .filter(col("rank") <= cfg.finalN)
       .withColumn(idCol, col("__id").cast(corpus.schema(idCol).dataType))
       .select(batchOutCols(qidCol): _*)
@@ -773,7 +684,7 @@ final class MultiStageSearch(
     if (isBlank(queryText)) return emptyResponse
     val ner = resolvedNer(queryText)
 
-    val pool = Knn.exact(corpus, embCol, idCol, queryVec, scanK)
+    val pool = Knn.exactDefined(corpus, embCol, idCol, queryVec, scanK)
       .select(col(idCol), col(textCol), col("dist"))
     val poolRows = pool.collect()
 
@@ -810,7 +721,7 @@ final class MultiStageSearch(
                         scanK: Int = 1000): DataFrame = {
     if (isBlank(queryText)) return emptyResponse
     val ner = resolvedNer(queryText)
-    val pool = Knn.exact(corpus, embCol, idCol, queryVec, scanK)
+    val pool = Knn.exactDefined(corpus, embCol, idCol, queryVec, scanK)
       .select(col(idCol), col(textCol), col("dist"))
     // keep(r): null text never matches; absent NER fields don't filter
     val pred = col(textCol).isNotNull &&
@@ -830,6 +741,56 @@ object MultiStageSearch {
 
   private[operators] def isBlankText(t: String): Boolean =
     t == null || t.trim.isEmpty
+
+  /** The flagship ladder's shape (main.py:329-411) for a query with the
+    * given NER fields and synonym count: its gate groups in ladder
+    * order, each (gate, stages) with stage = (slot, k). A group runs
+    * when fewer than `gate` distinct ids are kept before it
+    * (Int.MaxValue: always), all its stages or none. Slots: 0 S1
+    * strict AND, 1 S2 OR, 2 region, 3 job, 4 the unfiltered fallback,
+    * 5 + i synonym i — the order `slotPredicates` builds them in. */
+  private[graft] def ladder(job: Boolean, region: Boolean, nSyn: Int,
+      c: CascadeConfig): Seq[(Int, Seq[(Int, Int)])] = List(
+    Int.MaxValue -> List(0 -> c.topK),                             // S1 (main.py:341-347)
+    c.relaxThreshold -> List(1 -> c.topK).filter(_ => job && region), // S2 (main.py:351-360)
+    c.relaxThreshold -> List(2 -> region, 3 -> job)                 // S3 (main.py:363-383)
+      .collect { case (slot, true) => slot -> c.topK },
+    Int.MaxValue -> List.tabulate(nSyn)(i => (5 + i) -> c.topK),    // S4 (main.py:386-397)
+    c.fallbackThreshold -> List(4 -> c.fallbackK))                  // S5 (main.py:400-407)
+
+  /** The ladder walk over per-slot top-k lists (`lists(slot)`, ranked
+    * best first): a group's gate reads the number of distinct ids kept
+    * so far; each stage that runs reads its slot's first k rows and is
+    * numbered 1, 2, … in ladder order (a skipped or absent stage takes
+    * no number); keep-first dedup (A1: first stage wins, then the
+    * list's order — main.py:173-181) keeps a row only at its id's
+    * first occurrence. Returns the kept rows with their stage numbers,
+    * in walk order. */
+  private[graft] def walk[A](ladder: Seq[(Int, Seq[(Int, Int)])],
+      lists: Int => Seq[A])(id: A => Any): Seq[(A, Int)] = {
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    val kept = Vector.newBuilder[(A, Int)]
+    var stage = 0
+    ladder.foreach { case (gate, stages) =>
+      if (seen.size < gate) stages.foreach { case (slot, k) =>
+        stage += 1
+        lists(slot).iterator.take(k).foreach(a => if (seen.add(id(a))) kept += a -> stage)
+      }
+    }
+    kept.result()
+  }
+
+  /** [[walk]] for the batch core, one call per qid: (job defined,
+    * region defined, synonym count, the qid's window rows as
+    * (slot, row number, dist, id)) → (stage, dist, id) per kept row.
+    * Built here so the closure holds the config alone, not the
+    * DataFrame-holding instance. */
+  private def walkUdf(c: CascadeConfig) =
+    udf { (job: Boolean, region: Boolean, nSyn: Int, cand: Seq[Row]) =>
+      val lists = cand.groupBy(_.getInt(0)).map { case (s, rs) => s -> rs.sortBy(_.getInt(1)) }
+      walk(ladder(job, region, nSyn, c), lists.getOrElse(_, Nil))(_.getLong(3))
+        .map { case (r, stage) => (stage, r.getDouble(2), r.getLong(3)) }
+    }
 
   /** One query's semantic resolution — the F4 blank guard, L2 NER +
     * profile coalesce, L3 synonyms — as a pure function of the

@@ -17,11 +17,15 @@ import org.apache.spark.sql.functions._
 private[graft] trait QueriesShared {
 
 
-  /** Run the c1/c2 adaptive≡fixed identity gates inside the cascade
-    * entries. Default ON — the CORRECTNESS artifact must carry the
-    * identity stamp. [[Bench]] turns it OFF for the timed loop (and
-    * ONLY there): the gates execute the cascade 2–3× plus per-stage
-    * count actions, so with them inside the clock c1's number measured
+  /** Run the identity gates inside the cascade and ANN entries: c1 and
+    * c5 check the one-pass `search` against the batch core over a
+    * one-row log (`searchGated`), exact and served; c2 checks
+    * `searchRemind` against `searchRemindFixed`; v14 checks its
+    * store-served top-10 against the inline IVF serve and measures its
+    * recall against the exact kNN. Default ON — the CORRECTNESS
+    * artifact must carry the identity stamp. [[Bench]] turns it OFF
+    * for the timed loop (and ONLY there): each gate runs a second form
+    * of the query, so with them inside the clock c1's number measured
     * the verification harness, not the cascade a user runs. The
     * emitted `identity_match` column reports this flag honestly: true
     * = the gate ran and held this execution (it raises on violation),

@@ -332,6 +332,14 @@ class CascadeBatchSpec extends SparkSpec {
     assert(batch.filter(col("doc_id") === 15L || col("dist").isNull).isEmpty)
     val single = search.searchGated(qtexts.head._2, typedlit(Seq(0.0, 0.0)))
     assert(single.filter(col("doc_id") === 15L || col("dist").isNull).isEmpty)
+    // the remind composition's scan pool keeps the same contract: in a
+    // 3-row pool a null-distance row would rank first and take a slot
+    val (q, v) = (qtexts.head._2, typedlit(Seq(0.0, 0.0)))
+    Seq(search.searchRemind(q, v, scanK = 3),
+        search.searchRemindFixed(q, v, scanK = 3)).foreach { remind =>
+      assert(remind.collect().nonEmpty)
+      assert(remind.filter(col("doc_id") === 15L || col("dist").isNull).isEmpty)
+    }
   }
 
   test("batch forms refuse non-integral ids eagerly") {
