@@ -3,9 +3,13 @@ package graft.operators
 import graft.functions.VectorFunctions
 import graft.semantic.{DictSynonyms, QueryNer, RuleQueryNer, SemanticSuite, UserProfile}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedProjection
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** `semanticDriverBatchMax`: batch-cascade query logs at most this
@@ -224,22 +228,55 @@ final class MultiStageSearch(
   private def rankKeys: Seq[(String, Boolean)] =
     Seq("score" -> false, "dist" -> true, idCol -> true)
 
-  /** The rerank tail over rows already on the driver: the score columns
-    * over a LocalRelation of `kept` (the optimizer's
-    * ConvertToLocalRelation folds that projection on the driver, so its
-    * collect runs no job), then the [[rankKeys]] order in Spark's
-    * ordering ([[TopK.sortRows]]), top-N and rank 1..n — returned as a
-    * LocalRelation, so the caller's collect runs no job either. */
+  /** The rerank tail over rows already on the driver: the
+    * [[localScorer]] columns on `kept` (of `schema`), then the
+    * [[rankKeys]] order in Spark's ordering ([[TopK.sparkOrdering]]),
+    * top-N and rank 1..n — returned as a LocalRelation, so the caller's
+    * collect runs no job. */
   private def rerankLocal(kept: Seq[Row], schema: StructType,
                           ner: QueryNer): DataFrame = {
-    val spark = corpus.sparkSession
-    val scored = withScores(spark.createDataFrame(kept.asJava, schema), nerLits(ner))
-    val top = TopK.sortRows(scored.collect().toSeq, scored.schema, rankKeys)
-      .take(cfg.finalN)
-    spark.createDataFrame(
-      top.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1)) }.asJava,
-      scored.schema.add(StructField("rank", IntegerType, nullable = false)))
+    val (scoredSchema, score) = localScorer(schema)
+    val nerVals = Seq(ner.job, ner.region, ner.ageGroup).map(_.orNull)
+    val top = score(kept.map(r => Row.fromSeq(r.toSeq ++ nerVals)))
+      .sorted(TopK.sparkOrdering(scoredSchema, rankKeys)).take(cfg.finalN)
+    val external = CatalystTypeConverters.createToScalaConverter(scoredSchema)
+    corpus.sparkSession.createDataFrame(top.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(external(r).asInstanceOf[Row].toSeq :+ (i + 1))
+      }.asJava,
+      scoredSchema.add(StructField("rank", IntegerType, nullable = false)))
   }
+
+  /** [[withScores]] for driver-side rows: rows of `schema` followed by
+    * the NER fields (job, region, age; null when absent) → the rows of
+    * `schema` + the score columns, as catalyst rows, and that schema.
+    * The columns are analyzed ONCE per input schema, over a local
+    * relation with the NER fields as string columns (the batch core's
+    * form), and each Project of the analyzed plan is then applied row by
+    * row, as the optimizer's ConvertToLocalRelation would fold it — so a
+    * request's rerank plans nothing. The evaluation is serialized per
+    * scorer: expressions such as `regexp_extract` keep per-instance
+    * state. */
+  private def localScorer(schema: StructType)
+      : (StructType, Seq[Row] => Seq[InternalRow]) =
+    localScorers.computeIfAbsent(schema, { (s: StructType) =>
+      val ner = Seq("__job", "__region", "__age")
+      val in = ner.foldLeft(s)(_.add(_, StringType))
+      val scored = withScores(corpus.sparkSession.createDataFrame(
+          java.util.Collections.emptyList[Row], in),
+        (col("__job"), col("__region"), col("__age"))).drop(ner: _*)
+      def steps(p: LogicalPlan): List[InterpretedProjection] = p match {
+        case Project(list, child) => steps(child) :+ new InterpretedProjection(list, child.output)
+        case _: LocalRelation => Nil
+      }
+      val projections = steps(ReplaceExpressions(scored.queryExecution.analyzed))
+      val internal = CatalystTypeConverters.createToCatalystConverter(in)
+      (scored.schema, (rows: Seq[Row]) => projections.synchronized {
+        rows.map(r => projections.foldLeft(internal(r).asInstanceOf[InternalRow])((row, p) => p(row)))
+      })
+    })
+
+  private val localScorers = new java.util.concurrent.ConcurrentHashMap[
+    StructType, (StructType, Seq[Row] => Seq[InternalRow])]()
 
   /** The rerank tail as a lazy plan, for [[searchRemindFixed]]: score
     * columns, top-N, rank. The rank window is global but runs over

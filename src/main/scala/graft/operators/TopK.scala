@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   * For a result the DRIVER consumes (the per-request cascade), there
   * is no exchange to feed: [[slotTopK]] ranks several filtered top-k
   * lists in one scan and merges their partition heaps on the driver,
-  * and [[sortRows]] orders driver-side rows exactly as Spark would.
+  * and [[sparkOrdering]] orders driver-side rows exactly as Spark would.
   */
 object TopK {
 
@@ -79,14 +79,6 @@ object TopK {
       SortOrder(BoundReference(i, schema(i).dataType, schema(i).nullable),
         if (ascending) Ascending else Descending)
     })
-
-  /** Driver-side rows sorted by [[sparkOrdering]] on `keys`. */
-  private[operators] def sortRows(rows: Seq[Row], schema: StructType,
-      keys: Seq[(String, Boolean)]): Seq[Row] = {
-    val internal = CatalystTypeConverters.createToCatalystConverter(schema)
-    rows.map(r => (internal(r).asInstanceOf[InternalRow], r))
-      .sortBy(_._1)(sparkOrdering(schema, keys)).map(_._2)
-  }
 
   /** Every slot's top-k of `rows` in ONE pass over them: slot s keeps
     * the k_s first rows, in Spark's ascending order on `by`, among the
