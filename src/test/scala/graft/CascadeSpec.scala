@@ -259,6 +259,23 @@ class CascadeSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
+  test("concurrent search calls on one instance answer as sequential calls do") {
+    // a serving loop shares one instance across request threads, and
+    // with it the rerank's once-analyzed score columns
+    val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
+      CascadeConfig(topK = 3, finalN = 5))
+    val queries = Seq("looking for a join job in the row area", "column stuff",
+      "sort pipelines", "기타 문의")
+    def answer(q: String) = search.search(q, col("qv")).collect().toSeq
+    val expected = queries.map(answer)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = for (_ <- 1 to 3; i <- queries.indices) yield
+        i -> pool.submit(() => answer(queries(i)))
+      calls.foreach { case (i, f) => assert(f.get() == expected(i), queries(i)) }
+    } finally pool.shutdown()
+  }
+
   test("ties at the stage-k and finalN cuts break by id in Spark's order, string ids too") {
     // two docs with identical text and embedding tie on dist at every
     // stage's k cut and on (score, dist) at the finalN cut; the string
