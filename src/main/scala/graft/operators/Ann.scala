@@ -1531,15 +1531,19 @@ object Ann {
     val bc = p.centroids.sparkSession.sparkContext.broadcast(
       collectCentroids(p.centroids, p.cidCol, p.cvecCol))
     val nprobe = p.nprobe // the closure must not capture the centroid frame
-    val cells = udf { (q: Seq[java.lang.Double]) =>
-      if (q == null) Array.empty[Long]
-      else {
-        require(!q.contains(null), "IVF probe: query vector has a null element")
-        probeCells(bc.value, q.map(_.doubleValue).toArray, nprobe)
-      }
-    }
+    val cells = udf((q: Seq[java.lang.Double]) => probeCellsOf(bc.value, q, nprobe))
     qv => cells(qv.cast("array<double>"))
   }
+
+  /** [[probeCells]] for a query vector as a row holds it: a null vector
+    * probes no cell, a null element fails loudly. */
+  private[graft] def probeCellsOf(cents: Array[(Long, Array[Double])],
+                                  q: Seq[java.lang.Double], nprobe: Int): Array[Long] =
+    if (q == null) Array.empty[Long]
+    else {
+      require(!q.contains(null), "IVF probe: query vector has a null element")
+      probeCells(cents, q.map(_.doubleValue).toArray, nprobe)
+    }
 
   /** The core behind the five single-vector exact IVF forms: the rows
     * of `source` in `cells`, narrowed by `restrict`, cut to the exact

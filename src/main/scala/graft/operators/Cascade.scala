@@ -9,16 +9,20 @@ import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** `semanticDriverBatchMax`: batch-cascade query logs at most this
-  * large resolve NER/synonyms on the DRIVER (the reference's
-  * per-request shape — one external call per query); larger logs
-  * resolve them inside the cluster via `mapPartitions` (SURVEY §2.7's
-  * batch shape), so an offline log never funnels its texts through
-  * the driver. 0 forces the distributed path. Both paths are
-  * row-identical by construction (CascadeBatchSpec pins it).
+  * large are read whole on the DRIVER, resolve NER/synonyms there (the
+  * reference's per-request shape — one external call per query) and
+  * take the one-pass driver tail: one job ranks every (query, stage)
+  * top-k, and the gates, dedup and rerank run on the driver, which
+  * holds at most partitions × |Q| × Σk candidate rows (Σk over the
+  * stage slots). Larger logs resolve them inside the cluster via
+  * `mapPartitions` (SURVEY §2.7's batch shape) and run the distributed
+  * core, so an offline log never funnels its texts or candidates
+  * through the driver. 0 forces the distributed path. Both paths are
+  * row-identical (CascadeBatchSpec pins it).
   *
   * `broadcastQueryMax`: the batch cascades BROADCAST the resolved
   * query frame (the pair stream is corpus × broadcast(queries)), which
@@ -67,8 +71,11 @@ final case class CascadeConfig(
   * [[MultiStageSearch.walk]] applies them to per-stage top-k lists, the
   * stage predicates come from `slotPredicates` and the rerank scores
   * from `withScores`. `search` walks the lists of its one pass on the
-  * driver; the batch core (`searchGatedBatch`, `searchGatedBatchServed`,
-  * `searchGated`) walks each query's windowed lists in a UDF.
+  * driver, and so do the batch forms (`searchGatedBatch`,
+  * `searchGatedBatchServed`) for a request-sized log: one pass ranks
+  * every (query, stage) top-k, grouped by qid. Larger logs and
+  * `searchGated` run the distributed batch core, which walks each
+  * query's windowed lists in a UDF.
   * `searchFixed` is `search` with its gates open. Both reference
   * compositions (main.py strict-first and main_remind.py
   * scan-then-filter — SURVEY.md §3.4) are expressible by configuring
@@ -191,16 +198,25 @@ final class MultiStageSearch(
       .select(col(idCol), col(textCol),
         VectorFunctions.l2(col(embCol), queryVec).as("dist"))
     val ranked = stages.map(_._1).zip(TopK.slotTopK(pool, Seq("dist", idCol),
-      stages.map { case (slot, k) => (Some(preds(slot)), k) })).toMap
+      stages.map { case (slot, k) => (Some(preds(slot)), k) })(())).toMap
     val kept = MultiStageSearch.walk(ladder, ranked)(_.get(0)).map {
       case (r, stage) => Row(r.get(0), r.get(1), r.get(2), stage)
     }
 
     // hybrid rerank → top-N → rank (main.py:410,455-469)
-    rerankLocal(kept, StructType(Seq(pool.schema(idCol),
-      pool.schema(textCol), StructField("dist", DoubleType, nullable = false),
-      StructField("stage_rank", IntegerType, nullable = false))), ner)
+    rerankLocal(Seq((Nil, kept, nerValues(ner))), keptSchema(pool.schema), Nil)
   }
+
+  /** The (id, text, dist, stage_rank) rows a walk keeps from a pool of
+    * schema `pool`, as the driver rerank reads them. */
+  private def keptSchema(pool: StructType): StructType = StructType(Seq(pool(idCol),
+    pool(textCol), StructField("dist", DoubleType, nullable = false),
+    StructField("stage_rank", IntegerType, nullable = false)))
+
+  /** A query's NER fields (job, region, age) as the driver rerank reads
+    * them, null when absent. */
+  private def nerValues(ner: QueryNer): Seq[String] =
+    Seq(ner.job, ner.region, ner.ageGroup).map(_.orNull)
 
   /** The rerank score columns (main.py:410,455-469), written once for
     * every rerank tail: the deterministic judge (L4 double: 0..5 by the
@@ -228,22 +244,27 @@ final class MultiStageSearch(
   private def rankKeys: Seq[(String, Boolean)] =
     Seq("score" -> false, "dist" -> true, idCol -> true)
 
-  /** The rerank tail over rows already on the driver: the
-    * [[localScorer]] columns on `kept` (of `schema`), then the
+  /** The rerank tail over rows already on the driver, for one query or
+    * many: per query, the [[localScorer]] columns on its kept rows (of
+    * `schema`) with its NER values ([[nerValues]]), then the
     * [[rankKeys]] order in Spark's ordering ([[TopK.sparkOrdering]]),
-    * top-N and rank 1..n — returned as a LocalRelation, so the caller's
-    * collect runs no job. */
-  private def rerankLocal(kept: Seq[Row], schema: StructType,
-                          ner: QueryNer): DataFrame = {
+    * top-N and rank 1..n, each row led by the query's `lead` values (a
+    * batch's qid; nothing for a single query). Returned as one
+    * LocalRelation of `lead` + the scored columns + rank, so the
+    * caller's collect runs no job. */
+  private def rerankLocal(queries: Seq[(Seq[Any], Seq[Row], Seq[String])],
+                          schema: StructType, lead: Seq[StructField]): DataFrame = {
     val (scoredSchema, score) = localScorer(schema)
-    val nerVals = Seq(ner.job, ner.region, ner.ageGroup).map(_.orNull)
-    val top = score(kept.map(r => Row.fromSeq(r.toSeq ++ nerVals)))
-      .sorted(TopK.sparkOrdering(scoredSchema, rankKeys)).take(cfg.finalN)
+    val order = TopK.sparkOrdering(scoredSchema, rankKeys)
     val external = CatalystTypeConverters.createToScalaConverter(scoredSchema)
-    corpus.sparkSession.createDataFrame(top.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(external(r).asInstanceOf[Row].toSeq :+ (i + 1))
-      }.asJava,
-      scoredSchema.add(StructField("rank", IntegerType, nullable = false)))
+    val rows = queries.flatMap { case (key, kept, ner) =>
+      score(kept.map(r => Row.fromSeq(r.toSeq ++ ner)))
+        .sorted(order).take(cfg.finalN).zipWithIndex.map { case (r, i) =>
+          Row.fromSeq(key ++ external(r).asInstanceOf[Row].toSeq :+ (i + 1))
+        }
+    }
+    corpus.sparkSession.createDataFrame(rows.asJava, StructType(lead ++
+      scoredSchema.add(StructField("rank", IntegerType, nullable = false))))
   }
 
   /** [[withScores]] for driver-side rows: rows of `schema` followed by
@@ -305,8 +326,8 @@ final class MultiStageSearch(
 
   /** [[search]] as ONE declarative plan: the batch core
     * ([[gatedBatchCore]]) over a one-row query log. The query resolves
-    * on the driver ([[MultiStageSearch.resolveQuery]], the batch
-    * prelude's driver path); every pool row (the `knnBackend` pool, or
+    * on the driver ([[MultiStageSearch.resolveQuery]], as a
+    * request-sized batch resolves); every pool row (the `knnBackend` pool, or
     * the corpus) carries the query id, the resolved NER fields and
     * `queryVec` itself — a column of the pool, so a query vector that
     * is a corpus column works too — and the rerank text is read from
@@ -333,54 +354,49 @@ final class MultiStageSearch(
       }
   }
 
-  /** The gated cascade for a BATCH of queries, as ONE data-parallel
-    * plan — queries are rows, not driver round-trips. [[search]] scans
-    * the pool once per query (|Q| scans in |Q| jobs for a query log);
-    * this form scans the corpus TWICE TOTAL regardless of |Q|:
+  /** The gated cascade for a BATCH of queries: queries are rows, not
+    * driver round-trips, and per-query results are row-identical to
+    * [[search]] (CascadeBatchSpec pins the identity across all four
+    * query structures; c9 hash-checks the batch against per-query
+    * DuckDB replays). Two shapes, dispatched on the log's size with
+    * [[CascadeConfig.semanticDriverBatchMax]]:
     *
-    *  1. candidates: corpus ⨯ broadcast(queries) computes each pair's
-    *     distance ONCE, tags it with the stage slots whose predicate
-    *     it satisfies (slot masks are per-pair boolean expressions over
-    *     the query's terms, carried as columns), and feeds ONE
-    *     (qid, slot)-keyed bounded [[TopK]] aggregation — partial
-    *     k-heaps map-side, so the single shuffle carries ≤ k rows per
-    *     (partition × query × slot), never the corpus;
-    *  2. text fetch: the surviving ≤ Σk·|Q| candidate ids broadcast-
-    *     join back to the corpus for the rerank text.
+    *  - a REQUEST-SIZED log (the serving case) is read once on the
+    *    driver — its rows, count and width in one bounded read — and
+    *    answered in ONE pass ([[batchOnDriver]]): the corpus paired with
+    *    a broadcast local frame of the resolved queries feeds
+    *    [[TopK.slotTopK]] with the qid as group key, a bounded heap per
+    *    (query, stage slot) per partition; the gates, keep-first dedup
+    *    ([[MultiStageSearch.walk]]) and the rerank then run on the driver,
+    *    as in [[search]], and the result is a LocalRelation, so the
+    *    caller's collect starts no job. Two jobs per log: the broadcast
+    *    of the query frame and the pass.
+    *  - a larger (offline) log keeps the distributed core: NER/synonyms
+    *    resolve inside the cluster via `mapPartitions` ([[batchPrelude]]),
+    *    and [[gatedBatchCore]] ranks each (qid, slot)'s top-k in a
+    *    windowed plan over corpus ⨯ broadcast(queries), walks each qid's
+    *    lists in a UDF and fetches the rerank text by a broadcast join —
+    *    the driver never holds the texts. Over-budget logs are
+    *    auto-sliced first (`sliceDispatch`).
     *
-    * Each query's stage lists are gathered into one row per qid, and
-    * [[MultiStageSearch.walk]] — the walk [[search]] runs on the
-    * driver — applies the gates, keep-first dedup and stage numbering
-    * to them inside a UDF, |Q| times in one narrow map instead of |Q|
-    * driver plans. Per-query results are row-identical to [[search]]
-    * (CascadeBatchSpec pins the identity across all four query
-    * structures; c9 hash-checks the batch against per-query DuckDB
-    * replays).
+    * Vectors never go near the semantic boundary either way. Blank
+    * queries contribute zero rows (the F4 guard, batch-shaped).
+    * Integral ids are REQUIRED on both sides (the candidate entry is
+    * (double, long)) and enforced eagerly ([[Ann.requireIntegralId]]) —
+    * the internal non-ANSI long cast would null non-numeric ids and
+    * silently drop their rows; not available with a custom `knnBackend`
+    * — the batch plan IS the candidate source.
     *
-    * The semantic boundary is scale-dispatched (see [[batchPrelude]]):
-    * request-sized batches resolve NER/synonyms on the driver from the
-    * collected (qid, text) pairs (the reference's per-request shape);
-    * larger query logs resolve them inside the cluster via
-    * `mapPartitions` — the driver never holds the texts. Vectors never
-    * go near the boundary either way. Blank queries contribute zero
-    * rows (the F4 guard, batch-shaped). Integral ids are REQUIRED on
-    * both sides (the candidate entry is (double, long)) and enforced
-    * eagerly
-    * ([[Ann.requireIntegralId]]) — the internal non-ANSI long cast
-    * would null non-numeric ids and silently drop their rows; not
-    * available with a custom `knnBackend` — the batch plan IS the
-    * candidate source.
-    *
-    * The query source must be DETERMINISTIC across re-scans: an
-    * over-budget log is auto-sliced (see `sliceDispatch`), which
-    * re-scans `queries` for the size probe, the count, and once per
-    * slice rather than pinning a 10M-row vector-bearing frame whole. A
-    * source whose rows shift between scans — `sample()`, a `limit`
-    * over shuffled data, `rand()`-derived qids — can drop or duplicate
-    * queries across slices in ways the per-slice duplicate guard
-    * cannot see. Checkpoint such a source first (`localCheckpoint` or
-    * a parquet round-trip); files, tables, and deterministic
-    * transforms over them need nothing. */
+    * The query source must be DETERMINISTIC across re-scans: the size
+    * read and, past it, the distributed path and its auto-slicer
+    * (`sliceDispatch`) scan `queries` again for the size probe, the
+    * count, and once per slice rather than pinning a 10M-row
+    * vector-bearing frame whole. A source whose rows shift between
+    * scans — `sample()`, a `limit` over shuffled data, `rand()`-derived
+    * qids — can drop or duplicate queries across slices in ways the
+    * per-slice duplicate guard cannot see. Checkpoint such a source
+    * first (`localCheckpoint` or a parquet round-trip); files, tables,
+    * and deterministic transforms over them need nothing. */
   def searchGatedBatch(queries: DataFrame, qidCol: String,
                        qtextCol: String, qvecCol: String): DataFrame = {
     require(knnBackend.isEmpty,
@@ -396,26 +412,34 @@ final class MultiStageSearch(
           gatedBatchCore(qidCol, nerDf, maxSyn,
             corpus.crossJoin(broadcast(qframe)), corpus)
       }
-    sliceDispatch(queries, qidCol, qtextCol, qvecCol)(one)
+    driverLog(queries, qidCol, qtextCol, qvecCol).map(
+        batchOnDriver("searchGatedBatch", _, qidCol, None, 1))
+      .orElse(sliceDispatch(queries, qidCol, qtextCol, qvecCol)(one))
       .getOrElse(one(queries))
   }
 
   /** [[searchGatedBatch]] over a cluster-assigned (IVF) index — the
     * high-QPS serving shape: the exact batch's pair stream touches
     * |corpus|·|Q| rows, this one touches only the pairs whose corpus
-    * row lives in a cluster the query PROBES. Each query's probe list
-    * ([[Ann.probeCellsUdf]], the rule c5/c8 apply through
-    * [[Ann.probeList]]) is exploded into the broadcast query frame, one
-    * row per (query, cell); joining the index on cluster_id against it
-    * REPLACES the cross join, so each index row meets only the queries
-    * probing its cluster — the pair stream shrinks by ~nprobe/k and,
-    * over a stored partitioned index, the scan itself prunes to the
-    * union of probed clusters. Per-query
-    * results are row-identical to [[search]] with the equivalent
-    * served backend (CascadeBatchSpec pins it); the gate ladder,
-    * dedup, and rerank are [[gatedBatchCore]]'s, unchanged. Same
-    * deterministic-query-source requirement as [[searchGatedBatch]]
-    * (the auto-slicer re-scans the log; see that scaladoc). */
+    * row lives in a cluster the query PROBES (the rule c5/c8 apply
+    * through [[Ann.probeList]]), so the pair stream shrinks by ~nprobe/k
+    * and, over a stored partitioned index, the scan prunes to the union
+    * of probed clusters. Per-query results are row-identical to
+    * [[search]] with the equivalent served backend (CascadeBatchSpec
+    * pins it). Same two shapes as [[searchGatedBatch]]:
+    *
+    *  - a request-sized log is probed on the driver ([[Ann.probeCells]]
+    *    over [[Ann.collectCentroids]]) into a local (query, cell) frame,
+    *    broadcast against the index rows of the probed cells, and
+    *    answered in [[batchOnDriver]]'s one pass — three jobs per log:
+    *    the centroid collect, the broadcast and the pass;
+    *  - a larger log explodes each query's probe list
+    *    ([[Ann.probeCellsUdf]]) into the broadcast query frame, one row
+    *    per (query, cell), and runs [[gatedBatchCore]] over the index
+    *    joined on cluster_id against it.
+    *
+    * Same deterministic-query-source requirement as
+    * [[searchGatedBatch]] (see that scaladoc). */
   def searchGatedBatchServed(queries: DataFrame, qidCol: String,
                              qtextCol: String, qvecCol: String,
                              centroids: DataFrame, cidCol: String,
@@ -423,7 +447,7 @@ final class MultiStageSearch(
     require(knnBackend.isEmpty,
       "searchGatedBatchServed probes the cluster-assigned corpus itself " +
         "and cannot honor a custom knnBackend")
-    val cells = Ann.probeCellsUdf(Ann.Probe(centroids, cidCol, cvecCol, nprobe))
+    val probe = Ann.Probe(centroids, cidCol, cvecCol, nprobe)
     require(corpus.columns.contains("cluster_id"),
       "searchGatedBatchServed needs a cluster-assigned corpus " +
         "(cluster_id column, from Ann.ivfAssign*)")
@@ -431,6 +455,7 @@ final class MultiStageSearch(
       "corpus id")
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatchServed",
       "query id")
+    lazy val cells = Ann.probeCellsUdf(probe)
     def one(q: DataFrame): DataFrame =
       batchPrelude("searchGatedBatchServed", q, qidCol, qtextCol,
           qvecCol) match {
@@ -441,12 +466,104 @@ final class MultiStageSearch(
             corpus.join(broadcast(qprobe),
               col("cluster_id").cast("long") === col("__cid")), corpus)
       }
-    // the served form's broadcast frame is qprobe — |Q| · nprobe rows,
-    // not |Q| — so its slice budget divides by nprobe (the exact form
-    // broadcasts qframe itself and keeps the full budget)
-    sliceDispatch(queries, qidCol, qtextCol, qvecCol,
-        budgetDivisor = nprobe)(one)
+    // the served form's broadcast frame is |Q| · nprobe rows, not |Q|,
+    // so its slice budget divides by nprobe (the exact form broadcasts
+    // the query frame itself and keeps the full budget)
+    driverLog(queries, qidCol, qtextCol, qvecCol).map { log =>
+        lazy val cents = Ann.collectCentroids(centroids, cidCol, cvecCol)
+        batchOnDriver("searchGatedBatchServed", log, qidCol,
+          Some(Ann.probeCellsOf(cents, _, nprobe)), nprobe)
+      }
+      .orElse(sliceDispatch(queries, qidCol, qtextCol, qvecCol,
+        budgetDivisor = nprobe)(one))
       .getOrElse(one(queries))
+  }
+
+  /** The size dispatch of the batch forms: a log of at most
+    * `cfg.semanticDriverBatchMax` rows, read WHOLE on the driver by one
+    * bounded read of `semanticDriverBatchMax + 1` rows (the d6
+    * limit-probe idiom — the read that decides the path is the path's
+    * only read of the log) as (qid, text, vector) rows; None for a
+    * larger log, which the distributed path reads itself. */
+  private def driverLog(queries: DataFrame, qidCol: String,
+                        qtextCol: String, qvecCol: String): Option[Array[Row]] = {
+    // clamp to [0, MaxValue - 1]: the read fetches lim + 1 rows, and a
+    // caller pinning the driver path with Int.MaxValue must not
+    // overflow the limit into a negative
+    val lim = math.min(math.max(cfg.semanticDriverBatchMax, 0),
+      Int.MaxValue - 1)
+    val log = queries.select(col(qidCol).cast("long"),
+        col(qtextCol).cast("string"), col(qvecCol).cast("array<double>"))
+      .limit(lim + 1).collect()
+    Some(log).filter(_.length <= lim)
+  }
+
+  /** The batch cascade over a log already on the driver (`log`: (qid,
+    * text, vector) rows from [[driverLog]]) in ONE pass over the pool:
+    * the queries resolve on the driver ([[MultiStageSearch.resolveQuery]],
+    * blank ones drop out) into a local frame (qid, vector, NER fields,
+    * synonyms) — one row per query, or with `cells` one per (query,
+    * probed cell) — broadcast against the corpus (a cross join, or with
+    * `cells` a join on cluster_id over the probed cells only). Every
+    * pair's distance is computed once and [[TopK.slotTopK]], grouped by
+    * qid, keeps each (query, slot)'s top-k in Spark's (dist, id) order
+    * with the batch core's slot predicates; the driver then walks each
+    * query's lists ([[MultiStageSearch.walk]]) and reranks the kept rows
+    * ([[rerankLocal]]) into a LocalRelation with [[batchOutCols]]'
+    * schema. The driver holds at most partitions × |Q| × Σk candidate
+    * rows. A log over the broadcast budget (`budgetDivisor` as in
+    * `sliceDispatch`; the width measured from `log` itself) runs one
+    * pass per slice of its rows. An all-blank log runs no job. */
+  private def batchOnDriver(op: String, log: Array[Row], qidCol: String,
+                            cells: Option[Seq[java.lang.Double] => Array[Long]],
+                            budgetDivisor: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    require(log.map(_.getLong(0)).distinct.length == log.length,
+      s"$op: duplicate $qidCol values in the query batch")
+    val resolved = log.toSeq.flatMap(r => MultiStageSearch.resolveQuery(
+      queryNer, synonyms, profile, r.getLong(0), r.getString(1))
+      .map(_ -> r.getSeq[java.lang.Double](2)))
+    val maxSyn = resolved.map(_._1._5.length).maxOption.getOrElse(0)
+    // every slot any query of the batch can run, as (slot, k) in slot order
+    val slots = MultiStageSearch.ladder(job = true, region = true, maxSyn, cfg)
+      .flatMap(_._2).sortBy(_._1)
+    val preds = slotPredicates(col("__job"), col("__region"),
+      (0 until maxSyn).map(i => get(col("__syns"), lit(i)))) // null past the end
+    val qschema = StructType(Seq(StructField("__qid", LongType, nullable = false),
+      StructField("__qv", ArrayType(DoubleType)),
+      StructField("__job", StringType), StructField("__region", StringType),
+      StructField("__syns", ArrayType(StringType))) ++
+      cells.map(_ => StructField("__cid", LongType, nullable = false)))
+    val maxQ = broadcastQueryMaxFor(MultiStageSearch.logRowBytes(log), budgetDivisor)
+    val slices = if (resolved.length > maxQ) resolved.grouped(sliceSize(maxQ).toInt).toSeq
+      else Seq(resolved).filter(_.nonEmpty)
+    val walked = slices.flatMap { slice =>
+      val frame = slice.flatMap { case ((qid, job, region, _, syns), qv) =>
+        val row = Seq(qid, qv, job, region, syns)
+        cells.fold(Seq(Row.fromSeq(row)))(_(qv).toSeq.map(c => Row.fromSeq(row :+ c)))
+      }
+      val local = broadcast(spark.createDataFrame(frame.asJava, qschema))
+      val paired = cells.fold(corpus.crossJoin(local)) { _ =>
+        val cid = col("cluster_id").cast("long")
+        corpus.filter(cid.isin(frame.map(_.getLong(5)).distinct: _*))
+          .join(local, cid === col("__cid"))
+      }
+      val ranked = TopK.slotTopK(paired.select(col(idCol), col(textCol),
+          VectorFunctions.l2(col(embCol), col("__qv")).as("dist"), col("__qid"),
+          col("__job"), col("__region"), col("__syns")),
+        Seq("dist", idCol), slots.map { case (slot, k) => (Some(preds(slot)), k) },
+        Some("__qid"))
+      slice.map { case ((qid, job, region, age, syns), _) =>
+        val ladder = MultiStageSearch.ladder(job != null, region != null,
+          syns.length, cfg)
+        val kept = MultiStageSearch.walk(ladder, ranked(qid))(_.get(0)).map {
+          case (r, stage) => Row(r.get(0), r.get(1), r.get(2), stage)
+        }
+        (Seq(qid), kept, Seq(job, region, age))
+      }
+    }
+    rerankLocal(walked, keptSchema(corpus.schema),
+      Seq(StructField(qidCol, LongType, nullable = false)))
   }
 
   /** The 10M+-log escape hatch, automatic: a query log larger than the
@@ -492,11 +609,7 @@ final class MultiStageSearch(
     val over = queries.select(col(qidCol)).limit(maxQ + 1).count() > maxQ
     if (!over) return None
     val n = queries.count()
-    // 80% of the budget per slice, ROUNDED: floor would turn a tiny
-    // explicit override (maxQ=2, the c11 harness shape) into 1-query
-    // slices and double its deliberate slicing tax, while at derived
-    // scale (~millions) round vs floor is noise and the headroom holds
-    val target = math.max(1L, math.round(maxQ * 0.8))
+    val target = sliceSize(maxQ)
     val nSlices = math.min(Int.MaxValue.toLong,
       (n + target - 1) / target).toInt
     val parts = (0 until nSlices).map { j =>
@@ -506,6 +619,13 @@ final class MultiStageSearch(
     }
     Some(parts.reduce(_ unionByName _))
   }
+
+  /** Queries per slice for a budget of `maxQ`: 80% of it, ROUNDED —
+    * floor would turn a tiny explicit override (maxQ=2, the c11 harness
+    * shape) into 1-query slices and double its deliberate slicing tax,
+    * while at derived scale (~millions) round vs floor is noise and the
+    * headroom holds. */
+  private def sliceSize(maxQ: Int): Long = math.max(1L, math.round(maxQ * 0.8))
 
   /** The per-slice query budget, in ROWS. A positive
     * `cfg.broadcastQueryMax` wins verbatim (a deployment that knows
@@ -523,7 +643,14 @@ final class MultiStageSearch(
     * served form's broadcast is |Q| · nprobe probe rows, not |Q|. */
   private[graft] def resolvedBroadcastQueryMax(
       queries: DataFrame, qtextCol: String, qvecCol: String,
-      budgetDivisor: Int = 1): Int = {
+      budgetDivisor: Int = 1): Int =
+    broadcastQueryMaxFor(
+      MultiStageSearch.probedQueryRowBytes(queries, qtextCol, qvecCol),
+      budgetDivisor)
+
+  /** [[resolvedBroadcastQueryMax]] for a row width already known (read
+    * only when no positive override is set). */
+  private def broadcastQueryMaxFor(rowBytes: => Long, budgetDivisor: Int): Int = {
     val base: Long =
       if (cfg.broadcastQueryMax > 0) cfg.broadcastQueryMax.toLong
       else {
@@ -534,97 +661,65 @@ final class MultiStageSearch(
         // otherwise derive 2 GiB slices that still die at collect
         // (bare numbers are MiB, Spark's own rule for this key; 0 =
         // unlimited, heap-only budget)
-        val mrs = queries.sparkSession.sparkContext.getConf
+        val mrs = corpus.sparkSession.sparkContext.getConf
           .getSizeAsMb("spark.driver.maxResultSize", "1g") << 20
-        MultiStageSearch.broadcastBudgetRows(
-          MultiStageSearch.probedQueryRowBytes(queries, qtextCol, qvecCol),
+        MultiStageSearch.broadcastBudgetRows(rowBytes,
           Runtime.getRuntime.maxMemory, mrs)
       }
     math.max(1L, math.min(base / math.max(1, budgetDivisor),
       Int.MaxValue.toLong - 1)).toInt
   }
 
-  /** Shared batch prelude: the SEMANTIC boundary, scale-dispatched.
-    * Only (qid, text) ever feeds NER/synonym resolution (L2/L3 are
-    * external calls — vectors never go near them); HOW it runs depends
-    * on the batch size, limit-probed with `semanticDriverBatchMax + 1`
-    * rows (the d6 limit-probe idiom — a request-sized batch is
-    * collected WHOLE by the probe itself, so the dispatch costs
-    * nothing extra on the path it picks):
+  /** The distributed core's batch prelude, for logs over
+    * `semanticDriverBatchMax` (request-sized logs take
+    * [[batchOnDriver]]): the SEMANTIC boundary, resolved INSIDE the
+    * cluster via `mapPartitions` over the (qid, text) projection —
+    * SURVEY §2.7's prescribed batch shape. Only (qid, text) ever feeds
+    * NER/synonym resolution (L2/L3 are external calls — vectors never
+    * go near them). The duplicate-qid guard is a counts-only aggregate
+    * and the ner frame is localCheckpointed (it is read 3× downstream:
+    * isEmpty, syn-width, joins). The texts are never COLLECTED to the
+    * driver for resolution (the round-15 probe measured a driver path
+    * collapsing at 1M queries); the resolved compact frame IS still
+    * broadcast, because the core broadcasts the query side (the pair
+    * stream is corpus × broadcast(queries)) — so a SINGLE plan stays
+    * bounded by a broadcastable query frame. Logs beyond that bound
+    * need no manual knob: the public batch entry points auto-slice them
+    * BEFORE this prelude runs ([[sliceDispatch]],
+    * `cfg.broadcastQueryMax`), so every batch that reaches here is
+    * already within the broadcast budget.
     *
-    *  - request-sized (≤ `cfg.semanticDriverBatchMax`): resolved on
-    *    the driver, one call per query — the reference's per-request
-    *    shape, no Spark job;
-    *  - larger (an offline query log): resolved INSIDE the cluster via
-    *    `mapPartitions` over the (qid, text) projection — SURVEY
-    *    §2.7's prescribed batch shape — with the duplicate-qid guard
-    *    as a counts-only aggregate and the ner frame localCheckpointed
-    *    (it is read 3× downstream: isEmpty, syn-width, joins). The
-    *    texts are never COLLECTED to the driver for resolution (the
-    *    round-15 probe measured the driver path collapsing at 1M
-    *    queries); the resolved compact frame IS still broadcast,
-    *    because the whole batch design broadcasts the query side (the
-    *    pair stream is corpus × broadcast(queries)) — so a SINGLE
-    *    plan stays bounded by a broadcastable query frame. Logs
-    *    beyond that bound no longer need a manual knob: the public
-    *    batch entry points auto-slice them BEFORE this prelude runs
-    *    ([[MultiStageSearch.sliceDispatch]],
-    *    `cfg.broadcastQueryMax`), so every batch that reaches here
-    *    is already within the broadcast budget.
-    *
-    * Both paths produce the identical ner frame through the same
-    * [[MultiStageSearch.resolveQuery]] (CascadeBatchSpec pins
-    * driver == distributed on the full output). Returns the
-    * broadcastable ner frame, the batch's synonym-slot width, and the
-    * query frame (vectors stay distributed); Left(typed empty) when
-    * every query is blank. */
+    * The resolution is [[MultiStageSearch.resolveQuery]], the one the
+    * driver path runs (CascadeBatchSpec pins driver == distributed on
+    * the full output). Returns the broadcastable ner frame, the batch's
+    * synonym-slot width, and the query frame (vectors stay
+    * distributed); Left(typed empty) when every query is blank. */
   private def batchPrelude(op: String, queries: DataFrame, qidCol: String,
                            qtextCol: String, qvecCol: String)
       : Either[DataFrame, (DataFrame, Int, DataFrame)] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    def typedEmpty = Left(emptyResponse.crossJoin(
-        spark.range(0).select(col("id").as("__qid")))
-      .select(batchOutCols(qidCol): _*))
-    // clamp to [0, MaxValue - 1]: the probe fetches lim + 1 rows, and
-    // a caller pinning the driver path with Int.MaxValue must not
-    // overflow the limit into a negative
-    val lim = math.min(math.max(cfg.semanticDriverBatchMax, 0),
-      Int.MaxValue - 1)
-    val probe = queries
+    val dups = queries.groupBy(col(qidCol)).count()
+      .filter(col("count") > 1).limit(1).count()
+    require(dups == 0,
+      s"$op: duplicate $qidCol values in the query batch")
+    // locals only — the task closure must not capture `this`
+    // (MultiStageSearch holds DataFrames)
+    val (qn, syn, prof) = (queryNer, synonyms, profile)
+    val ner = queries
       .select(col(qidCol).cast("long"), col(qtextCol).cast("string"))
-      .limit(lim + 1).collect()
-    val (nerSrc, maxSyn): (DataFrame, Int) =
-      if (probe.length <= lim) {
-        val qmeta = probe.toSeq.map(r => (r.getLong(0), r.getString(1)))
-        require(qmeta.map(_._1).distinct.length == qmeta.length,
-          s"$op: duplicate $qidCol values in the query batch")
-        val resolved = qmeta.flatMap { case (qid, t) =>
-          MultiStageSearch.resolveQuery(queryNer, synonyms, profile, qid, t)
-        }
-        if (resolved.isEmpty) return typedEmpty
-        (resolved.toDF("__qid", "__job", "__region", "__age", "__syns"),
-          resolved.map(_._5.length).max)
-      } else {
-        val dups = queries.groupBy(col(qidCol)).count()
-          .filter(col("count") > 1).limit(1).count()
-        require(dups == 0,
-          s"$op: duplicate $qidCol values in the query batch")
-        // locals only — the task closure must not capture `this`
-        // (MultiStageSearch holds DataFrames)
-        val (qn, syn, prof) = (queryNer, synonyms, profile)
-        val ner = queries
-          .select(col(qidCol).cast("long"), col(qtextCol).cast("string"))
-          .as[(Long, String)]
-          .mapPartitions(_.flatMap { case (qid, t) =>
-            MultiStageSearch.resolveQuery(qn, syn, prof, qid, t)
-          })
-          .toDF("__qid", "__job", "__region", "__age", "__syns")
-          .localCheckpoint(true)
-        if (ner.isEmpty) return typedEmpty
-        (ner, ner.agg(max(size(col("__syns")))).collect()(0).getInt(0))
-      }
-    val nerDf = broadcast(nerSrc)
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (qid, t) =>
+        MultiStageSearch.resolveQuery(qn, syn, prof, qid, t)
+      })
+      .toDF("__qid", "__job", "__region", "__age", "__syns")
+      .localCheckpoint(true)
+    if (ner.isEmpty)
+      return Left(emptyResponse.crossJoin(
+          spark.range(0).select(col("id").as("__qid")))
+        .select(batchOutCols(qidCol): _*))
+    val maxSyn = ner.agg(max(size(col("__syns")))).collect()(0).getInt(0)
+    val nerDf = broadcast(ner)
     val qframe = queries
       .select(col(qidCol).cast("long").as("__qid"),
         col(qvecCol).cast("array<double>").as("__qv"))
@@ -641,10 +736,11 @@ final class MultiStageSearch(
     * (corpus row × query) pair stream: slot masks → windowed top-k per
     * (qid, slot) → one row per qid → [[MultiStageSearch.walk]] (gates,
     * keep-first dedup, stage numbering) → text fetch from `texts` →
-    * [[withScores]] rerank. Shared verbatim by the exact batch, the
-    * served batch and [[searchGated]] (a one-row log over its pool) —
-    * only the pair stream and the text source differ, which is exactly
-    * the backend-independence the identity gates pin. */
+    * [[withScores]] rerank. Shared verbatim by the exact batch and the
+    * served batch over logs too large for [[batchOnDriver]], and by
+    * [[searchGated]] (a one-row log over its pool) — only the pair
+    * stream and the text source differ, which is exactly the
+    * backend-independence the identity gates pin. */
   private def gatedBatchCore(qidCol: String, nerDf: DataFrame, maxSyn: Int,
                              paired: DataFrame, texts: DataFrame): DataFrame = {
     val slots = slotPredicates(col("__job"), col("__region"),
@@ -737,8 +833,8 @@ final class MultiStageSearch(
     val filtered = poolRows.filter(keep)
     val kept = if (filtered.length >= cfg.relaxThreshold) filtered else poolRows
 
-    rerankLocal(kept.toSeq.map(r => Row.fromSeq(r.toSeq :+ 1)),
-      pool.schema.add(StructField("stage_rank", IntegerType, nullable = false)), ner)
+    rerankLocal(Seq((Nil, kept.toSeq.map(r => Row.fromSeq(r.toSeq :+ 1)), nerValues(ner))),
+      pool.schema.add(StructField("stage_rank", IntegerType, nullable = false)), Nil)
   }
 
   /** [[searchRemind]] WITH its adaptive gate, as one declarative plan.
@@ -831,9 +927,10 @@ object MultiStageSearch {
 
   /** One query's semantic resolution — the F4 blank guard, L2 NER +
     * profile coalesce, L3 synonyms — as a pure function of the
-    * (serializable) semantic doubles, shared verbatim by the batch
-    * prelude's driver-collect and `mapPartitions` paths so the two are
-    * identical by construction. None = blank query (contributes no
+    * (serializable) semantic doubles, shared verbatim by the driver-side
+    * batch ([[batchOnDriver]], [[searchGated]]) and the distributed
+    * prelude's `mapPartitions` so the two are identical by
+    * construction. None = blank query (contributes no
     * row, the batch-shaped F4 guard). */
   private[operators] def resolveQuery(qn: RuleQueryNer, syn: DictSynonyms,
       prof: UserProfile, qid: Long, t: String)
@@ -862,8 +959,9 @@ object MultiStageSearch {
     * over-broadcast. Rows with a null vector are skipped (same
     * under-report hazard); an all-null or empty log measures overhead
     * only — correct, those rows broadcast no vector bytes. One probe
-    * per batch dispatch, paid on the in-budget path too — a 32-row
-    * scan is noise next to the prelude's own limit-probe. */
+    * per distributed batch dispatch, paid on the in-budget path too — a
+    * 32-row scan is noise next to the log's size read. A log already on
+    * the driver is measured from its rows instead ([[logRowBytes]]). */
   private[graft] def probedQueryRowBytes(queries: DataFrame,
       qtextCol: String, qvecCol: String): Long = {
     val probe = queries
@@ -877,8 +975,24 @@ object MultiStageSearch {
       .collect()
     val (dims, chars) =
       if (probe.isEmpty) (0, 0) else (probe(0).getInt(0), probe(0).getInt(1))
-    8L * dims + 2L * chars + QueryRowOverheadBytes
+    queryRowBytes(dims, chars)
   }
+
+  /** [[probedQueryRowBytes]]'s width over a log already on the driver
+    * ((qid, text, vector) rows): every row with a vector is measured,
+    * not a 32-row sample. */
+  private def logRowBytes(log: Seq[Row]): Long = {
+    val withVec = log.filter(!_.isNullAt(2))
+    val dims = withVec.map(_.getSeq[Any](2).length).maxOption.getOrElse(0)
+    val chars = withVec.map(r => Option(r.getString(1))
+      .fold(0)(t => t.codePointCount(0, t.length))).maxOption.getOrElse(0)
+    queryRowBytes(dims, chars)
+  }
+
+  /** A query row's broadcast width for `dims` vector components and
+    * `chars` text characters. */
+  private def queryRowBytes(dims: Int, chars: Int): Long =
+    8L * dims + 2L * chars + QueryRowOverheadBytes
 
   /** (heap, maxResultSize) → per-slice query-row budget: the LESSER of
     * 1/16 of the heap (the round-16-validated ratio — at ~1 KiB rows

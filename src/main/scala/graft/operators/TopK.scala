@@ -2,11 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{col, udaf}
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Bounded top-k aggregation (SURVEY.md §2.5 V2 batch kNN, 100 TB
   * shape).
@@ -24,9 +25,11 @@ import org.apache.spark.sql.types.StructType
   * exactly this — ObjectHashAggregate keeps the buffer as a live
   * object within a partition and serializes only at the exchange.
   *
-  * For a result the DRIVER consumes (the per-request cascade), there
-  * is no exchange to feed: [[slotTopK]] ranks several filtered top-k
-  * lists in one scan and merges their partition heaps on the driver,
+  * For a result the DRIVER consumes (the per-request cascade, and a
+  * request-sized batch of them), there is no exchange to feed:
+  * [[slotTopK]] ranks several filtered top-k lists — per query, given
+  * a group column — in one scan and merges their partition heaps on
+  * the driver,
   * and [[sparkOrdering]] orders driver-side rows exactly as Spark would.
   */
 object TopK {
@@ -86,16 +89,22 @@ object TopK {
     * is false, as in `filter`). A row whose `by.head` is null is no
     * candidate of any slot — the [[Knn.exactDefined]] contract, since
     * ascending NULLS FIRST would rank it first and eat the slot's k.
+    * With a `group` column the slots are ranked per value of it: one
+    * heap per (group, slot), so a batch of queries paired with their
+    * pool rows ranks every (query, slot) top-k in the same pass.
     *
-    * Each partition keeps one bounded heap per slot and the driver
-    * merges them: `TakeOrderedAndProjectExec.executeCollect`
-    * generalized to slots, so the driver receives at most
-    * partitions × Σk rows, and a row in several heaps is serialized
-    * once. It runs as ONE job with one stage, inside a SQL execution, so
+    * Each partition keeps one bounded heap per (group, slot) and the
+    * driver merges them: `TakeOrderedAndProjectExec.executeCollect`
+    * generalized to slots, so the driver receives at most partitions ×
+    * groups × Σk rows, and a row in several heaps is serialized once.
+    * It runs as ONE job with one stage, inside a SQL execution, so
     * listeners see its plan and planning phases like any Dataset
-    * action. Returns each slot's rows in order, with `rows`'s columns. */
+    * action. Returns each group's slot lists (rows in order, with
+    * `rows`'s columns), keyed by the group value — `()` without a group
+    * column; a group with no candidate reads empty lists. */
   private[operators] def slotTopK(rows: DataFrame, by: Seq[String],
-      slots: Seq[(Option[Column], Int)]): IndexedSeq[Seq[Row]] = {
+      slots: Seq[(Option[Column], Int)], group: Option[String] = None)
+      : Map[Any, IndexedSeq[Seq[Row]]] = {
     val width = rows.schema.length
     val preds = slots.flatMap(_._1)
     val df = rows.select(col("*") +:
@@ -106,17 +115,35 @@ object TopK {
     val ks = slots.map(_._2).toArray
     val ord = sparkOrdering(df.schema, by.map(_ -> true))
     val lead = df.schema.fieldIndex(by.head)
+    val key = group.map { g => val i = df.schema.fieldIndex(g); (i, df.schema(i).dataType) }
     val qe = df.queryExecution
     val parts = SQLExecution.withNewExecutionId(qe, Some("slotTopK")) {
       qe.toRdd.mapPartitions { it =>
-        val heaps = ks.map(_ => new java.util.PriorityQueue[InternalRow](ord.reverse))
+        def newHeaps = ks.map(_ => new java.util.PriorityQueue[InternalRow](ord.reverse))
+        val heaps = new java.util.HashMap[UnsafeRow, Array[java.util.PriorityQueue[InternalRow]]]()
+        val heapsOf: InternalRow => Array[java.util.PriorityQueue[InternalRow]] =
+          key match {
+            case None =>
+              val one = newHeaps
+              heaps.put(UnsafeRow.createFromByteArray(0, 0), one)
+              _ => one
+            case Some((i, dt)) =>
+              val proj = UnsafeProjection.create(Seq(BoundReference(i, dt, nullable = true)))
+              r => {
+                val k = proj(r)
+                var hs = heaps.get(k)
+                if (hs == null) { hs = newHeaps; heaps.put(k.copy(), hs) }
+                hs
+              }
+          }
         it.foreach { r =>
           if (!r.isNullAt(lead)) {
+            val hs = heapsOf(r)
             var kept: InternalRow = null
             var s = 0
             while (s < ks.length) {
               val m = maskAt(s)
-              val h = heaps(s)
+              val h = hs(s)
               if (ks(s) > 0 && (m < 0 || (!r.isNullAt(m) && r.getBoolean(m))) &&
                   (h.size < ks(s) || ord.compare(r, h.peek) < 0)) {
                 if (kept == null) kept = r.copy()
@@ -127,13 +154,22 @@ object TopK {
             }
           }
         }
-        Iterator.single(heaps.map(_.toArray(Array.empty[InternalRow])))
+        Iterator.single(heaps.asScala.toArray.map { case (k, hs) =>
+          k -> hs.map(_.toArray(Array.empty[InternalRow]))
+        })
       }.collect()
     }
     val external = CatalystTypeConverters.createToScalaConverter(df.schema)
-    ks.indices.map { s =>
-      parts.flatMap(_(s)).sorted(ord).take(ks(s)).toSeq.map(r =>
-        Row.fromSeq(external(r).asInstanceOf[Row].toSeq.take(width)))
+    val keyValue = key.map { case (_, dt) =>
+      val c = CatalystTypeConverters.createToScalaConverter(dt)
+      (k: UnsafeRow) => c(k.get(0, dt))
     }
+    val merged = parts.flatten.groupBy(_._1).map { case (k, hs) =>
+      keyValue.fold[Any](())(_(k)) -> ks.indices.map { s =>
+        hs.flatMap(_._2(s)).sorted(ord).take(ks(s)).toSeq.map(r =>
+          Row.fromSeq(external(r).asInstanceOf[Row].toSeq.take(width)))
+      }
+    }
+    merged.withDefaultValue(ks.indices.map(_ => Nil))
   }
 }

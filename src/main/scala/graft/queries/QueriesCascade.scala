@@ -625,12 +625,14 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
         JOIN ${p}probe pr ON cl.cluster_id = pr.cluster_id CROSS JOIN ${p}q q)""")
 
   private val c9 = QuerySpec("c9_cascade_batch_gated",
-    // The flagship's gate ladder for a BATCH of queries as ONE
-    // data-parallel plan (searchGatedBatch): queries are rows — the
-    // corpus is scanned twice TOTAL (slot-tagged distances into one
-    // (qid, slot)-keyed bounded-TopK aggregation, then the text fetch)
-    // instead of 7 stage scans per query, and the whole gate algebra
-    // runs per qid as array expressions. The batch holds one query of
+    // The flagship's gate ladder for a BATCH of queries
+    // (searchGatedBatch): queries are rows, and this request-sized log
+    // is answered in ONE pass over the corpus — every (query, stage
+    // slot) top-k ranked in one job, grouped by qid — after which the
+    // shared ladder walk (gates, keep-first dedup, ran-only stage
+    // numbering) and the rerank run per qid on the driver. Logs over
+    // semanticDriverBatchMax take the distributed core (windowed
+    // per-(qid, slot) top-k, the walk in a UDF). The batch holds one query of
     // EVERY structure (full/region-only/job-only/no-terms), so the
     // oracle — per-query gated blocks UNION ALL'd — hash-checks every
     // slot-mask shape, the per-structure gate ladders, and the
@@ -654,9 +656,9 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
 
   private val c11 = QuerySpec("c11_cascade_batch_sliced",
     // c9's batch THROUGH the round-16 auto-slicer: broadcastQueryMax=2
-    // forces the 4-query batch into 2 hash-slice plans served
-    // sequentially, with each slice resolving only its own queries and
-    // the bounded results unioned. The oracle is c9's VERBATIM —
+    // forces the 4-query batch into 2 slices served sequentially — on
+    // the one-pass path, slices of the rows already read on the driver,
+    // one pass each — with the bounded results unioned. The oracle is c9's VERBATIM —
     // slicing must be invisible in the result — so the slicing
     // mechanism itself is DuckDB hash-checked at the harness level
     // (CascadeBatchSpec pins sliced == single-plan in-suite; the
@@ -681,11 +683,11 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
 
   private val c10 = QuerySpec("c10_cascade_batch_served_gated",
     // The batch cascade over the trained stored IVF index
-    // (searchGatedBatchServed) — c9's data-parallel gate ladder where
-    // the pair stream is pruned by a per-query (qid, cluster_id) probe
-    // map instead of crossing the whole corpus: the high-QPS serving
-    // shape end-to-end (one plan, |Q| queries, each index row meeting
-    // only the queries that probe its cluster). The oracle replays the
+    // (searchGatedBatchServed) — c9's one-pass gate ladder where the
+    // pair stream is pruned by a per-query (qid, cluster_id) probe map
+    // instead of crossing the whole corpus: the high-QPS serving shape
+    // end-to-end (one pass over the probed cells, |Q| queries, each
+    // index row meeting only the queries that probe its cluster). The oracle replays the
     // trained-centroid assignment ONCE (shared CTEs) and, per query,
     // the nprobe=8 probe rule + the gated block for that query's
     // structure — the c8 serving algebra × the c9 batch algebra in one

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 /** The flagship cascade as a STREAMING service — the Spark-first
   * replacement for the reference's per-request REST loop: queries
   * arrive as a stream `(qid, qtext, qvec)`, each micro-batch is served
-  * in ONE plan by [[MultiStageSearch.searchGatedBatchServed]] against
+  * by ONE [[MultiStageSearch.searchGatedBatchServed]] call against
   * the newest COMMITTED index version, and results land
   * batch-partitioned so at-least-once replay is idempotent.
   *
@@ -32,10 +32,12 @@ import org.apache.spark.sql.DataFrame
   *    path) cannot happen: the pair is read from the same committed
   *    directory.
   *  - **Throughput.** The whole micro-batch is one
-  *    [[MultiStageSearch.searchGatedBatchServed]] plan — the per-query
-  *    fixed cost (7 stage plans + gate actions) is paid once per
-  *    BATCH, and the pair stream is probe-pruned to each query's
-  *    nprobe clusters (the round-14 batch-cascade measurements).
+  *    [[MultiStageSearch.searchGatedBatchServed]] call — a
+  *    request-sized batch is one pass over the probed cells that ranks
+  *    every (query, stage) top-k, with the gates and rerank on the
+  *    driver (three jobs per batch: centroids, query broadcast, pass),
+  *    so the per-query fixed cost is paid once per BATCH, and the pair
+  *    stream is probe-pruned to each query's nprobe clusters.
   *  - **Replay.** foreachBatch delivers at-least-once after recovery.
   *    Results are written `mode=overwrite` into a `batch=<id>`
   *    directory, so a replayed batch REPLACES its own output instead

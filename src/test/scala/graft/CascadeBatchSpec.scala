@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{CascadeConfig, MultiStageSearch}
+import graft.operators.{Ann, CascadeConfig, MultiStageSearch}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Batch cascade == per-query search, row for row, across every
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * is `search`, the request ladder: `searchGated` is the batch core
   * itself on a one-row log, so the identity tests named after it
   * compare the two ladders that serve traffic. */
-class CascadeBatchSpec extends SparkSpec {
+class CascadeBatchSpec extends SparkSpec with JobCount {
   import spark.implicits._
 
   // Varied corpus: term-dense docs near the origin, term-sparse far
@@ -214,6 +215,73 @@ class CascadeBatchSpec extends SparkSpec {
     val allBlank = Seq((1L, "", Seq(0.0, 0.0)), (2L, "   ", Seq(0.0, 0.0)))
       .toDF("qid", "qtext", "qvec")
     assert(search0.searchGatedBatch(allBlank, "qid", "qtext", "qvec").isEmpty)
+    // every column and the schema too: the one-pass driver tail (the
+    // default) against the distributed core (semanticDriverBatchMax = 0)
+    def full(df: DataFrame) = (df.schema.map(f => (f.name, f.dataType)),
+      df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(8))))
+    def both(cfg: CascadeConfig) = Seq(
+      new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
+        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec"),
+      new MultiStageSearch(assigned, "doc_id", "text", "embedding", cfg)
+        .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec",
+          cents, "cid", "cvec", nprobe = 2)).map(full)
+    assert(both(CascadeConfig()) == both(CascadeConfig(semanticDriverBatchMax = 0)))
+    // ties: two docs of identical text and embedding (ids 7 and 3) tie
+    // on dist at every stage's k cut and on (score, dist) at the finalN
+    // cut; both paths break them by id, in both batch forms
+    val near = "join job in the row district"
+    val tied = Seq((7L, near, Seq(1.0, 0.0)), (3L, near, Seq(1.0, 0.0)),
+      (9L, "unrelated document entirely", Seq(9.0, 9.0)))
+      .toDF("doc_id", "text", "embedding")
+    val tiedCents = Seq((0L, Array(1.0, 0.0)), (1L, Array(9.0, 9.0)))
+      .toDF("cid", "cvec")
+    val tiedAssigned = Ann.ivfAssign(tied, "embedding", "doc_id",
+      tiedCents, "cid", "cvec")
+    val tq = Seq((1L, "join row", Seq(0.0, 0.0)),
+      (2L, "nothing relevant here", Seq(1.0, 0.0))).toDF("qid", "qtext", "qvec")
+    for ((k, n) <- Seq((1, 1), (2, 1), (2, 2))) {
+      def forms(max: Int) = {
+        val cfg = CascadeConfig(topK = k, fallbackK = k, finalN = n,
+          semanticDriverBatchMax = max)
+        Seq(new MultiStageSearch(tied, "doc_id", "text", "embedding", cfg)
+            .searchGatedBatch(tq, "qid", "qtext", "qvec"),
+          new MultiStageSearch(tiedAssigned, "doc_id", "text", "embedding", cfg)
+            .searchGatedBatchServed(tq, "qid", "qtext", "qvec",
+              tiedCents, "cid", "cvec", nprobe = 1)).map(full)
+      }
+      val onePass = forms(CascadeConfig().semanticDriverBatchMax)
+      assert(onePass == forms(0), s"k=$k n=$n")
+      onePass.foreach { case (_, rows) =>
+        assert(rows.filter(_.getLong(0) == 1L).map(_.getLong(1)) ==
+          Seq(3L, 7L).take(math.min(k, n)), s"k=$k n=$n")
+      }
+    }
+  }
+
+  test("a request-sized log is one pass: served ≤ 3 jobs, exact ≤ 2, the result is local") {
+    val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
+      (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
+    val assigned = Ann.ivfAssign(corpus, "embedding", "doc_id", cents, "cid", "cvec")
+    val exact = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
+    val served = new MultiStageSearch(assigned, "doc_id", "text", "embedding")
+    def runServed(q: DataFrame) =
+      served.searchGatedBatchServed(q, "qid", "qtext", "qvec", cents, "cid", "cvec", 2)
+    def runExact(q: DataFrame) = exact.searchGatedBatch(q, "qid", "qtext", "qvec")
+    SessionHygiene.dropCachedBlocks(spark)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    for ((name, form, budget) <- Seq[(String, DataFrame => DataFrame, Int)](
+        ("searchGatedBatchServed", runServed, 3), ("searchGatedBatch", runExact, 2))) {
+      val ((df, rows), jobs) = jobsOf { val df = form(queriesDf); (df, df.collect()) }
+      assert(rows.nonEmpty, name)
+      assert(jobs <= budget, s"$name started $jobs jobs")
+      val (again, againJobs) = jobsOf(df.collect())
+      assert(againJobs == 0 && again.toSeq == rows.toSeq, s"$name re-collect: $againJobs jobs")
+      val allBlank = Seq((1L, "", Seq(0.0, 0.0)), (2L, "   ", Seq(0.0, 0.0)))
+        .toDF("qid", "qtext", "qvec")
+      val (blank, blankJobs) = jobsOf(form(allBlank).collect())
+      assert(blank.isEmpty && blankJobs == 0, s"$name all-blank log: $blankJobs jobs")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("an over-budget query log is auto-sliced; rows identical to the single-plan form") {
@@ -251,6 +319,11 @@ class CascadeBatchSpec extends SparkSpec {
     val servedOne = runServed(base)
     assert(servedOne.nonEmpty &&
       runServed(base.copy(broadcastQueryMax = 2)) == servedOne)
+    // a log over semanticDriverBatchMax is sliced by the distributed
+    // core's dispatcher (hash slices, one plan each): same rows
+    val distributed = base.copy(broadcastQueryMax = 2, semanticDriverBatchMax = 0)
+    assert(run(distributed) == one)
+    assert(runServed(distributed) == servedOne)
     // duplicate qids hash to the SAME slice, so the per-slice prelude
     // guard still refuses them on the sliced path
     val dup = Seq((1L, "join row", Seq(0.0, 0.0)),
@@ -262,6 +335,12 @@ class CascadeBatchSpec extends SparkSpec {
         .searchGatedBatch(dup, "qid", "qtext", "qvec")
     }
     assert(e.getMessage.contains("duplicate"))
+    val eDist = intercept[IllegalArgumentException] {
+      new MultiStageSearch(corpus, "doc_id", "text", "embedding",
+          base.copy(broadcastQueryMax = 1, semanticDriverBatchMax = 0))
+        .searchGatedBatch(dup, "qid", "qtext", "qvec")
+    }
+    assert(eDist.getMessage.contains("duplicate"))
   }
 
   test("the auto-slice budget is WIDTH-AWARE: derived from the log's measured row bytes, not a flat rows-per-GiB") {
