@@ -17,14 +17,18 @@ import scala.jdk.CollectionConverters._
   * reference's per-request shape — one external call per query) and
   * take the one-pass driver tail: one job ranks every (query, stage)
   * top-k, and the gates, dedup and rerank run on the driver, which
-  * holds at most partitions × |Q| × Σk candidate rows (Σk over the
-  * stage slots). Larger logs resolve them inside the cluster via
+  * receives at most partitions × |Q| × Σk candidate rows (Σk over the
+  * stage slots), each with its doc text. That path is taken only while
+  * those rows, measured in the pass, fit the driver budget (the lesser
+  * of 1/16 of the heap and half of `spark.driver.maxResultSize`, each
+  * partition its share). Larger logs, and logs whose candidates
+  * overflow the budget, resolve NER/synonyms inside the cluster via
   * `mapPartitions` (SURVEY §2.7's batch shape) and run the distributed
   * core, so an offline log never funnels its texts or candidates
   * through the driver. 0 forces the distributed path. Both paths are
   * row-identical (CascadeBatchSpec pins it).
   *
-  * `broadcastQueryMax`: the batch cascades BROADCAST the resolved
+  * `broadcastQueryMax`: the distributed core BROADCASTS the resolved
   * query frame (the pair stream is corpus × broadcast(queries)), which
   * bounds a single plan at a broadcastable query side. Logs larger
   * than this are hash-sliced by qid and served as SEQUENTIAL per-slice
@@ -38,7 +42,8 @@ import scala.jdk.CollectionConverters._
   * constant would admit ~8× the budget and abort the broadcast at
   * `maxResultSize`. Positive values override (rows, taken verbatim);
   * the slices are hash-sized in expectation, not exactly, so the
-  * slicer targets 80% of the budget per slice as skew headroom. */
+  * slicer targets 80% of the budget per slice as skew headroom. The
+  * one-pass path does not slice: its log is already on the driver. */
 final case class CascadeConfig(
     topK: Int = 10,
     relaxThreshold: Int = 5,
@@ -198,7 +203,7 @@ final class MultiStageSearch(
       .select(col(idCol), col(textCol),
         VectorFunctions.l2(col(embCol), queryVec).as("dist"))
     val ranked = stages.map(_._1).zip(TopK.slotTopK(pool, Seq("dist", idCol),
-      stages.map { case (slot, k) => (Some(preds(slot)), k) })(())).toMap
+      stages.map { case (slot, k) => (Some(preds(slot)), k) }).get(())).toMap
     val kept = MultiStageSearch.walk(ladder, ranked)(_.get(0)).map {
       case (r, stage) => Row(r.get(0), r.get(1), r.get(2), stage)
     }
@@ -359,18 +364,21 @@ final class MultiStageSearch(
     * [[search]] (CascadeBatchSpec pins the identity across all four
     * query structures; c9 hash-checks the batch against per-query
     * DuckDB replays). Two shapes, dispatched on the log's size with
-    * [[CascadeConfig.semanticDriverBatchMax]]:
+    * [[CascadeConfig.semanticDriverBatchMax]] and on the one pass's
+    * candidate bytes against the driver budget:
     *
     *  - a REQUEST-SIZED log (the serving case) is read once on the
-    *    driver — its rows, count and width in one bounded read — and
-    *    answered in ONE pass ([[batchOnDriver]]): the corpus paired with
+    *    driver — its rows and count in one bounded read — and answered
+    *    in ONE pass ([[batchOnDriver]]): the corpus paired with
     *    a broadcast local frame of the resolved queries feeds
     *    [[TopK.slotTopK]] with the qid as group key, a bounded heap per
     *    (query, stage slot) per partition; the gates, keep-first dedup
     *    ([[MultiStageSearch.walk]]) and the rerank then run on the driver,
     *    as in [[search]], and the result is a LocalRelation, so the
     *    caller's collect starts no job. Two jobs per log: the broadcast
-    *    of the query frame and the pass.
+    *    of the query frame and the pass. When the candidates the pass
+    *    would send the driver overflow its budget, the pass stops early
+    *    and the log takes the distributed core instead;
     *  - a larger (offline) log keeps the distributed core: NER/synonyms
     *    resolve inside the cluster via `mapPartitions` ([[batchPrelude]]),
     *    and [[gatedBatchCore]] ranks each (qid, slot)'s top-k in a
@@ -398,7 +406,15 @@ final class MultiStageSearch(
     * first (`localCheckpoint` or a parquet round-trip); files, tables,
     * and deterministic transforms over them need nothing. */
   def searchGatedBatch(queries: DataFrame, qidCol: String,
-                       qtextCol: String, qvecCol: String): DataFrame = {
+                       qtextCol: String, qvecCol: String): DataFrame =
+    searchGatedBatch(queries, qidCol, qtextCol, qvecCol, driverBudgetBytes)
+
+  /** [[searchGatedBatch]] with the one-pass path's driver budget
+    * (`driverBytes`, see [[batchOnDriver]]) given rather than derived
+    * from the heap and `maxResultSize`, so a spec can put a log on
+    * either side of it. */
+  private[graft] def searchGatedBatch(queries: DataFrame, qidCol: String,
+      qtextCol: String, qvecCol: String, driverBytes: Long): DataFrame = {
     require(knnBackend.isEmpty,
       "searchGatedBatch builds its own batched candidate plan and cannot " +
         "honor a custom knnBackend — use per-query search for served " +
@@ -412,8 +428,8 @@ final class MultiStageSearch(
           gatedBatchCore(qidCol, nerDf, maxSyn,
             corpus.crossJoin(broadcast(qframe)), corpus)
       }
-    driverLog(queries, qidCol, qtextCol, qvecCol).map(
-        batchOnDriver("searchGatedBatch", _, qidCol, None, 1))
+    driverLog(queries, qidCol, qtextCol, qvecCol).flatMap(
+        batchOnDriver("searchGatedBatch", _, qidCol, None, driverBytes))
       .orElse(sliceDispatch(queries, qidCol, qtextCol, qvecCol)(one))
       .getOrElse(one(queries))
   }
@@ -443,7 +459,16 @@ final class MultiStageSearch(
   def searchGatedBatchServed(queries: DataFrame, qidCol: String,
                              qtextCol: String, qvecCol: String,
                              centroids: DataFrame, cidCol: String,
-                             cvecCol: String, nprobe: Int): DataFrame = {
+                             cvecCol: String, nprobe: Int): DataFrame =
+    searchGatedBatchServed(queries, qidCol, qtextCol, qvecCol, centroids,
+      cidCol, cvecCol, nprobe, driverBudgetBytes)
+
+  /** [[searchGatedBatchServed]] with the one-pass path's driver budget
+    * given, as the budgeted [[searchGatedBatch]]. */
+  private[graft] def searchGatedBatchServed(queries: DataFrame,
+      qidCol: String, qtextCol: String, qvecCol: String,
+      centroids: DataFrame, cidCol: String, cvecCol: String, nprobe: Int,
+      driverBytes: Long): DataFrame = {
     require(knnBackend.isEmpty,
       "searchGatedBatchServed probes the cluster-assigned corpus itself " +
         "and cannot honor a custom knnBackend")
@@ -469,10 +494,10 @@ final class MultiStageSearch(
     // the served form's broadcast frame is |Q| · nprobe rows, not |Q|,
     // so its slice budget divides by nprobe (the exact form broadcasts
     // the query frame itself and keeps the full budget)
-    driverLog(queries, qidCol, qtextCol, qvecCol).map { log =>
+    driverLog(queries, qidCol, qtextCol, qvecCol).flatMap { log =>
         lazy val cents = Ann.collectCentroids(centroids, cidCol, cvecCol)
         batchOnDriver("searchGatedBatchServed", log, qidCol,
-          Some(Ann.probeCellsOf(cents, _, nprobe)), nprobe)
+          Some(Ann.probeCellsOf(cents, _, nprobe)), driverBytes)
       }
       .orElse(sliceDispatch(queries, qidCol, qtextCol, qvecCol,
         budgetDivisor = nprobe)(one))
@@ -510,20 +535,25 @@ final class MultiStageSearch(
     * with the batch core's slot predicates; the driver then walks each
     * query's lists ([[MultiStageSearch.walk]]) and reranks the kept rows
     * ([[rerankLocal]]) into a LocalRelation with [[batchOutCols]]'
-    * schema. The driver holds at most partitions × |Q| × Σk candidate
-    * rows. A log over the broadcast budget (`budgetDivisor` as in
-    * `sliceDispatch`; the width measured from `log` itself) runs one
-    * pass per slice of its rows. An all-blank log runs no job. */
+    * schema. An all-blank log runs no job.
+    *
+    * The candidates the pass sends the driver — partitions × |Q| × Σk
+    * rows, each with its doc text — must fit `driverBytes`, measured in
+    * the pass ([[TopK.slotTopK]]'s `maxBytes`); None when they do not,
+    * and the caller runs the distributed core, which keeps them on the
+    * executors. */
   private def batchOnDriver(op: String, log: Array[Row], qidCol: String,
                             cells: Option[Seq[java.lang.Double] => Array[Long]],
-                            budgetDivisor: Int): DataFrame = {
+                            driverBytes: Long): Option[DataFrame] = {
     val spark = corpus.sparkSession
     require(log.map(_.getLong(0)).distinct.length == log.length,
       s"$op: duplicate $qidCol values in the query batch")
     val resolved = log.toSeq.flatMap(r => MultiStageSearch.resolveQuery(
       queryNer, synonyms, profile, r.getLong(0), r.getString(1))
       .map(_ -> r.getSeq[java.lang.Double](2)))
-    val maxSyn = resolved.map(_._1._5.length).maxOption.getOrElse(0)
+    val lead = Seq(StructField(qidCol, LongType, nullable = false))
+    if (resolved.isEmpty) return Some(rerankLocal(Nil, keptSchema(corpus.schema), lead))
+    val maxSyn = resolved.map(_._1._5.length).max
     // every slot any query of the batch can run, as (slot, k) in slot order
     val slots = MultiStageSearch.ladder(job = true, region = true, maxSyn, cfg)
       .flatMap(_._2).sortBy(_._1)
@@ -534,36 +564,30 @@ final class MultiStageSearch(
       StructField("__job", StringType), StructField("__region", StringType),
       StructField("__syns", ArrayType(StringType))) ++
       cells.map(_ => StructField("__cid", LongType, nullable = false)))
-    val maxQ = broadcastQueryMaxFor(MultiStageSearch.logRowBytes(log), budgetDivisor)
-    val slices = if (resolved.length > maxQ) resolved.grouped(sliceSize(maxQ).toInt).toSeq
-      else Seq(resolved).filter(_.nonEmpty)
-    val walked = slices.flatMap { slice =>
-      val frame = slice.flatMap { case ((qid, job, region, _, syns), qv) =>
-        val row = Seq(qid, qv, job, region, syns)
-        cells.fold(Seq(Row.fromSeq(row)))(_(qv).toSeq.map(c => Row.fromSeq(row :+ c)))
-      }
-      val local = broadcast(spark.createDataFrame(frame.asJava, qschema))
-      val paired = cells.fold(corpus.crossJoin(local)) { _ =>
-        val cid = col("cluster_id").cast("long")
-        corpus.filter(cid.isin(frame.map(_.getLong(5)).distinct: _*))
-          .join(local, cid === col("__cid"))
-      }
-      val ranked = TopK.slotTopK(paired.select(col(idCol), col(textCol),
-          VectorFunctions.l2(col(embCol), col("__qv")).as("dist"), col("__qid"),
-          col("__job"), col("__region"), col("__syns")),
-        Seq("dist", idCol), slots.map { case (slot, k) => (Some(preds(slot)), k) },
-        Some("__qid"))
-      slice.map { case ((qid, job, region, age, syns), _) =>
+    val frame = resolved.flatMap { case ((qid, job, region, _, syns), qv) =>
+      val row = Seq(qid, qv, job, region, syns)
+      cells.fold(Seq(Row.fromSeq(row)))(_(qv).toSeq.map(c => Row.fromSeq(row :+ c)))
+    }
+    val local = broadcast(spark.createDataFrame(frame.asJava, qschema))
+    val paired = cells.fold(corpus.crossJoin(local)) { _ =>
+      val cid = col("cluster_id").cast("long")
+      corpus.filter(cid.isin(frame.map(_.getLong(5)).distinct: _*))
+        .join(local, cid === col("__cid"))
+    }
+    TopK.slotTopK(paired.select(col(idCol), col(textCol),
+        VectorFunctions.l2(col(embCol), col("__qv")).as("dist"), col("__qid"),
+        col("__job"), col("__region"), col("__syns")),
+      Seq("dist", idCol), slots.map { case (slot, k) => (Some(preds(slot)), k) },
+      Some("__qid"), driverBytes).map { ranked =>
+      rerankLocal(resolved.map { case ((qid, job, region, age, syns), _) =>
         val ladder = MultiStageSearch.ladder(job != null, region != null,
           syns.length, cfg)
         val kept = MultiStageSearch.walk(ladder, ranked(qid))(_.get(0)).map {
           case (r, stage) => Row(r.get(0), r.get(1), r.get(2), stage)
         }
         (Seq(qid), kept, Seq(job, region, age))
-      }
+      }, keptSchema(corpus.schema), lead)
     }
-    rerankLocal(walked, keptSchema(corpus.schema),
-      Seq(StructField(qidCol, LongType, nullable = false)))
   }
 
   /** The 10M+-log escape hatch, automatic: a query log larger than the
@@ -609,7 +633,11 @@ final class MultiStageSearch(
     val over = queries.select(col(qidCol)).limit(maxQ + 1).count() > maxQ
     if (!over) return None
     val n = queries.count()
-    val target = sliceSize(maxQ)
+    // 80% of the budget per slice, ROUNDED: floor would turn a tiny
+    // explicit override (maxQ=2, the c11 harness shape) into 1-query
+    // slices and double its deliberate slicing tax, while at derived
+    // scale (~millions) round vs floor is noise and the headroom holds
+    val target = math.max(1L, math.round(maxQ * 0.8))
     val nSlices = math.min(Int.MaxValue.toLong,
       (n + target - 1) / target).toInt
     val parts = (0 until nSlices).map { j =>
@@ -619,13 +647,6 @@ final class MultiStageSearch(
     }
     Some(parts.reduce(_ unionByName _))
   }
-
-  /** Queries per slice for a budget of `maxQ`: 80% of it, ROUNDED —
-    * floor would turn a tiny explicit override (maxQ=2, the c11 harness
-    * shape) into 1-query slices and double its deliberate slicing tax,
-    * while at derived scale (~millions) round vs floor is noise and the
-    * headroom holds. */
-  private def sliceSize(maxQ: Int): Long = math.max(1L, math.round(maxQ * 0.8))
 
   /** The per-slice query budget, in ROWS. A positive
     * `cfg.broadcastQueryMax` wins verbatim (a deployment that knows
@@ -643,32 +664,31 @@ final class MultiStageSearch(
     * served form's broadcast is |Q| · nprobe probe rows, not |Q|. */
   private[graft] def resolvedBroadcastQueryMax(
       queries: DataFrame, qtextCol: String, qvecCol: String,
-      budgetDivisor: Int = 1): Int =
-    broadcastQueryMaxFor(
-      MultiStageSearch.probedQueryRowBytes(queries, qtextCol, qvecCol),
-      budgetDivisor)
-
-  /** [[resolvedBroadcastQueryMax]] for a row width already known (read
-    * only when no positive override is set). */
-  private def broadcastQueryMaxFor(rowBytes: => Long, budgetDivisor: Int): Int = {
+      budgetDivisor: Int = 1): Int = {
     val base: Long =
       if (cfg.broadcastQueryMax > 0) cfg.broadcastQueryMax.toLong
-      else {
-        // the abort the budget guards is the BroadcastExchange collect
-        // crossing spark.driver.maxResultSize, so the byte budget must
-        // respect the session's ACTUAL limit, not just heap/16 — a
-        // 32 GiB driver at the default 1g maxResultSize would
-        // otherwise derive 2 GiB slices that still die at collect
-        // (bare numbers are MiB, Spark's own rule for this key; 0 =
-        // unlimited, heap-only budget)
-        val mrs = corpus.sparkSession.sparkContext.getConf
-          .getSizeAsMb("spark.driver.maxResultSize", "1g") << 20
-        MultiStageSearch.broadcastBudgetRows(rowBytes,
-          Runtime.getRuntime.maxMemory, mrs)
-      }
+      else MultiStageSearch.broadcastBudgetRows(
+        MultiStageSearch.probedQueryRowBytes(queries, qtextCol, qvecCol),
+        Runtime.getRuntime.maxMemory, maxResultBytes)
     math.max(1L, math.min(base / math.max(1, budgetDivisor),
       Int.MaxValue.toLong - 1)).toInt
   }
+
+  /** The session's `spark.driver.maxResultSize` in bytes. The aborts
+    * the driver budgets guard are task results (a broadcast's collect,
+    * the one-pass candidates) crossing it, so a budget must respect the
+    * ACTUAL limit, not just heap/16 — a 32 GiB driver at the default 1g
+    * would otherwise derive 2 GiB budgets that still die at collect
+    * (bare numbers are MiB, Spark's own rule for this key; 0 =
+    * unlimited). */
+  private def maxResultBytes: Long = corpus.sparkSession.sparkContext.getConf
+    .getSizeAsMb("spark.driver.maxResultSize", "1g") << 20
+
+  /** The bytes of candidate rows the one-pass batch path may gather on
+    * the driver ([[MultiStageSearch.driverBudgetBytes]] of this JVM's
+    * heap and `maxResultSize`). */
+  private def driverBudgetBytes: Long =
+    MultiStageSearch.driverBudgetBytes(Runtime.getRuntime.maxMemory, maxResultBytes)
 
   /** The distributed core's batch prelude, for logs over
     * `semanticDriverBatchMax` (request-sized logs take
@@ -960,8 +980,7 @@ object MultiStageSearch {
     * under-report hazard); an all-null or empty log measures overhead
     * only — correct, those rows broadcast no vector bytes. One probe
     * per distributed batch dispatch, paid on the in-budget path too — a
-    * 32-row scan is noise next to the log's size read. A log already on
-    * the driver is measured from its rows instead ([[logRowBytes]]). */
+    * 32-row scan is noise next to the log's size read. */
   private[graft] def probedQueryRowBytes(queries: DataFrame,
       qtextCol: String, qvecCol: String): Long = {
     val probe = queries
@@ -975,39 +994,28 @@ object MultiStageSearch {
       .collect()
     val (dims, chars) =
       if (probe.isEmpty) (0, 0) else (probe(0).getInt(0), probe(0).getInt(1))
-    queryRowBytes(dims, chars)
-  }
-
-  /** [[probedQueryRowBytes]]'s width over a log already on the driver
-    * ((qid, text, vector) rows): every row with a vector is measured,
-    * not a 32-row sample. */
-  private def logRowBytes(log: Seq[Row]): Long = {
-    val withVec = log.filter(!_.isNullAt(2))
-    val dims = withVec.map(_.getSeq[Any](2).length).maxOption.getOrElse(0)
-    val chars = withVec.map(r => Option(r.getString(1))
-      .fold(0)(t => t.codePointCount(0, t.length))).maxOption.getOrElse(0)
-    queryRowBytes(dims, chars)
-  }
-
-  /** A query row's broadcast width for `dims` vector components and
-    * `chars` text characters. */
-  private def queryRowBytes(dims: Int, chars: Int): Long =
     8L * dims + 2L * chars + QueryRowOverheadBytes
+  }
 
-  /** (heap, maxResultSize) → per-slice query-row budget: the LESSER of
-    * 1/16 of the heap (the round-16-validated ratio — at ~1 KiB rows
-    * this IS the old heapGiB × 65536 constant) and HALF the driver's
-    * `maxResultSize` (the broadcast collect is what actually aborts;
-    * half leaves room for the task-result framing and any concurrent
-    * collect), divided by the measured row width instead of an assumed
-    * one. `maxResultBytes <= 0` = unlimited (Spark's own 0 semantics
-    * for the key) — heap-only budget. */
-  private[graft] def broadcastBudgetRows(rowBytes: Long,
-      heapBytes: Long, maxResultBytes: Long): Long = {
+  /** (heap, maxResultSize) → the bytes one result may bring to the
+    * driver: the LESSER of 1/16 of the heap (the round-16-validated
+    * ratio) and HALF the driver's `maxResultSize` (the collect is what
+    * actually aborts; half leaves room for the task-result framing and
+    * any concurrent collect). `maxResultBytes <= 0` = unlimited
+    * (Spark's own 0 semantics for the key) — heap-only budget. */
+  private[graft] def driverBudgetBytes(heapBytes: Long, maxResultBytes: Long): Long = {
     val heapBudget = math.max(1L, heapBytes / 16)
     val mrsBudget =
       if (maxResultBytes <= 0) Long.MaxValue
       else math.max(1L, maxResultBytes / 2)
-    math.max(1L, math.min(heapBudget, mrsBudget) / math.max(1L, rowBytes))
+    math.min(heapBudget, mrsBudget)
   }
+
+  /** (heap, maxResultSize) → per-slice query-row budget:
+    * [[driverBudgetBytes]] divided by the measured row width instead of
+    * an assumed one (at ~1 KiB rows this IS the old heapGiB × 65536
+    * constant). */
+  private[graft] def broadcastBudgetRows(rowBytes: Long,
+      heapBytes: Long, maxResultBytes: Long): Long =
+    math.max(1L, driverBudgetBytes(heapBytes, maxResultBytes) / math.max(1L, rowBytes))
 }

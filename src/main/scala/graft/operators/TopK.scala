@@ -7,6 +7,9 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{col, udaf}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.FutureAction
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 /** Bounded top-k aggregation (SURVEY.md §2.5 V2 batch kNN, 100 TB
@@ -101,10 +104,19 @@ object TopK {
     * listeners see its plan and planning phases like any Dataset
     * action. Returns each group's slot lists (rows in order, with
     * `rows`'s columns), keyed by the group value — `()` without a group
-    * column; a group with no candidate reads empty lists. */
+    * column; a group with no candidate reads empty lists.
+    *
+    * `maxBytes` bounds what the driver receives: each partition may
+    * hold its share of it (`maxBytes` / partitions), counted as the
+    * UnsafeRow bytes of the distinct rows its heaps hold — the
+    * partitions × groups × Σk × row-width bound, measured on the rows
+    * actually kept. A partition over its share stops scanning and sends
+    * no rows, the job is cancelled, and the call returns None: the
+    * caller takes a path that does not gather the candidates on the
+    * driver. */
   private[operators] def slotTopK(rows: DataFrame, by: Seq[String],
-      slots: Seq[(Option[Column], Int)], group: Option[String] = None)
-      : Map[Any, IndexedSeq[Seq[Row]]] = {
+      slots: Seq[(Option[Column], Int)], group: Option[String] = None,
+      maxBytes: Long = Long.MaxValue): Option[Map[Any, IndexedSeq[Seq[Row]]]] = {
     val width = rows.schema.length
     val preds = slots.flatMap(_._1)
     val df = rows.select(col("*") +:
@@ -118,7 +130,9 @@ object TopK {
     val key = group.map { g => val i = df.schema.fieldIndex(g); (i, df.schema(i).dataType) }
     val qe = df.queryExecution
     val parts = SQLExecution.withNewExecutionId(qe, Some("slotTopK")) {
-      qe.toRdd.mapPartitions { it =>
+      val rdd = qe.toRdd
+      val share = maxBytes / math.max(1, rdd.getNumPartitions)
+      val heapsRdd = rdd.mapPartitions { it =>
         def newHeaps = ks.map(_ => new java.util.PriorityQueue[InternalRow](ord.reverse))
         val heaps = new java.util.HashMap[UnsafeRow, Array[java.util.PriorityQueue[InternalRow]]]()
         val heapsOf: InternalRow => Array[java.util.PriorityQueue[InternalRow]] =
@@ -136,7 +150,22 @@ object TopK {
                 hs
               }
           }
-        it.foreach { r =>
+        lazy val toUnsafe = UnsafeProjection.create(df.schema)
+        // the bytes of the distinct rows held: a row counts once, however
+        // many heaps hold it, as it is serialized once
+        val refs = new java.util.IdentityHashMap[InternalRow, Array[Int]]()
+        var held = 0L
+        def hold(r: InternalRow): Unit = refs.get(r) match {
+          case null => refs.put(r, Array(1)); held += r.asInstanceOf[UnsafeRow].getSizeInBytes
+          case n => n(0) += 1
+        }
+        def release(r: InternalRow): Unit = {
+          val n = refs.get(r)
+          n(0) -= 1
+          if (n(0) == 0) { refs.remove(r); held -= r.asInstanceOf[UnsafeRow].getSizeInBytes }
+        }
+        while (held <= share && it.hasNext) {
+          val r = it.next()
           if (!r.isNullAt(lead)) {
             val hs = heapsOf(r)
             var kept: InternalRow = null
@@ -146,30 +175,49 @@ object TopK {
               val h = hs(s)
               if (ks(s) > 0 && (m < 0 || (!r.isNullAt(m) && r.getBoolean(m))) &&
                   (h.size < ks(s) || ord.compare(r, h.peek) < 0)) {
-                if (kept == null) kept = r.copy()
+                if (kept == null) kept = r match {
+                  case u: UnsafeRow => u.copy()
+                  case o => toUnsafe(o).copy()
+                }
                 h.add(kept)
-                if (h.size > ks(s)) h.poll()
+                hold(kept)
+                if (h.size > ks(s)) release(h.poll())
               }
               s += 1
             }
           }
         }
-        Iterator.single(heaps.asScala.toArray.map { case (k, hs) =>
+        Iterator.single(Option.when(held <= share)(heaps.asScala.toArray.map { case (k, hs) =>
           k -> hs.map(_.toArray(Array.empty[InternalRow]))
-        })
-      }.collect()
+        }))
+      }
+      // collect, except that the first partition over its share cancels
+      // the job: the answer is None whatever the others hold
+      val out = new Array[Option[Array[(UnsafeRow, Array[Array[InternalRow]])]]](
+        heapsRdd.getNumPartitions)
+      val job = new java.util.concurrent.atomic.AtomicReference[FutureAction[Unit]]()
+      job.set(heapsRdd.sparkContext.submitJob(heapsRdd,
+        (it: Iterator[Option[Array[(UnsafeRow, Array[Array[InternalRow]])]]]) => it.next(),
+        out.indices, (i: Int, r: Option[Array[(UnsafeRow, Array[Array[InternalRow]])]]) => {
+          out(i) = r
+          if (r.isEmpty) Option(job.get).foreach(_.cancel())
+        }, ()))
+      Await.ready(job.get, Duration.Inf)
+      if (!out.contains(None)) job.get.value.get.get // a failed job throws here
+      out
     }
+    if (parts.contains(None)) return None
     val external = CatalystTypeConverters.createToScalaConverter(df.schema)
     val keyValue = key.map { case (_, dt) =>
       val c = CatalystTypeConverters.createToScalaConverter(dt)
       (k: UnsafeRow) => c(k.get(0, dt))
     }
-    val merged = parts.flatten.groupBy(_._1).map { case (k, hs) =>
+    val merged = parts.flatten.flatten.groupBy(_._1).map { case (k, hs) =>
       keyValue.fold[Any](())(_(k)) -> ks.indices.map { s =>
         hs.flatMap(_._2(s)).sorted(ord).take(ks(s)).toSeq.map(r =>
           Row.fromSeq(external(r).asInstanceOf[Row].toSeq.take(width)))
       }
     }
-    merged.withDefaultValue(ks.indices.map(_ => Nil))
+    Some(merged.withDefaultValue(ks.indices.map(_ => Nil)))
   }
 }

@@ -638,47 +638,45 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     // slot-mask shape, the per-structure gate ladders, and the
     // ran-only renumbering in one row set. CascadeBatchSpec separately
     // pins batch == per-query search row-for-row.
-    (s, d) => {
-      import s.implicits._
-      val corpus = t(s, d, "documents")
-        .join(t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), col("text"), col("embedding"))
-      val queries = batchQueryMeta.toDF("qid", "qtext")
-        .join(t(s, d, "embeddings")
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec")), "qid")
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding")
-        .searchGatedBatch(queries, "qid", "qtext", "qvec")
-        .select(col("qid"), col("rank"), col("doc_id"), col("stage_rank"),
-          round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
-        .orderBy("qid", "rank")
-    },
+    (s, d) => exactBatchCascade(s, d, graft.operators.CascadeConfig())
+      .select(col("qid"), col("rank"), col("doc_id"), col("stage_rank"),
+        round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
+      .orderBy("qid", "rank"),
     Some(gatedCascadeBatchSql(Seq.empty, exactBatchCorpusCtes)))
 
+  /** c9's and c11's batch: [[batchQueryMeta]]'s 4-query log (vectors
+    * from the embeddings table) through `searchGatedBatch` over the
+    * exact corpus, under `cfg`. */
+  private[graft] def exactBatchCascade(s: SparkSession, d: String,
+      cfg: graft.operators.CascadeConfig): DataFrame = {
+    import s.implicits._
+    val corpus = t(s, d, "documents")
+      .join(t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
+      .select(col("doc_id"), col("text"), col("embedding"))
+    val queries = batchQueryMeta.toDF("qid", "qtext")
+      .join(t(s, d, "embeddings")
+        .select(col("vec_id").as("qid"), col("embedding").as("qvec")), "qid")
+    new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
+      .searchGatedBatch(queries, "qid", "qtext", "qvec")
+  }
+
   private val c11 = QuerySpec("c11_cascade_batch_sliced",
-    // c9's batch THROUGH the round-16 auto-slicer: broadcastQueryMax=2
-    // forces the 4-query batch into 2 slices served sequentially — on
-    // the one-pass path, slices of the rows already read on the driver,
-    // one pass each — with the bounded results unioned. The oracle is c9's VERBATIM —
+    // c9's batch THROUGH the round-16 auto-slicer: semanticDriverBatchMax
+    // = 0 sends the 4-query batch to the distributed core (the one-pass
+    // path does not slice — its log is already on the driver), and
+    // broadcastQueryMax=2 forces it into 2 hash-slice plans served
+    // sequentially, with each slice resolving only its own queries and
+    // the bounded results unioned. The oracle is c9's VERBATIM —
     // slicing must be invisible in the result — so the slicing
     // mechanism itself is DuckDB hash-checked at the harness level
     // (CascadeBatchSpec pins sliced == single-plan in-suite; the
     // round-16 10M probe pins the scale behavior; this row pins the
     // dispatch + slice-union correctness every round).
-    (s, d) => {
-      import s.implicits._
-      val corpus = t(s, d, "documents")
-        .join(t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), col("text"), col("embedding"))
-      val queries = batchQueryMeta.toDF("qid", "qtext")
-        .join(t(s, d, "embeddings")
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec")), "qid")
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding",
-          graft.operators.CascadeConfig(broadcastQueryMax = 2))
-        .searchGatedBatch(queries, "qid", "qtext", "qvec")
-        .select(col("qid"), col("rank"), col("doc_id"), col("stage_rank"),
-          round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
-        .orderBy("qid", "rank")
-    },
+    (s, d) => exactBatchCascade(s, d, graft.operators.CascadeConfig(
+        broadcastQueryMax = 2, semanticDriverBatchMax = 0))
+      .select(col("qid"), col("rank"), col("doc_id"), col("stage_rank"),
+        round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
+      .orderBy("qid", "rank"),
     Some(gatedCascadeBatchSql(Seq.empty, exactBatchCorpusCtes)))
 
   private val c10 = QuerySpec("c10_cascade_batch_served_gated",

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Ann, CascadeConfig, MultiStageSearch}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Batch cascade == per-query search, row for row, across every
@@ -284,6 +285,35 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
+  test("the one pass gathers candidates on the driver only within its budget; over it, the distributed core") {
+    val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
+      (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
+    val assigned = Ann.ivfAssign(corpus, "embedding", "doc_id", cents, "cid", "cvec")
+    // both batch forms, with the one pass's driver budget given in bytes
+    def forms(cfg: CascadeConfig, driverBytes: Long) = Seq(
+      new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
+        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec", driverBytes),
+      new MultiStageSearch(assigned, "doc_id", "text", "embedding", cfg)
+        .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec",
+          cents, "cid", "cvec", 2, driverBytes))
+    // the one pass answers with a local relation, the distributed core
+    // with a plan
+    def onePass(df: DataFrame) = df.queryExecution.logical.isInstanceOf[LocalRelation]
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(8)))
+    val distributed = forms(CascadeConfig(semanticDriverBatchMax = 0), Long.MaxValue)
+    val within = forms(CascadeConfig(), Long.MaxValue)
+    // one byte: the first candidate any partition keeps is over its share
+    val over = forms(CascadeConfig(), 1L)
+    assert(distributed.forall(!onePass(_)))
+    assert(within.forall(onePass))
+    assert(over.forall(!onePass(_)))
+    for (((w, o), d) <- within.zip(over).zip(distributed)) {
+      assert(rows(d).nonEmpty)
+      assert(rows(w) == rows(d))
+      assert(rows(o) == rows(d))
+    }
+  }
+
   test("an over-budget query log is auto-sliced; rows identical to the single-plan form") {
     // broadcastQueryMax = 2 forces 6 queries into 3 hash slices, each
     // served as its own sequential plan — the 10M+-log path exercised
@@ -319,8 +349,11 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     val servedOne = runServed(base)
     assert(servedOne.nonEmpty &&
       runServed(base.copy(broadcastQueryMax = 2)) == servedOne)
-    // a log over semanticDriverBatchMax is sliced by the distributed
-    // core's dispatcher (hash slices, one plan each): same rows
+    // the default runs above take the one-pass path, which does not
+    // slice (its log is already on the driver), so broadcastQueryMax
+    // leaves them unchanged; the slicer itself serves the distributed
+    // core: a log over semanticDriverBatchMax is hash-sliced, one plan
+    // per slice, with the same rows
     val distributed = base.copy(broadcastQueryMax = 2, semanticDriverBatchMax = 0)
     assert(run(distributed) == one)
     assert(runServed(distributed) == servedOne)

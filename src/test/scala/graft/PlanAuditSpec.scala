@@ -300,19 +300,10 @@ class PlanAuditSpec extends SparkSpec {
     // filter pushed elsewhere) fails here, not in a bench diff.
     // The cascade's windowed core serves logs over
     // semanticDriverBatchMax; c9's 4-query log takes the one-pass driver
-    // tail, so the core is audited on c9's corpus and queries with the
-    // distributed path forced (semanticDriverBatchMax = 0).
-    val corpus = Queries.t(spark, sf, "documents")
-      .join(Queries.t(spark, sf, "embeddings"), col("doc_id") === col("vec_id"))
-      .select(col("doc_id"), col("text"), col("embedding"))
-    val c9Log = spark.createDataFrame(Seq(
-        0L -> "looking for a join job in the row area", 1L -> "column stuff",
-        2L -> "sort pipelines", 3L -> "hello world")).toDF("qid", "qtext")
-      .join(Queries.t(spark, sf, "embeddings")
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec")), "qid")
-    val c9Core = new graft.operators.MultiStageSearch(corpus, "doc_id", "text",
-        "embedding", graft.operators.CascadeConfig(semanticDriverBatchMax = 0))
-      .searchGatedBatch(c9Log, "qid", "qtext", "qvec")
+    // tail, so the core is audited on c9's own batch (the builder c9
+    // runs) with the distributed path forced (semanticDriverBatchMax = 0).
+    val c9Core = Queries.exactBatchCascade(spark, sf,
+      graft.operators.CascadeConfig(semanticDriverBatchMax = 0))
     for ((q, df) <- ("c9_cascade_batch_gated (distributed core)", c9Core) +:
         Seq("s15_int8_batch_served", "s16_prefix_batch_served",
           "s17_pq_batch_served", "s18_ivfpq_batch_served")
