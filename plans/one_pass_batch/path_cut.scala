@@ -1,9 +1,9 @@
 // The batch cascade's two paths, timed in one process: for |Q| = 64, 256
 // and 1024 queries, both batch forms (searchGatedBatch over the exact
-// corpus, searchGatedBatchServed over an IVF index) run under the default
-// config (one pass on the driver, or the distributed core when the
-// candidates overflow the driver budget) and under semanticDriverBatchMax
-// = 0 (the distributed core always), interleaved, on a multi-partition
+// corpus, searchGatedBatchServed over an IVF index) run under the engine's
+// own size policy (one pass on the driver, or the distributed core when
+// the candidates overflow the driver budget) and under a log limit of 0
+// (the distributed core always), interleaved, on a multi-partition
 // stored corpus. The IVF index is written by IndexStore.write (its
 // cell-aligned layout), or with PATH_CUT_INDEX=slivers straight from the
 // 16 corpus partitions: one small file per (partition, cell), the layout
@@ -21,7 +21,7 @@
 // PATH_CUT_REPS (timed calls per cell, default 5), PATH_CUT_SIZES (log
 // sizes, default 64,256,1024), PATH_CUT_FORMS (default exact,served),
 // PATH_CUT_INDEX (store or slivers, default store).
-import graft.operators.{Ann, CascadeConfig, MultiStageSearch}
+import graft.operators.{Ann, MultiStageSearch}
 import graft.sources.IndexStore
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -85,25 +85,40 @@ def timed(f: => Array[Row]): (Array[Row], Double, Int) = {
   Thread.sleep(200) // the status tracker is fed asynchronously
   (rows, ms, sc.statusTracker.getJobIdsForTag(tag).length)
 }
-def run(form: String, q: DataFrame, cfg: CascadeConfig): Array[Row] = (form match {
-  case "exact" => new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
-    .searchGatedBatch(q, "qid", "qtext", "qvec")
-  case "served" => new MultiStageSearch(index, "doc_id", "text", "embedding", cfg)
-    .searchGatedBatchServed(q, "qid", "qtext", "qvec", cents, "cid", "cvec", nprobe)
-}).collect()
+// The distributed path is forced through the batch forms' size-policy
+// overloads (MultiStageSearch.BatchSizing with a log limit of 0). They are
+// package-private to graft, which the bytecode leaves public, so this
+// script, compiled outside the package, calls them reflectively.
+val distributedCore = Class.forName("graft.operators.MultiStageSearch$BatchSizing").getConstructors.head.newInstance(Int.box(0), Long.box(0L), None).asInstanceOf[AnyRef]
+def sized(search: MultiStageSearch, method: String, args: AnyRef*): DataFrame = {
+  val m = search.getClass.getMethods.find(m => m.getName == method && m.getParameterCount == args.size + 1).get
+  m.invoke(search, (args :+ distributedCore): _*).asInstanceOf[DataFrame]
+}
+def run(form: String, q: DataFrame, distributed: Boolean): Array[Row] = {
+  val search = new MultiStageSearch(if (form == "exact") corpus else index,
+    "doc_id", "text", "embedding")
+  (form match {
+    case "exact" if distributed => sized(search, "searchGatedBatch", q, "qid", "qtext", "qvec")
+    case "exact" => search.searchGatedBatch(q, "qid", "qtext", "qvec")
+    case "served" if distributed => sized(search, "searchGatedBatchServed",
+      q, "qid", "qtext", "qvec", cents, "cid", "cvec", Int.box(nprobe))
+    case "served" => search.searchGatedBatchServed(q, "qid", "qtext", "qvec",
+      cents, "cid", "cvec", nprobe)
+  }).collect()
+}
 
 val heapMb = Runtime.getRuntime.maxMemory >> 20
-val paths = Seq("default" -> CascadeConfig(), "distributed" -> CascadeConfig(semanticDriverBatchMax = 0))
+val paths = Seq("default" -> false, "distributed" -> true)
 val summary = for (n <- sizes; form <- forms) yield {
   val q = log(n)
-  val ref = paths.map { case (name, cfg) =>
-    name -> run(form, q, cfg).map(_.toSeq).sortBy(r => (r(0).asInstanceOf[Long], r(8).asInstanceOf[Int])).toSeq
+  val ref = paths.map { case (name, distributed) =>
+    name -> run(form, q, distributed).map(_.toSeq).sortBy(r => (r(0).asInstanceOf[Long], r(8).asInstanceOf[Int])).toSeq
   }.toMap // warm-up call per path, and the row check
   val same = ref("default") == ref("distributed")
   val ms = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
   val js = scala.collection.mutable.Map.empty[String, Int]
-  for (rep <- 0 until reps; (name, cfg) <- if (rep % 2 == 0) paths else paths.reverse) {
-    val (_, t, j) = timed(run(form, q, cfg))
+  for (rep <- 0 until reps; (name, distributed) <- if (rep % 2 == 0) paths else paths.reverse) {
+    val (_, t, j) = timed(run(form, q, distributed))
     ms(name) :+= t
     js(name) = j
     println(f"""{"heap_mb": $heapMb, "index": "$layout", "queries": $n, "form": "$form", "path": "$name", "rep": $rep, "ms": $t%.1f, "jobs": $j}""")

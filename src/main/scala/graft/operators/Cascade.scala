@@ -12,38 +12,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
-/** `semanticDriverBatchMax`: batch-cascade query logs at most this
-  * large are read whole on the DRIVER, resolve NER/synonyms there (the
-  * reference's per-request shape — one external call per query) and
-  * take the one-pass driver tail: one job ranks every (query, stage)
-  * top-k, and the gates, dedup and rerank run on the driver, which
-  * receives at most partitions × |Q| × Σk candidate rows (Σk over the
-  * stage slots), each with its doc text. That path is taken only while
-  * those rows, measured in the pass, fit the driver budget (the lesser
-  * of 1/16 of the heap and half of `spark.driver.maxResultSize`, each
-  * partition its share). Larger logs, and logs whose candidates
-  * overflow the budget, resolve NER/synonyms inside the cluster via
-  * `mapPartitions` (SURVEY §2.7's batch shape) and run the distributed
-  * core, so an offline log never funnels its texts or candidates
-  * through the driver. 0 forces the distributed path. Both paths are
-  * row-identical (CascadeBatchSpec pins it).
-  *
-  * `broadcastQueryMax`: the distributed core BROADCASTS the resolved
-  * query frame (the pair stream is corpus × broadcast(queries)), which
-  * bounds a single plan at a broadcastable query side. Logs larger
-  * than this are hash-sliced by qid and served as SEQUENTIAL per-slice
-  * plans whose bounded results union (the CascadeServe slicer idiom,
-  * automatic) — so a 10M+ offline log runs without a manual knob. 0
-  * (the default) derives the bound WIDTH-AWARE from the JVM heap:
-  * 1/16 of the heap in broadcast bytes divided by the log's MEASURED
-  * row width (a bounded 32-row probe of vector dims + text length) — a
-  * 32 GiB driver derives ~2M queries per slice at dim 64 but only
-  * ~240k at the reference's dim 1024, where a flat rows-per-GiB
-  * constant would admit ~8× the budget and abort the broadcast at
-  * `maxResultSize`. Positive values override (rows, taken verbatim);
-  * the slices are hash-sized in expectation, not exactly, so the
-  * slicer targets 80% of the budget per slice as skew headroom. The
-  * one-pass path does not slice: its log is already on the driver. */
+/** The cascade's policy: each stage's k (`topK`, the fallback's
+  * `fallbackK`), the count gates (`relaxThreshold`,
+  * `fallbackThreshold`), the result size `finalN` and the rerank
+  * weights. How a batch log is run is not configured here: the engine
+  * sizes it ([[MultiStageSearch.BatchLogLimit]] and the measured driver
+  * budget, see [[MultiStageSearch.searchGatedBatch]]). */
 final case class CascadeConfig(
     topK: Int = 10,
     relaxThreshold: Int = 5,
@@ -51,9 +25,7 @@ final case class CascadeConfig(
     fallbackK: Int = 15,
     finalN: Int = 5,
     wJudge: Double = 0.7,
-    wRule: Double = 0.3,
-    semanticDriverBatchMax: Int = 1024,
-    broadcastQueryMax: Int = 0)
+    wRule: Double = 0.3)
 
 /** The flagship query: multi-stage retrieval with progressive filter
   * relaxation, priority dedup, hybrid rerank, top-N
@@ -363,8 +335,9 @@ final class MultiStageSearch(
     * driver round-trips, and per-query results are row-identical to
     * [[search]] (CascadeBatchSpec pins the identity across all four
     * query structures; c9 hash-checks the batch against per-query
-    * DuckDB replays). Two shapes, dispatched on the log's size with
-    * [[CascadeConfig.semanticDriverBatchMax]] and on the one pass's
+    * DuckDB replays). Two shapes, chosen by the engine alone
+    * ([[batchDispatch]]) on the log's size, at most
+    * [[MultiStageSearch.BatchLogLimit]] queries, and on the one pass's
     * candidate bytes against the driver budget:
     *
     *  - a REQUEST-SIZED log (the serving case) is read once on the
@@ -395,43 +368,42 @@ final class MultiStageSearch(
     * silently drop their rows; not available with a custom `knnBackend`
     * — the batch plan IS the candidate source.
     *
-    * The query source must be DETERMINISTIC across re-scans: the size
-    * read and, past it, the distributed path and its auto-slicer
-    * (`sliceDispatch`) scan `queries` again for the size probe, the
-    * count, and once per slice rather than pinning a 10M-row
-    * vector-bearing frame whole. A source whose rows shift between
-    * scans — `sample()`, a `limit` over shuffled data, `rand()`-derived
-    * qids — can drop or duplicate queries across slices in ways the
-    * per-slice duplicate guard cannot see. Checkpoint such a source
-    * first (`localCheckpoint` or a parquet round-trip); files, tables,
-    * and deterministic transforms over them need nothing. */
+    * The query source must be DETERMINISTIC across re-scans: past the
+    * size read, the distributed path and its auto-slicer
+    * (`sliceDispatch`) scan `queries` again for the count and once per
+    * slice rather than pinning a 10M-row vector-bearing frame whole. A
+    * source whose rows shift between scans — `sample()`, a `limit`
+    * over shuffled data, `rand()`-derived qids — can drop or duplicate
+    * queries across slices in ways the per-slice duplicate guard
+    * cannot see. Checkpoint such a source first (`localCheckpoint` or
+    * a parquet round-trip); files, tables, and deterministic
+    * transforms over them need nothing. */
   def searchGatedBatch(queries: DataFrame, qidCol: String,
                        qtextCol: String, qvecCol: String): DataFrame =
-    searchGatedBatch(queries, qidCol, qtextCol, qvecCol, driverBudgetBytes)
+    searchGatedBatch(queries, qidCol, qtextCol, qvecCol, engineSizing)
 
-  /** [[searchGatedBatch]] with the one-pass path's driver budget
-    * (`driverBytes`, see [[batchOnDriver]]) given rather than derived
-    * from the heap and `maxResultSize`, so a spec can put a log on
-    * either side of it. */
+  /** [[searchGatedBatch]] under a given size policy rather than the
+    * engine's own ([[MultiStageSearch.BatchSizing]]), so a spec or the
+    * c11 harness row can put a small log on either path and through
+    * the slicer. */
   private[graft] def searchGatedBatch(queries: DataFrame, qidCol: String,
-      qtextCol: String, qvecCol: String, driverBytes: Long): DataFrame = {
+      qtextCol: String, qvecCol: String,
+      sizing: MultiStageSearch.BatchSizing): DataFrame = {
     require(knnBackend.isEmpty,
       "searchGatedBatch builds its own batched candidate plan and cannot " +
         "honor a custom knnBackend — use per-query search for served " +
         "backends, or searchGatedBatchServed over a cluster-assigned index")
     Ann.requireIntegralId(corpus, idCol, "searchGatedBatch", "corpus id")
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatch", "query id")
-    def one(q: DataFrame): DataFrame =
+    batchDispatch("searchGatedBatch", queries, qidCol, qtextCol, qvecCol,
+        sizing, None, budgetDivisor = 1) { q =>
       batchPrelude("searchGatedBatch", q, qidCol, qtextCol, qvecCol) match {
         case Left(empty) => empty
         case Right((nerDf, maxSyn, qframe)) =>
           gatedBatchCore(qidCol, nerDf, maxSyn,
             corpus.crossJoin(broadcast(qframe)), corpus)
       }
-    driverLog(queries, qidCol, qtextCol, qvecCol).flatMap(
-        batchOnDriver("searchGatedBatch", _, qidCol, None, driverBytes))
-      .orElse(sliceDispatch(queries, qidCol, qtextCol, qvecCol)(one))
-      .getOrElse(one(queries))
+    }
   }
 
   /** [[searchGatedBatch]] over a cluster-assigned (IVF) index — the
@@ -461,14 +433,14 @@ final class MultiStageSearch(
                              centroids: DataFrame, cidCol: String,
                              cvecCol: String, nprobe: Int): DataFrame =
     searchGatedBatchServed(queries, qidCol, qtextCol, qvecCol, centroids,
-      cidCol, cvecCol, nprobe, driverBudgetBytes)
+      cidCol, cvecCol, nprobe, engineSizing)
 
-  /** [[searchGatedBatchServed]] with the one-pass path's driver budget
-    * given, as the budgeted [[searchGatedBatch]]. */
+  /** [[searchGatedBatchServed]] under a given size policy, as the
+    * sized [[searchGatedBatch]]. */
   private[graft] def searchGatedBatchServed(queries: DataFrame,
       qidCol: String, qtextCol: String, qvecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String, nprobe: Int,
-      driverBytes: Long): DataFrame = {
+      sizing: MultiStageSearch.BatchSizing): DataFrame = {
     require(knnBackend.isEmpty,
       "searchGatedBatchServed probes the cluster-assigned corpus itself " +
         "and cannot honor a custom knnBackend")
@@ -481,7 +453,13 @@ final class MultiStageSearch(
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatchServed",
       "query id")
     lazy val cells = Ann.probeCellsUdf(probe)
-    def one(q: DataFrame): DataFrame =
+    lazy val cents = Ann.collectCentroids(centroids, cidCol, cvecCol)
+    // the served form's broadcast frame is |Q| · nprobe rows, not |Q|,
+    // so its slice budget divides by nprobe (the exact form broadcasts
+    // the query frame itself and keeps the full budget)
+    batchDispatch("searchGatedBatchServed", queries, qidCol, qtextCol,
+        qvecCol, sizing, Some(Ann.probeCellsOf(cents, _, nprobe)),
+        budgetDivisor = nprobe) { q =>
       batchPrelude("searchGatedBatchServed", q, qidCol, qtextCol,
           qvecCol) match {
         case Left(empty) => empty
@@ -491,40 +469,33 @@ final class MultiStageSearch(
             corpus.join(broadcast(qprobe),
               col("cluster_id").cast("long") === col("__cid")), corpus)
       }
-    // the served form's broadcast frame is |Q| · nprobe rows, not |Q|,
-    // so its slice budget divides by nprobe (the exact form broadcasts
-    // the query frame itself and keeps the full budget)
-    driverLog(queries, qidCol, qtextCol, qvecCol).flatMap { log =>
-        lazy val cents = Ann.collectCentroids(centroids, cidCol, cvecCol)
-        batchOnDriver("searchGatedBatchServed", log, qidCol,
-          Some(Ann.probeCellsOf(cents, _, nprobe)), driverBytes)
-      }
-      .orElse(sliceDispatch(queries, qidCol, qtextCol, qvecCol,
-        budgetDivisor = nprobe)(one))
-      .getOrElse(one(queries))
+    }
   }
 
-  /** The size dispatch of the batch forms: a log of at most
-    * `cfg.semanticDriverBatchMax` rows, read WHOLE on the driver by one
-    * bounded read of `semanticDriverBatchMax + 1` rows (the d6
-    * limit-probe idiom — the read that decides the path is the path's
-    * only read of the log) as (qid, text, vector) rows; None for a
-    * larger log, which the distributed path reads itself. */
-  private def driverLog(queries: DataFrame, qidCol: String,
-                        qtextCol: String, qvecCol: String): Option[Array[Row]] = {
-    // clamp to [0, MaxValue - 1]: the read fetches lim + 1 rows, and a
-    // caller pinning the driver path with Int.MaxValue must not
-    // overflow the limit into a negative
-    val lim = math.min(math.max(cfg.semanticDriverBatchMax, 0),
-      Int.MaxValue - 1)
-    val log = queries.select(col(qidCol).cast("long"),
+  /** The size policy of both batch forms, in one place: the log is read
+    * on the driver by one bounded read of `sizing.logLimit + 1` rows
+    * (the d6 limit-probe idiom) as (qid, text, vector) rows. A log that
+    * fits in it is answered by [[batchOnDriver]]'s one pass (probed
+    * into `cells` for the served form) while its candidates fit
+    * `sizing.driverBytes`; a larger or over-budget log runs the
+    * distributed core (`core`), auto-sliced first when it overflows the
+    * slice budget ([[sliceDispatch]], which reuses the rows this read
+    * already holds). */
+  private def batchDispatch(op: String, queries: DataFrame, qidCol: String,
+      qtextCol: String, qvecCol: String, sizing: MultiStageSearch.BatchSizing,
+      cells: Option[Seq[java.lang.Double] => Array[Long]], budgetDivisor: Int)
+      (core: DataFrame => DataFrame): DataFrame = {
+    val held = queries.select(col(qidCol).cast("long"),
         col(qtextCol).cast("string"), col(qvecCol).cast("array<double>"))
-      .limit(lim + 1).collect()
-    Some(log).filter(_.length <= lim)
+      .limit(sizing.logLimit + 1).collect()
+    Some(held).filter(_.length <= sizing.logLimit)
+      .flatMap(batchOnDriver(op, _, qidCol, cells, sizing.driverBytes))
+      .orElse(sliceDispatch(queries, qidCol, held, sizing, budgetDivisor)(core))
+      .getOrElse(core(queries))
   }
 
   /** The batch cascade over a log already on the driver (`log`: (qid,
-    * text, vector) rows from [[driverLog]]) in ONE pass over the pool:
+    * text, vector) rows from [[batchDispatch]]) in ONE pass over the pool:
     * the queries resolve on the driver ([[MultiStageSearch.resolveQuery]],
     * blank ones drop out) into a local frame (qid, vector, NER fields,
     * synonyms) — one row per query, or with `cells` one per (query,
@@ -591,52 +562,51 @@ final class MultiStageSearch(
   }
 
   /** The 10M+-log escape hatch, automatic: a query log larger than the
-    * broadcast budget ([[CascadeConfig.broadcastQueryMax]]) is
-    * hash-sliced by qid and each slice served as its OWN plan,
-    * SEQUENTIALLY — only one slice's query broadcast and pair stream
-    * are ever live, because each slice's bounded result (≤ finalN·
-    * |slice| rows, no vectors) is eagerly materialized
-    * (localCheckpoint) before the next slice starts; the returned
-    * frame is the cheap union of the materialized results. This is
-    * [[graft.streaming.CascadeServe]]'s `maxBatchQueries` slicer
-    * turned into an engine-side dispatch with a memory-derived
-    * default, so the batch forms stop being bounded by a single
+    * broadcast budget ([[resolvedBroadcastQueryMax]]) is hash-sliced by
+    * qid and each slice served as its OWN plan, SEQUENTIALLY — only one
+    * slice's query broadcast and pair stream are ever live, because
+    * each slice's bounded result (≤ finalN·|slice| rows, no vectors) is
+    * eagerly materialized (localCheckpoint) before the next slice
+    * starts; the returned frame is the cheap union of the materialized
+    * results. The batch forms are thus not bounded by a single
     * broadcastable query frame.
     *
-    * Size detection is a LIMIT-probe (scan at most maxQ+1 qids), so
-    * in-budget logs — the common case — never pay a full count; the
-    * exact count (and so the slice count) is computed only on the
-    * over-budget path. Per-slice work sums to the unsliced plan's
-    * (each slice resolves only its own queries; the corpus is scanned
-    * once per slice instead of once — the price of bounding memory).
-    * Duplicate qids land in the SAME hash slice, so the per-slice
-    * prelude guard still catches them. The query source is re-scanned
-    * once per slice rather than checkpointed: a 10M-row vector-bearing
-    * log is exactly what must NOT be pinned whole — which is why the
-    * source must be DETERMINISTIC across re-scans (see the entry
-    * points' scaladoc). `budgetDivisor` scales the budget to the
-    * caller's broadcast WIDTH: the served form broadcasts |Q| · nprobe
-    * probe rows per slice, so it passes nprobe. Slices are hash-sized
-    * only in EXPECTATION, so the slice count targets 80% of the
-    * budget: at small slice counts binomial skew routinely pushes one
-    * slice ~10% past n/nSlices, and the budget guards a memory cliff
-    * (broadcast abort at `maxResultSize`), not a soft target — the
-    * headroom makes the expected worst slice land under it. Returns
-    * None when the log fits the budget — the caller runs the
-    * single-plan form. */
+    * `held` is [[batchDispatch]]'s bounded read of the log: the row
+    * width comes from it, and it decides the size without another read
+    * when it holds the whole log or already more rows than a slice
+    * admits. Otherwise size detection is a LIMIT-probe (scan at most
+    * maxQ+1 qids), so in-budget logs — the common case — never pay a
+    * full count; the exact count (and so the slice count) is computed
+    * only on the over-budget path. Per-slice work sums to the unsliced
+    * plan's (each slice resolves only its own queries; the corpus is
+    * scanned once per slice instead of once — the price of bounding
+    * memory). Duplicate qids land in the SAME hash slice, so the
+    * per-slice prelude guard still catches them. The query source is
+    * re-scanned once per slice rather than checkpointed: a 10M-row
+    * vector-bearing log is exactly what must NOT be pinned whole —
+    * which is why the source must be DETERMINISTIC across re-scans (see
+    * the entry points' scaladoc). Slices are hash-sized only in
+    * EXPECTATION, so the slice count targets 80% of the budget: at
+    * small slice counts binomial skew routinely pushes one slice ~10%
+    * past n/nSlices, and the budget guards a memory cliff (broadcast
+    * abort at `maxResultSize`), not a soft target — the headroom makes
+    * the expected worst slice land under it. Returns None when the log
+    * fits the budget — the caller runs the single-plan form. */
   private def sliceDispatch(queries: DataFrame, qidCol: String,
-                            qtextCol: String, qvecCol: String,
-                            budgetDivisor: Int = 1)
+                            held: Array[Row], sizing: MultiStageSearch.BatchSizing,
+                            budgetDivisor: Int)
       (perSlice: DataFrame => DataFrame): Option[DataFrame] = {
-    val maxQ = resolvedBroadcastQueryMax(queries, qtextCol, qvecCol,
-      budgetDivisor)
-    val over = queries.select(col(qidCol)).limit(maxQ + 1).count() > maxQ
+    val maxQ = sizing.sliceRows.getOrElse(
+      resolvedBroadcastQueryMax(held, budgetDivisor))
+    val whole = held.length <= sizing.logLimit
+    val over = held.length > maxQ ||
+      !whole && queries.select(col(qidCol)).limit(maxQ + 1).count() > maxQ
     if (!over) return None
-    val n = queries.count()
+    val n = if (whole) held.length.toLong else queries.count()
     // 80% of the budget per slice, ROUNDED: floor would turn a tiny
-    // explicit override (maxQ=2, the c11 harness shape) into 1-query
-    // slices and double its deliberate slicing tax, while at derived
-    // scale (~millions) round vs floor is noise and the headroom holds
+    // budget (2 queries, the c11 harness shape) into 1-query slices and
+    // double its deliberate slicing tax, while at derived scale
+    // (~millions) round vs floor is noise and the headroom holds
     val target = math.max(1L, math.round(maxQ * 0.8))
     val nSlices = math.min(Int.MaxValue.toLong,
       (n + target - 1) / target).toInt
@@ -648,31 +618,24 @@ final class MultiStageSearch(
     Some(parts.reduce(_ unionByName _))
   }
 
-  /** The per-slice query budget, in ROWS. A positive
-    * `cfg.broadcastQueryMax` wins verbatim (a deployment that knows
-    * its row width); the 0 default derives it WIDTH-AWARE from the JVM
-    * heap: 1/16 of the heap in broadcast bytes, divided by the query
-    * log's MEASURED row width (one bounded probe of `size(qvec)` +
-    * `length(qtext)`, [[MultiStageSearch.probedQueryRowBytes]]) —
+  /** The per-slice query budget, in ROWS, derived WIDTH-AWARE from the
+    * JVM heap ([[MultiStageSearch.broadcastBudgetRows]]): the driver
+    * budget in broadcast bytes, divided by the query log's MEASURED row
+    * width over the rows already held
+    * ([[MultiStageSearch.queryRowBytes]]) and by `budgetDivisor` (the
+    * served form's broadcast is |Q| · nprobe probe rows, not |Q|) —
     * never a flat rows-per-GiB constant. The flat ~1 KiB/row
     * assumption this replaces was only right near dim 64: at the
     * reference's own 1024-dim embeddings a resolved row carries ~8 KiB
     * of `array<double>` alone, so the old default admitted ~8× the
     * intended broadcast bytes — reproducing the exact `maxResultSize`
     * abort the slicer exists to prevent (the round-16 10M probe
-    * measured that kill). Both forms divide by `budgetDivisor`: the
-    * served form's broadcast is |Q| · nprobe probe rows, not |Q|. */
-  private[graft] def resolvedBroadcastQueryMax(
-      queries: DataFrame, qtextCol: String, qvecCol: String,
-      budgetDivisor: Int = 1): Int = {
-    val base: Long =
-      if (cfg.broadcastQueryMax > 0) cfg.broadcastQueryMax.toLong
-      else MultiStageSearch.broadcastBudgetRows(
-        MultiStageSearch.probedQueryRowBytes(queries, qtextCol, qvecCol),
-        Runtime.getRuntime.maxMemory, maxResultBytes)
-    math.max(1L, math.min(base / math.max(1, budgetDivisor),
-      Int.MaxValue.toLong - 1)).toInt
-  }
+    * measured that kill). */
+  private def resolvedBroadcastQueryMax(held: Array[Row],
+                                        budgetDivisor: Int): Int =
+    math.min(MultiStageSearch.broadcastBudgetRows(
+      MultiStageSearch.queryRowBytes(held), Runtime.getRuntime.maxMemory,
+      maxResultBytes, budgetDivisor), Int.MaxValue.toLong - 1).toInt
 
   /** The session's `spark.driver.maxResultSize` in bytes. The aborts
     * the driver budgets guard are task results (a broadcast's collect,
@@ -684,14 +647,17 @@ final class MultiStageSearch(
   private def maxResultBytes: Long = corpus.sparkSession.sparkContext.getConf
     .getSizeAsMb("spark.driver.maxResultSize", "1g") << 20
 
-  /** The bytes of candidate rows the one-pass batch path may gather on
-    * the driver ([[MultiStageSearch.driverBudgetBytes]] of this JVM's
-    * heap and `maxResultSize`). */
-  private def driverBudgetBytes: Long =
-    MultiStageSearch.driverBudgetBytes(Runtime.getRuntime.maxMemory, maxResultBytes)
+  /** The engine's own size policy for a batch log:
+    * [[MultiStageSearch.BatchLogLimit]] queries on the one pass, whose
+    * candidates may take [[MultiStageSearch.driverBudgetBytes]] of this
+    * JVM's heap and `maxResultSize`, and slices derived from the
+    * measured row width. */
+  private def engineSizing: MultiStageSearch.BatchSizing =
+    MultiStageSearch.BatchSizing(MultiStageSearch.BatchLogLimit,
+      MultiStageSearch.driverBudgetBytes(Runtime.getRuntime.maxMemory, maxResultBytes))
 
   /** The distributed core's batch prelude, for logs over
-    * `semanticDriverBatchMax` (request-sized logs take
+    * [[MultiStageSearch.BatchLogLimit]] (request-sized logs take
     * [[batchOnDriver]]): the SEMANTIC boundary, resolved INSIDE the
     * cluster via `mapPartitions` over the (qid, text) projection —
     * SURVEY §2.7's prescribed batch shape. Only (qid, text) ever feeds
@@ -705,9 +671,8 @@ final class MultiStageSearch(
     * stream is corpus × broadcast(queries)) — so a SINGLE plan stays
     * bounded by a broadcastable query frame. Logs beyond that bound
     * need no manual knob: the public batch entry points auto-slice them
-    * BEFORE this prelude runs ([[sliceDispatch]],
-    * `cfg.broadcastQueryMax`), so every batch that reaches here is
-    * already within the broadcast budget.
+    * BEFORE this prelude runs ([[sliceDispatch]]), so every batch that
+    * reaches here is already within the broadcast budget.
     *
     * The resolution is [[MultiStageSearch.resolveQuery]], the one the
     * driver path runs (CascadeBatchSpec pins driver == distributed on
@@ -969,32 +934,23 @@ object MultiStageSearch {
     * ~2M queries per 32 GiB driver). */
   private[graft] val QueryRowOverheadBytes = 512L
 
-  /** The query log's in-broadcast row width, MEASURED: one bounded
-    * probe (LIMIT 32 over non-null-vector rows, a single tiny task) of
-    * max `size(qvec)` × 8 B (`array<double>`) + max `length(qtext)` ×
-    * 2 B (UTF-16 slack over UTF8String) + [[QueryRowOverheadBytes]].
-    * The MAX over a small sample, not the first row: vector width is
-    * constant per log but text lengths vary, and a short-text first
-    * row would under-report the width and re-admit part of the
-    * over-broadcast. Rows with a null vector are skipped (same
-    * under-report hazard); an all-null or empty log measures overhead
-    * only — correct, those rows broadcast no vector bytes. One probe
-    * per distributed batch dispatch, paid on the in-budget path too — a
-    * 32-row scan is noise next to the log's size read. */
-  private[graft] def probedQueryRowBytes(queries: DataFrame,
-      qtextCol: String, qvecCol: String): Long = {
-    val probe = queries
-      .filter(col(qvecCol).isNotNull)
-      .select(
-        coalesce(size(col(qvecCol).cast("array<double>")), lit(0)).as("d"),
-        coalesce(length(col(qtextCol).cast("string")), lit(0)).as("t"))
-      .limit(32)
-      .agg(coalesce(max(col("d")), lit(0)).as("d"),
-        coalesce(max(col("t")), lit(0)).as("t"))
-      .collect()
-    val (dims, chars) =
-      if (probe.isEmpty) (0, 0) else (probe(0).getInt(0), probe(0).getInt(1))
-    8L * dims + 2L * chars + QueryRowOverheadBytes
+  /** The query log's in-broadcast row width, MEASURED on (qid, text,
+    * vector) rows already on the driver (the batch dispatch's bounded
+    * read, at least 32 rows at [[BatchLogLimit]]): max vector length × 8
+    * B (`array<double>`) + max text length × 2 B (UTF-16 slack over
+    * UTF8String) + [[QueryRowOverheadBytes]]. The MAX over the rows,
+    * not the first row: vector width is constant per log but text
+    * lengths vary, and a short-text first row would under-report the
+    * width and re-admit part of the over-broadcast. Rows with a null
+    * vector are skipped (same under-report hazard); an all-null or
+    * empty log measures overhead only — correct, those rows broadcast
+    * no vector bytes. */
+  private[graft] def queryRowBytes(held: Array[Row]): Long = {
+    val sized = held.filterNot(_.isNullAt(2))
+    def most(width: Row => Int) = sized.map(width).maxOption.getOrElse(0)
+    8L * most(_.getSeq[Any](2).length) +
+      2L * most(r => if (r.isNullAt(1)) 0 else r.getString(1).length) +
+      QueryRowOverheadBytes
   }
 
   /** (heap, maxResultSize) → the bytes one result may bring to the
@@ -1014,8 +970,29 @@ object MultiStageSearch {
   /** (heap, maxResultSize) → per-slice query-row budget:
     * [[driverBudgetBytes]] divided by the measured row width instead of
     * an assumed one (at ~1 KiB rows this IS the old heapGiB × 65536
-    * constant). */
+    * constant), and by `budgetDivisor`, the broadcast rows per query. */
   private[graft] def broadcastBudgetRows(rowBytes: Long,
-      heapBytes: Long, maxResultBytes: Long): Long =
-    math.max(1L, driverBudgetBytes(heapBytes, maxResultBytes) / math.max(1L, rowBytes))
+      heapBytes: Long, maxResultBytes: Long, budgetDivisor: Int = 1): Long =
+    math.max(1L, driverBudgetBytes(heapBytes, maxResultBytes) /
+      math.max(1L, rowBytes) / math.max(1, budgetDivisor))
+
+  /** The largest query log a batch form answers in one pass on the
+    * driver. `plans/one_pass_batch/path_cut.md` timed both batch paths
+    * at |Q| = 64, 256 and 1,024 on a 16-partition corpus: wherever the
+    * candidates fit the driver budget the one pass took 0.24–0.33 of the
+    * distributed core's time, 1,024 included. Past that size the cost
+    * is the budget's to judge, and a larger log is an offline log, whose
+    * texts and candidates should not funnel through the driver. */
+  private[graft] val BatchLogLimit = 1024
+
+  /** A batch log's size policy: a log of at most `logLimit` queries is
+    * answered by the one pass while its candidates fit `driverBytes`;
+    * the distributed core slices a log into hash slices of `sliceRows`
+    * queries, or, when None, of the driver budget over the log's
+    * measured row width. The batch entry points run the engine's own
+    * ([[BatchLogLimit]], the measured driver budget, derived slices);
+    * specs and the c11 harness row pass theirs to put a small log on
+    * the distributed core and through the slicer. */
+  private[graft] final case class BatchSizing(logLimit: Int,
+      driverBytes: Long, sliceRows: Option[Int] = None)
 }

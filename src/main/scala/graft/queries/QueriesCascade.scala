@@ -631,14 +631,14 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     // slot) top-k ranked in one job, grouped by qid — after which the
     // shared ladder walk (gates, keep-first dedup, ran-only stage
     // numbering) and the rerank run per qid on the driver. Logs over
-    // semanticDriverBatchMax take the distributed core (windowed
+    // MultiStageSearch.BatchLogLimit take the distributed core (windowed
     // per-(qid, slot) top-k, the walk in a UDF). The batch holds one query of
     // EVERY structure (full/region-only/job-only/no-terms), so the
     // oracle — per-query gated blocks UNION ALL'd — hash-checks every
     // slot-mask shape, the per-structure gate ladders, and the
     // ran-only renumbering in one row set. CascadeBatchSpec separately
     // pins batch == per-query search row-for-row.
-    (s, d) => exactBatchCascade(s, d, graft.operators.CascadeConfig())
+    (s, d) => exactBatchCascade(s, d)
       .select(col("qid"), col("rank"), col("doc_id"), col("stage_rank"),
         round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
       .orderBy("qid", "rank"),
@@ -646,9 +646,9 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
 
   /** c9's and c11's batch: [[batchQueryMeta]]'s 4-query log (vectors
     * from the embeddings table) through `searchGatedBatch` over the
-    * exact corpus, under `cfg`. */
+    * exact corpus, under the engine's size policy or `sizing`. */
   private[graft] def exactBatchCascade(s: SparkSession, d: String,
-      cfg: graft.operators.CascadeConfig): DataFrame = {
+      sizing: Option[MultiStageSearch.BatchSizing] = None): DataFrame = {
     import s.implicits._
     val corpus = t(s, d, "documents")
       .join(t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
@@ -656,24 +656,27 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     val queries = batchQueryMeta.toDF("qid", "qtext")
       .join(t(s, d, "embeddings")
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")), "qid")
-    new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
-      .searchGatedBatch(queries, "qid", "qtext", "qvec")
+    val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
+    sizing.fold(search.searchGatedBatch(queries, "qid", "qtext", "qvec"))(
+      search.searchGatedBatch(queries, "qid", "qtext", "qvec", _))
   }
 
   private val c11 = QuerySpec("c11_cascade_batch_sliced",
-    // c9's batch THROUGH the round-16 auto-slicer: semanticDriverBatchMax
-    // = 0 sends the 4-query batch to the distributed core (the one-pass
-    // path does not slice — its log is already on the driver), and
-    // broadcastQueryMax=2 forces it into 2 hash-slice plans served
-    // sequentially, with each slice resolving only its own queries and
-    // the bounded results unioned. The oracle is c9's VERBATIM —
+    // c9's batch THROUGH the round-16 auto-slicer: a size policy with a
+    // log limit of 0 sends the 4-query batch to the distributed core
+    // (the one-pass path does not slice — its log is already on the
+    // driver), and 2-query slices force it into 2 hash-slice plans
+    // served sequentially, with each slice resolving only its own
+    // queries and the bounded results unioned. The engine chooses no
+    // such sizes for a 4-query log; the policy is passed through the
+    // engine's private seam. The oracle is c9's VERBATIM —
     // slicing must be invisible in the result — so the slicing
     // mechanism itself is DuckDB hash-checked at the harness level
     // (CascadeBatchSpec pins sliced == single-plan in-suite; the
     // round-16 10M probe pins the scale behavior; this row pins the
     // dispatch + slice-union correctness every round).
-    (s, d) => exactBatchCascade(s, d, graft.operators.CascadeConfig(
-        broadcastQueryMax = 2, semanticDriverBatchMax = 0))
+    (s, d) => exactBatchCascade(s, d, Some(MultiStageSearch.BatchSizing(
+        logLimit = 0, driverBytes = 0L, sliceRows = Some(2))))
       .select(col("qid"), col("rank"), col("doc_id"), col("stage_rank"),
         round(col("dist"), 6).as("dist"), round(col("score"), 6).as("score"))
       .orderBy("qid", "rank"),

@@ -254,12 +254,9 @@ object IndexStore {
   private val CentroidSidecar = "_centroids"
   private val PairMetaFile = "_meta.json"
 
-  /** The row counts stamped into a pair version at write time:
-    * `indexRows` = the index's row count, `nClusters` = the centroid
-    * table's. Consumers that size themselves from the pair (the
-    * [[graft.streaming.CascadeServe]] AutoCap formula) read these two
-    * longs instead of running count jobs per micro-batch — free at 2M
-    * rows, a real listing tax on a 100 TB index.
+  /** What a pair version records about itself at write time:
+    * `nClusters` = the centroid table's row count, the cell count that
+    * bounds a stamped probe budget ([[effectiveNprobe]]).
     *
     * `nprobe`, when present, is the probe budget this version's
     * recall validation PASSED at ([[graft.operators.IndexMaintenance]]
@@ -274,8 +271,7 @@ object IndexStore {
     * the committed geometry was validated at; probing above it only
     * adds recall). None on index-only versions, pre-stamp versions,
     * and pair writes outside the maintenance gates. */
-  final case class PairMeta(indexRows: Long, nClusters: Long,
-                            nprobe: Option[Int] = None)
+  final case class PairMeta(nClusters: Long, nprobe: Option[Int] = None)
 
   /** Write a new immutable (index, centroids) version: the index
     * cluster-partitioned as in [[writeVersioned]] plus the centroid
@@ -286,12 +282,12 @@ object IndexStore {
     * failed rename (a concurrent writer already published the number)
     * fails loudly rather than clobbering.
     *
-    * The version's row counts are STAMPED into a `_meta.json` sidecar
-    * before publish ([[pairMeta]]): both counts are read back from the
-    * just-written STAGING files (empty required schema — the parquet
-    * reader returns row-group counts, no payload scan), so the stamp
-    * records what was actually committed, once, at the only moment it
-    * is free — never per serving batch. */
+    * The version's cell count is STAMPED into a `_meta.json` sidecar
+    * before publish ([[pairMeta]]): it is read back from the
+    * just-written STAGING centroids (empty required schema — the
+    * parquet reader returns row-group counts, no payload scan), so the
+    * stamp records what was actually committed, once — never per
+    * serving batch. */
   def writeVersionedWithCentroids(index: DataFrame, centroids: DataFrame,
                                   root: String): Long =
     writeVersionedWithCentroids(index, centroids, root, None)
@@ -322,8 +318,8 @@ object IndexStore {
     write(index, staging)
     centroids.write.mode("overwrite").parquet(s"$staging/$CentroidSidecar")
     val (fs, p) = fsOf(spark, root)
-    // stamp the committed counts (read back from staging, not from the
-    // input plans — a heavy input plan must not recompute for a count)
+    // stamp the committed cell count (read back from staging, not from
+    // the input plan — a heavy input plan must not recompute for a count)
     val nClusters =
       spark.read.parquet(s"$staging/$CentroidSidecar").count()
     // write-side sanity bound on the stamp: a validated budget above
@@ -332,16 +328,13 @@ object IndexStore {
     // stamp would become every floored consumer's serving budget
     // (the read side clamps too, [[effectiveNprobe]], so pre-round-20
     // stamps are equally safe)
-    val meta = PairMeta(
-      spark.read.parquet(staging).count(),
-      nClusters,
-      validatedNprobe.map(n =>
-        math.min(n.toLong, math.max(1L, nClusters)).toInt))
+    val meta = PairMeta(nClusters, validatedNprobe.map(n =>
+      math.min(n.toLong, math.max(1L, nClusters)).toInt))
     val nprobeField = meta.nprobe.map(n => s""","nprobe":$n""").getOrElse("")
     val metaOut = fs.create(
       new org.apache.hadoop.fs.Path(p, s"$stagingName/$PairMetaFile"), true)
     try metaOut.write(
-      s"""{"indexRows":${meta.indexRows},"nClusters":${meta.nClusters}$nprobeField}"""
+      s"""{"nClusters":${meta.nClusters}$nprobeField}"""
         .getBytes("UTF-8"))
     finally metaOut.close()
     publishStaged(fs, p, stagingName, next, root)
@@ -411,15 +404,17 @@ object IndexStore {
 
   /** The [[PairMeta]] stamped into version `v` by
     * [[writeVersionedWithCentroids]]; None for versions written before
-    * stamping existed (consumers fall back to counting — see
-    * [[graft.streaming.CascadeServe]]). The file is this store's own
-    * two-field JSON, parsed with a fixed pattern — not a general JSON
-    * reader. A PRESENT-but-unparseable file fails loudly BY CHOICE
-    * (the store's no-silent-fallback convention, [[loadIfExists]]): it
-    * means the version directory was corrupted or hand-edited, and
-    * silently serving counts from a scan would mask that. The remedy
-    * is one command — delete the version's `_meta.json` — which
-    * restores the documented missing-meta counting fallback. */
+    * stamping existed (they serve at the configured probe budget). The
+    * file is this store's own small JSON, parsed with fixed patterns —
+    * not a general JSON reader; stamps that also carry an `indexRows`
+    * count (written before the cell count was all a stamp recorded)
+    * parse the same. A PRESENT-but-unparseable file fails loudly BY
+    * CHOICE (the store's no-silent-fallback convention,
+    * [[loadIfExists]]): it means the version directory was corrupted or
+    * hand-edited, and silently serving without its stamp would mask
+    * that. The remedy is one command — delete the version's
+    * `_meta.json` — which restores the documented missing-meta
+    * behavior. */
   def pairMeta(spark: SparkSession, root: String, version: Long)
       : Option[PairMeta] =
     pairMetaAt(spark, s"$root/v$version")
@@ -437,13 +432,13 @@ object IndexStore {
     val txt =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    val Re = """"indexRows"\s*:\s*(\d+)\s*,\s*"nClusters"\s*:\s*(\d+)""".r
+    val Re = """"nClusters"\s*:\s*(\d+)""".r
     val m = Re.findFirstMatchIn(txt).getOrElse(throw new IllegalStateException(
       s"unparseable $PairMetaFile under $dir: $txt"))
     // nprobe is optional (pre-round-19 stamps and non-maintenance
     // writes have no budget to record)
     val NpRe = """"nprobe"\s*:\s*(\d+)""".r
-    Some(PairMeta(m.group(1).toLong, m.group(2).toLong,
+    Some(PairMeta(m.group(1).toLong,
       NpRe.findFirstMatchIn(txt).map(_.group(1).toInt)))
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Ann, CascadeConfig, MultiStageSearch}
+import graft.operators.MultiStageSearch.{BatchLogLimit, BatchSizing}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -50,6 +51,23 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
   private def queriesDf = qtexts.zipWithIndex.map { case ((qid, t), i) =>
     (qid, t, Seq(0.1 * i, 0.05 * i)) // distinct query vectors
   }.toDF("qid", "qtext", "qvec")
+
+  // the size policy that sends every non-empty log to the distributed
+  // core: no log fits a limit of 0
+  private val distributedCore = BatchSizing(logLimit = 0, driverBytes = 0L)
+
+  // both batch forms under the engine's own size policy (None) or a
+  // given one
+  private def exactBatch(search: MultiStageSearch, q: DataFrame,
+      sizing: Option[BatchSizing]): DataFrame =
+    sizing.fold(search.searchGatedBatch(q, "qid", "qtext", "qvec"))(
+      search.searchGatedBatch(q, "qid", "qtext", "qvec", _))
+  private def servedBatch(search: MultiStageSearch, q: DataFrame,
+      cents: DataFrame, nprobe: Int, sizing: Option[BatchSizing]): DataFrame =
+    sizing.fold(search.searchGatedBatchServed(q, "qid", "qtext", "qvec",
+        cents, "cid", "cvec", nprobe))(
+      search.searchGatedBatchServed(q, "qid", "qtext", "qvec",
+        cents, "cid", "cvec", nprobe, _))
 
   private def identityCheck(cfg: CascadeConfig): Unit = {
     val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
@@ -170,63 +188,57 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
   }
 
   test("the distributed semantic boundary (mapPartitions) equals the driver path") {
-    // semanticDriverBatchMax = 0 forces every batch down the
-    // mapPartitions path; the default (1024) resolves this 6-query
-    // batch on the driver. Same queries, same corpus — the full output
-    // (incl. the blank query's zero rows and per-query gate ladders)
-    // must be row-identical.
-    def run(cfg: CascadeConfig) =
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec")
+    // a log limit of 0 forces every batch down the mapPartitions path;
+    // the engine's own policy resolves this 6-query batch on the
+    // driver. Same queries, same corpus — the full output (incl. the
+    // blank query's zero rows and per-query gate ladders) must be
+    // row-identical.
+    def run(sizing: Option[BatchSizing]) =
+      exactBatch(new MultiStageSearch(corpus, "doc_id", "text", "embedding"),
+          queriesDf, sizing)
         .collect().toSeq
         .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
           r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
         .sortBy(t => (t._1, t._2))
-    val driver = run(CascadeConfig())
-    val dist = run(CascadeConfig(semanticDriverBatchMax = 0))
+    val driver = run(None)
+    val dist = run(Some(distributedCore))
     assert(driver.nonEmpty && driver == dist)
-    // pinning the driver path with Int.MaxValue must not overflow the
-    // limit-probe (lim + 1)
-    assert(run(CascadeConfig(semanticDriverBatchMax = Int.MaxValue)) == driver)
     // the served batch form dispatches through the same prelude
     val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)))
       .toDF("cid", "cvec")
     val assigned = graft.operators.Ann.ivfAssign(
       corpus, "embedding", "doc_id", cents, "cid", "cvec")
-    def runServed(cfg: CascadeConfig) =
-      new MultiStageSearch(assigned, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec",
-          cents, "cid", "cvec", nprobe = 2)
+    def runServed(sizing: Option[BatchSizing]) =
+      servedBatch(new MultiStageSearch(assigned, "doc_id", "text", "embedding"),
+          queriesDf, cents, 2, sizing)
         .collect().toSeq
         .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
           r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
         .sortBy(t => (t._1, t._2))
-    assert(runServed(CascadeConfig()) ==
-      runServed(CascadeConfig(semanticDriverBatchMax = 0)))
+    assert(runServed(None) == runServed(Some(distributedCore)))
     // guards hold on the distributed path too: duplicate qids refused,
     // an all-blank batch is the typed empty
-    val search0 = new MultiStageSearch(corpus, "doc_id", "text", "embedding",
-      CascadeConfig(semanticDriverBatchMax = 0))
+    val search0 = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
     val dup = Seq((1L, "join row", Seq(0.0, 0.0)), (1L, "sort", Seq(0.0, 0.0)))
       .toDF("qid", "qtext", "qvec")
     val e = intercept[IllegalArgumentException] {
-      search0.searchGatedBatch(dup, "qid", "qtext", "qvec")
+      search0.searchGatedBatch(dup, "qid", "qtext", "qvec", distributedCore)
     }
     assert(e.getMessage.contains("duplicate"))
     val allBlank = Seq((1L, "", Seq(0.0, 0.0)), (2L, "   ", Seq(0.0, 0.0)))
       .toDF("qid", "qtext", "qvec")
-    assert(search0.searchGatedBatch(allBlank, "qid", "qtext", "qvec").isEmpty)
+    assert(search0.searchGatedBatch(allBlank, "qid", "qtext", "qvec",
+      distributedCore).isEmpty)
     // every column and the schema too: the one-pass driver tail (the
-    // default) against the distributed core (semanticDriverBatchMax = 0)
+    // engine's policy) against the distributed core
     def full(df: DataFrame) = (df.schema.map(f => (f.name, f.dataType)),
       df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(8))))
-    def both(cfg: CascadeConfig) = Seq(
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec"),
-      new MultiStageSearch(assigned, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec",
-          cents, "cid", "cvec", nprobe = 2)).map(full)
-    assert(both(CascadeConfig()) == both(CascadeConfig(semanticDriverBatchMax = 0)))
+    def both(sizing: Option[BatchSizing]) = Seq(
+      exactBatch(new MultiStageSearch(corpus, "doc_id", "text", "embedding"),
+        queriesDf, sizing),
+      servedBatch(new MultiStageSearch(assigned, "doc_id", "text", "embedding"),
+        queriesDf, cents, 2, sizing)).map(full)
+    assert(both(None) == both(Some(distributedCore)))
     // ties: two docs of identical text and embedding (ids 7 and 3) tie
     // on dist at every stage's k cut and on (score, dist) at the finalN
     // cut; both paths break them by id, in both batch forms
@@ -241,17 +253,15 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     val tq = Seq((1L, "join row", Seq(0.0, 0.0)),
       (2L, "nothing relevant here", Seq(1.0, 0.0))).toDF("qid", "qtext", "qvec")
     for ((k, n) <- Seq((1, 1), (2, 1), (2, 2))) {
-      def forms(max: Int) = {
-        val cfg = CascadeConfig(topK = k, fallbackK = k, finalN = n,
-          semanticDriverBatchMax = max)
-        Seq(new MultiStageSearch(tied, "doc_id", "text", "embedding", cfg)
-            .searchGatedBatch(tq, "qid", "qtext", "qvec"),
-          new MultiStageSearch(tiedAssigned, "doc_id", "text", "embedding", cfg)
-            .searchGatedBatchServed(tq, "qid", "qtext", "qvec",
-              tiedCents, "cid", "cvec", nprobe = 1)).map(full)
+      def forms(sizing: Option[BatchSizing]) = {
+        val cfg = CascadeConfig(topK = k, fallbackK = k, finalN = n)
+        Seq(exactBatch(new MultiStageSearch(tied, "doc_id", "text", "embedding", cfg),
+            tq, sizing),
+          servedBatch(new MultiStageSearch(tiedAssigned, "doc_id", "text", "embedding", cfg),
+            tq, tiedCents, 1, sizing)).map(full)
       }
-      val onePass = forms(CascadeConfig().semanticDriverBatchMax)
-      assert(onePass == forms(0), s"k=$k n=$n")
+      val onePass = forms(None)
+      assert(onePass == forms(Some(distributedCore)), s"k=$k n=$n")
       onePass.foreach { case (_, rows) =>
         assert(rows.filter(_.getLong(0) == 1L).map(_.getLong(1)) ==
           Seq(3L, 7L).take(math.min(k, n)), s"k=$k n=$n")
@@ -290,20 +300,21 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
     val assigned = Ann.ivfAssign(corpus, "embedding", "doc_id", cents, "cid", "cvec")
     // both batch forms, with the one pass's driver budget given in bytes
-    def forms(cfg: CascadeConfig, driverBytes: Long) = Seq(
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec", driverBytes),
-      new MultiStageSearch(assigned, "doc_id", "text", "embedding", cfg)
+    def forms(logLimit: Int, driverBytes: Long) = Seq(
+      new MultiStageSearch(corpus, "doc_id", "text", "embedding")
+        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec",
+          BatchSizing(logLimit, driverBytes)),
+      new MultiStageSearch(assigned, "doc_id", "text", "embedding")
         .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec",
-          cents, "cid", "cvec", 2, driverBytes))
+          cents, "cid", "cvec", 2, BatchSizing(logLimit, driverBytes)))
     // the one pass answers with a local relation, the distributed core
     // with a plan
     def onePass(df: DataFrame) = df.queryExecution.logical.isInstanceOf[LocalRelation]
     def rows(df: DataFrame) = df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(8)))
-    val distributed = forms(CascadeConfig(semanticDriverBatchMax = 0), Long.MaxValue)
-    val within = forms(CascadeConfig(), Long.MaxValue)
+    val distributed = forms(0, Long.MaxValue)
+    val within = forms(BatchLogLimit, Long.MaxValue)
     // one byte: the first candidate any partition keeps is over its share
-    val over = forms(CascadeConfig(), 1L)
+    val over = forms(BatchLogLimit, 1L)
     assert(distributed.forall(!onePass(_)))
     assert(within.forall(onePass))
     assert(over.forall(!onePass(_)))
@@ -314,23 +325,48 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     }
   }
 
+  test("an over-limit log is read once on the driver before its size is decided") {
+    // a scanned log (a one-partition checkpoint), so each read of it is
+    // one job; the distributed core's prelude runs its own jobs, the
+    // same in both calls below
+    val log = queriesDf.repartition(1).localCheckpoint(true)
+    val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
+    def jobs(sizing: BatchSizing) =
+      jobsOf(search.searchGatedBatch(log, "qid", "qtext", "qvec", sizing))._2
+    // a log limit of 2 holds 3 of the 6 rows: the row width comes from
+    // them, so the log is read again only by the slicer's limit-count
+    // (the derived budget is far above 6 queries) and by the prelude;
+    // a separate width probe of the log would add two jobs
+    val unsliced = jobs(BatchSizing(logLimit = 2, driverBytes = 0L))
+    assert(unsliced <= 10, s"$unsliced jobs")
+    // 2-query slices: the 3 rows held are already over a slice, so no
+    // limit-count runs; the exact count sizes 3 slices of 2 queries,
+    // each with its own prelude and materialized result
+    val sliced = jobs(BatchSizing(logLimit = 2, driverBytes = 0L,
+      sliceRows = Some(2)))
+    assert(sliced <= 35, s"$sliced jobs")
+  }
+
   test("an over-budget query log is auto-sliced; rows identical to the single-plan form") {
-    // broadcastQueryMax = 2 forces 6 queries into 3 hash slices, each
-    // served as its own sequential plan — the 10M+-log path exercised
-    // at spec scale. The union must equal the single broadcast plan
-    // row for row, including the blank query's zero rows and the
-    // per-structure gate ladders.
+    // 2-query slices force 6 queries into 3 hash slices, each served
+    // as its own sequential plan — the 10M+-log path exercised at spec
+    // scale. The union must equal the single broadcast plan row for
+    // row, including the blank query's zero rows and the per-structure
+    // gate ladders.
     val base = CascadeConfig(topK = 3, relaxThreshold = 3,
       fallbackThreshold = 6, fallbackK = 5, finalN = 4)
-    def run(cfg: CascadeConfig) =
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatch(queriesDf, "qid", "qtext", "qvec")
+    // the one pass's log limit and budget, with `sliceRows`-query slices
+    def slicing(sliceRows: Int) =
+      BatchSizing(BatchLogLimit, Long.MaxValue, Some(sliceRows))
+    def run(sizing: Option[BatchSizing]) =
+      exactBatch(new MultiStageSearch(corpus, "doc_id", "text", "embedding", base),
+          queriesDf, sizing)
         .collect().toSeq
         .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
           r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
         .sortBy(t => (t._1, t._2))
-    val one = run(base)
-    val sliced = run(base.copy(broadcastQueryMax = 2))
+    val one = run(None)
+    val sliced = run(Some(slicing(2)))
     assert(one.nonEmpty && sliced == one,
       s"sliced != single-plan\nsliced=$sliced\none=$one")
     // the served form dispatches through the same slicer
@@ -338,23 +374,22 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
     val assigned = graft.operators.Ann.ivfAssign(
       corpus, "embedding", "doc_id", cents, "cid", "cvec")
-    def runServed(cfg: CascadeConfig) =
-      new MultiStageSearch(assigned, "doc_id", "text", "embedding", cfg)
-        .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec",
-          cents, "cid", "cvec", nprobe = 2)
+    def runServed(sizing: Option[BatchSizing]) =
+      servedBatch(new MultiStageSearch(assigned, "doc_id", "text", "embedding", base),
+          queriesDf, cents, 2, sizing)
         .collect().toSeq
         .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
           r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
         .sortBy(t => (t._1, t._2))
-    val servedOne = runServed(base)
+    val servedOne = runServed(None)
     assert(servedOne.nonEmpty &&
-      runServed(base.copy(broadcastQueryMax = 2)) == servedOne)
-    // the default runs above take the one-pass path, which does not
-    // slice (its log is already on the driver), so broadcastQueryMax
-    // leaves them unchanged; the slicer itself serves the distributed
-    // core: a log over semanticDriverBatchMax is hash-sliced, one plan
-    // per slice, with the same rows
-    val distributed = base.copy(broadcastQueryMax = 2, semanticDriverBatchMax = 0)
+      runServed(Some(slicing(2))) == servedOne)
+    // the runs above take the one-pass path, which does not slice (its
+    // log is already on the driver), so the slice size leaves them
+    // unchanged; the slicer itself serves the distributed core: a log
+    // over the log limit is hash-sliced, one plan per slice, with the
+    // same rows
+    val distributed = Some(distributedCore.copy(sliceRows = Some(2)))
     assert(run(distributed) == one)
     assert(runServed(distributed) == servedOne)
     // duplicate qids hash to the SAME slice, so the per-slice prelude
@@ -363,21 +398,20 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       (1L, "sort", Seq(0.0, 0.0)), (2L, "merge", Seq(0.1, 0.0)))
       .toDF("qid", "qtext", "qvec")
     val e = intercept[IllegalArgumentException] {
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding",
-          base.copy(broadcastQueryMax = 1))
-        .searchGatedBatch(dup, "qid", "qtext", "qvec")
+      new MultiStageSearch(corpus, "doc_id", "text", "embedding", base)
+        .searchGatedBatch(dup, "qid", "qtext", "qvec", slicing(1))
     }
     assert(e.getMessage.contains("duplicate"))
     val eDist = intercept[IllegalArgumentException] {
-      new MultiStageSearch(corpus, "doc_id", "text", "embedding",
-          base.copy(broadcastQueryMax = 1, semanticDriverBatchMax = 0))
-        .searchGatedBatch(dup, "qid", "qtext", "qvec")
+      new MultiStageSearch(corpus, "doc_id", "text", "embedding", base)
+        .searchGatedBatch(dup, "qid", "qtext", "qvec",
+          distributedCore.copy(sliceRows = Some(1)))
     }
     assert(eDist.getMessage.contains("duplicate"))
   }
 
   test("the auto-slice budget is WIDTH-AWARE: derived from the log's measured row bytes, not a flat rows-per-GiB") {
-    import MultiStageSearch.{broadcastBudgetRows, probedQueryRowBytes,
+    import MultiStageSearch.{broadcastBudgetRows, queryRowBytes,
       QueryRowOverheadBytes}
     def qlog(dim: Int) = Seq(
       (1L, "looking for a join job in the row area", Array.fill(dim)(0.1)),
@@ -387,14 +421,14 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     // + the fixed overhead — at dim 64 that is the ~1 KiB regime the
     // round-16 10M probe validated
     val text1 = "looking for a join job in the row area"
-    val b64 = probedQueryRowBytes(qlog(64), "qtext", "qvec")
+    val b64 = queryRowBytes(qlog(64).collect())
     assert(b64 == 8L * 64 + 2L * text1.length + QueryRowOverheadBytes)
     assert(b64 >= 900 && b64 <= 1200, s"dim-64 row measured $b64 B")
     // at the reference's dim 1024 (KURE-v1) the vector ALONE is 8 KiB:
     // the flat ~1 KiB assumption under-measured ~8x, which is exactly
     // the round-16 weak mark — the heap default admitted ~8x the
     // intended broadcast bytes and reproduced the maxResultSize abort
-    val b1024 = probedQueryRowBytes(qlog(1024), "qtext", "qvec")
+    val b1024 = queryRowBytes(qlog(1024).collect())
     assert(b1024 == 8L * 1024 + 2L * text1.length + QueryRowOverheadBytes)
     // budget at a 32 GiB heap (maxResultSize unlimited): 2 GiB of
     // broadcast bytes / row width — ~2M queries per slice at dim 64,
@@ -415,15 +449,9 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     assert(broadcastBudgetRows(b64, 4L << 30, 1L << 30) ==
       (256L << 20) / b64)
     // the served form's divisor still applies on top of the width
-    val search = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
-    val full = search.resolvedBroadcastQueryMax(qlog(1024), "qtext", "qvec")
-    assert(search.resolvedBroadcastQueryMax(qlog(1024), "qtext", "qvec",
-      budgetDivisor = 8) == full / 8)
-    // a positive override is taken verbatim (rows), bypassing the probe
-    val overridden = new MultiStageSearch(corpus, "doc_id", "text",
-      "embedding", CascadeConfig(broadcastQueryMax = 7))
-    assert(overridden.resolvedBroadcastQueryMax(
-      qlog(1024), "qtext", "qvec") == 7)
+    val full = broadcastBudgetRows(b1024, 32L << 30, 0)
+    assert(broadcastBudgetRows(b1024, 32L << 30, 0, budgetDivisor = 8) ==
+      full / 8)
     // degenerate logs: null vectors are skipped by the probe (they
     // would under-report the width); an all-null or empty log measures
     // overhead only — those rows broadcast no vector bytes
@@ -431,10 +459,10 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       (1L, "x", null.asInstanceOf[Array[Double]]),
       (2L, "column stuff", Array.fill(1024)(0.2)))
       .toDF("qid", "qtext", "qvec")
-    assert(probedQueryRowBytes(nullFirst, "qtext", "qvec") ==
+    assert(queryRowBytes(nullFirst.collect()) ==
       8L * 1024 + 2L * "column stuff".length + QueryRowOverheadBytes)
     val empty = qlog(4).limit(0)
-    assert(probedQueryRowBytes(empty, "qtext", "qvec") ==
+    assert(queryRowBytes(empty.collect()) ==
       QueryRowOverheadBytes)
   }
 

@@ -298,12 +298,12 @@ class PlanAuditSpec extends SparkSpec {
     // the node's presence so a Spark upgrade or a refactor that
     // breaks the rule's preconditions (a changed rank function, a
     // filter pushed elsewhere) fails here, not in a bench diff.
-    // The cascade's windowed core serves logs over
-    // semanticDriverBatchMax; c9's 4-query log takes the one-pass driver
-    // tail, so the core is audited on c9's own batch (the builder c9
-    // runs) with the distributed path forced (semanticDriverBatchMax = 0).
-    val c9Core = Queries.exactBatchCascade(spark, sf,
-      graft.operators.CascadeConfig(semanticDriverBatchMax = 0))
+    // The cascade's windowed core serves logs over the batch log limit;
+    // c9's 4-query log takes the one-pass driver tail, so the core is
+    // audited on c9's own batch (the builder c9 runs) with the
+    // distributed path forced (a log limit of 0).
+    val c9Core = Queries.exactBatchCascade(spark, sf, Some(
+      graft.operators.MultiStageSearch.BatchSizing(logLimit = 0, driverBytes = 0L)))
     for ((q, df) <- ("c9_cascade_batch_gated (distributed core)", c9Core) +:
         Seq("s15_int8_batch_served", "s16_prefix_batch_served",
           "s17_pq_batch_served", "s18_ivfpq_batch_served")
