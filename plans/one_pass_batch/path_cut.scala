@@ -54,7 +54,7 @@ docs.toDF("doc_id", "text", "embedding").repartition(files)
   .write.mode("overwrite").parquet(s"$work/corpus")
 val corpus = spark.read.parquet(s"$work/corpus")
 val cents = centers.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq.toDF("cid", "cvec")
-val assigned = Ann.ivfAssign(corpus, "embedding", "doc_id", cents, "cid", "cvec")
+val assigned = Ann.ivfAssignBig(corpus, "embedding", "doc_id", cents, "cid", "cvec")
 if (layout == "slivers") {
   assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(s"$work/index")
 } else IndexStore.write(assigned, s"$work/index")

@@ -49,53 +49,11 @@ object Ann {
       .toDF("cid", "cvec")
   }
 
-  /** Assign each corpus vector to its nearest centroid (L2, ties by
-    * centroid id). The centroid table is k rows BY DEFINITION, so it is
-    * collected once at plan-build time and inlined as a literal struct
-    * array: the assignment is `array_min` over (dist, cid) structs — a
-    * pure narrow map over the corpus with NO shuffle and NO join (a
-    * window over a crossJoin would shuffle n·k rows by id). */
-  def ivfAssign(corpus: DataFrame, embCol: String, idCol: String,
-                centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame = {
-    // collectCentroids casts the vector column to array<double>, so a
-    // float parquet table and trainCentroids' double output both work.
-    val cents = collectCentroids(centroids, cidCol, cvecCol)
-    // array_min orders structs lexicographically: min distance first,
-    // then min centroid id — the deterministic tie-break for free.
-    // Degenerate rows must not assign silently: a null distance (null
-    // embedding, null element, or dim mismatch) sorts FIRST in struct
-    // order, so unguarded array_min would hand such rows cluster
-    // min-cid. Contract (same as ivfAssignBig): null embedding → null
-    // cluster_id; a non-null embedding whose distance is null (dim
-    // mismatch / null element) fails loudly.
-    val best = bestCentroid(cents, embCol)
-    corpus.withColumn("cluster_id",
-      when(col(embCol).isNull, lit(null).cast("long"))
-        .when(best.getField("d").isNull,
-          raise_error(concat(
-            lit("ivfAssign: null distance (dim mismatch or null element) for id "),
-            col(idCol).cast("string"))))
-        .otherwise(best.getField("cid")))
-  }
-
-  /** The literal-inline argmin over a collected centroid table:
-    * struct(d, cid) of the nearest centroid (L2, ties by min cid) — a
-    * pure narrow expression with NO shuffle and NO join. Shared by
-    * [[ivfAssign]] (which surfaces cid) and [[clusterAudit]] (which
-    * also needs d, and must measure it against the SAME collected
-    * snapshot the assignment used). */
-  private def bestCentroid(cents: Array[(Long, Array[Double])],
-                           embCol: String): Column =
-    array_min(array(cents.map { case (cid, v) =>
-      struct(
-        VectorFunctions.l2(col(embCol), typedlit(v.toSeq)).as("d"),
-        lit(cid).as("cid"))
-    }.toIndexedSeq: _*))
-
   /** Collect a centroid table to a driver array sorted by cid (k rows
-    * by definition) — what [[ivfAssignBig]]'s argmin and [[probeCells]]
-    * iterate, so assignment and probing break ties alike. A null
-    * vector or element fails loudly: unboxed, it would read as 0.0. */
+    * by definition): the array the assignment argmin
+    * ([[nearestCentroid]]) and the probe rule ([[probeCells]]) both
+    * rank. A null vector or element fails loudly: unboxed, it would
+    * read as 0.0. */
   private[graft] def collectCentroids(centroids: DataFrame, cidCol: String,
                                       cvecCol: String): Array[(Long, Array[Double])] = {
     val cents = centroids
@@ -123,46 +81,64 @@ object Ann {
     d
   }
 
-  /** [[ivfAssign]] for REAL centroid counts (k from hundreds to tens
-    * of thousands): the literal-inline form grows the expression tree
-    * — and Janino codegen — linearly with k (megabyte-scale generated
-    * code by k≈4096). Here the centroid table is broadcast ONCE as a
-    * plain array and the argmin runs as a tight JVM loop per row:
-    * still one narrow pass over the corpus, no shuffle, and a
-    * CONSTANT-size plan independent of k.
+  /** Assign each corpus vector to its nearest centroid: adds
+    * `cluster_id`, the cell the probe rule ranks first for the vector
+    * itself ([[nearestCentroid]]). The centroid table is collected once
+    * and broadcast as a plain array, and the argmin runs as a JVM loop
+    * per row: one narrow pass over the corpus, no shuffle, no join, and
+    * a plan whose size does not depend on k.
     *
     * This is a documented exception to the prefer-builtins rule: a SQL
-    * expression cannot reference a k×dim side input without inlining
-    * it as literals, so at real k the UDF-over-broadcast form IS the
-    * scale-correct plan. Tie-break matches [[ivfAssign]] exactly:
-    * minimum distance, then minimum centroid id (centroids iterate in
-    * ascending-cid order and only a strictly smaller distance
-    * replaces the incumbent). */
+    * expression cannot read a k×dim side input without inlining it as
+    * literals, and the literal form (`array_min` over one struct per
+    * centroid) measured slower at every k tried — sf0.1, 2,000 × dim
+    * 64, local[4] on 4 vCPUs: 83.5 vs 62.8 ms at k = 8, 1,139 vs
+    * 70.9 ms at k = 64 — as its generated code grows linearly with k.
+    *
+    * A null embedding gets a null cluster_id; a dim mismatch or a null
+    * element fails the job. */
   def ivfAssignBig(corpus: DataFrame, embCol: String, idCol: String,
-                   centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame = {
-    val cents = collectCentroids(centroids, cidCol, cvecCol)
-    val bc = corpus.sparkSession.sparkContext.broadcast(cents)
-    // null embedding → null cluster_id; mismatched dims fail loudly via
-    // l2sqStrict — the same contract ivfAssign enforces expression-side.
-    val assign = udf { (emb: Seq[Double]) =>
-      if (emb == null) Option.empty[Long]
-      else Some(nearestCentroid(bc.value, emb.toArray)._1)
+                   centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame =
+    corpus.withColumn("cluster_id", nearestColumn(corpus.sparkSession,
+      collectCentroids(centroids, cidCol, cvecCol), embCol).getField("_1"))
+
+  /** The argmin behind [[ivfAssignBig]] and [[clusterAudit]] as a
+    * column: struct(_1 = nearest cid, _2 = L2 distance to it) per row,
+    * null for a null embedding. The centroids broadcast once. */
+  private def nearestColumn(spark: org.apache.spark.sql.SparkSession,
+                            cents: Array[(Long, Array[Double])],
+                            embCol: String): Column = {
+    val bc = spark.sparkContext.broadcast(cents)
+    val nearest = udf { (emb: Seq[Double]) =>
+      if (emb == null) Option.empty[(Long, Double)]
+      else Some(nearestCentroid(bc.value, emb.toArray))
     }
-    corpus.withColumn("cluster_id", assign(col(embCol).cast("array<double>")))
+    nearest(col(embCol).cast("array<double>"))
   }
 
-  /** The tight JVM argmin shared by [[ivfAssignBig]] and
-    * [[clusterAudit]]'s bigK path: (nearest cid, SQUARED L2 to it).
-    * Ascending-cid iteration + strictly-smaller replacement = the
-    * same (min d, min cid) tie-break as [[bestCentroid]]. */
+  /** The nearest centroid to `arr` and the L2 distance to it, ranked as
+    * [[probeCells]] ranks cells: by the sqrt of the left-folded squared
+    * L2, ties to the smaller cid. Squared distances can differ where
+    * their sqrt is equal, so comparing them alone would break such a
+    * tie the other way, and a vector could then sit in a cell its own
+    * nprobe = 1 probe never reads. The sqrt is taken only when a squared
+    * distance is below the incumbent's (sqrt is monotone, so no other
+    * centroid can win), and a newcomer must be strictly nearer to win,
+    * since centroids iterate in ascending cid. Doubles compare as the
+    * probe rule's sort does (`java.lang.Double.compare`: NaN last). */
   private def nearestCentroid(cs: Array[(Long, Array[Double])],
                               arr: Array[Double]): (Long, Double) = {
+    import java.lang.Double.compare
     var bestCid = cs(0)._1
-    var bestD = Double.MaxValue
+    var bestSq = Double.NaN
+    var bestD = Double.NaN
     var i = 0
     while (i < cs.length) {
-      val d = l2sqStrict(arr, cs(i)._2)
-      if (d < bestD) { bestD = d; bestCid = cs(i)._1 }
+      val sq = l2sqStrict(arr, cs(i)._2)
+      if (compare(sq, bestSq) < 0) {
+        val d = math.sqrt(sq)
+        if (compare(d, bestD) < 0) { bestCid = cs(i)._1; bestSq = sq; bestD = d }
+      }
       i += 1
     }
     (bestCid, bestD)
@@ -552,52 +528,15 @@ object Ann {
 
   /** PQ-encode the corpus: adds `pq_codes` (array<int>, one code per
     * subspace — THE stored artifact, m small ints instead of dim
-    * floats). Codebooks inline as literal (dist, code) structs with
-    * array_min argmin per subspace — [[ivfAssign]]'s deterministic
-    * tie-break (min distance, then min code), one narrow pass, no
-    * shuffle, fully codegen'd. Plan size grows with m·kCodes·subDim
-    * literals: fine for oracle/toy codebooks; at real sizes (256 codes
-    * × 16+ subspaces) use [[pqEncodeBig]] — same Janino-blowup boundary
-    * as [[ivfAssign]] → [[ivfAssignBig]]. Null embeddings → null codes
-    * (the [[ivfAssign]] contract). */
-  def pqEncode(corpus: DataFrame, embCol: String,
-               codebooks: DataFrame): DataFrame = {
-    val cbs = collectCodebooks(codebooks)
-    val subDim = cbs(0)(0).length
-    val emb = col(embCol).cast("array<double>")
-    val codeCols = cbs.indices.map { j =>
-      val structs = array(cbs(j).zipWithIndex.map { case (cw, c) =>
-        struct(
-          VectorFunctions.l2Sq(subvec(emb, j, subDim), typedlit(cw.toSeq)).as("d"),
-          lit(c).as("c"))
-      }.toIndexedSeq: _*)
-      // null subspace distance (dim mismatch / null element) sorts
-      // FIRST in struct order — unguarded array_min would assign code
-      // 0 silently where pqEncodeBig fails loudly (l2sqStrict). Same
-      // guard, same contract, as ivfAssign.
-      val best = array_min(structs)
-      when(best.getField("d").isNull,
-        raise_error(lit(s"pqEncode: null subspace-$j distance " +
-          "(dim mismatch or null element)")))
-        .otherwise(best.getField("c"))
-    }
-    // exact-dim check: an OVER-length embedding slices clean subvectors
-    // for every subspace (no null distance to trip the guard above) yet
-    // null-poisons the fp rerank downstream — reject it here, where the
-    // artifact is built, not k results later
-    corpus.withColumn("pq_codes",
-      when(col(embCol).isNull, lit(null).cast("array<int>"))
-        .when(size(emb) =!= cbs.length * subDim,
-          raise_error(concat(lit(s"pqEncode: embedding dim "),
-            size(emb).cast("string"), lit(s" != ${cbs.length * subDim}"))))
-        .otherwise(array(codeCols: _*)))
-  }
-
-  /** [[pqEncode]] at REAL codebook sizes: codebooks broadcast once as
-    * plain arrays, the per-subspace argmin a tight JVM loop — constant
-    * plan size independent of m·kCodes (the [[ivfAssignBig]] exception,
-    * same justification). Identical codes by construction: minimum
-    * distance, then minimum code. */
+    * floats). The codebooks broadcast once as plain arrays and the
+    * per-subspace argmin is a JVM loop per row: one narrow pass, no
+    * shuffle, and a plan whose size does not depend on m·kCodes (the
+    * [[ivfAssignBig]] exception, same reason; the literal form, one
+    * `array_min` over (dist, code) structs per subspace, measured 531.5
+    * vs 71.4 ms at m = 4 × 16 codes on sf0.1). Each subspace takes the
+    * code with the smallest squared distance, ties to the smaller code.
+    * A null embedding gets null codes; a dim mismatch or a null element
+    * fails the job. */
   def pqEncodeBig(corpus: DataFrame, embCol: String,
                   codebooks: DataFrame): DataFrame = {
     val cbs = collectCodebooks(codebooks)
@@ -649,10 +588,9 @@ object Ann {
       exact = VectorFunctions.l2, exactScore = RerankL2)
   }
 
-  /** PQ rung over codes derived inline from `corpus`. Encoding is
-    * ~90% of this query (s8 serves the stored table instead); it uses
-    * [[pqEncodeBig]] because the expression encoder is too wide for
-    * whole-stage codegen (sf0.1, m=4, kCodes=16: 2.76 s vs 0.11 s). */
+  /** PQ rung over codes derived inline from `corpus` by
+    * [[pqEncodeBig]]. Encoding is ~90% of this query; s8 serves the
+    * stored table instead. */
   def pqSearch(corpus: DataFrame, embCol: String, idCol: String,
                codebooks: DataFrame, queryVec: Array[Double],
                k: Int, candMult: Int = 4): DataFrame =
@@ -660,7 +598,7 @@ object Ann {
       pqEncodeBig(corpus, embCol, codebooks), None, embCol, idCol,
       OneVector(queryVec), k, candMult)
 
-  /** PQ rung served from a stored [[pqEncode]]/[[pqEncodeBig]] table
+  /** PQ rung served from a stored [[pqEncodeBig]] table
     * (idCol, pq_codes). */
   def pqSearchEncoded(encoded: DataFrame, vectors: DataFrame,
                       embCol: String, idCol: String,
@@ -680,7 +618,7 @@ object Ann {
       Some(vectors), embCol, idCol, QueryFrame(queries, qidCol, qvecCol),
       k, candMult)
 
-  /** IVF-PQ rung over codes derived inline from an [[ivfAssign]]ed
+  /** IVF-PQ rung over codes derived inline from an [[ivfAssignBig]]ed
     * table, probing the `nprobe` clusters nearest the query. */
   def ivfPqSearch(assigned: DataFrame, embCol: String, idCol: String,
                   centroids: DataFrame, cidCol: String, cvecCol: String,
@@ -717,7 +655,7 @@ object Ann {
 
   /** IVF search: probe the `nprobe` centroids nearest to the query,
     * exact top-k inside those clusters only. `assigned` is the output
-    * of [[ivfAssign]] (ideally written partitioned by cluster_id). */
+    * of [[ivfAssignBig]] (ideally written partitioned by cluster_id). */
   def ivfSearch(assigned: DataFrame, embCol: String, idCol: String,
                 centroids: DataFrame, cidCol: String, cvecCol: String,
                 queryVec: Column, k: Int, nprobe: Int): DataFrame =
@@ -744,23 +682,15 @@ object Ann {
     * (they have no position in the space); the empty-side guard is
     * keyedDrift's, loud.
     *
-    * At real centroid counts pass `bigK = true` — the [[ivfAssignBig]]
-    * form (broadcast centroids + the shared JVM argmin, constant plan
-    * size) instead of the literal-inline argmin whose generated code
-    * grows linearly with k. Same tie-break either way, so the masses —
-    * and the JS — are identical. [[IndexMaintenance.maintain]] feeds
-    * this the index's full effective-centroid set, so it always takes
-    * the bigK path. */
+    * Assignment is [[ivfAssignBig]], whose plan size does not depend
+    * on k; [[IndexMaintenance.maintain]] feeds this the index's full
+    * effective-centroid set. */
   def embeddingDrift(a: DataFrame, b: DataFrame, embCol: String,
                      idCol: String, centroids: DataFrame,
-                     cidCol: String, cvecCol: String,
-                     bigK: Boolean = false): DataFrame = {
-    def masses(df: DataFrame) = {
-      val assigned =
-        if (bigK) ivfAssignBig(df, embCol, idCol, centroids, cidCol, cvecCol)
-        else ivfAssign(df, embCol, idCol, centroids, cidCol, cvecCol)
-      assigned.filter(col("cluster_id").isNotNull).select(col("cluster_id"))
-    }
+                     cidCol: String, cvecCol: String): DataFrame = {
+    def masses(df: DataFrame) =
+      ivfAssignBig(df, embCol, idCol, centroids, cidCol, cvecCol)
+        .filter(col("cluster_id").isNotNull).select(col("cluster_id"))
     Curation.keyedDrift(masses(a), masses(b), "cluster_id",
       opName = "embeddingDrift")
   }
@@ -780,21 +710,19 @@ object Ann {
     * Contract: empty clusters ARE reported (n = 0, null mean_intra /
     * separation); a singleton cluster whose only member is the
     * centroid itself has mean_intra = 0 → null separation (not ∞).
-    * Null-embedding rows are excluded, matching [[ivfAssign]]'s
+    * Null-embedding rows are excluded, matching [[ivfAssignBig]]'s
     * null-cluster contract.
     *
     * Scale shape: one narrow assignment scan over the corpus (the
-    * [[ivfAssign]] literal argmin — no shuffle, no join), a k-group
-    * aggregate, and a k×k separation matrix computed on the driver
-    * from the already-collected centroid table and joined back as a
-    * broadcast k-row frame. At real k pass `bigK = true` — the
-    * [[ivfAssignBig]] form (broadcast centroids + the shared JVM
-    * argmin, constant plan size) — the same s2 → s4 swap; the audit
-    * cost at 100 TB is the assignment pass an index build pays
-    * anyway. */
+    * [[ivfAssignBig]] argmin, which also yields each member's distance
+    * — no shuffle, no join, a plan whose size does not depend on k), a
+    * k-group aggregate, and a k×k separation matrix computed on the
+    * driver from the already-collected centroid table and joined back
+    * as a broadcast k-row frame. The audit cost at 100 TB is the
+    * assignment pass an index build pays anyway. */
   def clusterAudit(corpus: DataFrame, embCol: String, idCol: String,
                    centroids: DataFrame, cidCol: String,
-                   cvecCol: String, bigK: Boolean = false): DataFrame = {
+                   cvecCol: String): DataFrame = {
     val cents = collectCentroids(centroids, cidCol, cvecCol)
     require(cents.length >= 2,
       s"clusterAudit needs >= 2 centroids, got ${cents.length}")
@@ -810,31 +738,10 @@ object Ann {
     // against the SAME collected snapshot the assignment used — reuse
     // it instead of re-joining a fresh centroid scan (which could
     // disagree with the snapshot under a nondeterministic centroid
-    // frame). Null-distance guard matches ivfAssign's contract.
-    // bigK = the ivfAssignBig form (broadcast centroids + shared JVM
-    // argmin): constant plan size at real k, where inlining k literal
-    // structs blows up Janino — same s2 → s4 swap, same tie-break.
-    val withD =
-      if (bigK) {
-        val bc = spark.sparkContext.broadcast(cents)
-        val assign = udf { (emb: Seq[Double]) =>
-          val (cid, d2) = nearestCentroid(bc.value, emb.toArray)
-          (cid, math.sqrt(d2))
-        }
-        corpus.filter(col(embCol).isNotNull)
-          .select(assign(col(embCol).cast("array<double>")).as("__a"))
-          .select(col("__a._1").as("cluster_id"), col("__a._2").as("__d"))
-      } else {
-        val best = bestCentroid(cents, embCol)
-        corpus.filter(col(embCol).isNotNull)
-          .select(
-            when(best.getField("d").isNull,
-              raise_error(concat(
-                lit("clusterAudit: null distance (dim mismatch or null element) for id "),
-                col(idCol).cast("string"))))
-              .otherwise(best.getField("cid")).as("cluster_id"),
-            best.getField("d").as("__d"))
-      }
+    // frame).
+    val withD = corpus.filter(col(embCol).isNotNull)
+      .select(nearestColumn(spark, cents, embCol).as("__a"))
+      .select(col("__a._1").as("cluster_id"), col("__a._2").as("__d"))
     val intra = withD
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("__n"), avg("__d").as("__mi"))

@@ -447,7 +447,7 @@ final class MultiStageSearch(
     val probe = Ann.Probe(centroids, cidCol, cvecCol, nprobe)
     require(corpus.columns.contains("cluster_id"),
       "searchGatedBatchServed needs a cluster-assigned corpus " +
-        "(cluster_id column, from Ann.ivfAssign*)")
+        "(cluster_id column, from Ann.ivfAssignBig)")
     Ann.requireIntegralId(corpus, idCol, "searchGatedBatchServed",
       "corpus id")
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatchServed",

@@ -656,10 +656,11 @@ object Dedup {
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic near-dup
     * pairs via cluster-blocked cosine comparison. Embeddings are
-    * assigned to their nearest centroid ([[graft.operators.Ann]]'s
-    * deterministic argmin, L2 + min-cid tie-break — k-means assignment,
-    * as in the paper), and pairwise cosine similarity is computed ONLY
-    * within a cluster; pairs with cos ≥ `threshold` are semantic
+    * assigned to their nearest centroid ([[Ann.ivfAssignBig]]: L2,
+    * ranked as the IVF probe rule ranks cells, ties to the smaller cid
+    * — k-means assignment, as in the paper), and pairwise cosine
+    * similarity is computed ONLY within a cluster; pairs with
+    * cos ≥ `threshold` are semantic
     * duplicates. Cross-cluster pairs are never compared — that is the
     * SemDeDup tradeoff (recall bounded by clustering quality, measured
     * in the paper at ≥99% of dup mass for k ~ √n), and what removes
@@ -670,8 +671,8 @@ object Dedup {
     * payload once, and per-cluster work is Σ cᵢ², bounded by sizing k
     * so E[cᵢ] = n/k stays O(√n) (k grows with the corpus, exactly how
     * the IVF centroid count is sized). No stage is O(n²) and nothing
-    * corpus-sized is broadcast or collected: centroids enter through
-    * [[Ann.ivfAssign]]/[[Ann.ivfAssignBig]] (k-bounded). Downstream, a
+    * corpus-sized is broadcast or collected: the k centroids broadcast
+    * into [[Ann.ivfAssignBig]]'s argmin. Downstream, a
     * purge manifest is the existing composition: pairs →
     * [[components]] → keep min id per component (the d10 shape).
     *
@@ -680,13 +681,12 @@ object Dedup {
     * so the operator is DuckDB-oracle-checkable end to end. */
   def semanticNearDups(df: DataFrame, idCol: String, embCol: String,
                        centroids: DataFrame, cidCol: String, cvecCol: String,
-                       threshold: Double, bigK: Boolean = false): DataFrame = {
-    val assign = if (bigK) Ann.ivfAssignBig _ else Ann.ivfAssign _
+                       threshold: Double): DataFrame = {
     // lazy localCheckpoint: the assignment pass (the k-way argmin over
     // the corpus — the dominant per-row cost) feeds BOTH sides of the
     // self-join below and would execute twice (no cross-subtree CSE;
     // the duplicateSpans/frameDedupPairs shared-subtree pattern)
-    val assigned = assign(
+    val assigned = Ann.ivfAssignBig(
         df.select(col(idCol), col(embCol)), embCol, idCol,
         centroids, cidCol, cvecCol)
       .select(col("cluster_id"), col(idCol).as("doc_id"), col(embCol).as("emb"))

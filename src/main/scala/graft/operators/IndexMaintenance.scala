@@ -93,11 +93,8 @@ object IndexMaintenance {
     val current = IndexStore.loadCurrent(spark, root)
     val cents = effectiveCentroids(current, embCol)
       .localCheckpoint(true) // consumed by two assignment plan builds
-    // bigK: the effective-centroid set is the index's full k, so the
-    // literal-inline argmin (plan size linear in k) is the wrong form
-    // here — broadcast centroids + the shared JVM argmin instead.
     val js = Ann.embeddingDrift(current, fresh, embCol, idCol,
-        cents, "cid", "cvec", bigK = true)
+        cents, "cid", "cvec")
       .select("js_total").head().getDouble(0)
     if (js <= driftThreshold)
       return Report(js, retrained = false, None, None,

@@ -73,7 +73,7 @@ object Salting {
     * plain join. `hotKeys` is caller-supplied and driver-sized by
     * construction (skewAudit's bounded top-N). */
   def skewSplitJoin(big: DataFrame, small: DataFrame,
-                    bigKey: String, smallKey: String,
+                    bigSideKey: String, smallSideKey: String,
                     hotKeys: Seq[Any]): DataFrame = {
     // Drop null hot keys BEFORE building the filters: skewAudit counts
     // nulls (they ARE the key a null-heavy join explodes on) and can
@@ -86,18 +86,18 @@ object Salting {
       "hotKeys: empty (or all-null) split is a plain join — supply skewAudit's top non-null keys")
     // Reserved rename of the small side's key (the batchProbes __q*
     // pattern): with identical key names on both sides an unattached
-    // col(bigKey) === col(smallKey) resolves ambiguously and the join
+    // col(bigSideKey) === col(smallSideKey) resolves ambiguously and the join
     // throws. Renamed back (or dropped when the names collide) after.
     val sk = "__graft_sk"
-    val smallR = small.withColumnRenamed(smallKey, sk)
-    val hotBig = big.filter(col(bigKey).isin(hot: _*))
-    val coldBig = big.filter(!col(bigKey).isin(hot: _*))
+    val smallR = small.withColumnRenamed(smallSideKey, sk)
+    val hotBig = big.filter(col(bigSideKey).isin(hot: _*))
+    val coldBig = big.filter(!col(bigSideKey).isin(hot: _*))
     val hotSmall = smallR.filter(col(sk).isin(hot: _*))
     val coldSmall = smallR.filter(!col(sk).isin(hot: _*))
-    val joined = hotBig.join(broadcast(hotSmall), col(bigKey) === col(sk))
-      .unionByName(coldBig.join(coldSmall, col(bigKey) === col(sk)))
-    if (bigKey == smallKey) joined.drop(sk)
-    else joined.withColumnRenamed(sk, smallKey)
+    val joined = hotBig.join(broadcast(hotSmall), col(bigSideKey) === col(sk))
+      .unionByName(coldBig.join(coldSmall, col(bigSideKey) === col(sk)))
+    if (bigSideKey == smallSideKey) joined.drop(sk)
+    else joined.withColumnRenamed(sk, smallSideKey)
   }
 
   /** Salted broadcast-side replication for a skewed join: replicate

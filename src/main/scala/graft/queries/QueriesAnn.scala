@@ -182,7 +182,9 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
 
 
   private val s2 = QuerySpec("s2_ann_ivf",
-    // IVF ANN scale path: centroids → narrow argmin assignment →
+    // IVF ANN scale path: centroids → narrow broadcast-argmin
+    // assignment (Ann.ivfAssignBig, ranked by the probe rule: L2, ties
+    // to the smaller cid — the oracle's ORDER BY l2, cid) →
     // nprobe-pruned exact top-k (partition pruning when the assigned
     // table is stored partitionBy(cluster_id)).
     (s, d) => {
@@ -191,7 +193,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val qv = typedlit(e.filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble))
-      val assigned = Ann.ivfAssign(e, "embedding", "vec_id", cent, "cid", "cvec")
+      val assigned = Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
       Ann.ivfSearch(assigned, "embedding", "vec_id", cent, "cid", "cvec",
           qv, k = 10, nprobe = 2)
         .select(col("vec_id"), col("cluster_id"), round(col("dist"), 6).as("dist"))
@@ -765,7 +767,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       FROM cand CROSS JOIN q ORDER BY cos DESC, vec_id LIMIT 10"""
 
 
-  /** DuckDB mirror of the PQ pipeline (Ann.pqEncode + pqSearch) over a
+  /** DuckDB mirror of the PQ pipeline (Ann.pqEncodeBig + pqSearch) over a
     * `pool` relation with (vec_id, embedding): deterministic codebook
     * (subvectors of vec_id < 16, m=4 × subDim=16 over dim 64), argmin
     * encode with (dist, code) tie-break, query LUT, ADC candidate cut
@@ -853,7 +855,8 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     // survivors rerank exactly. Deterministic codebook (subvectors of
     // vec_id < 16) so encode + LUT + both cuts sit inside the DuckDB
     // oracle; production codebooks come from Ann.pqTrainCodebooks
-    // (per-subspace MLlib k-means), the same swap as s2 → s4.
+    // (per-subspace MLlib k-means), as production centroids come from
+    // Ann.trainCentroids (v14).
     // NOTE: this form times index-BUILD + search (encode is inline,
     // measured ~90% of the cost); s8 times the serving path against
     // the pre-stored code artifact.
@@ -947,7 +950,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       graft.sources.IndexStore.write(
-        Ann.ivfAssign(e, "embedding", "vec_id", cent, "cid", "cvec")
+        Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
           .select("cluster_id", "vec_id", "embedding", "label"), p)
       p
     })
@@ -1058,14 +1061,14 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       graft.sources.IndexStore.write(
-        Ann.ivfAssign(e, "embedding", "vec_id", cent, "cid", "cvec")
+        Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
           .select("cluster_id", "vec_id", "embedding"), p)
       val nxt = e.select(col("vec_id").as("nid"), col("embedding").as("nemb"))
       val delta = e.filter(col("vec_id") % 13 === 0)
         .join(nxt, col("nid") === col("vec_id") + 1, "left")
         .select(col("vec_id"), coalesce(col("nemb"), col("embedding")).as("embedding"))
       graft.sources.IndexStore.upsertReassigned(s, p,
-        Ann.ivfAssign(delta, "embedding", "vec_id", cent, "cid", "cvec")
+        Ann.ivfAssignBig(delta, "embedding", "vec_id", cent, "cid", "cvec")
           .select("cluster_id", "vec_id", "embedding"), "vec_id")
       p
     })
@@ -1346,7 +1349,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       graft.sources.IndexStore.write(
-        Ann.ivfAssign(e, "embedding", "vec_id", cent, "cid", "cvec")
+        Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
           .select("cluster_id", "vec_id", "embedding"), p)
       graft.sources.IndexStore.compactPartitioned(s, p,
         e.filter(col("vec_id") % 17 === 0)
@@ -1407,7 +1410,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       graft.sources.IndexStore.write(
         Ann.pqEncodeBig(
-            Ann.ivfAssign(e, "embedding", "vec_id", cent, "cid", "cvec"),
+            Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec"),
             "embedding", pqCodebook(s, d))
           .select("cluster_id", "vec_id", "pq_codes"), p)
       p
@@ -1444,13 +1447,14 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     // exactly. The two prunings MULTIPLY at 100 TB: read the probed
     // cluster partitions only (s2's partition pruning), and within
     // them only the m-byte codes (s6's scan shrink). Deterministic
-    // centroids (s2's) + deterministic codebook (s6's) keep the whole
-    // composition inside the DuckDB oracle.
+    // centroids (s2's, assigned by the same broadcast argmin) +
+    // deterministic codebook (s6's) keep the whole composition inside
+    // the DuckDB oracle.
     (s, d) => {
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val assigned = Ann.ivfAssign(e, "embedding", "vec_id", cent, "cid", "cvec")
+      val assigned = Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
       Ann.ivfPqSearch(assigned, "embedding", "vec_id", cent, "cid", "cvec",
           pqCodebook(s, d), pqQueryVec(s, d), k = 10, nprobe = 2, candMult = 4)
         .select(col("vec_id"), round(col("approx_dist"), 6).as("approx_dist"),
@@ -1460,10 +1464,10 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
 
 
   private val s4 = QuerySpec("s4_ann_ivf_bigk",
-    // s2 at REAL centroid count: 256 centroids assigned via the
-    // broadcast-argmin path (Ann.ivfAssignBig — constant-size plan, no
-    // per-centroid literals, no Janino blowup), nprobe=8 pruned exact
-    // top-k. Same oracle shape as s2 scaled to k=256.
+    // s2 at 256 centroids: the same broadcast argmin (Ann.ivfAssignBig,
+    // a plan whose size does not depend on k), nprobe=8 pruned exact
+    // top-k. Same oracle shape as s2 scaled to k=256: assignment and
+    // probe both ORDER BY l2, cid.
     (s, d) => {
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 256)

@@ -242,13 +242,13 @@ private[graft] trait QueriesDedup { self: QueriesShared =>
 
   private val d13 = QuerySpec("d13_semdedup",
     // SemDeDup (arXiv:2303.09540): cluster-blocked semantic near-dup.
-    // Nearest-centroid assignment (the s2 argmin, L2 + min-cid
-    // tie-break), then pairwise cosine ONLY within a cluster — the
-    // cross-cluster quadrant is never computed, which is what removes
-    // the corpus-quadratic term at 100 TB. Deterministic centroid
-    // table (vec_id < 8) so the cluster blocking itself is inside the
-    // DuckDB oracle; production centroids come from Ann.trainCentroids
-    // (MLlib k-means), same swap as s2 → s4.
+    // Nearest-centroid assignment (s2's broadcast argmin,
+    // Ann.ivfAssignBig: L2, ties to the smaller cid), then pairwise
+    // cosine ONLY within a cluster — the cross-cluster quadrant is
+    // never computed, which is what removes the corpus-quadratic term
+    // at 100 TB. Deterministic centroid table (vec_id < 8) so the
+    // cluster blocking itself is inside the DuckDB oracle; production
+    // centroids come from Ann.trainCentroids (MLlib k-means, v14).
     (s, d) => {
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)

@@ -568,7 +568,7 @@ private[graft] trait QueriesRelational { self: QueriesShared =>
     // window sort (TPC-H Q2's min-cost-supplier shape on the tables
     // this corpus has). Struct min orders lexicographically: min
     // price first, then min suppkey — the total tie-break for free
-    // (the ivfAssign trick applied to a relational query). The oracle
+    // (the struct-min argmin trick applied to a relational query). The oracle
     // replays it as the row_number form — same rows, so the
     // hash-compare doubles as an aggregate≡window equivalence proof.
     (s, d) =>

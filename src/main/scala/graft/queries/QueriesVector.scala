@@ -166,11 +166,13 @@ private[graft] trait QueriesVector { self: QueriesShared =>
 
   private val v12 = QuerySpec("v12_embedding_drift",
     // Embedding-space drift (Ann.embeddingDrift): both snapshot
-    // halves assigned to the SAME 8 fixed centroids (narrow argmin
-    // map — no shuffle), JS divergence over the two cluster-mass
-    // distributions. The vector twin of t22: tells the index operator
-    // the mass no longer matches the partitioning (re-train
-    // centroids) BEFORE v9/v11's recall eval says it after the fact.
+    // halves assigned to the SAME 8 fixed centroids (s2's narrow
+    // broadcast argmin, Ann.ivfAssignBig — no shuffle; ties to the
+    // smaller cid, as the oracle's ORDER BY l2, cid), JS divergence
+    // over the two cluster-mass distributions. The vector twin of
+    // t22: tells the index operator the mass no longer matches the
+    // partitioning (re-train centroids) BEFORE v9/v11's recall eval
+    // says it after the fact.
     // Exchange carries 8 counts per side, never vectors.
     (s, d) => {
       val e = t(s, d, "embeddings")
@@ -217,9 +219,10 @@ private[graft] trait QueriesVector { self: QueriesShared =>
     // (separation), and their Dunn-style ratio. v12 says the MASS
     // moved; this says the GEOMETRY is bad — the two reports an index
     // operator reads before spending a retrain. One narrow assignment
-    // scan + a k-group aggregate; the k×k separation matrix never
-    // leaves the driver. Same fixed 8-centroid table as v12/d13 so
-    // the assignment is inside the DuckDB oracle.
+    // scan (the Ann.ivfAssignBig argmin, which also yields each
+    // member's distance) + a k-group aggregate; the k×k separation
+    // matrix never leaves the driver. Same fixed 8-centroid table as
+    // v12/d13 so the assignment is inside the DuckDB oracle.
     (s, d) => {
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)

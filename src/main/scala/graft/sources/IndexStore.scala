@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Write is `overwrite` — atomic-enough versus the reference's
   * rm-rf-then-rebuild crash window (S3, build_vectorstore.py:22-24).
-  * When a `cluster_id` column is present (from [[graft.operators.Ann]]
-  * ivfAssign), the table is PARTITIONED BY cluster: an IVF probe then
+  * When a `cluster_id` column is present (from
+  * [[graft.operators.Ann.ivfAssignBig]]), the table is PARTITIONED BY cluster: an IVF probe then
   * prunes to nprobe directories at scan time — the columnar analogue
   * of an inverted file, and the layout that keeps a 100 TB index
   * queryable without a full scan.
@@ -507,9 +507,9 @@ object IndexStore {
     * exist is pure waste, and the same meta carries `nClusters` to
     * bound it by. Unstamped versions (and plain stores) serve at the
     * configured value unchanged. One copy of the algebra —
-    * [[graft.streaming.CascadeServe]] (streaming) and
+    * [[graft.streaming.CascadeServe]]'s sink (streaming) and
     * [[graft.operators.Ann]]'s `adoptStampedNprobe` batch opt-ins
-    * both delegate here, so the two serving families cannot drift. */
+    * both call it, so the two serving families cannot drift. */
   def effectiveNprobe(configured: Int, meta: Option[PairMeta]): Int =
     meta.flatMap(m => m.nprobe.map(s =>
         math.min(s.toLong, math.max(1L, m.nClusters)).toInt))
@@ -643,7 +643,7 @@ object IndexStore {
     * rewriting a 100 TB index per batch and rewriting the handful of
     * cluster directories the batch touches.
     *
-    * The batch must carry `cluster_id` (from Ann.ivfAssign*). Only the
+    * The batch must carry `cluster_id` (from Ann.ivfAssignBig). Only the
     * batch's distinct cluster partitions are READ (static partition
     * pruning on the load), merged new-rows-win by id, and written back
     * under `partitionOverwriteMode=dynamic`, which replaces exactly

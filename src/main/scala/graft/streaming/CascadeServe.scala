@@ -61,23 +61,13 @@ import org.apache.spark.sql.DataFrame
   */
 object CascadeServe {
 
-  /** The probe budget a micro-batch actually serves at — delegates to
-    * the ONE copy of the floor algebra ([[IndexStore.effectiveNprobe]]:
-    * stamp clamped at the version's cell count, then floored under the
-    * configured value; unstamped versions serve configured unchanged),
-    * shared with [[graft.operators.Ann]]'s batch opt-ins so streaming
-    * and batch serving cannot drift. */
-  private[graft] def effectiveNprobe(configured: Int,
-      meta: Option[IndexStore.PairMeta]): Int =
-    IndexStore.effectiveNprobe(configured, meta)
-
   /** foreachBatch body. Wire as
     * `.writeStream.option("checkpointLocation", ckpt)
     *   .foreachBatch(CascadeServe.sink(root, out, ...) _)`.
     * `nprobe` is the CONFIGURED probe budget; when the current
     * version's `_meta.json` carries a maintenance-validated budget
     * ([[IndexStore.PairMeta.nprobe]]), the sink serves at
-    * `max(configured, stamped)` — see [[effectiveNprobe]].
+    * `max(configured, stamped)` — see [[IndexStore.effectiveNprobe]].
     * `indexRoot` is a versioned [[IndexStore]] root written by
     * [[IndexStore.writeVersionedWithCentroids]]: each committed
     * version holds the cluster-assigned cascade index (doc id, text,
@@ -121,7 +111,8 @@ object CascadeServe {
     // probing more never hurts recall, and the deployment may want
     // the headroom. Re-read per batch so a maintenance flip changes
     // the effective budget at the very batch that picks it up.
-    val np = effectiveNprobe(nprobe, IndexStore.pairMeta(spark, indexRoot, version))
+    val np = IndexStore.effectiveNprobe(nprobe,
+      IndexStore.pairMeta(spark, indexRoot, version))
     val out = s"$outPath/batch=$batchId"
     new MultiStageSearch(index, idCol, textCol, embCol, cfg)
       .searchGatedBatchServed(batch, qidCol, qtextCol, qvecCol,

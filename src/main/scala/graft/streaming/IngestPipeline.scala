@@ -105,7 +105,7 @@ object IngestPipeline {
   /** The 100 TB ingest shape: same dedup gate, but the sink is
     * [[graft.sources.IndexStore.upsertPartitioned]] — survivors are
     * assigned a `cluster_id` by the caller's `assign` (e.g.
-    * [[graft.operators.Ann.ivfAssign]] against the serving centroids,
+    * [[graft.operators.Ann.ivfAssignBig]] against the serving centroids,
     * or any stable partitioner) and ONLY the affected cluster
     * partitions are read and rewritten under dynamic partition
     * overwrite. Per-batch cost ∝ batch collision footprint + affected

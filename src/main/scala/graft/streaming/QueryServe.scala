@@ -46,8 +46,8 @@ object QueryServe {
   /** IVF-pruned serving: [[serve]] with the per-batch full corpus scan
     * replaced by probe selection + an EQUI-join on `cluster_id`.
     *
-    * `assigned` is an IVF-assigned corpus ([[graft.operators.Ann]]
-    * ivfAssign/ivfAssignBig output, ideally loaded from an
+    * `assigned` is an IVF-assigned corpus
+    * ([[graft.operators.Ann.ivfAssignBig]] output, ideally loaded from an
     * [[graft.sources.IndexStore]] written partitionBy(cluster_id)).
     * Probe selection is the engine's one IVF probe rule
     * ([[graft.operators.Ann.probeCellsUdf]]): a narrow map over the

@@ -18,8 +18,8 @@ class AnnSpec extends SparkSpec {
     (0L, Array(0.0f, 0.0f)), (1L, Array(100.0f, 100.0f)))
     .toDF("cid", "cvec")
 
-  test("ivfAssign sends every vector to its true cluster, no shuffle") {
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+  test("ivfAssignBig sends every vector to its true cluster, no shuffle") {
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val out = assigned.select("vec_id", "cluster_id").as[(Long, Long)].collect()
     out.foreach { case (vid, cid) =>
       assert(cid == (if (vid < 20) 0L else 1L))
@@ -30,7 +30,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearch with nprobe=1 equals exact kNN within the query's cluster") {
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val qv = typedlit(Seq(0.05, 0.1))
     val ivf = Ann.ivfSearch(assigned, "embedding", "vec_id",
         cents, "cid", "cvec", qv, k = 5, nprobe = 1)
@@ -41,27 +41,62 @@ class AnnSpec extends SparkSpec {
   }
 
   test("both assign paths send a null embedding to a null cluster_id") {
+    // the one argmin column serves ivfAssignBig (which keeps the row,
+    // cluster_id null) and clusterAudit (which counts it nowhere)
     val withNull = corpus.unionByName(
       Seq((99L, Option.empty[Array[Float]])).toDF("vec_id", "embedding"))
-    def clusterOf99(assigned: org.apache.spark.sql.DataFrame): Option[Long] =
-      assigned.filter($"vec_id" === 99L)
-        .select("cluster_id").as[Option[Long]].head()
-    val viaLiteral = Ann.ivfAssign(withNull, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(withNull, "embedding", "vec_id",
       cents, "cid", "cvec")
-    val viaBroadcast = Ann.ivfAssignBig(withNull, "embedding", "vec_id",
-      cents, "cid", "cvec")
-    assert(clusterOf99(viaLiteral).isEmpty)
-    assert(clusterOf99(viaBroadcast).isEmpty)
+    assert(assigned.filter($"vec_id" === 99L)
+      .select("cluster_id").as[Option[Long]].head().isEmpty)
+    val audited = Ann.clusterAudit(withNull, "embedding", "vec_id",
+      cents, "cid", "cvec").select("n").as[Long].collect()
+    assert(audited.sum == 40L)
   }
 
-  test("ivfAssignBig agrees with ivfAssign and stays a narrow constant-size plan") {
-    val a1 = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
-      .select("vec_id", "cluster_id").as[(Long, Long)].collect().toMap
-    val big = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
-    val a2 = big.select("vec_id", "cluster_id").as[(Long, Long)].collect().toMap
-    assert(a1 == a2)
-    val plan = big.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+  test("an exact sqrt tie goes to the smaller cid, as the probe rule ranks it") {
+    // the squared distances differ in the last bit (4.797574104814237
+    // to cid 0, 4.797574104814236 to cid 1) but their sqrt is equal:
+    // ranking squared values would put x in cid 1, a cell its own
+    // nprobe = 1 probe (sqrt order, then cid) never reads
+    val x = Seq(0.7669492528620572, 0.9756476591850078)
+    val c0 = Array(-0.47021736764011424, -0.8318348048874582)
+    val c1 = Array(2.574431716934523, -0.26151896131716357)
+    assert(Ann.l2sqStrict(x.toArray, c0) != Ann.l2sqStrict(x.toArray, c1))
+    assert(math.sqrt(Ann.l2sqStrict(x.toArray, c0)) ==
+      math.sqrt(Ann.l2sqStrict(x.toArray, c1)))
+    val doc = Seq((5L, x)).toDF("vec_id", "embedding")
+    val tieCents = Seq((0L, c0.toSeq), (1L, c1.toSeq)).toDF("cid", "cvec")
+    val assigned = Ann.ivfAssignBig(doc, "embedding", "vec_id",
+      tieCents, "cid", "cvec")
+    assert(assigned.select("cluster_id").as[Long].collect().toSeq == Seq(0L))
+    val found = Ann.ivfSearch(assigned, "embedding", "vec_id",
+        tieCents, "cid", "cvec", typedlit(x), k = 1, nprobe = 1)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(found == Seq(5L))
+    val audit = Ann.clusterAudit(doc, "embedding", "vec_id",
+        tieCents, "cid", "cvec")
+      .select("cluster_id", "n").as[(Long, Long)].collect().toMap
+    assert(audit == Map(0L -> 1L, 1L -> 0L))
+  }
+
+  test("a null element fails the job in ivfAssignBig, pqEncodeBig and clusterAudit") {
+    // an unboxed null would read as 0.0 and assign silently; the
+    // broadcast argmins refuse it in Spark's UDF input conversion
+    val withNullElem = Seq((1L, Seq[java.lang.Double](0.5, null)))
+      .toDF("vec_id", "embedding")
+    def failsInUdf(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(e.getMessage.contains("FAILED_EXECUTE_UDF"), s"unexpected: ${e.getMessage}")
+    }
+    failsInUdf(Ann.ivfAssignBig(withNullElem, "embedding", "vec_id",
+      cents, "cid", "cvec").collect())
+    failsInUdf(Ann.clusterAudit(withNullElem, "embedding", "vec_id",
+      cents, "cid", "cvec").collect())
+    val cb = Seq((0, 0L, Seq(0.0)), (0, 1L, Seq(1.0)),
+        (1, 0L, Seq(0.0)), (1, 1L, Seq(1.0)))
+      .toDF("sub_idx", "code", "subvec")
+    failsInUdf(Ann.pqEncodeBig(withNullElem, "embedding", cb).collect())
   }
 
   test("ivfAssignBig at k=256 centroids: correct argmin, no literal blowup") {
@@ -95,7 +130,7 @@ class AnnSpec extends SparkSpec {
 
   test("ivfSearchStore scans only the probed cluster partitions") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_store_").toString
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
     val res = Ann.ivfSearchStore(spark, dir, "embedding", "vec_id",
@@ -115,7 +150,7 @@ class AnnSpec extends SparkSpec {
 
   test("ivfSearchStoreAdaptive: probe count covers the candidate target, cap binds, result = fixed-nprobe twin") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_adapt_").toString
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
     val sizes = Ann.clusterSizes(spark, dir)
@@ -151,7 +186,7 @@ class AnnSpec extends SparkSpec {
     // one cluster UNPROBED — pruning must be visible, not vacuous
     val cents3 = Seq((0L, Array(0.0f, 0.0f)), (1L, Array(100.0f, 100.0f)),
       (2L, Array(-100.0f, -100.0f))).toDF("cid", "cvec")
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents3, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents3, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qs = Seq((900L, Array(0.05f, 0.1f)), (901L, Array(100.0f, 100.5f)))
       .toDF("qid", "qv")
@@ -188,7 +223,7 @@ class AnnSpec extends SparkSpec {
     // budget the committed geometry was validated at, not the stale
     // config. Opt-out (the default) keeps configured-budget semantics.
     val base = java.nio.file.Files.createTempDirectory("ivf_floor_").toString
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     val stampedRoot = s"$base/stamped"
     val plainRoot = s"$base/plain"
@@ -235,7 +270,7 @@ class AnnSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf_store_f_").toString
     // give every vector a label so the predicate has survivors + victims
     val labeled = corpus.withColumn("label", (col("vec_id") % 3).cast("int"))
-    val assigned = Ann.ivfAssign(labeled, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(labeled, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
     val res = Ann.ivfSearchStoreWhere(spark, dir, "embedding", "vec_id",
@@ -260,7 +295,7 @@ class AnnSpec extends SparkSpec {
 
   test("ivfSearchStoreExcluding: tombstoned ids never surface, cut exact over live rows") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_store_t_").toString
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
     // delete every 3rd vector — including some of the query's nearest
@@ -288,7 +323,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearch with nprobe = all clusters equals global exact kNN") {
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val qv = typedlit(Seq(50.0, 50.0))
     val ivf = Ann.ivfSearch(assigned, "embedding", "vec_id",
         cents, "cid", "cvec", qv, k = 8, nprobe = 2)
@@ -314,7 +349,7 @@ class AnnSpec extends SparkSpec {
     import java.sql.Timestamp
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val (cents, corpus) = (tieCents, tieCorpus)
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val dir = java.nio.file.Files.createTempDirectory("ivf_tie_").toString
     graft.sources.IndexStore.write(assigned, dir)
     val sizes = Ann.clusterSizes(spark, dir)
@@ -394,7 +429,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchBatch agrees with per-query ivfSearch") {
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val queries = Seq(
       (100L, Array(0.05, 0.1)), (101L, Array(100.2, 100.1)),
       (102L, Array(50.0, 50.0)))
@@ -436,7 +471,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchBatch survives a query vector column named like the corpus's") {
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val q = Seq((0L, Array(0.3, 0.4)), (1L, Array(99.0, 101.0)))
     val colliding = Ann.ivfSearchBatch(assigned, "embedding", "vec_id",
         cents, "cid", "cvec", q.toDF("qid", "embedding"), "qid", "embedding",
@@ -458,55 +493,41 @@ class AnnSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
   }
 
-  test("pqEncode and pqEncodeBig produce identical codes from trained codebooks") {
-    val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", dim = 8, m = 4,
-      kCodes = 8, seed = 5L)
-    val small = Ann.pqEncode(pqCorpus, "embedding", cb)
-      .select("vec_id", "pq_codes").as[(Long, Seq[Int])].collect().toMap
-    val big = Ann.pqEncodeBig(pqCorpus, "embedding", cb)
-      .select("vec_id", "pq_codes").as[(Long, Seq[Int])].collect().toMap
-    assert(small == big)
-    assert(small.values.forall(_.length == 4))
-    // encode is a narrow map — no shuffle in either path
-    val plan = Ann.pqEncode(pqCorpus, "embedding", cb)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
-  }
-
-  test("pqEncode rejects a codebook with gapped codes, keeps null embeddings null") {
+  test("pqEncodeBig rejects a codebook with gapped codes, keeps null embeddings null") {
     val gapped = Seq((0, 0L, Seq(0.0, 0.0)), (0, 2L, Seq(1.0, 1.0)))
       .toDF("sub_idx", "code", "subvec")
     val df = Seq((1L, Array(0.1, 0.2))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
-      Ann.pqEncode(df, "embedding", gapped)
+      Ann.pqEncodeBig(df, "embedding", gapped)
     }
     val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", 8, 4, 4)
     val withNull = pqCorpus.unionByName(
       Seq((999L, null: Array[Double])).toDF("vec_id", "embedding"))
-    val codes = Ann.pqEncode(withNull, "embedding", cb)
-      .filter($"vec_id" === 999L).select("pq_codes").collect()
+    val encoded = Ann.pqEncodeBig(withNull, "embedding", cb)
+    val codes = encoded.filter($"vec_id" === 999L).select("pq_codes").collect()
     assert(codes.length == 1 && codes(0).isNullAt(0))
+    assert(encoded.filter($"vec_id" =!= 999L).select("pq_codes").as[Seq[Int]]
+      .collect().forall(_.length == 4))
+    // encode is a narrow map — no shuffle
+    val plan = encoded.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
   }
 
-  test("pqEncode fails loudly on a dim-mismatched embedding (no silent code 0)") {
+  test("pqEncodeBig fails loudly on a dim-mismatched embedding (no silent code 0)") {
     val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", 8, 4, 4)
-    // under-length: a subspace slice comes up short → null distance
+    // under-length: the exact-dim check refuses it before any slice
     val short = Seq((7L, Array(0.1, 0.2, 0.3))).toDF("vec_id", "embedding")
     val e = intercept[Exception] {
-      Ann.pqEncode(short, "embedding", cb).collect()
+      Ann.pqEncodeBig(short, "embedding", cb).collect()
     }
-    assert(e.getMessage.contains("pqEncode"), s"unexpected: ${e.getMessage}")
+    assert(e.getMessage.contains("pqEncodeBig"), s"unexpected: ${e.getMessage}")
     // over-length: every slice is clean, only the exact-dim check can
     // catch it (it would otherwise null-poison the fp rerank)
     val long = Seq((8L, Array.fill(16)(0.5))).toDF("vec_id", "embedding")
     val e2 = intercept[Exception] {
-      Ann.pqEncode(long, "embedding", cb).collect()
-    }
-    assert(e2.getMessage.contains("pqEncode"), s"unexpected: ${e2.getMessage}")
-    val e3 = intercept[Exception] {
       Ann.pqEncodeBig(long, "embedding", cb).collect()
     }
-    assert(e3.getMessage.contains("pqEncodeBig"), s"unexpected: ${e3.getMessage}")
+    assert(e2.getMessage.contains("pqEncodeBig"), s"unexpected: ${e2.getMessage}")
   }
 
   test("pqSearch and pqSearchEncoded never surface a null-embedding row") {
@@ -536,7 +557,7 @@ class AnnSpec extends SparkSpec {
   test("ivfPqSearch rejects a degenerate nprobe loudly") {
     val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", 8, 4, 4)
     val cents = Ann.trainCentroids(pqCorpus, "embedding", k = 4, seed = 3L)
-    val assigned = Ann.ivfAssign(pqCorpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(pqCorpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     intercept[IllegalArgumentException] {
       Ann.ivfPqSearch(assigned, "embedding", "vec_id", cents, "cid", "cvec",
@@ -627,7 +648,7 @@ class AnnSpec extends SparkSpec {
     val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", dim = 8, m = 4,
       kCodes = 16, seed = 11L)
     val cents = Ann.trainCentroids(pqCorpus, "embedding", k = 4, seed = 3L)
-    val assigned = Ann.ivfAssign(pqCorpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(pqCorpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     val qv = pqCorpus.filter($"vec_id" === 1L).select("embedding")
       .as[Seq[Double]].head().toArray
@@ -685,7 +706,7 @@ class AnnSpec extends SparkSpec {
     val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", dim = 8, m = 4,
       kCodes = 16, seed = 11L)
     val cents = Ann.trainCentroids(pqCorpus, "embedding", k = 4, seed = 3L)
-    val assigned = Ann.ivfAssign(pqCorpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(pqCorpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     val all = pqCorpus.select("vec_id", "embedding")
       .as[(Long, Seq[Double])].collect()
@@ -714,7 +735,7 @@ class AnnSpec extends SparkSpec {
     val cb = Ann.pqTrainCodebooks(pqCorpus, "embedding", dim = 8, m = 4,
       kCodes = 16, seed = 11L)
     val cents = Ann.trainCentroids(pqCorpus, "embedding", k = 4, seed = 3L)
-    val assigned = Ann.ivfAssign(pqCorpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(pqCorpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     val enc = Ann.pqEncodeBig(assigned, "embedding", cb)
       .select("vec_id", "pq_codes", "cluster_id")
@@ -747,7 +768,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchBatch with nprobe = all clusters equals exact batch kNN") {
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val queries = Seq((0L, Array(0.3, 0.4)), (1L, Array(99.0, 101.0)))
       .toDF("qid", "qv")
     val ivf = Ann.ivfSearchBatch(assigned, "embedding", "vec_id",
@@ -809,27 +830,6 @@ class AnnSpec extends SparkSpec {
       (2L, 0L, None, c2MinInter, None)))
   }
 
-  test("clusterAudit bigK form is row-identical to the literal-argmin form") {
-    val vecs = Seq(
-      (0L, Array(1.0f, 0.0f)), (1L, Array(-1.0f, 0.0f)),
-      (2L, Array(10.0f, 0.0f)), (3L, Array(5.0f, 0.1f))).toDF("vec_id", "embedding")
-    val cent3 = Seq(
-      (0L, Array(0.0f, 0.0f)), (1L, Array(10.0f, 0.0f)),
-      (2L, Array(100.0f, 100.0f))).toDF("cid", "cvec")
-    def rows(bigK: Boolean) =
-      Ann.clusterAudit(vecs, "embedding", "vec_id", cent3, "cid", "cvec", bigK = bigK)
-        .orderBy("cluster_id")
-        .as[(Long, Long, Option[Double], Double, Option[Double])]
-        .collect().toSeq
-    assert(rows(bigK = true) == rows(bigK = false))
-    // the bigK plan must not inline per-centroid literal structs
-    val bigPlan = Ann.clusterAudit(vecs, "embedding", "vec_id",
-        cent3, "cid", "cvec", bigK = true)
-      .queryExecution.executedPlan.toString
-    assert(!bigPlan.contains("vector_l2sq"),
-      s"bigK form must use the broadcast JVM argmin, not inlined literals:\n$bigPlan")
-  }
-
   test("clusterAudit: loud guard on a single centroid; no sort-merge join in the plan") {
     val e = intercept[IllegalArgumentException] {
       Ann.clusterAudit(corpus, "embedding", "vec_id",
@@ -840,6 +840,9 @@ class AnnSpec extends SparkSpec {
         cents, "cid", "cvec")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), s"non-broadcast join in:\n$plan")
+    // the argmin is the broadcast JVM loop, not per-centroid literals
+    assert(!plan.contains("vector_l2sq"),
+      s"clusterAudit must use the broadcast argmin, not inlined literals:\n$plan")
   }
 
   // ---- binary (sign) quantization ----
@@ -1269,7 +1272,7 @@ class AnnSpec extends SparkSpec {
       val centDf = centRows.toDF("cid", "cvec")
       val qv = rows.head._2.map(_.toDouble)
       val k = 3
-      val assigned = Ann.ivfAssign(df, "embedding", "vec_id",
+      val assigned = Ann.ivfAssignBig(df, "embedding", "vec_id",
         centDf, "cid", "cvec")
       // every assignment is the scala-side argmin (L2, ties min cid)
       val gotAssign = assigned.select("vec_id", "cluster_id")
@@ -1305,7 +1308,7 @@ class AnnSpec extends SparkSpec {
     val corpus = (blob ++ right ++ up).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 0.0)),
       (2L, Array(0.0, 10.0))).toDF("cid", "cvec")
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     val (newIdx, newCents) = Ann.splitFatClusters(assigned, "embedding",
       "vec_id", cents, "cid", "cvec", maxRows = 100)
@@ -1340,7 +1343,7 @@ class AnnSpec extends SparkSpec {
     // local refinement semantics: each member sits at the argmin over
     // ITS OLD cell's sub-centroids (re-derived independently here)
     val subCents = newCents.filter(col("cid") >= 3L)
-    val rederived = Ann.ivfAssign(blob.toDF("vec_id", "embedding"),
+    val rederived = Ann.ivfAssignBig(blob.toDF("vec_id", "embedding"),
         "embedding", "vec_id", subCents, "cid", "cvec")
       .select(col("vec_id"), col("cluster_id").cast("long"))
       .as[(Long, Long)].collect().toMap
@@ -1393,7 +1396,7 @@ class AnnSpec extends SparkSpec {
     val corpus = (a ++ b ++ c).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 0.0)),
       (2L, Array(7.1, 0.0)), (3L, Array(0.0, 50.0))).toDF("cid", "cvec")
-    val assigned = Ann.ivfAssign(corpus, "embedding", "vec_id",
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id",
         cents, "cid", "cvec")
       .withColumn("cluster_id", col("cluster_id").cast("long"))
       .unionByName(Seq(999L).toDF("vec_id")
@@ -1425,7 +1428,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id"), col("cluster_id").cast("long"))
       .as[(Long, Long)].collect().toMap
     assert(moved.values.forall(_ == 1L), moved.toString)
-    val rederived = Ann.ivfAssign(c.toDF("vec_id", "embedding"),
+    val rederived = Ann.ivfAssignBig(c.toDF("vec_id", "embedding"),
         "embedding", "vec_id",
         mergedCents, "cid", "cvec")
       .select(col("vec_id"), col("cluster_id").cast("long"))
@@ -1465,7 +1468,7 @@ class AnnSpec extends SparkSpec {
         .toDF("vec_id", "embedding")
       val cents = rows.take(k).zipWithIndex
         .map { case (v, i) => (i.toLong, v.toArray) }.toDF("cid", "cvec")
-      val assigned = Ann.ivfAssign(df, "embedding", "vec_id",
+      val assigned = Ann.ivfAssignBig(df, "embedding", "vec_id",
         cents, "cid", "cvec")
       val before = assigned
         .select(col("vec_id"), col("cluster_id").cast("long"))
@@ -1512,7 +1515,7 @@ class AnnSpec extends SparkSpec {
         .toDF("vec_id", "embedding")
       val cents = rows.take(k).zipWithIndex
         .map { case (v, i) => (i.toLong, v.toArray) }.toDF("cid", "cvec")
-      val assigned = Ann.ivfAssign(df, "embedding", "vec_id",
+      val assigned = Ann.ivfAssignBig(df, "embedding", "vec_id",
         cents, "cid", "cvec")
       val before = assigned
         .select(col("vec_id"), col("cluster_id").cast("long"))
@@ -1540,7 +1543,7 @@ class AnnSpec extends SparkSpec {
         // survivor members never move; thin members land at the global
         // argmin over the survivor table (re-derived independently)
         val moved = after.filter { case (id, _) => thin.contains(before(id)) }
-        val rederivedAll = Ann.ivfAssign(df, "embedding", "vec_id",
+        val rederivedAll = Ann.ivfAssignBig(df, "embedding", "vec_id",
             nCents, "cid", "cvec")
           .select(col("vec_id"), col("cluster_id").cast("long"))
           .as[(Long, Long)].collect().toMap

@@ -129,7 +129,7 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     // PRUNES (nprobe=2 of 3) and one that covers everything (nprobe=3)
     val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
       (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
-    val assigned = graft.operators.Ann.ivfAssign(
+    val assigned = graft.operators.Ann.ivfAssignBig(
       corpus, "embedding", "doc_id", cents, "cid", "cvec")
     val centArr = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
       (2L, Array(0.0, 6.0)))
@@ -206,7 +206,7 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     // the served batch form dispatches through the same prelude
     val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)))
       .toDF("cid", "cvec")
-    val assigned = graft.operators.Ann.ivfAssign(
+    val assigned = graft.operators.Ann.ivfAssignBig(
       corpus, "embedding", "doc_id", cents, "cid", "cvec")
     def runServed(sizing: Option[BatchSizing]) =
       servedBatch(new MultiStageSearch(assigned, "doc_id", "text", "embedding"),
@@ -248,7 +248,7 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       .toDF("doc_id", "text", "embedding")
     val tiedCents = Seq((0L, Array(1.0, 0.0)), (1L, Array(9.0, 9.0)))
       .toDF("cid", "cvec")
-    val tiedAssigned = Ann.ivfAssign(tied, "embedding", "doc_id",
+    val tiedAssigned = Ann.ivfAssignBig(tied, "embedding", "doc_id",
       tiedCents, "cid", "cvec")
     val tq = Seq((1L, "join row", Seq(0.0, 0.0)),
       (2L, "nothing relevant here", Seq(1.0, 0.0))).toDF("qid", "qtext", "qvec")
@@ -272,7 +272,7 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
   test("a request-sized log is one pass: served ≤ 3 jobs, exact ≤ 2, the result is local") {
     val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
       (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
-    val assigned = Ann.ivfAssign(corpus, "embedding", "doc_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "doc_id", cents, "cid", "cvec")
     val exact = new MultiStageSearch(corpus, "doc_id", "text", "embedding")
     val served = new MultiStageSearch(assigned, "doc_id", "text", "embedding")
     def runServed(q: DataFrame) =
@@ -298,7 +298,7 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
   test("the one pass gathers candidates on the driver only within its budget; over it, the distributed core") {
     val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
       (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
-    val assigned = Ann.ivfAssign(corpus, "embedding", "doc_id", cents, "cid", "cvec")
+    val assigned = Ann.ivfAssignBig(corpus, "embedding", "doc_id", cents, "cid", "cvec")
     // both batch forms, with the one pass's driver budget given in bytes
     def forms(logLimit: Int, driverBytes: Long) = Seq(
       new MultiStageSearch(corpus, "doc_id", "text", "embedding")
@@ -372,7 +372,7 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
     // the served form dispatches through the same slicer
     val cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(3.0, 0.0)),
       (2L, Array(0.0, 6.0))).toDF("cid", "cvec")
-    val assigned = graft.operators.Ann.ivfAssign(
+    val assigned = graft.operators.Ann.ivfAssignBig(
       corpus, "embedding", "doc_id", cents, "cid", "cvec")
     def runServed(sizing: Option[BatchSizing]) =
       servedBatch(new MultiStageSearch(assigned, "doc_id", "text", "embedding", base),

@@ -33,7 +33,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
   private def setup(): (String, String) = {
     val base = Files.createTempDirectory("graft_cserve_").toString
     val root = s"$base/index"
-    val assigned = Ann.ivfAssign(corpusRows.toDF("doc_id", "text", "embedding"),
+    val assigned = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec")
     IndexStore.writeVersionedWithCentroids(assigned, cents, root)
     (root, s"$base/out")
@@ -87,7 +87,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
       .select("doc_id").as[Long].collect().toSet
     assert(before.contains(0L)) // doc 0 is the top match in v1
     // rebuild: doc 0 retired from the corpus, committed as v2
-    val v2 = Ann.ivfAssign(corpusRows.filterNot(_._1 == 0L)
+    val v2 = Ann.ivfAssignBig(corpusRows.filterNot(_._1 == 0L)
         .toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec")
     IndexStore.writeVersionedWithCentroids(v2, cents, root)
@@ -111,7 +111,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
     // makes batch 1 read index AND centroids from v2 together.
     val cents2 = Seq((10L, Array(0.05, 0.0)), (11L, Array(4.0, 2.5)))
       .toDF("cid", "cvec")
-    val v2 = Ann.ivfAssign(corpusRows.toDF("doc_id", "text", "embedding"),
+    val v2 = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents2, "cid", "cvec")
     IndexStore.writeVersionedWithCentroids(v2, cents2, root)
     sink(qs.toDF("qid", "qtext", "qvec"), 1L)
@@ -201,7 +201,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
     // centroid count; the index is not read again (counting it cost
     // three jobs more)
     val root = Files.createTempDirectory("graft_commit_jobs").toString
-    val assigned = Ann.ivfAssign(corpusRows.toDF("doc_id", "text", "embedding"),
+    val assigned = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec").localCheckpoint(true)
     val (_, jobs) = jobsOf(
       IndexStore.writeVersionedWithCentroids(assigned, cents, root))
@@ -243,19 +243,19 @@ class CascadeServeSpec extends SparkSpec with JobCount {
     // corrupted `nprobe: 100000` meta must serve at nClusters, not at
     // the stamp: probing more cells than exist is pure waste)
     import IndexStore.PairMeta
-    assert(CascadeServe.effectiveNprobe(4, Some(PairMeta(32, Some(8)))) == 8)
-    assert(CascadeServe.effectiveNprobe(16, Some(PairMeta(32, Some(8)))) == 16)
-    assert(CascadeServe.effectiveNprobe(4, Some(PairMeta(32, None))) == 4)
-    assert(CascadeServe.effectiveNprobe(4, None) == 4)
+    assert(IndexStore.effectiveNprobe(4, Some(PairMeta(32, Some(8)))) == 8)
+    assert(IndexStore.effectiveNprobe(16, Some(PairMeta(32, Some(8)))) == 16)
+    assert(IndexStore.effectiveNprobe(4, Some(PairMeta(32, None))) == 4)
+    assert(IndexStore.effectiveNprobe(4, None) == 4)
     // over-stamped meta: clamped to the 32 cells that exist
-    assert(CascadeServe.effectiveNprobe(1, Some(PairMeta(32, Some(100000)))) == 32)
+    assert(IndexStore.effectiveNprobe(1, Some(PairMeta(32, Some(100000)))) == 32)
     // clamped stamp below the configured value: configured wins
-    assert(CascadeServe.effectiveNprobe(4, Some(PairMeta(2, Some(8)))) == 4)
+    assert(IndexStore.effectiveNprobe(4, Some(PairMeta(2, Some(8)))) == 4)
     // end to end: one root stamped at nprobe 3 served with a config of
     // 1 must equal the UNstamped root served at 3 — the sink adopted
     // the committed geometry's validated budget, not the stale config
     val base = Files.createTempDirectory("graft_cs_np").toString
-    val assigned = Ann.ivfAssign(corpusRows.toDF("doc_id", "text", "embedding"),
+    val assigned = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec")
     val stampedRoot = s"$base/stamped"
     val plainRoot = s"$base/plain"

@@ -374,12 +374,6 @@ class DedupSpec extends SparkSpec {
         cents, "cid", "cvec", threshold)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(got == expected)
-    // the broadcast-argmin assignment path (real centroid counts)
-    // produces the identical pair set
-    val gotBig = Dedup.semanticNearDups(df, "vec_id", "emb",
-        cents, "cid", "cvec", threshold, bigK = true)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(gotBig == expected)
   }
 
   test("semanticNearDups plan is cluster-keyed: no cartesian, no corpus broadcast") {

@@ -156,7 +156,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       .toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_rebal").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val queries = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 10.0)))
       .toDF("qid", "qv")
@@ -206,7 +206,7 @@ class IndexMaintenanceSpec extends SparkSpec {
                       tag: String): String = {
       val root = Files.createTempDirectory(s"graft_loop_$tag").toString + "/idx"
       IndexStore.writeVersionedWithCentroids(
-        Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+        Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
         cents, root)
       root
     }
@@ -303,7 +303,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       .toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_adaptnp").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val q = Seq((0L, Array(2.5, 0.0))).toDF("qid", "qv")
     // without adaptation: the gate vetoes, the store is unchanged, and
@@ -370,7 +370,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       .toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_dblveto").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val q = Seq((0L, Array(2.5, 0.0))).toDF("qid", "qv")
     val loop = IndexMaintenance.rebalanceUntilBalanced(spark, root,
@@ -401,7 +401,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       (2L, Array(4.1, 0.0))).toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_compact").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val queries = Seq((0L, Array(0.1, 0.0)), (1L, Array(10.0, 0.0)))
       .toDF("qid", "qv")
@@ -476,7 +476,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       .toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_loop_compact").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val queries = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 10.0)))
       .toDF("qid", "qv")
@@ -514,7 +514,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       (2L, Array(10.6, 10.0))).toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_rightsize").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val queries = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 10.0)))
       .toDF("qid", "qv")
@@ -560,7 +560,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       (2L, Array(10.0, 10.0))).toDF("cid", "cvec")
     val root = Files.createTempDirectory("graft_rightsize2").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
-      Ann.ivfAssign(docs, "embedding", "vec_id", cents, "cid", "cvec"),
+      Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
     val queries = Seq((0L, Array(0.45, 0.0)), (1L, Array(10.0, 10.0)))
       .toDF("qid", "qv")

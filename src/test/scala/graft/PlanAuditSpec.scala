@@ -235,7 +235,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(scans == 1, s"t26 must read documents exactly once, saw $scans scans:\n$plan")
   }
 
-  test("v12 embedding drift: native narrow assignment; only cluster counts shuffle") {
+  test("v12 embedding drift: broadcast narrow assignment; only cluster counts shuffle") {
     // the final drift plan is checkpoint-truncated (keyedDrift
     // materializes the joined counts), so the scale claims are pinned
     // on the stage that carries them: the per-snapshot assignment +
@@ -243,12 +243,12 @@ class PlanAuditSpec extends SparkSpec {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val cent = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val assigned = graft.operators.Ann.ivfAssign(
+    val assigned = graft.operators.Ann.ivfAssignBig(
       e.filter(col("vec_id") % 2 === 0), "embedding", "vec_id",
       cent, "cid", "cvec")
     val aPlan = assigned.queryExecution.executedPlan.toString
-    assert(aPlan.contains("vector_l2sq"),
-      s"assignment argmin must use the native codegen distance:\n$aPlan")
+    assert(!aPlan.contains("vector_l2sq"),
+      s"assignment argmin must be the broadcast loop, not inlined literals:\n$aPlan")
     assert(!aPlan.contains("Exchange"),
       s"assignment must be a narrow map (no shuffle, no join):\n$aPlan")
     val counts = assigned.filter(col("cluster_id").isNotNull)

@@ -104,7 +104,7 @@ class SaltingSpec extends SparkSpec {
   }
 
   test("skewSplitJoin: identical key names on both sides resolve (reserved rename)") {
-    // col(bigKey) === col(smallKey) with the SAME name used to throw
+    // col(bigSideKey) === col(smallSideKey) with the SAME name used to throw
     // AnalysisException (ambiguous reference); the operator now renames
     // the small side's key to a reserved name and drops it post-join.
     val big = Seq((1L, "HOT"), (2L, "cold"), (3L, "miss")).toDF("id", "k")
