@@ -96,24 +96,40 @@ object Ann {
     * 70.9 ms at k = 64 — as its generated code grows linearly with k.
     *
     * A null embedding gets a null cluster_id; a dim mismatch or a null
-    * element fails the job. */
+    * element fails the job, naming the operator. */
   def ivfAssignBig(corpus: DataFrame, embCol: String, idCol: String,
                    centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame =
-    corpus.withColumn("cluster_id", nearestColumn(corpus.sparkSession,
+    corpus.withColumn("cluster_id", nearestColumn("ivfAssignBig", corpus.sparkSession,
       collectCentroids(centroids, cidCol, cvecCol), embCol).getField("_1"))
 
-  /** The argmin behind [[ivfAssignBig]] and [[clusterAudit]] as a
-    * column: struct(_1 = nearest cid, _2 = L2 distance to it) per row,
+  /** The argmin behind [[ivfAssignBig]] and [[clusterAudit]] (`who`) as
+    * a column: struct(_1 = nearest cid, _2 = L2 distance to it) per row,
     * null for a null embedding. The centroids broadcast once. */
-  private def nearestColumn(spark: org.apache.spark.sql.SparkSession,
+  private def nearestColumn(who: String, spark: org.apache.spark.sql.SparkSession,
                             cents: Array[(Long, Array[Double])],
                             embCol: String): Column = {
     val bc = spark.sparkContext.broadcast(cents)
-    val nearest = udf { (emb: Seq[Double]) =>
+    val nearest = udf { (emb: Seq[java.lang.Double]) =>
       if (emb == null) Option.empty[(Long, Double)]
-      else Some(nearestCentroid(bc.value, emb.toArray))
+      else Some(nearestCentroid(bc.value, unboxed(who, emb)))
     }
     nearest(col(embCol).cast("array<double>"))
+  }
+
+  /** An embedding as the UDF receives it, unboxed; a null element fails
+    * with an error that names the operator `who`, where unboxing would
+    * read it as 0.0 or Spark's input conversion would fail without
+    * saying where. */
+  private def unboxed(who: String, emb: Seq[java.lang.Double]): Array[Double] = {
+    val out = new Array[Double](emb.length)
+    var i = 0
+    emb.foreach { x =>
+      if (x == null)
+        throw new IllegalArgumentException(s"$who: null element at index $i of an embedding")
+      out(i) = x
+      i += 1
+    }
+    out
   }
 
   /** The nearest centroid to `arr` and the L2 distance to it, ranked as
@@ -536,20 +552,21 @@ object Ann {
     * vs 71.4 ms at m = 4 × 16 codes on sf0.1). Each subspace takes the
     * code with the smallest squared distance, ties to the smaller code.
     * A null embedding gets null codes; a dim mismatch or a null element
-    * fails the job. */
+    * fails the job, naming the operator. */
   def pqEncodeBig(corpus: DataFrame, embCol: String,
                   codebooks: DataFrame): DataFrame = {
     val cbs = collectCodebooks(codebooks)
     val bc = corpus.sparkSession.sparkContext.broadcast(cbs)
     val subDim = cbs(0)(0).length
-    val enc = udf { (emb: Seq[Double]) =>
-      if (emb == null) Option.empty[Array[Int]]
+    val enc = udf { (boxed: Seq[java.lang.Double]) =>
+      if (boxed == null) Option.empty[Array[Int]]
       else {
+        val emb = unboxed("pqEncodeBig", boxed)
         val codebooksV = bc.value
         require(emb.length == codebooksV.length * subDim,
           s"pqEncodeBig: embedding dim ${emb.length} != ${codebooksV.length * subDim}")
         Some(codebooksV.indices.toArray.map { j =>
-          val sub = emb.slice(j * subDim, (j + 1) * subDim).toArray
+          val sub = emb.slice(j * subDim, (j + 1) * subDim)
           val cws = codebooksV(j)
           var best = 0
           var bestD = Double.MaxValue
@@ -740,7 +757,7 @@ object Ann {
     // disagree with the snapshot under a nondeterministic centroid
     // frame).
     val withD = corpus.filter(col(embCol).isNotNull)
-      .select(nearestColumn(spark, cents, embCol).as("__a"))
+      .select(nearestColumn("clusterAudit", spark, cents, embCol).as("__a"))
       .select(col("__a._1").as("cluster_id"), col("__a._2").as("__d"))
     val intra = withD
       .groupBy("cluster_id")

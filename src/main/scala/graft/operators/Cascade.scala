@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.semantic.{DictSynonyms, QueryNer, RuleQueryNer, SemanticSuite, UserProfile}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.InterpretedProjection
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, InterpretedProjection}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
@@ -47,12 +47,15 @@ final case class CascadeConfig(
   * [[MultiStageSearch.ladder]] gives a query's stage groups and gates,
   * [[MultiStageSearch.walk]] applies them to per-stage top-k lists, the
   * stage predicates come from `slotPredicates` and the rerank scores
-  * from `withScores`. `search` walks the lists of its one pass on the
-  * driver, and so do the batch forms (`searchGatedBatch`,
-  * `searchGatedBatchServed`) for a request-sized log: one pass ranks
-  * every (query, stage) top-k, grouped by qid. Larger logs and
-  * `searchGated` run the distributed batch core, which walks each
-  * query's windowed lists in a UDF.
+  * from `withScores`. Every form ranks with one heap core, the bounded
+  * heaps of [[TopK.slotTopK]], and the forms differ only in where the
+  * heaps merge. `search` merges its one pass on the driver and walks
+  * and reranks there, and so do the batch forms (`searchGatedBatch`,
+  * `searchGatedBatchServed`) for a request-sized log, grouped by qid.
+  * Larger logs, a request-sized log whose candidates overflow the
+  * driver budget, and `searchGated` merge the heaps across a qid
+  * shuffle, where each reducer walks and reranks its queries with the
+  * same function ([[MultiStageSearch.answerer]]).
   * `searchFixed` is `search` with its gates open. Both reference
   * compositions (main.py strict-first and main_remind.py
   * scan-then-filter — SURVEY.md §3.4) are expressible by configuring
@@ -117,7 +120,7 @@ final class MultiStageSearch(
 
   /** A query's NER fields (job, region, age) as string literals, null
     * when absent: the column form [[slotPredicates]] and [[withScores]]
-    * read, which the batch core fills from its resolved query frame. */
+    * read, which the batch forms fill from their pair rows' columns. */
   private def nerLits(ner: QueryNer): (Column, Column, Column) = {
     def str(v: Option[String]) = v.fold(lit(null).cast("string"))(lit)
     (str(ner.job), str(ner.region), str(ner.ageGroup))
@@ -153,7 +156,7 @@ final class MultiStageSearch(
     * pool (the `knnBackend` pool for `queryVec`, or the corpus): each
     * row's distance is computed once, null distances (null embedding,
     * null element, dim mismatch) are no candidates ([[Knn.exactDefined]]'s
-    * contract — the batch core excludes them too, which keeps
+    * contract — the batch forms' pass excludes them too, which keeps
     * `batch == per-query`), and each stage keeps its top-k by
     * (dist, id) in Spark's ordering, so a string id ranks exactly as
     * `orderBy` would rank it. Default and served pools take this one
@@ -222,59 +225,45 @@ final class MultiStageSearch(
     Seq("score" -> false, "dist" -> true, idCol -> true)
 
   /** The rerank tail over rows already on the driver, for one query or
-    * many: per query, the [[localScorer]] columns on its kept rows (of
-    * `schema`) with its NER values ([[nerValues]]), then the
-    * [[rankKeys]] order in Spark's ordering ([[TopK.sparkOrdering]]),
-    * top-N and rank 1..n, each row led by the query's `lead` values (a
-    * batch's qid; nothing for a single query). Returned as one
-    * LocalRelation of `lead` + the scored columns + rank, so the
-    * caller's collect runs no job. */
+    * many: each query's kept rows (of `schema`) reranked by
+    * [[localRerank]] with its NER values ([[nerValues]]), each row led
+    * by the query's `lead` values (a batch's qid; nothing for a single
+    * query). Returned as one LocalRelation of `lead` + the scored
+    * columns + rank, so the caller's collect runs no job. */
   private def rerankLocal(queries: Seq[(Seq[Any], Seq[Row], Seq[String])],
                           schema: StructType, lead: Seq[StructField]): DataFrame = {
-    val (scoredSchema, score) = localScorer(schema)
-    val order = TopK.sparkOrdering(scoredSchema, rankKeys)
-    val external = CatalystTypeConverters.createToScalaConverter(scoredSchema)
-    val rows = queries.flatMap { case (key, kept, ner) =>
-      score(kept.map(r => Row.fromSeq(r.toSeq ++ ner)))
-        .sorted(order).take(cfg.finalN).zipWithIndex.map { case (r, i) =>
-          Row.fromSeq(key ++ external(r).asInstanceOf[Row].toSeq :+ (i + 1))
-        }
-    }
-    corpus.sparkSession.createDataFrame(rows.asJava, StructType(lead ++
-      scoredSchema.add(StructField("rank", IntegerType, nullable = false))))
+    val rerank = localRerank(schema)
+    corpus.sparkSession.createDataFrame(queries.flatMap { case (key, kept, ner) =>
+      rerank(kept, ner).map(r => Row.fromSeq(key ++ r.toSeq))
+    }.asJava, StructType(lead ++ rerank.schema))
   }
 
-  /** [[withScores]] for driver-side rows: rows of `schema` followed by
-    * the NER fields (job, region, age; null when absent) → the rows of
-    * `schema` + the score columns, as catalyst rows, and that schema.
-    * The columns are analyzed ONCE per input schema, over a local
-    * relation with the NER fields as string columns (the batch core's
-    * form), and each Project of the analyzed plan is then applied row by
-    * row, as the optimizer's ConvertToLocalRelation would fold it — so a
-    * request's rerank plans nothing. The evaluation is serialized per
-    * scorer: expressions such as `regexp_extract` keep per-instance
-    * state. */
-  private def localScorer(schema: StructType)
-      : (StructType, Seq[Row] => Seq[InternalRow]) =
-    localScorers.computeIfAbsent(schema, { (s: StructType) =>
+  /** [[withScores]] and the [[rankKeys]] top-N for rows in memory
+    * ([[MultiStageSearch.LocalRerank]]): rows of `schema` followed by
+    * the NER fields (job, region, age; null when absent). The columns
+    * are analyzed ONCE per input schema, over a local relation with the
+    * NER fields as string columns, and each Project of the analyzed
+    * plan is then applied row by row, as the optimizer's
+    * ConvertToLocalRelation would fold it — so a request's rerank plans
+    * nothing, and a reducer of the distributed batch merge runs the same
+    * projections. */
+  private def localRerank(schema: StructType): MultiStageSearch.LocalRerank =
+    localReranks.computeIfAbsent(schema, { (s: StructType) =>
       val ner = Seq("__job", "__region", "__age")
       val in = ner.foldLeft(s)(_.add(_, StringType))
       val scored = withScores(corpus.sparkSession.createDataFrame(
           java.util.Collections.emptyList[Row], in),
         (col("__job"), col("__region"), col("__age"))).drop(ner: _*)
-      def steps(p: LogicalPlan): List[InterpretedProjection] = p match {
-        case Project(list, child) => steps(child) :+ new InterpretedProjection(list, child.output)
+      def steps(p: LogicalPlan): List[(Seq[Expression], Seq[Attribute])] = p match {
+        case Project(list, child) => steps(child) :+ (list -> child.output)
         case _: LocalRelation => Nil
       }
-      val projections = steps(ReplaceExpressions(scored.queryExecution.analyzed))
-      val internal = CatalystTypeConverters.createToCatalystConverter(in)
-      (scored.schema, (rows: Seq[Row]) => projections.synchronized {
-        rows.map(r => projections.foldLeft(internal(r).asInstanceOf[InternalRow])((row, p) => p(row)))
-      })
+      new MultiStageSearch.LocalRerank(steps(ReplaceExpressions(scored.queryExecution.analyzed)),
+        in, scored.schema, rankKeys, cfg.finalN)
     })
 
-  private val localScorers = new java.util.concurrent.ConcurrentHashMap[
-    StructType, (StructType, Seq[Row] => Seq[InternalRow])]()
+  private val localReranks =
+    new java.util.concurrent.ConcurrentHashMap[StructType, MultiStageSearch.LocalRerank]()
 
   /** The rerank tail as a lazy plan, for [[searchRemindFixed]]: score
     * columns, top-N, rank. The rank window is global but runs over
@@ -301,32 +290,30 @@ final class MultiStageSearch(
     search(queryText, queryVec,
       cfg.copy(relaxThreshold = Int.MaxValue, fallbackThreshold = Int.MaxValue))
 
-  /** [[search]] as ONE declarative plan: the batch core
-    * ([[gatedBatchCore]]) over a one-row query log. The query resolves
-    * on the driver ([[MultiStageSearch.resolveQuery]], as a
-    * request-sized batch resolves); every pool row (the `knnBackend` pool, or
-    * the corpus) carries the query id, the resolved NER fields and
-    * `queryVec` itself — a column of the pool, so a query vector that
-    * is a corpus column works too — and the rerank text is read from
-    * the same pool. The result is a lazy plan with no checkpoint, so
-    * repeated calls retain nothing. `search ≡ searchGated` row for row
-    * on any corpus (CascadeSpec pins it; c1/c5 assert it on the real
-    * corpora).
+  /** [[search]] as ONE lazy plan: the batch cascade over a one-row query
+    * log, with the heaps merged across the qid shuffle
+    * ([[batchShuffled]]) where `search` merges them on the driver. The
+    * query resolves on the driver ([[MultiStageSearch.resolveQuery]], as
+    * a request-sized batch resolves); every pool row (the `knnBackend`
+    * pool, or the corpus) carries the query id, the resolved NER fields
+    * and `queryVec` itself — a column of the pool, so a query vector
+    * that is a corpus column works too. The result is a lazy plan with
+    * no checkpoint, so repeated calls retain nothing. `search ≡
+    * searchGated` row for row, column names and types included, on any
+    * corpus (CascadeSpec pins it; c1/c5 assert it on the real corpora).
     *
-    * Needs an INTEGRAL corpus id: the core ranks on a long-cast id, so
-    * a string id fails here, at call time ([[Ann.requireIntegralId]]);
-    * [[search]] and [[searchFixed]] keep the id column untyped. */
+    * Needs an INTEGRAL corpus id, as the batch forms do: a string id
+    * fails here, at call time ([[Ann.requireIntegralId]]); [[search]]
+    * and [[searchFixed]] keep the id column untyped. */
   def searchGated(queryText: String, queryVec: Column): DataFrame = {
     Ann.requireIntegralId(corpus, idCol, "searchGated", "corpus id")
     MultiStageSearch.resolveQuery(queryNer, synonyms, profile, 0L, queryText)
-      .fold(emptyResponse) { q =>
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        val nerDf = broadcast(
-          Seq(q).toDF("__qid", "__job", "__region", "__age", "__syns"))
+      .fold(emptyResponse) { case (qid, job, region, age, syns) =>
         val pool = knnBackend.fold(corpus)(_(queryVec))
-        gatedBatchCore("__qid", nerDf, q._5.length,
-          pool.crossJoin(nerDf).withColumn("__qv", queryVec), pool)
+        batchShuffled(pool.select(col(idCol), col(textCol), col(embCol),
+            queryVec.as("__qv"), lit(qid).as("__qid"), lit(job).cast("string").as("__job"),
+            lit(region).cast("string").as("__region"), lit(age).cast("string").as("__age"),
+            typedlit(syns).as("__syns")), syns.length, "__qid")
           .drop("__qid")
       }
   }
@@ -335,38 +322,36 @@ final class MultiStageSearch(
     * driver round-trips, and per-query results are row-identical to
     * [[search]] (CascadeBatchSpec pins the identity across all four
     * query structures; c9 hash-checks the batch against per-query
-    * DuckDB replays). Two shapes, chosen by the engine alone
-    * ([[batchDispatch]]) on the log's size, at most
-    * [[MultiStageSearch.BatchLogLimit]] queries, and on the one pass's
-    * candidate bytes against the driver budget:
+    * DuckDB replays). Every log runs the same heap core: one pass over
+    * the (corpus row, query) pairs keeps a bounded heap per (query,
+    * stage slot) per partition ([[TopK.slotTopK]], grouped by qid), and
+    * each query's lists are then walked ([[MultiStageSearch.walk]]) and
+    * reranked ([[localRerank]]) by one function
+    * ([[MultiStageSearch.answerer]]). The engine alone picks where the
+    * heaps merge ([[batchDispatch]]):
     *
-    *  - a REQUEST-SIZED log (the serving case) is read once on the
-    *    driver — its rows and count in one bounded read — and answered
-    *    in ONE pass ([[batchOnDriver]]): the corpus paired with
-    *    a broadcast local frame of the resolved queries feeds
-    *    [[TopK.slotTopK]] with the qid as group key, a bounded heap per
-    *    (query, stage slot) per partition; the gates, keep-first dedup
-    *    ([[MultiStageSearch.walk]]) and the rerank then run on the driver,
-    *    as in [[search]], and the result is a LocalRelation, so the
+    *  - a REQUEST-SIZED log (the serving case, at most
+    *    [[MultiStageSearch.BatchLogLimit]] queries) is read once on the
+    *    driver, resolved there, and its heaps merge on the driver
+    *    ([[batchOnDriver]]); the result is a LocalRelation, so the
     *    caller's collect starts no job. Two jobs per log: the broadcast
     *    of the query frame and the pass. When the candidates the pass
     *    would send the driver overflow its budget, the pass stops early
-    *    and the log takes the distributed core instead;
-    *  - a larger (offline) log keeps the distributed core: NER/synonyms
-    *    resolve inside the cluster via `mapPartitions` ([[batchPrelude]]),
-    *    and [[gatedBatchCore]] ranks each (qid, slot)'s top-k in a
-    *    windowed plan over corpus ⨯ broadcast(queries), walks each qid's
-    *    lists in a UDF and fetches the rerank text by a broadcast join —
-    *    the driver never holds the texts. Over-budget logs are
-    *    auto-sliced first (`sliceDispatch`).
+    *    and the same resolved frame is answered with the heaps merged
+    *    across a qid shuffle instead ([[batchShuffled]]);
+    *  - a larger (offline) log resolves NER/synonyms inside the cluster
+    *    via `mapPartitions` ([[batchPrelude]]), and its heaps merge
+    *    across the qid shuffle, where each reducer walks and reranks its
+    *    queries — the driver never holds the texts. Over-budget logs
+    *    are auto-sliced first ([[sliceDispatch]]).
     *
     * Vectors never go near the semantic boundary either way. Blank
     * queries contribute zero rows (the F4 guard, batch-shaped).
-    * Integral ids are REQUIRED on both sides (the candidate entry is
-    * (double, long)) and enforced eagerly ([[Ann.requireIntegralId]]) —
-    * the internal non-ANSI long cast would null non-numeric ids and
-    * silently drop their rows; not available with a custom `knnBackend`
-    * — the batch plan IS the candidate source.
+    * Integral ids are REQUIRED on both sides and enforced eagerly
+    * ([[Ann.requireIntegralId]]) — the internal non-ANSI long cast of
+    * the qid would null non-numeric ids and silently drop their rows;
+    * not available with a custom `knnBackend` — the batch plan IS the
+    * candidate source.
     *
     * The query source must be DETERMINISTIC across re-scans: past the
     * size read, the distributed path and its auto-slicer
@@ -384,8 +369,8 @@ final class MultiStageSearch(
 
   /** [[searchGatedBatch]] under a given size policy rather than the
     * engine's own ([[MultiStageSearch.BatchSizing]]), so a spec or the
-    * c11 harness row can put a small log on either path and through
-    * the slicer. */
+    * c11 harness row can put a small log on either merge site and
+    * through the slicer. */
   private[graft] def searchGatedBatch(queries: DataFrame, qidCol: String,
       qtextCol: String, qvecCol: String,
       sizing: MultiStageSearch.BatchSizing): DataFrame = {
@@ -395,36 +380,28 @@ final class MultiStageSearch(
         "backends, or searchGatedBatchServed over a cluster-assigned index")
     Ann.requireIntegralId(corpus, idCol, "searchGatedBatch", "corpus id")
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatch", "query id")
-    batchDispatch("searchGatedBatch", queries, qidCol, qtextCol, qvecCol,
-        sizing, None, budgetDivisor = 1) { q =>
-      batchPrelude("searchGatedBatch", q, qidCol, qtextCol, qvecCol) match {
-        case Left(empty) => empty
-        case Right((nerDf, maxSyn, qframe)) =>
-          gatedBatchCore(qidCol, nerDf, maxSyn,
-            corpus.crossJoin(broadcast(qframe)), corpus)
-      }
-    }
+    batchDispatch("searchGatedBatch", queries, qidCol, qtextCol, qvecCol, sizing, None)
   }
 
   /** [[searchGatedBatch]] over a cluster-assigned (IVF) index — the
     * high-QPS serving shape: the exact batch's pair stream touches
     * |corpus|·|Q| rows, this one touches only the pairs whose corpus
     * row lives in a cluster the query PROBES (the rule c5/c8 apply
-    * through [[Ann.probeList]]), so the pair stream shrinks by ~nprobe/k
-    * and, over a stored partitioned index, the scan prunes to the union
-    * of probed clusters. Per-query results are row-identical to
-    * [[search]] with the equivalent served backend (CascadeBatchSpec
-    * pins it). Same two shapes as [[searchGatedBatch]]:
+    * through [[Ann.probeList]]), so the pair stream shrinks by ~nprobe/k.
+    * Per-query results are row-identical to [[search]] with the
+    * equivalent served backend (CascadeBatchSpec pins it). The same heap
+    * core and the same two merge sites as [[searchGatedBatch]]:
     *
     *  - a request-sized log is probed on the driver ([[Ann.probeCells]]
     *    over [[Ann.collectCentroids]]) into a local (query, cell) frame,
-    *    broadcast against the index rows of the probed cells, and
-    *    answered in [[batchOnDriver]]'s one pass — three jobs per log:
-    *    the centroid collect, the broadcast and the pass;
+    *    broadcast against the index rows of the probed cells only (over
+    *    a stored partitioned index the scan prunes to them), and its
+    *    heaps merge on the driver — three jobs per log: the centroid
+    *    collect, the broadcast and the pass;
     *  - a larger log explodes each query's probe list
     *    ([[Ann.probeCellsUdf]]) into the broadcast query frame, one row
-    *    per (query, cell), and runs [[gatedBatchCore]] over the index
-    *    joined on cluster_id against it.
+    *    per (query, cell), joins it to the index on cluster_id, and
+    *    merges its heaps across the qid shuffle.
     *
     * Same deterministic-query-source requirement as
     * [[searchGatedBatch]] (see that scaladoc). */
@@ -452,113 +429,135 @@ final class MultiStageSearch(
       "corpus id")
     Ann.requireIntegralId(queries, qidCol, "searchGatedBatchServed",
       "query id")
-    lazy val cells = Ann.probeCellsUdf(probe)
-    lazy val cents = Ann.collectCentroids(centroids, cidCol, cvecCol)
-    // the served form's broadcast frame is |Q| · nprobe rows, not |Q|,
-    // so its slice budget divides by nprobe (the exact form broadcasts
-    // the query frame itself and keeps the full budget)
     batchDispatch("searchGatedBatchServed", queries, qidCol, qtextCol,
-        qvecCol, sizing, Some(Ann.probeCellsOf(cents, _, nprobe)),
-        budgetDivisor = nprobe) { q =>
-      batchPrelude("searchGatedBatchServed", q, qidCol, qtextCol,
-          qvecCol) match {
-        case Left(empty) => empty
-        case Right((nerDf, maxSyn, qframe)) =>
-          val qprobe = qframe.withColumn("__cid", explode(cells(col("__qv"))))
-          gatedBatchCore(qidCol, nerDf, maxSyn,
-            corpus.join(broadcast(qprobe),
-              col("cluster_id").cast("long") === col("__cid")), corpus)
-      }
-    }
+      qvecCol, sizing, Some(probe))
   }
 
   /** The size policy of both batch forms, in one place: the log is read
     * on the driver by one bounded read of `sizing.logLimit + 1` rows
     * (the d6 limit-probe idiom) as (qid, text, vector) rows. A log that
-    * fits in it is answered by [[batchOnDriver]]'s one pass (probed
-    * into `cells` for the served form) while its candidates fit
-    * `sizing.driverBytes`; a larger or over-budget log runs the
-    * distributed core (`core`), auto-sliced first when it overflows the
-    * slice budget ([[sliceDispatch]], which reuses the rows this read
-    * already holds). */
+    * fits in it is answered by [[batchOnDriver]]; a larger log resolves
+    * in the cluster ([[batchPrelude]]) and merges its heaps across the
+    * qid shuffle ([[batchShuffled]]), auto-sliced first when it
+    * overflows the slice budget ([[sliceDispatch]], which reuses the
+    * rows this read already holds). The served form's slice budget
+    * divides by nprobe: its broadcast frame is |Q| · nprobe rows. */
   private def batchDispatch(op: String, queries: DataFrame, qidCol: String,
       qtextCol: String, qvecCol: String, sizing: MultiStageSearch.BatchSizing,
-      cells: Option[Seq[java.lang.Double] => Array[Long]], budgetDivisor: Int)
-      (core: DataFrame => DataFrame): DataFrame = {
+      probe: Option[Ann.Probe]): DataFrame = {
     val held = queries.select(col(qidCol).cast("long"),
         col(qtextCol).cast("string"), col(qvecCol).cast("array<double>"))
       .limit(sizing.logLimit + 1).collect()
-    Some(held).filter(_.length <= sizing.logLimit)
-      .flatMap(batchOnDriver(op, _, qidCol, cells, sizing.driverBytes))
-      .orElse(sliceDispatch(queries, qidCol, held, sizing, budgetDivisor)(core))
+    if (held.length <= sizing.logLimit)
+      return batchOnDriver(op, held, qidCol, probe, sizing.driverBytes)
+    lazy val cells = probe.map(Ann.probeCellsUdf) // once for every slice
+    def core(q: DataFrame) = {
+      val resolved = batchPrelude(op, q, qidCol, qtextCol, qvecCol)
+      batchShuffled(paired(cells.fold(resolved)(c =>
+        resolved.withColumn("__cid", explode(c(col("__qv"))))), probe, None),
+        synonyms.width, qidCol)
+    }
+    sliceDispatch(queries, qidCol, held, sizing, probe.fold(1)(_.nprobe))(core)
       .getOrElse(core(queries))
   }
 
+  /** The pairs a batch ranks: each query of the resolved frame `q`
+    * ([[MultiStageSearch.QueryFrame]]) with every corpus row, or, with a
+    * probe, with the rows of the cell its `__cid` names (one row of `q`
+    * per (query, probed cell)). `cells`, when the driver holds them, are
+    * every cell `q` probes: a static filter on them prunes a stored
+    * index's scan to those cells. */
+  private def paired(q: DataFrame, probe: Option[Ann.Probe],
+                     cells: Option[Seq[Long]]): DataFrame = {
+    val cid = col("cluster_id").cast("long")
+    probe.fold(corpus.crossJoin(broadcast(q))) { _ =>
+      cells.fold(corpus)(cs => corpus.filter(cid.isin(cs: _*)))
+        .join(broadcast(q), cid === col("__cid"))
+    }
+  }
+
   /** The batch cascade over a log already on the driver (`log`: (qid,
-    * text, vector) rows from [[batchDispatch]]) in ONE pass over the pool:
-    * the queries resolve on the driver ([[MultiStageSearch.resolveQuery]],
-    * blank ones drop out) into a local frame (qid, vector, NER fields,
-    * synonyms) — one row per query, or with `cells` one per (query,
-    * probed cell) — broadcast against the corpus (a cross join, or with
-    * `cells` a join on cluster_id over the probed cells only). Every
-    * pair's distance is computed once and [[TopK.slotTopK]], grouped by
-    * qid, keeps each (query, slot)'s top-k in Spark's (dist, id) order
-    * with the batch core's slot predicates; the driver then walks each
-    * query's lists ([[MultiStageSearch.walk]]) and reranks the kept rows
-    * ([[rerankLocal]]) into a LocalRelation with [[batchOutCols]]'
-    * schema. An all-blank log runs no job.
+    * text, vector) rows from [[batchDispatch]]): the queries resolve on
+    * the driver ([[MultiStageSearch.resolveQuery]], blank ones drop out)
+    * into a local frame — one row per query, or with a probe one per
+    * (query, probed cell) — [[paired]] with the corpus, and the heap
+    * core's one pass ([[TopK.slotTopK]], grouped by qid) merges the
+    * heaps on the driver, which answers each query
+    * ([[MultiStageSearch.answerer]]) into a LocalRelation. An all-blank
+    * log runs no job.
     *
     * The candidates the pass sends the driver — partitions × |Q| × Σk
     * rows, each with its doc text — must fit `driverBytes`, measured in
-    * the pass ([[TopK.slotTopK]]'s `maxBytes`); None when they do not,
-    * and the caller runs the distributed core, which keeps them on the
-    * executors. */
+    * the pass ([[TopK.slotTopK]]'s `maxBytes`). When they do not, the
+    * same pairs are answered with the heaps merged across the qid
+    * shuffle ([[batchShuffled]]), which keeps them on the executors. */
   private def batchOnDriver(op: String, log: Array[Row], qidCol: String,
-                            cells: Option[Seq[java.lang.Double] => Array[Long]],
-                            driverBytes: Long): Option[DataFrame] = {
-    val spark = corpus.sparkSession
+                            probe: Option[Ann.Probe], driverBytes: Long): DataFrame = {
     require(log.map(_.getLong(0)).distinct.length == log.length,
       s"$op: duplicate $qidCol values in the query batch")
     val resolved = log.toSeq.flatMap(r => MultiStageSearch.resolveQuery(
       queryNer, synonyms, profile, r.getLong(0), r.getString(1))
       .map(_ -> r.getSeq[java.lang.Double](2)))
-    val lead = Seq(StructField(qidCol, LongType, nullable = false))
-    if (resolved.isEmpty) return Some(rerankLocal(Nil, keptSchema(corpus.schema), lead))
-    val maxSyn = resolved.map(_._1._5.length).max
-    // every slot any query of the batch can run, as (slot, k) in slot order
-    val slots = MultiStageSearch.ladder(job = true, region = true, maxSyn, cfg)
-      .flatMap(_._2).sortBy(_._1)
+    val lead = StructField(qidCol, LongType, nullable = false)
+    if (resolved.isEmpty) return rerankLocal(Nil, keptSchema(corpus.schema), Seq(lead))
+    val cellsOf = probe.map { p =>
+      val cents = Ann.collectCentroids(p.centroids, p.cidCol, p.cvecCol)
+      Ann.probeCellsOf(cents, _: Seq[java.lang.Double], p.nprobe)
+    }
+    val frame = resolved.flatMap { case ((qid, job, region, age, syns), qv) =>
+      val row = Seq(qid, qv, job, region, age, syns)
+      cellsOf.fold(Seq(Row.fromSeq(row)))(_(qv).toSeq.map(c => Row.fromSeq(row :+ c)))
+    }
+    val schema = MultiStageSearch.QueryFrame ++
+      probe.map(_ => StructField("__cid", LongType, nullable = false))
+    val pairs = paired(corpus.sparkSession.createDataFrame(frame.asJava, StructType(schema)),
+      probe, probe.map(_ => frame.map(_.getLong(6)).distinct))
+    val width = resolved.map(_._1._5.length).max
+    val rows = pairRows(pairs)
+    val rerank = localRerank(keptSchema(rows.schema))
+    val answer = MultiStageSearch.answerer(cfg, rerank)
+    TopK.slotTopK(rows, Seq("dist", idCol), batchSlots(width), Some("__qid"), driverBytes)
+      .fold(batchShuffled(pairs, width, qidCol)) { ranked =>
+        corpus.sparkSession.createDataFrame(resolved.flatMap { case (q, _) =>
+          answer(q._1, ranked(q._1))
+        }.asJava, StructType(lead +: rerank.schema))
+      }
+  }
+
+  /** The candidate rows of a batch's pairs, as the heaps carry them:
+    * (id, text, dist, qid, job, region, age, synonyms) — the doc text
+    * and the query's NER fields ride along, so the walk and the rerank
+    * read nothing else. */
+  private def pairRows(paired: DataFrame): DataFrame =
+    paired.select(col(idCol), col(textCol),
+      VectorFunctions.l2(col(embCol), col("__qv")).as("dist"), col("__qid"),
+      col("__job"), col("__region"), col("__age"), col("__syns"))
+
+  /** Every ladder slot a batch whose queries have at most `width`
+    * synonyms can run, as (predicate on [[pairRows]], k) at the slot's
+    * index: the slot predicates over each pair's own NER columns. */
+  private def batchSlots(width: Int): Seq[(Option[Column], Int)] = {
     val preds = slotPredicates(col("__job"), col("__region"),
-      (0 until maxSyn).map(i => get(col("__syns"), lit(i)))) // null past the end
-    val qschema = StructType(Seq(StructField("__qid", LongType, nullable = false),
-      StructField("__qv", ArrayType(DoubleType)),
-      StructField("__job", StringType), StructField("__region", StringType),
-      StructField("__syns", ArrayType(StringType))) ++
-      cells.map(_ => StructField("__cid", LongType, nullable = false)))
-    val frame = resolved.flatMap { case ((qid, job, region, _, syns), qv) =>
-      val row = Seq(qid, qv, job, region, syns)
-      cells.fold(Seq(Row.fromSeq(row)))(_(qv).toSeq.map(c => Row.fromSeq(row :+ c)))
-    }
-    val local = broadcast(spark.createDataFrame(frame.asJava, qschema))
-    val paired = cells.fold(corpus.crossJoin(local)) { _ =>
-      val cid = col("cluster_id").cast("long")
-      corpus.filter(cid.isin(frame.map(_.getLong(5)).distinct: _*))
-        .join(local, cid === col("__cid"))
-    }
-    TopK.slotTopK(paired.select(col(idCol), col(textCol),
-        VectorFunctions.l2(col(embCol), col("__qv")).as("dist"), col("__qid"),
-        col("__job"), col("__region"), col("__syns")),
-      Seq("dist", idCol), slots.map { case (slot, k) => (Some(preds(slot)), k) },
-      Some("__qid"), driverBytes).map { ranked =>
-      rerankLocal(resolved.map { case ((qid, job, region, age, syns), _) =>
-        val ladder = MultiStageSearch.ladder(job != null, region != null,
-          syns.length, cfg)
-        val kept = MultiStageSearch.walk(ladder, ranked(qid))(_.get(0)).map {
-          case (r, stage) => Row(r.get(0), r.get(1), r.get(2), stage)
-        }
-        (Seq(qid), kept, Seq(job, region, age))
-      }, keptSchema(corpus.schema), lead)
-    }
+      (0 until width).map(i => get(col("__syns"), lit(i)))) // null past the end
+    MultiStageSearch.ladder(job = true, region = true, width, cfg)
+      .flatMap(_._2).sortBy(_._1).map { case (slot, k) => (Some(preds(slot)), k) }
+  }
+
+  /** The batch cascade over `paired` ([[paired]]'s rows, or any frame
+    * with the corpus and [[MultiStageSearch.QueryFrame]] columns) with
+    * the heaps merged across a shuffle on the qid
+    * ([[TopK.slotTopKShuffled]]): each reducer answers its queries
+    * ([[MultiStageSearch.answerer]], the function [[batchOnDriver]] runs
+    * on the driver), so only the answers leave the executors. A lazy
+    * plan of `qidCol` + [[localRerank]]'s columns; `width` bounds the
+    * queries' synonym counts. */
+  private def batchShuffled(paired: DataFrame, width: Int, qidCol: String): DataFrame = {
+    val rows = pairRows(paired)
+    val rerank = localRerank(keptSchema(rows.schema))
+    corpus.sparkSession.createDataFrame(
+      TopK.slotTopKShuffled(rows, Seq("dist", idCol), batchSlots(width), "__qid")(
+        MultiStageSearch.answerer(cfg, rerank)),
+      StructType(StructField(qidCol, LongType, nullable = false) +: rerank.schema))
   }
 
   /** The 10M+-log escape hatch, automatic: a query log larger than the
@@ -568,41 +567,40 @@ final class MultiStageSearch(
     * each slice's bounded result (≤ finalN·|slice| rows, no vectors) is
     * eagerly materialized (localCheckpoint) before the next slice
     * starts; the returned frame is the cheap union of the materialized
-    * results. The batch forms are thus not bounded by a single
+    * results. The distributed merge is thus not bounded by a single
     * broadcastable query frame.
     *
-    * `held` is [[batchDispatch]]'s bounded read of the log: the row
-    * width comes from it, and it decides the size without another read
-    * when it holds the whole log or already more rows than a slice
-    * admits. Otherwise size detection is a LIMIT-probe (scan at most
-    * maxQ+1 qids), so in-budget logs — the common case — never pay a
-    * full count; the exact count (and so the slice count) is computed
-    * only on the over-budget path. Per-slice work sums to the unsliced
-    * plan's (each slice resolves only its own queries; the corpus is
-    * scanned once per slice instead of once — the price of bounding
-    * memory). Duplicate qids land in the SAME hash slice, so the
-    * per-slice prelude guard still catches them. The query source is
-    * re-scanned once per slice rather than checkpointed: a 10M-row
-    * vector-bearing log is exactly what must NOT be pinned whole —
-    * which is why the source must be DETERMINISTIC across re-scans (see
-    * the entry points' scaladoc). Slices are hash-sized only in
-    * EXPECTATION, so the slice count targets 80% of the budget: at
-    * small slice counts binomial skew routinely pushes one slice ~10%
-    * past n/nSlices, and the budget guards a memory cliff (broadcast
-    * abort at `maxResultSize`), not a soft target — the headroom makes
-    * the expected worst slice land under it. Returns None when the log
-    * fits the budget — the caller runs the single-plan form. */
+    * `held` is [[batchDispatch]]'s bounded read of a log over the log
+    * limit: the row width comes from it, and it decides the size without
+    * another read when it already holds more rows than a slice admits.
+    * Otherwise size detection is a LIMIT-probe (scan at most maxQ+1
+    * qids), so in-budget logs — the common case — never pay a full
+    * count; the exact count (and so the slice count) is computed only on
+    * the over-budget path. Per-slice work sums to the unsliced plan's
+    * (each slice resolves only its own queries; the corpus is scanned
+    * once per slice instead of once — the price of bounding memory).
+    * Duplicate qids land in the SAME hash slice, so the per-slice
+    * prelude guard still catches them. The query source is re-scanned
+    * once per slice rather than checkpointed: a 10M-row vector-bearing
+    * log is exactly what must NOT be pinned whole — which is why the
+    * source must be DETERMINISTIC across re-scans (see the entry
+    * points' scaladoc). Slices are hash-sized only in EXPECTATION, so
+    * the slice count targets 80% of the budget: at small slice counts
+    * binomial skew routinely pushes one slice ~10% past n/nSlices, and
+    * the budget guards a memory cliff (broadcast abort at
+    * `maxResultSize`), not a soft target — the headroom makes the
+    * expected worst slice land under it. Returns None when the log fits
+    * the budget — the caller runs the single-plan form. */
   private def sliceDispatch(queries: DataFrame, qidCol: String,
                             held: Array[Row], sizing: MultiStageSearch.BatchSizing,
                             budgetDivisor: Int)
       (perSlice: DataFrame => DataFrame): Option[DataFrame] = {
     val maxQ = sizing.sliceRows.getOrElse(
       resolvedBroadcastQueryMax(held, budgetDivisor))
-    val whole = held.length <= sizing.logLimit
     val over = held.length > maxQ ||
-      !whole && queries.select(col(qidCol)).limit(maxQ + 1).count() > maxQ
+      queries.select(col(qidCol)).limit(maxQ + 1).count() > maxQ
     if (!over) return None
-    val n = if (whole) held.length.toLong else queries.count()
+    val n = queries.count()
     // 80% of the budget per slice, ROUNDED: floor would turn a tiny
     // budget (2 queries, the c11 harness shape) into 1-query slices and
     // double its deliberate slicing tax, while at derived scale
@@ -656,34 +654,29 @@ final class MultiStageSearch(
     MultiStageSearch.BatchSizing(MultiStageSearch.BatchLogLimit,
       MultiStageSearch.driverBudgetBytes(Runtime.getRuntime.maxMemory, maxResultBytes))
 
-  /** The distributed core's batch prelude, for logs over
-    * [[MultiStageSearch.BatchLogLimit]] (request-sized logs take
+  /** The distributed merge's batch prelude, for logs over
+    * [[MultiStageSearch.BatchLogLimit]] (request-sized logs resolve in
     * [[batchOnDriver]]): the SEMANTIC boundary, resolved INSIDE the
-    * cluster via `mapPartitions` over the (qid, text) projection —
-    * SURVEY §2.7's prescribed batch shape. Only (qid, text) ever feeds
-    * NER/synonym resolution (L2/L3 are external calls — vectors never
-    * go near them). The duplicate-qid guard is a counts-only aggregate
-    * and the ner frame is localCheckpointed (it is read 3× downstream:
-    * isEmpty, syn-width, joins). The texts are never COLLECTED to the
-    * driver for resolution (the round-15 probe measured a driver path
-    * collapsing at 1M queries); the resolved compact frame IS still
-    * broadcast, because the core broadcasts the query side (the pair
-    * stream is corpus × broadcast(queries)) — so a SINGLE plan stays
-    * bounded by a broadcastable query frame. Logs beyond that bound
-    * need no manual knob: the public batch entry points auto-slice them
-    * BEFORE this prelude runs ([[sliceDispatch]]), so every batch that
-    * reaches here is already within the broadcast budget.
+    * cluster via `mapPartitions` — SURVEY §2.7's prescribed batch
+    * shape. Only (qid, text) ever feeds NER/synonym resolution (L2/L3
+    * are external calls — vectors only ride along). The duplicate-qid
+    * guard is a counts-only aggregate. The texts are never COLLECTED to
+    * the driver for resolution (the round-15 probe measured a driver
+    * path collapsing at 1M queries); the resolved frame is broadcast,
+    * because the pair stream is corpus × broadcast(queries) — so a
+    * SINGLE plan stays bounded by a broadcastable query frame. Logs
+    * beyond that bound need no manual knob: the public batch entry
+    * points auto-slice them BEFORE this prelude runs
+    * ([[sliceDispatch]]). Each reducer of the merge reads a query's NER
+    * fields and synonym count from its own candidate rows, so nothing
+    * here is read back on the driver.
     *
     * The resolution is [[MultiStageSearch.resolveQuery]], the one the
     * driver path runs (CascadeBatchSpec pins driver == distributed on
-    * the full output). Returns the broadcastable ner frame, the batch's
-    * synonym-slot width, and the query frame (vectors stay
-    * distributed); Left(typed empty) when every query is blank. */
+    * the full output). Returns the resolved frame
+    * ([[MultiStageSearch.QueryFrame]]); blank queries drop out. */
   private def batchPrelude(op: String, queries: DataFrame, qidCol: String,
-                           qtextCol: String, qvecCol: String)
-      : Either[DataFrame, (DataFrame, Int, DataFrame)] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
+                           qtextCol: String, qvecCol: String): DataFrame = {
     val dups = queries.groupBy(col(qidCol)).count()
       .filter(col("count") > 1).limit(1).count()
     require(dups == 0,
@@ -691,103 +684,12 @@ final class MultiStageSearch(
     // locals only — the task closure must not capture `this`
     // (MultiStageSearch holds DataFrames)
     val (qn, syn, prof) = (queryNer, synonyms, profile)
-    val ner = queries
-      .select(col(qidCol).cast("long"), col(qtextCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (qid, t) =>
-        MultiStageSearch.resolveQuery(qn, syn, prof, qid, t)
-      })
-      .toDF("__qid", "__job", "__region", "__age", "__syns")
-      .localCheckpoint(true)
-    if (ner.isEmpty)
-      return Left(emptyResponse.crossJoin(
-          spark.range(0).select(col("id").as("__qid")))
-        .select(batchOutCols(qidCol): _*))
-    val maxSyn = ner.agg(max(size(col("__syns")))).collect()(0).getInt(0)
-    val nerDf = broadcast(ner)
-    val qframe = queries
-      .select(col(qidCol).cast("long").as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qv"))
-      .join(nerDf, "__qid") // inner join drops blank queries
-    Right((nerDf, maxSyn, qframe))
-  }
-
-  private def batchOutCols(qidCol: String): Seq[Column] =
-    Seq(col("__qid").as(qidCol), col(idCol), col(textCol),
-      col("dist"), col("stage_rank"), col("judge_score"), col("rule_score"),
-      col("score"), col("rank"))
-
-  /** The batched gate-ladder pipeline over an already-joined
-    * (corpus row × query) pair stream: slot masks → windowed top-k per
-    * (qid, slot) → one row per qid → [[MultiStageSearch.walk]] (gates,
-    * keep-first dedup, stage numbering) → text fetch from `texts` →
-    * [[withScores]] rerank. Shared verbatim by the exact batch and the
-    * served batch over logs too large for [[batchOnDriver]], and by
-    * [[searchGated]] (a one-row log over its pool) — only the pair
-    * stream and the text source differ, which is exactly the
-    * backend-independence the identity gates pin. */
-  private def gatedBatchCore(qidCol: String, nerDf: DataFrame, maxSyn: Int,
-                             paired: DataFrame, texts: DataFrame): DataFrame = {
-    val slots = slotPredicates(col("__job"), col("__region"),
-      (0 until maxSyn).map(i => get(col("__syns"), lit(i)))) // null past the end
-    // null-embedding rows carry a null distance and are excluded from
-    // every slot BEFORE the per-slot cut — the same contract the
-    // single-query form's stages enforce via Knn.exactDefined (a null
-    // dist would otherwise rank FIRST under Spark's ascending NULLS
-    // FIRST and eat the stage's k), so batch == per-query holds on
-    // corpora with null embeddings
-    val pairs = paired
-      .select(col("__qid"),
-        col(idCol).cast("long").as("__id"),
-        VectorFunctions.l2(col(embCol), col("__qv")).as("__dist"),
-        array(slots.zipWithIndex.map { case (ok, s) =>
-          struct(lit(s).as("slot"), ok.as("ok"))
-        }: _*).as("__slots"))
-      .filter(col("__dist").isNotNull)
-      .select(col("__qid"), col("__id"), col("__dist"),
-        explode(col("__slots")).as("__e"))
-      .filter(col("__e").getField("ok"))
-      .select(col("__qid"), col("__e").getField("slot").as("__slot"),
-        col("__dist"), col("__id"))
-    // Per-(qid, slot) top-k via a rank-limit window rather than the
-    // TopK Aggregator: the `row_number <= k` filter triggers Spark's
-    // InferWindowGroupLimit, which inserts a PARTIAL group-limit
-    // before the exchange, so ≤ maxK rows per (map partition × qid ×
-    // slot) cross it — the same bound the Aggregator's partial heaps
-    // give. A controlled A/B (identical materialized 10M-row pair
-    // stream, interleaved, quiet box — PLANS.md round-14 correction)
-    // measured the two forms EQUAL on wall-clock; the window form is
-    // kept because it is native end-to-end (no Aggregator buffer
-    // tuning, plan-auditable via the WindowGroupLimit node), not
-    // because it is faster. The row number carries the (dist, id)
-    // order in Spark's ordering to the walk.
-    val wTop = Window.partitionBy("__qid", "__slot")
-      .orderBy(col("__dist"), col("__id"))
-    val walked = pairs
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= math.max(cfg.topK, cfg.fallbackK))
-      .groupBy("__qid")
-      .agg(collect_list(struct(col("__slot"), col("__rn"), col("__dist"),
-        col("__id"))).as("__cand"))
-      .join(nerDf, "__qid")
-      .select(col("__qid"), col("__job"), col("__region"), col("__age"),
-        explode(MultiStageSearch.walkUdf(cfg)(col("__job").isNotNull,
-          col("__region").isNotNull, size(col("__syns")), col("__cand"))).as("__e"))
-      .select(col("*"), col("__e._1").as("stage_rank"),
-        col("__e._2").as("dist"), col("__e._3").as("__id"))
-      .drop("__e")
-
-    // pass 2 (text) + rerank
-    val withText = broadcast(walked)
-      .join(texts.select(col(idCol).cast("long").as("__id"),
-        col(textCol)), "__id")
-    val wq = Window.partitionBy("__qid")
-      .orderBy(desc("score"), asc("dist"), asc("__id"))
-    withScores(withText, (col("__job"), col("__region"), col("__age")))
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= cfg.finalN)
-      .withColumn(idCol, col("__id").cast(corpus.schema(idCol).dataType))
-      .select(batchOutCols(qidCol): _*)
+    queries.select(col(qidCol).cast("long"), col(qtextCol).cast("string"),
+        col(qvecCol).cast("array<double>"))
+      .mapPartitions(_.flatMap { r =>
+        MultiStageSearch.resolveQuery(qn, syn, prof, r.getLong(0), r.getString(1))
+          .map { case (qid, job, region, age, syns) => Row(qid, r.get(2), job, region, age, syns) }
+      })(Encoders.row(StructType(MultiStageSearch.QueryFrame)))
   }
 
   /** The main_remind.py composition (SURVEY.md §3.4): stage 0 scans a
@@ -898,17 +800,60 @@ object MultiStageSearch {
     kept.result()
   }
 
-  /** [[walk]] for the batch core, one call per qid: (job defined,
-    * region defined, synonym count, the qid's window rows as
-    * (slot, row number, dist, id)) → (stage, dist, id) per kept row.
-    * Built here so the closure holds the config alone, not the
-    * DataFrame-holding instance. */
-  private def walkUdf(c: CascadeConfig) =
-    udf { (job: Boolean, region: Boolean, nSyn: Int, cand: Seq[Row]) =>
-      val lists = cand.groupBy(_.getInt(0)).map { case (s, rs) => s -> rs.sortBy(_.getInt(1)) }
-      walk(ladder(job, region, nSyn, c), lists.getOrElse(_, Nil))(_.getLong(3))
-        .map { case (r, stage) => (stage, r.getDouble(2), r.getLong(3)) }
+  /** One query's answer in every batch form, wherever its heaps merged:
+    * its per-slot top-k lists of candidate rows (id, text, dist, qid,
+    * job, region, age, synonyms — the batch pair rows) → the query's
+    * [[ladder]], built from the NER fields its rows carry, [[walk]]ed,
+    * and its kept rows reranked by `rerank`, each answer row led by the
+    * qid. A query with no candidate answers no row. Built here so the
+    * function holds the config and the reranker alone, not the
+    * DataFrame-holding instance: the distributed merge runs it in the
+    * tasks. */
+  private[operators] def answerer(c: CascadeConfig, rerank: LocalRerank)
+      : (Any, IndexedSeq[Seq[Row]]) => Seq[Row] = (qid, lists) =>
+    lists.iterator.flatten.nextOption().toSeq.flatMap { r =>
+      val (job, region, age) = (r.getString(4), r.getString(5), r.getString(6))
+      val kept = walk(ladder(job != null, region != null, r.getSeq[String](7).length, c),
+          lists)(_.get(0)).map { case (k, stage) => Row(k.get(0), k.get(1), k.get(2), stage) }
+      rerank(kept, Seq(job, region, age)).map(a => Row.fromSeq(qid +: a.toSeq))
     }
+
+  /** The rerank tail over one query's rows in memory: the score columns
+    * of `withScores`, applied as the analyzed Project lists `steps` over
+    * rows of `in` (the kept rows' columns, then the query's NER fields),
+    * then the top `finalN` in the `rankKeys` order in Spark's ordering
+    * ([[TopK.sparkOrdering]]), ranked 1..n. Serializable, so a reducer
+    * of the distributed merge reranks as the driver does: the
+    * projections are built where they run, and evaluated one call at a
+    * time, since expressions such as `regexp_extract` keep
+    * per-instance state. */
+  private[operators] final class LocalRerank(steps: Seq[(Seq[Expression], Seq[Attribute])],
+      in: StructType, scored: StructType, rankKeys: Seq[(String, Boolean)], finalN: Int)
+      extends Serializable {
+    /** The answer rows' schema: the kept rows' columns, the score columns
+      * and the rank. */
+    val schema: StructType = scored.add(StructField("rank", IntegerType, nullable = false))
+    private val order = TopK.sparkOrdering(scored, rankKeys)
+    @transient private lazy val projections =
+      steps.map { case (exprs, input) => new InterpretedProjection(exprs, input) }
+    @transient private lazy val toCatalyst = CatalystTypeConverters.createToCatalystConverter(in)
+    @transient private lazy val toScala = CatalystTypeConverters.createToScalaConverter(scored)
+
+    def apply(kept: Seq[Row], ner: Seq[String]): Seq[Row] = synchronized {
+      kept.map(r => projections.foldLeft(
+        toCatalyst(Row.fromSeq(r.toSeq ++ ner)).asInstanceOf[InternalRow])((row, p) => p(row)))
+    }.sorted(order).take(finalN).zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(toScala(r).asInstanceOf[Row].toSeq :+ (i + 1))
+    }
+  }
+
+  /** A batch's resolved query frame: the qid, the query vector, the NER
+    * fields (null when absent) and the synonyms, one row per non-blank
+    * query. */
+  private[operators] val QueryFrame: Seq[StructField] = Seq(
+    StructField("__qid", LongType, nullable = false), StructField("__qv", ArrayType(DoubleType)),
+    StructField("__job", StringType), StructField("__region", StringType),
+    StructField("__age", StringType), StructField("__syns", ArrayType(StringType)))
 
   /** One query's semantic resolution — the F4 blank guard, L2 NER +
     * profile coalesce, L3 synonyms — as a pure function of the
@@ -976,23 +921,25 @@ object MultiStageSearch {
     math.max(1L, driverBudgetBytes(heapBytes, maxResultBytes) /
       math.max(1L, rowBytes) / math.max(1, budgetDivisor))
 
-  /** The largest query log a batch form answers in one pass on the
-    * driver. `plans/one_pass_batch/path_cut.md` timed both batch paths
-    * at |Q| = 64, 256 and 1,024 on a 16-partition corpus: wherever the
-    * candidates fit the driver budget the one pass took 0.24–0.33 of the
-    * distributed core's time, 1,024 included. Past that size the cost
-    * is the budget's to judge, and a larger log is an offline log, whose
-    * texts and candidates should not funnel through the driver. */
+  /** The largest query log a batch form reads and resolves on the
+    * driver, merging its heaps there while they fit the budget.
+    * `plans/one_pass_batch/path_cut.md` timed the batch paths at |Q| =
+    * 64, 256 and 1,024 on a 16-partition corpus: wherever the candidates
+    * fit the driver budget the driver merge took 0.24–0.33 of the
+    * (since deleted) windowed core's time, 1,024 included. Past that
+    * size a log is an offline log, whose texts and candidates should not
+    * funnel through the driver. */
   private[graft] val BatchLogLimit = 1024
 
-  /** A batch log's size policy: a log of at most `logLimit` queries is
-    * answered by the one pass while its candidates fit `driverBytes`;
-    * the distributed core slices a log into hash slices of `sliceRows`
-    * queries, or, when None, of the driver budget over the log's
-    * measured row width. The batch entry points run the engine's own
+  /** A batch log's size policy: a log of at most `logLimit` queries
+    * merges its heaps on the driver while its candidates fit
+    * `driverBytes`; a larger log is sliced into hash slices of
+    * `sliceRows` queries, or, when None, of the driver budget over the
+    * log's measured row width, and merges its heaps across the qid
+    * shuffle. The batch entry points run the engine's own
     * ([[BatchLogLimit]], the measured driver budget, derived slices);
     * specs and the c11 harness row pass theirs to put a small log on
-    * the distributed core and through the slicer. */
+    * the shuffle merge and through the slicer. */
   private[graft] final case class BatchSizing(logLimit: Int,
       driverBytes: Long, sliceRows: Option[Int] = None)
 }

@@ -184,7 +184,7 @@ object IndexMaintenance {
   private def loopExactTopK(corpus: DataFrame, embCol: String,
                             idCol: String, sampleQueries: DataFrame,
                             evalK: Int): DataFrame =
-    Knn.batchAgg(corpus, embCol, idCol, sampleQueries, "qid", "qv", evalK)
+    Knn.batch(corpus, embCol, idCol, sampleQueries, "qid", "qv", evalK)
       .select(col("qid"), col(idCol))
 
   /** [[loopExactTopK]] over the CURRENT committed index, materialized —

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** kNN / similarity search (SURVEY.md §2.5 V1-V3; north-star ANN).
@@ -13,9 +12,10 @@ import org.apache.spark.sql.functions._
   * correct 100 TB plan for single-query kNN: one narrow scan, no
   * shuffle of the corpus, k rows move.
   *
-  * Batch form broadcasts the (small) query side so the corpus never
-  * shuffles; per-query top-k is a window over the replicated join.
-  * The approximate scale path (LSH / IVF) lives in [[AnnIndex]].
+  * The batch form broadcasts the (small) query side so the corpus
+  * never shuffles; its per-query top-k is the bounded [[TopK.topK]]
+  * aggregation, so the exchange carries ≤k rows per (partition ×
+  * query). The approximate scale path (LSH / IVF) lives in [[Ann]].
   */
 object Knn {
 
@@ -58,27 +58,17 @@ object Knn {
       case m        => throw new IllegalArgumentException(s"metric $m")
     }
 
-  /** V2: batch kNN — top-k per query over queries × corpus.
-    * `queries(qid, qvec)` is broadcast; corpus stays put. The window
-    * rank shuffles every (query × corpus) pair; prefer [[batchAgg]]
-    * when queries × corpus is large. */
+  /** V2: batch kNN — top-k per query over queries × corpus, as
+    * (qid, knn_rank, id, dist). `queries(qid, qvec)` is broadcast, so
+    * the corpus stays put, and the per-query top-k is a bounded
+    * [[TopK.topK]] aggregation: partial heaps map-side, so the exchange
+    * carries ≤k rows per (partition × query), not the replicated
+    * corpus. Total order (dist, id); a null distance (null embedding,
+    * null element, dim mismatch) is no candidate, as in
+    * [[exactDefined]]. */
   def batch(corpus: DataFrame, embCol: String, idCol: String,
             queries: DataFrame, qidCol: String, qvecCol: String,
-            k: Int, metric: String = "l2"): DataFrame = {
-    val joined = corpus.crossJoin(broadcast(queries))
-      .withColumn("dist", metricDist(metric, embCol, qvecCol))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("dist"), col(idCol))
-    joined.withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= k)
-  }
-
-  /** V2 at scale: same result as [[batch]], but per-query top-k runs
-    * as a bounded [[TopK]] aggregation — partial heaps map-side, so
-    * the exchange carries ≤k rows per (partition × query) instead of
-    * the full replicated corpus. Same total order (dist, id). */
-  def batchAgg(corpus: DataFrame, embCol: String, idCol: String,
-               queries: DataFrame, qidCol: String, qvecCol: String,
-               k: Int, metric: String = "l2"): DataFrame =
+            k: Int, metric: String = "l2"): DataFrame =
     corpus.crossJoin(broadcast(queries))
       .select(col(qidCol),
         metricDist(metric, embCol, qvecCol).as("__dist"),

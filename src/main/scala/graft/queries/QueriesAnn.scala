@@ -49,7 +49,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
   def trainedIvfFor(s: SparkSession, d: String): String =
     trainedIvfRoots.getOrElseUpdate(d, {
       val root =
-        java.nio.file.Files.createTempDirectory("graft_trained_ivf_").toString
+        tempDir("graft_trained_ivf_").toString
       val e = t(s, d, "embeddings")
       val cent = Ann.trainCentroids(e, "embedding", k = 32, seed = 42L,
         maxIter = 10)
@@ -220,8 +220,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     * artifact s10's stage one scans instead of the fp corpus. */
   private def int8TableFor(s: SparkSession, d: String): String =
     int8Paths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_int8_codes_").toString + "/codes"
+      val p = tempDir("graft_int8_codes_").toString + "/codes"
       Ann.quantizedEncode(t(s, d, "embeddings"), "embedding", "vec_id")
         .write.parquet(p)
       p
@@ -252,8 +251,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     * artifact s11's stage one scans instead of the fp corpus. */
   private def signTableFor(s: SparkSession, d: String): String =
     signPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_sign_codes_").toString + "/codes"
+      val p = tempDir("graft_sign_codes_").toString + "/codes"
       Ann.signEncode(t(s, d, "embeddings"), "embedding", "vec_id", dim = 64)
         .write.parquet(p)
       p
@@ -301,8 +299,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     * artifact s12's stage one scans instead of the fp corpus. */
   private def prefixTableFor(s: SparkSession, d: String): String =
     prefixPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_prefix_codes_").toString + "/codes"
+      val p = tempDir("graft_prefix_codes_").toString + "/codes"
       Ann.prefixEncode(t(s, d, "embeddings"), "embedding", "vec_id",
           prefixDim = 16)
         .write.parquet(p)
@@ -882,7 +879,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
 
   private def pqCodeTableFor(s: SparkSession, d: String): String =
     pqCodePaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_pq_codes_").toString + "/codes"
+      val p = tempDir("graft_pq_codes_").toString + "/codes"
       Ann.pqEncodeBig(t(s, d, "embeddings"), "embedding", pqCodebook(s, d))
         .select("vec_id", "pq_codes")
         .write.parquet(p)
@@ -944,8 +941,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
     * static partition pruning + predicate pushdown in one scan. */
   private def ivfVecTableFor(s: SparkSession, d: String): String =
     ivfVecPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_vecs_").toString + "/index"
+      val p = tempDir("graft_ivf_vecs_").toString + "/index"
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1055,8 +1051,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
 
   private def upsertedIvfTableFor(s: SparkSession, d: String): String =
     upsertIvfPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_upsert_").toString + "/index"
+      val p = tempDir("graft_ivf_upsert_").toString + "/index"
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1286,7 +1281,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       val e = t(s, d, "embeddings")
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Knn.batchAgg(e, "embedding", "vec_id", qs, "qid", "qv", 10)
+      val exact = Knn.batch(e, "embedding", "vec_id", qs, "qid", "qv", 10)
         .select(col("qid"), col("vec_id"))
       def evalIndex(tag: String, cent: DataFrame): DataFrame = {
         val assigned = Ann.ivfAssignBig(e, "embedding", "vec_id",
@@ -1343,8 +1338,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
 
   private def compactedIvfTableFor(s: SparkSession, d: String): String =
     compactIvfPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_compact_").toString + "/index"
+      val p = tempDir("graft_ivf_compact_").toString + "/index"
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1404,7 +1398,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
 
   private def ivfPqCodeTableFor(s: SparkSession, d: String): String =
     ivfPqCodePaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_codes_").toString + "/codes"
+      val p = tempDir("graft_ivfpq_codes_").toString + "/codes"
       val e = t(s, d, "embeddings")
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1592,7 +1586,7 @@ private[graft] trait QueriesAnn { self: QueriesShared =>
       // point's rows are bit-identical to the per-point ivfSearchBatch
       // it replaces (the DuckDB oracle replays every point unchanged).
       // Shared frames are checkpointed EAGERLY: four consumers each.
-      val exact = Knn.batchAgg(e, "embedding", "vec_id", qs, "qid", "qv", 10)
+      val exact = Knn.batch(e, "embedding", "vec_id", qs, "qid", "qv", 10)
         .select(col("qid"), col("vec_id"))
         .localCheckpoint(true)
       val assigned = Ann.ivfAssignBig(e, "embedding", "vec_id",

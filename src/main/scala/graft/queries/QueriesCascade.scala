@@ -631,8 +631,8 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
     // slot) top-k ranked in one job, grouped by qid — after which the
     // shared ladder walk (gates, keep-first dedup, ran-only stage
     // numbering) and the rerank run per qid on the driver. Logs over
-    // MultiStageSearch.BatchLogLimit take the distributed core (windowed
-    // per-(qid, slot) top-k, the walk in a UDF). The batch holds one query of
+    // MultiStageSearch.BatchLogLimit merge the same heaps across a qid
+    // shuffle and walk and rerank in the reducers. The batch holds one query of
     // EVERY structure (full/region-only/job-only/no-terms), so the
     // oracle — per-query gated blocks UNION ALL'd — hash-checks every
     // slot-mask shape, the per-structure gate ladders, and the
@@ -663,9 +663,9 @@ private[graft] trait QueriesCascade { self: QueriesShared with QueriesAnn =>
 
   private val c11 = QuerySpec("c11_cascade_batch_sliced",
     // c9's batch THROUGH the round-16 auto-slicer: a size policy with a
-    // log limit of 0 sends the 4-query batch to the distributed core
-    // (the one-pass path does not slice — its log is already on the
-    // driver), and 2-query slices force it into 2 hash-slice plans
+    // log limit of 0 sends the 4-query batch to the distributed path,
+    // the qid-shuffle merge (the driver merge does not slice — its log
+    // is already on the driver), and 2-query slices force it into 2 hash-slice plans
     // served sequentially, with each slice resolving only its own
     // queries and the bounded results unioned. The engine chooses no
     // such sizes for a 4-query log; the policy is passed through the

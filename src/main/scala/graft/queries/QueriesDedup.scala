@@ -212,7 +212,7 @@ private[graft] trait QueriesDedup { self: QueriesShared =>
 
   private def bandIndexFor(s: SparkSession, d: String): String =
     bandIndexPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_band_idx_").toString + "/bands"
+      val p = tempDir("graft_band_idx_").toString + "/bands"
       Dedup.writeBandIndex(
         t(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
         "doc_id", "text", p,
@@ -346,8 +346,7 @@ private[graft] trait QueriesDedup { self: QueriesShared =>
 
   private def shingleIndexFor(s: SparkSession, d: String): String =
     shingleIndexPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_shingle_idx_").toString + "/posts"
+      val p = tempDir("graft_shingle_idx_").toString + "/posts"
       Dedup.writeShingleIndex(
         t(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
         "doc_id", "text", p, shingleK = 3, maxDf = 20, nBuckets = 16)

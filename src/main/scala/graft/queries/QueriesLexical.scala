@@ -149,8 +149,7 @@ private[graft] trait QueriesLexical { self: QueriesShared =>
 
   private def oldPostingsFor(s: SparkSession, d: String): String =
     oldPostingsPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_old_postings_").toString + "/postings"
+      val p = tempDir("graft_old_postings_").toString + "/postings"
       val docs = t(s, d, "documents")
       val oldSnap = docs.filter(col("doc_id") % 7 =!= 0)
         .withColumn("text", when(col("doc_id") % 5 === 0,

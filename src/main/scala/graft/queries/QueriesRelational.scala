@@ -217,7 +217,7 @@ private[graft] trait QueriesRelational { self: QueriesShared =>
       // db name from the fresh temp dir, NOT a hash of `d`: two sf
       // dirs with colliding 32-bit hashCodes would share a database
       // and the second build would overwrite the first's tables
-      val loc = java.nio.file.Files.createTempDirectory("graft_buckets_").toString
+      val loc = tempDir("graft_buckets_").toString
       val db = "graft_buckets_" + loc.replaceAll(".*graft_buckets_", "")
         .replaceAll("[^0-9a-zA-Z]", "")
       graft.sources.BucketedLayout.ensureDatabase(s, db, loc)
@@ -269,7 +269,7 @@ private[graft] trait QueriesRelational { self: QueriesShared =>
 
   private def zorderedLineitemFor(s: SparkSession, d: String): String =
     zorderedPaths.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_")
+      val p = tempDir("graft_zorder_")
         .toString + "/lineitem_z"
       graft.sources.ZOrderLayout.writeZOrdered(t(s, d, "lineitem"),
         Seq("l_extendedprice", "l_quantity"), p, nFiles = 32)
@@ -286,7 +286,7 @@ private[graft] trait QueriesRelational { self: QueriesShared =>
 
   private def zstoreLineitemFor(s: SparkSession, d: String): String =
     zstorePaths.getOrElseUpdate(d, {
-      val root = java.nio.file.Files.createTempDirectory("graft_zstore_")
+      val root = tempDir("graft_zstore_")
         .toString + "/lineitem_z"
       val li = t(s, d, "lineitem")
       val base = li.filter(pmod(col("l_orderkey"), lit(10)) =!= 0)
@@ -331,7 +331,7 @@ private[graft] trait QueriesRelational { self: QueriesShared =>
 
   private def zstoreDictLineitemFor(s: SparkSession, d: String): String =
     zstoreDictPaths.getOrElseUpdate(d, {
-      val root = java.nio.file.Files.createTempDirectory("graft_zdict_")
+      val root = tempDir("graft_zdict_")
         .toString + "/lineitem_z3"
       graft.sources.ZStore.init(t(s, d, "lineitem"),
         Seq("l_returnflag", "l_shipdate", "l_extendedprice"), root,
@@ -379,7 +379,7 @@ private[graft] trait QueriesRelational { self: QueriesShared =>
 
   private def zstoreUpsertLineitemFor(s: SparkSession, d: String): String =
     zstoreUpsertPaths.getOrElseUpdate(d, {
-      val root = java.nio.file.Files.createTempDirectory("graft_zupsert_")
+      val root = tempDir("graft_zupsert_")
         .toString + "/lineitem_zu"
       // the business key: (orderkey, linenumber) is NOT unique in the
       // synthetic data (sf0.01 holds ~12k duplicate pairs), so upsert's

@@ -36,6 +36,12 @@ private[graft] trait QueriesShared {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** A fresh directory named `prefix`… for a harness artifact (a stored
+    * index, a code table, a model), under the JVM's one harness root:
+    * a run leaves no directory of its own behind. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(QueriesShared.tempRoot, prefix)
+
 
   /** events.parquet's ts has shipped in two physical forms across
     * testdata generations: INT64 TIMESTAMP(NANOS) — which Spark 4
@@ -117,4 +123,21 @@ private[graft] trait QueriesShared {
 
   def queryVec(s: SparkSession, d: String, id: Long): DataFrame =
     t(s, d, "embeddings").filter(col("vec_id") === id).select(col("embedding").as("qv"))
+}
+
+private[graft] object QueriesShared {
+
+  /** The root of every [[QueriesShared.tempDir]] of this JVM, created on
+    * first use; a shutdown hook deletes it with everything under it. */
+  private lazy val tempRoot: java.nio.file.Path = {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft_run_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
+      finally paths.close()
+    }))
+    root
+  }
 }

@@ -557,7 +557,7 @@ private[graft] trait QueriesText { self: QueriesShared =>
         .withColumn("__b", Curation.hashBucket(col("doc_id"), 100))
       val model = QualityModel.train(
         labelled.filter(col("__b") < 70), "text", "label")
-      val p = java.nio.file.Files.createTempDirectory("graft_qmodel_")
+      val p = tempDir("graft_qmodel_")
         .toString + "/model"
       model.write.overwrite().save(p)
       val loaded =

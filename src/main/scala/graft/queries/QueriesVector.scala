@@ -122,7 +122,7 @@ private[graft] trait QueriesVector { self: QueriesShared =>
       val assigned = Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
       val ivf = Ann.ivfSearchBatch(assigned, "embedding", "vec_id",
         cent, "cid", "cvec", qs, "qid", "qv", k = 10, nprobe = 4)
-      val exact = Knn.batchAgg(e, "embedding", "vec_id", qs, "qid", "qv", 10)
+      val exact = Knn.batch(e, "embedding", "vec_id", qs, "qid", "qv", 10)
       RetrievalEval.metricsAtK(ivf, exact.select("qid", "vec_id"),
           "qid", "vec_id", "knn_rank", k = 10)
         .orderBy("qid")
@@ -268,7 +268,7 @@ private[graft] trait QueriesVector { self: QueriesShared =>
       val assigned = Ann.ivfAssignBig(e, "embedding", "vec_id", cent, "cid", "cvec")
       val ivf = Ann.ivfSearchBatch(assigned, "embedding", "vec_id",
         cent, "cid", "cvec", qs, "qid", "qv", k = 10, nprobe = 8)
-      val exact = Knn.batchAgg(e, "embedding", "vec_id", qs, "qid", "qv", 10)
+      val exact = Knn.batch(e, "embedding", "vec_id", qs, "qid", "qv", 10)
       exact.select(col("qid"), col("vec_id"))
         .join(ivf.select(col("qid"), col("vec_id"), lit(1).as("__hit")),
           Seq("qid", "vec_id"), "left")
@@ -317,7 +317,7 @@ private[graft] trait QueriesVector { self: QueriesShared =>
     (s, d) => {
       val qs = t(s, d, "embeddings").filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Knn.batchAgg(t(s, d, "embeddings"), "embedding", "vec_id", qs, "qid", "qv", 5)
+      Knn.batch(t(s, d, "embeddings"), "embedding", "vec_id", qs, "qid", "qv", 5)
         .select(col("qid"), col("knn_rank"), col("vec_id"), round(col("dist"), 6).as("dist"))
         .orderBy("qid", "knn_rank")
     },
@@ -553,7 +553,7 @@ private[graft] trait QueriesVector { self: QueriesShared =>
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val lsh = LshAnn.approxNearestBatch(e, "embedding", "vec_id",
         qs, "qid", "qv", k = 10, bucketLength = 4.0, numTables = 8)
-      val exact = Knn.batchAgg(e, "embedding", "vec_id", qs, "qid", "qv", 10)
+      val exact = Knn.batch(e, "embedding", "vec_id", qs, "qid", "qv", 10)
       exact.select(col("qid"), col("vec_id"))
         .join(lsh.select(col("qid"), col("vec_id"), lit(1).as("__hit")),
           Seq("qid", "vec_id"), "left")

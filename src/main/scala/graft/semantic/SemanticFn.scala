@@ -82,6 +82,8 @@ final class DictSynonyms(dict: Map[String, Seq[String]])
   val neutral: Seq[String] = Seq.empty
   protected def run(job: String): Seq[String] =
     dict.getOrElse(job.toLowerCase.trim, Seq.empty)
+  /** The most synonyms any job term has: a bound on every answer. */
+  private[graft] val width: Int = dict.values.map(_.length).maxOption.getOrElse(0)
 }
 
 /** L4 double: deterministic judge — scores each snippet 0..5 by the

@@ -55,9 +55,10 @@ import org.apache.spark.sql.DataFrame
   * execution.
   *
   * A micro-batch is sized by the engine, not here: a request-sized
-  * batch takes the one pass while its candidates fit the driver
-  * budget, and a larger one the distributed core, which slices itself
-  * by the measured row width ([[MultiStageSearch.searchGatedBatch]]).
+  * batch merges its heaps on the driver while its candidates fit the
+  * driver budget, and otherwise across a qid shuffle, a log over the
+  * log limit slicing itself by the measured row width
+  * ([[MultiStageSearch.searchGatedBatch]]).
   */
 object CascadeServe {
 

@@ -82,21 +82,24 @@ class AnnSpec extends SparkSpec {
 
   test("a null element fails the job in ivfAssignBig, pqEncodeBig and clusterAudit") {
     // an unboxed null would read as 0.0 and assign silently; the
-    // broadcast argmins refuse it in Spark's UDF input conversion
+    // broadcast argmins refuse it inside the UDF, with the operator's
+    // name in the error
     val withNullElem = Seq((1L, Seq[java.lang.Double](0.5, null)))
       .toDF("vec_id", "embedding")
-    def failsInUdf(run: => Any): Unit = {
+    def failsInUdf(op: String)(run: => Any): Unit = {
       val e = intercept[Exception](run)
       assert(e.getMessage.contains("FAILED_EXECUTE_UDF"), s"unexpected: ${e.getMessage}")
+      assert(e.getMessage.contains(s"$op: null element at index 1"),
+        s"the error does not name $op: ${e.getMessage}")
     }
-    failsInUdf(Ann.ivfAssignBig(withNullElem, "embedding", "vec_id",
+    failsInUdf("ivfAssignBig")(Ann.ivfAssignBig(withNullElem, "embedding", "vec_id",
       cents, "cid", "cvec").collect())
-    failsInUdf(Ann.clusterAudit(withNullElem, "embedding", "vec_id",
+    failsInUdf("clusterAudit")(Ann.clusterAudit(withNullElem, "embedding", "vec_id",
       cents, "cid", "cvec").collect())
     val cb = Seq((0, 0L, Seq(0.0)), (0, 1L, Seq(1.0)),
         (1, 0L, Seq(0.0)), (1, 1L, Seq(1.0)))
       .toDF("sub_idx", "code", "subvec")
-    failsInUdf(Ann.pqEncodeBig(withNullElem, "embedding", cb).collect())
+    failsInUdf("pqEncodeBig")(Ann.pqEncodeBig(withNullElem, "embedding", cb).collect())
   }
 
   test("ivfAssignBig at k=256 centroids: correct argmin, no literal blowup") {
@@ -470,6 +473,25 @@ class AnnSpec extends SparkSpec {
     assert(res.map(_._3) == res.map(_._3).sorted.reverse)
   }
 
+  test("ivfSearchBatch: a null embedding is no candidate, not an exact match") {
+    // 20 docs on a line in two cells; doc 4's embedding is nulled AFTER
+    // assignment, so it sits in a probed cell with a null distance,
+    // which a (dist: Double) top-k entry would read as 0.0 and rank first
+    val docs = (0 until 20).map(i => (i.toLong, Array(i.toFloat, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val cells = Seq((0L, Array(0.0, 0.0)), (1L, Array(15.0, 0.0))).toDF("cid", "cvec")
+    val assigned = Ann.ivfAssignBig(docs, "embedding", "vec_id", cells, "cid", "cvec")
+      .withColumn("embedding", when(col("vec_id") =!= 4L, col("embedding")))
+    val queries = Seq((100L, Seq(10.2, 1.0))).toDF("qid", "qv")
+    val out = Ann.ivfSearchBatch(assigned, "embedding", "vec_id", cells, "cid", "cvec",
+        queries, "qid", "qv", k = 20, nprobe = 2)
+      .select("knn_rank", "vec_id", "dist").as[(Int, Long, Double)].collect()
+      .sortBy(_._1).toSeq
+    assert(out.length == 19 && !out.exists(_._2 == 4L), out)
+    assert(out.take(3).map(_._2) == Seq(10L, 11L, 9L), out)
+    assert(out.forall(_._3 > 0.0), out)
+  }
+
   test("ivfSearchBatch survives a query vector column named like the corpus's") {
     val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     val q = Seq((0L, Array(0.3, 0.4)), (1L, Array(99.0, 101.0)))
@@ -775,7 +797,7 @@ class AnnSpec extends SparkSpec {
         cents, "cid", "cvec", queries, "qid", "qv", k = 6, nprobe = 2)
       .select("qid", "knn_rank", "vec_id").as[(Long, Int, Long)]
       .collect().sortBy(r => (r._1, r._2)).toSeq
-    val exact = Knn.batchAgg(corpus, "embedding", "vec_id",
+    val exact = Knn.batch(corpus, "embedding", "vec_id",
         queries, "qid", "qv", 6)
       .select("qid", "knn_rank", "vec_id").as[(Long, Int, Long)]
       .collect().sortBy(r => (r._1, r._2)).toSeq

@@ -322,6 +322,23 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       assert(rows(d).nonEmpty)
       assert(rows(w) == rows(d))
       assert(rows(o) == rows(d))
+      // the cancelled pass falls back on the frame it already resolved:
+      // the same rows as the one pass, and no second read of the log
+      assert(rows(o) == rows(w))
+    }
+    // the fallback's jobs, the collect included: the query frame's
+    // broadcast and the cancelled pass, then the broadcast and the
+    // shuffle merge of the same pairs (the log and the centroids are
+    // local relations here, whose reads run no job)
+    val fallback = BatchSizing(BatchLogLimit, 1L)
+    for ((form, budget) <- Seq[(() => DataFrame, Int)](
+        (() => new MultiStageSearch(corpus, "doc_id", "text", "embedding")
+          .searchGatedBatch(queriesDf, "qid", "qtext", "qvec", fallback), 4),
+        (() => new MultiStageSearch(assigned, "doc_id", "text", "embedding")
+          .searchGatedBatchServed(queriesDf, "qid", "qtext", "qvec", cents, "cid", "cvec",
+            2, fallback), 4))) {
+      val (_, jobs) = jobsOf(form().collect())
+      assert(jobs <= budget, s"the cancelled-pass fallback started $jobs jobs")
     }
   }
 
@@ -335,10 +352,12 @@ class CascadeBatchSpec extends SparkSpec with JobCount {
       jobsOf(search.searchGatedBatch(log, "qid", "qtext", "qvec", sizing))._2
     // a log limit of 2 holds 3 of the 6 rows: the row width comes from
     // them, so the log is read again only by the slicer's limit-count
-    // (the derived budget is far above 6 queries) and by the prelude;
-    // a separate width probe of the log would add two jobs
+    // (the derived budget is far above 6 queries), by the duplicate
+    // guard and by the broadcast of the resolved frame; the prelude
+    // reads nothing back (no NER checkpoint, no emptiness or synonym
+    // width probe), and a separate width probe would add two jobs
     val unsliced = jobs(BatchSizing(logLimit = 2, driverBytes = 0L))
-    assert(unsliced <= 10, s"$unsliced jobs")
+    assert(unsliced <= 7, s"$unsliced jobs")
     // 2-query slices: the 3 rows held are already over a slice, so no
     // limit-count runs; the exact count sizes 3 slices of 2 queries,
     // each with its own prelude and materialized result

@@ -130,6 +130,8 @@ class CascadeSpec extends SparkSpec with JobCount {
     val a2 = full.search(q, col("qv")).collect().toSeq
     val g2 = full.searchGated(q, col("qv")).collect().toSeq
     assert(a2.nonEmpty && a2 == g2)
+    // column names, types and nullability too: callers compare whole rows
+    assert(full.search(q, col("qv")).schema == full.searchGated(q, col("qv")).schema)
     // and the two corpora exercise DIFFERENT gate outcomes: the
     // starved run ends at stage 7 (everything included), the full run
     // must have renumbered at least one stage below 7

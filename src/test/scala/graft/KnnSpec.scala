@@ -52,25 +52,46 @@ class KnnSpec extends SparkSpec {
     }
   }
 
-  test("batchAgg (bounded top-k aggregation) equals the window form") {
+  test("batch (bounded top-k aggregation) equals per-query brute force") {
+    // every query's k nearest by (dist, id), ranks and distances
+    // included, against a driver-side brute force over the same rows
     val queries = corpus.filter($"vec_id" < 4)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    def normalize(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "knn_rank", "vec_id", "dist")
-        .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val win = normalize(Knn.batch(corpus, "embedding", "vec_id",
-      queries, "qid", "qv", 6))
-    val agg = normalize(Knn.batchAgg(corpus, "embedding", "vec_id",
-      queries, "qid", "qv", 6))
-    assert(agg == win)
+    val vecs = corpus.as[(Long, Array[Float])].collect()
+    val expected = vecs.filter(_._1 < 4).toSeq.flatMap { case (qid, qv) =>
+      vecs.map { case (id, v) =>
+        (id, math.sqrt(v.zip(qv).map { case (a, b) => (a - b).toDouble * (a - b) }.sum))
+      }.sortBy { case (id, d) => (d, id) }.take(6).zipWithIndex.map {
+        case ((id, d), i) => (qid, i + 1, id, d)
+      }
+    }
+    val got = Knn.batch(corpus, "embedding", "vec_id", queries, "qid", "qv", 6)
+      .select("qid", "knn_rank", "vec_id", "dist")
+      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(got.map(r => (r._1, r._2, r._3)) == expected.map(r => (r._1, r._2, r._3)))
+    got.zip(expected).foreach { case (g, e) => assert(math.abs(g._4 - e._4) < 1e-9, s"$g vs $e") }
   }
 
-  test("batchAgg survives k larger than the corpus") {
+  test("batch survives k larger than the corpus") {
     val queries = corpus.filter($"vec_id" === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val out = Knn.batchAgg(corpus, "embedding", "vec_id",
+    val out = Knn.batch(corpus, "embedding", "vec_id",
       queries, "qid", "qv", 500)
     assert(out.count() == 50) // whole corpus, no padding
+  }
+
+  test("batch: a null embedding is no candidate, not an exact match") {
+    // 20 docs on a line, doc 5's embedding null: its distance is null,
+    // which a (dist: Double) top-k entry would read as 0.0 and rank first
+    val docs = (0 until 20).map(i =>
+      (i.toLong, if (i == 5) null else Array(i.toFloat, 0.0f))).toDF("vec_id", "embedding")
+    val queries = Seq((100L, Seq(10.2, 1.0))).toDF("qid", "qv")
+    val out = Knn.batch(docs, "embedding", "vec_id", queries, "qid", "qv", 20)
+      .select("knn_rank", "vec_id", "dist").as[(Int, Long, Double)].collect()
+      .sortBy(_._1).toSeq
+    assert(out.length == 19 && !out.exists(_._2 == 5L), out)
+    assert(out.take(3).map(_._2) == Seq(10L, 11L, 9L), out)
+    assert(out.forall(_._3 > 0.0), out)
   }
 
   test("cosine metric ranks by descending similarity") {

@@ -58,7 +58,7 @@ class LshAnnSpec extends SparkSpec {
     val lsh = LshAnn.approxNearestBatch(corpus, "embedding", "vec_id",
         qs, "qid", "qv", k = 5, bucketLength = 2.0, numTables = 8)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val exact = Knn.batchAgg(corpus, "embedding", "vec_id",
+    val exact = Knn.batch(corpus, "embedding", "vec_id",
         qs, "qid", "qv", 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     // seed-deterministic: this recall is a pinned measurement, not a

@@ -288,30 +288,36 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("batch serving plans get the map-side WindowGroupLimit partial") {
-    // The round-14 batch forms (cascade c9/c10, quantizer s15-s18)
-    // express their per-query top-k as `row_number <= k` rank-limit
-    // windows so InferWindowGroupLimit turns them into partial
-    // group-limits BEFORE the exchange — the bound that keeps the
-    // pair stream from shuffling (wall-clock-equal to the TopK
-    // Aggregator on identical streams, PLANS.md round-14 correction;
-    // the value pinned here is the SHUFFLE bound, not a speedup). Pin
-    // the node's presence so a Spark upgrade or a refactor that
-    // breaks the rule's preconditions (a changed rank function, a
-    // filter pushed elsewhere) fails here, not in a bench diff.
-    // The cascade's windowed core serves logs over the batch log limit;
-    // c9's 4-query log takes the one-pass driver tail, so the core is
-    // audited on c9's own batch (the builder c9 runs) with the
-    // distributed path forced (a log limit of 0).
-    val c9Core = Queries.exactBatchCascade(spark, sf, Some(
-      graft.operators.MultiStageSearch.BatchSizing(logLimit = 0, driverBytes = 0L)))
-    for ((q, df) <- ("c9_cascade_batch_gated (distributed core)", c9Core) +:
-        Seq("s15_int8_batch_served", "s16_prefix_batch_served",
-          "s17_pq_batch_served", "s18_ivfpq_batch_served")
-          .map(q => q -> SparkEntry.queries(q)(spark, sf))) {
-      val plan = df.queryExecution.executedPlan.toString
+    // The round-14 quantizer batch forms (s15-s18) express their
+    // per-query top-k as `row_number <= k` rank-limit windows so
+    // InferWindowGroupLimit turns them into partial group-limits BEFORE
+    // the exchange — the bound that keeps the pair stream from
+    // shuffling (wall-clock-equal to the TopK Aggregator on identical
+    // streams, PLANS.md round-14 correction; the value pinned here is
+    // the SHUFFLE bound, not a speedup). Pin the node's presence so a
+    // Spark upgrade or a refactor that breaks the rule's preconditions
+    // (a changed rank function, a filter pushed elsewhere) fails here,
+    // not in a bench diff.
+    for (q <- Seq("s15_int8_batch_served", "s16_prefix_batch_served",
+        "s17_pq_batch_served", "s18_ivfpq_batch_served")) {
+      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
       assert(plan.contains("WindowGroupLimit"),
         s"$q: rank-limit window lost its WindowGroupLimit partial:\n$plan")
     }
+    // The cascade's batch core ranks with the partition heaps instead,
+    // merged across one qid shuffle for logs the driver does not take.
+    // c9's 4-query log takes the driver merge, so the shuffle merge is
+    // audited on c9's own batch (the builder c9 runs) with it forced (a
+    // log limit of 0): no rank window, no collect_list, and exactly one
+    // shuffle in the lineage — the heaps', keyed by qid.
+    val c9Core = Queries.exactBatchCascade(spark, sf, Some(
+      graft.operators.MultiStageSearch.BatchSizing(logLimit = 0, driverBytes = 0L)))
+    val c9Plan = c9Core.queryExecution.executedPlan.toString
+    assert(!c9Plan.contains("Window") && !c9Plan.contains("collect_list"),
+      s"c9 distributed core: a window or collect_list is back:\n$c9Plan")
+    val lineage = c9Core.queryExecution.toRdd.toDebugString
+    assert("ShuffledRDD".r.findAllIn(lineage).length == 1,
+      s"c9 distributed core: one shuffle expected, the heaps':\n$lineage")
     // and the quantizer batch stage one must scan only the stored
     // artifact (same claim s11/s12 pin for the single-query forms)
     for ((q, codeCol) <- Seq(("s15_int8_batch_served", "q_codes"),

@@ -45,6 +45,32 @@ class QueryServeSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("serve: a null embedding is no candidate, not an exact match") {
+    implicit val sqlCtx = spark.sqlContext
+    // doc 5's embedding is null: its distance is null, which a
+    // (dist: Double) top-k entry would read as 0.0 and rank first
+    val corpus = (0 until 20).map(i =>
+      (i.toLong, if (i == 5) null else Array(i.toFloat, 0.0f))).toDF("vec_id", "embedding")
+    val t0 = Timestamp.valueOf("2026-01-01 10:00:00")
+    val stream = MemoryStream[(Long, Timestamp, Seq[Double])]
+    stream.addData(Seq((100L, t0, Seq(10.2, 1.0))))
+    stream.addData(Seq((999L, Timestamp.valueOf("2026-01-01 10:10:00"),
+      Seq(0.0, 0.0))))
+    val served = QueryServe.serve(stream.toDF().toDF("qid", "ts", "qv"),
+      corpus, "embedding", "vec_id", "qid", "ts", "qv", k = 3)
+    val q = served.writeStream.format("memory").queryName("serve_null_test")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val top = spark.table("serve_null_test").filter($"qid" === 100L)
+        .select($"topk".getField("id"), $"topk".getField("dist"))
+        .as[(Seq[Long], Seq[Double])].collect()
+      assert(top.length == 1)
+      assert(top.head._1 == Seq(10L, 11L, 9L), top.head)
+      assert(top.head._2.forall(_ > 0.0), top.head)
+    } finally q.stop()
+  }
+
   test("serveIvf: pruned stream results equal batch ivfSearch at the same nprobe") {
     implicit val sqlCtx = spark.sqlContext
     // two well-separated clusters, IVF-assigned via the broadcast path
