@@ -36,11 +36,7 @@ private[graft] trait QueriesShared {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** A fresh directory named `prefix`… for a harness artifact (a stored
-    * index, a code table, a model), under the JVM's one harness root:
-    * a run leaves no directory of its own behind. */
-  def tempDir(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(QueriesShared.tempRoot, prefix)
+  def tempDir(prefix: String): java.nio.file.Path = QueriesShared.tempDir(prefix)
 
 
   /** events.parquet's ts has shipped in two physical forms across
@@ -126,6 +122,12 @@ private[graft] trait QueriesShared {
 }
 
 private[graft] object QueriesShared {
+
+  /** A fresh directory named `prefix`… for a harness or spec artifact (a
+    * stored index, a code table, a model), under the JVM's one root: a
+    * run leaves no directory of its own behind. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(tempRoot, prefix)
 
   /** The root of every [[QueriesShared.tempDir]] of this JVM, created on
     * first use; a shutdown hook deletes it with everything under it. */

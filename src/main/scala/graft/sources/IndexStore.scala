@@ -134,8 +134,19 @@ object IndexStore {
     if (chosen.isEmpty) Seq(lit(0)) else chosen.toSeq.map(f => col(f.name))
   }
 
+  /** Read an index directory. A pair version directory (`root/v<N>`
+    * written by [[writeVersionedWithCentroids]]) resolves through its
+    * manifest to base ∪ deltas ([[pairIndex]]); any other directory is
+    * read as parquet. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ZStore.manifestAt(spark, path).map(_.files)
+        .filter(_.exists(_.bucket == BaseEntry)) match {
+      case Some(files) =>
+        val root = new org.apache.hadoop.fs.Path(path).getParent.toString
+        pairIndex(spark, root, spark.read.parquet(
+          s"$root/${files.find(_.bucket == BaseEntry).get.path}"), files)
+      case None => spark.read.parquet(path)
+    }
 
   /** Read the index iff the path exists. The existence check is
     * explicit (Hadoop FS) rather than a broad try/catch: a transient
@@ -234,25 +245,50 @@ object IndexStore {
   // query — no error, just recall collapse. The reference never faces
   // this because Chroma persists the HNSW structure and its metadata
   // in one collection (build_vectorstore.py:233-250); the columnar
-  // split re-opens it, so the store closes it again: the centroid
-  // table rides INSIDE the version directory (an underscore-prefixed
-  // sidecar dir, invisible to the index scan's file listing, exactly
-  // like _SUCCESS), and the PAIR is published by ONE atomic directory
-  // rename of a dot-prefixed, per-attempt-unique staging dir — both
-  // artifacts (and the index write's own _SUCCESS) are fully written
-  // while invisible to every reader, so a committed version always
-  // holds a mutually-consistent pair, a crash at any earlier point
-  // leaves only invisible `.build_v<N>_<attempt>` debris
-  // ([[pruneVersions]] sweeps stale ones),
-  // and nothing mutates process-global state (an earlier draft
-  // suppressed the _SUCCESS marker via the shared hadoopConfiguration,
-  // which would have raced every concurrent write in the application).
-  // Atomic-rename is the local/HDFS contract; object stores without
-  // atomic rename need their committer's equivalent.
+  // split re-opens it, so the store closes it again: a pair version
+  // `v<N>` holds only metadata — `_meta.json`, `_SUCCESS` and a
+  // [[ZStore]] manifest — over immutable files in a data pool under
+  // the root, shared across versions (ZStore's design, and how
+  // SNIPPETS [3]'s Qbeast keeps an index's cells as logged files):
+  //
+  //  - one BASE directory: the cell-aligned, `cluster_id=`-partitioned
+  //    [[write]], read as one directory, so every `cluster_id IN (…)`
+  //    probe keeps its static partition pruning;
+  //  - up to [[MaxDeltaFiles]] DELTA files, one per refresh commit,
+  //    `cluster_id` stored in the file as the base's inferred
+  //    partition type, read with the base's schema (no inference);
+  //  - one CENTROID directory (inside the base's pool directory, an
+  //    underscore dir invisible to the base scan).
+  //
+  // The manifest and `_meta.json` are fully written into a dot-
+  // prefixed, per-attempt-unique staging dir and published by ONE
+  // atomic rename ([[publishStaged]]), so a committed version always
+  // names a mutually-consistent pair; a crash at any earlier point
+  // leaves only unreferenced pool data and invisible
+  // `.build_v<N>_<attempt>` debris, both collected by
+  // [[pruneVersions]]. Atomic-rename is the local/HDFS contract;
+  // object stores without atomic rename need their committer's
+  // equivalent.
   // ---------------------------------------------------------------
 
   private val CentroidSidecar = "_centroids"
   private val PairMetaFile = "_meta.json"
+
+  /** The kind of a pair manifest entry, carried in
+    * [[ZStore.ZFile.bucket]] (z-store buckets are >= 0). */
+  private[graft] val BaseEntry = -1
+  private[graft] val CentroidEntry = -2
+  private[graft] val DeltaEntry = -3
+
+  /** F: the most delta files one pair version references; the refresh
+    * that would exceed it folds base ∪ deltas into a fresh base. It
+    * bounds what a probe reads besides the base (one more scan over at
+    * most F small files) and keeps a probe's paths below Spark's
+    * parallel-listing threshold of 32. Measured on perfbench
+    * served_refresh's 2,000-row index, 4 vCPUs
+    * (plans/shared_versions/f_sweep.md): served logs over base ∪ 16
+    * deltas read within noise of a fresh base holding the same rows. */
+  private[graft] val MaxDeltaFiles = 16
 
   /** What a pair version records about itself at write time:
     * `nClusters` = the centroid table's row count, the cell count that
@@ -273,21 +309,27 @@ object IndexStore {
     * and pair writes outside the maintenance gates. */
   final case class PairMeta(nClusters: Long, nprobe: Option[Int] = None)
 
-  /** Write a new immutable (index, centroids) version: the index
-    * cluster-partitioned as in [[writeVersioned]] plus the centroid
-    * table as a `_centroids` sidecar, both fully written into an
-    * invisible `.build_v<N>` staging dir, then published by ONE
-    * atomic rename to `v<N>`. Readers use
-    * [[loadCurrentWithCentroids]] to get the pair atomically. A
-    * failed rename (a concurrent writer already published the number)
-    * fails loudly rather than clobbering.
+  /** Write a new immutable (index, centroids) version and return its
+    * number; readers get the pair atomically through
+    * [[loadCurrentWithCentroids]]. A failed publish (a concurrent
+    * writer already took the number) fails loudly rather than
+    * clobbering.
     *
-    * The version's cell count is STAMPED into a `_meta.json` sidecar
-    * before publish ([[pairMeta]]): it is read back from the
-    * just-written STAGING centroids (empty required schema — the
-    * parquet reader returns row-group counts, no payload scan), so the
-    * stamp records what was actually committed, once — never per
-    * serving batch. */
+    * A REFRESH commit writes one file: when `index` is the pair
+    * cache's own frame of the newest committed version
+    * ([[loadCurrentWithCentroidsCached]]) ∪ other rows and `centroids`
+    * is that version's own centroid frame, only the other rows are
+    * written — one delta file sorted by `cluster_id` — and the new
+    * manifest references the base, the earlier deltas and the centroid
+    * directory unchanged ([[ownRefresh]] recognizes the shape).
+    * Every other input takes the full write: `index` cell-aligned into
+    * a fresh base directory and `centroids` beside it, as does the
+    * refresh that would exceed [[MaxDeltaFiles]].
+    *
+    * The version's cell count is STAMPED into `_meta.json` from the
+    * written centroid files' parquet footers (driver-side, no Spark
+    * job), so the stamp records what was committed, never the input
+    * plan; a refresh carries it in the centroid entry's row count. */
   def writeVersionedWithCentroids(index: DataFrame, centroids: DataFrame,
                                   root: String): Long =
     writeVersionedWithCentroids(index, centroids, root, None)
@@ -302,42 +344,80 @@ object IndexStore {
     validatedNprobe.foreach(n => require(n >= 1,
       s"validatedNprobe $n must be >= 1"))
     val spark = index.sparkSession
-    val next = (allVersions(spark, root) :+ 0L).max + 1
-    // UNIQUE staging per attempt: a dot-prefixed dir is invisible to
-    // allVersions (unlike plain writeVersioned's immediately-visible
-    // vN dir), so two overlapping writers CAN both pick the same
-    // number — a shared staging name would let them interleave writes
-    // and publish a MIXED pair. Unique staging means each attempt's
-    // artifacts are self-consistent; the rename race below then
-    // decides a single winner. (The store's contract is still ONE
-    // writer — this makes a contract violation fail loudly instead of
-    // corrupting.)
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val stagingName = s".build_v${next}_$attempt"
-    val staging = s"$root/$stagingName"
-    write(index, staging)
-    centroids.write.mode("overwrite").parquet(s"$staging/$CentroidSidecar")
-    val (fs, p) = fsOf(spark, root)
-    // stamp the committed cell count (read back from staging, not from
-    // the input plan — a heavy input plan must not recompute for a count)
-    val nClusters =
-      spark.read.parquet(s"$staging/$CentroidSidecar").count()
+    val dir = s"data/${java.util.UUID.randomUUID()}"
+    val entries = ownRefresh(index, centroids, root) match {
+      case Some((files, rows)) if files.count(_.bucket == DeltaEntry) < MaxDeltaFiles =>
+        rows.coalesce(1).sortWithinPartitions("cluster_id").write.parquet(s"$root/$dir")
+        files ++ footerStamped(spark, root, dir, DeltaEntry)
+      case _ =>
+        write(index, s"$root/$dir")
+        centroids.write.parquet(s"$root/$dir/$CentroidSidecar")
+        Seq(ZStore.ZFile(dir, BaseEntry), ZStore.ZFile(s"$dir/$CentroidSidecar",
+          CentroidEntry, footerStamped(spark, root, s"$dir/$CentroidSidecar",
+            CentroidEntry).map(_.rows).sum))
+    }
+    val nClusters = entries.find(_.bucket == CentroidEntry).get.rows
     // write-side sanity bound on the stamp: a validated budget above
     // the version's own cell count is recorded AT the cell count —
     // probing more cells than exist is pure waste, and an unbounded
     // stamp would become every floored consumer's serving budget
     // (the read side clamps too, [[effectiveNprobe]], so pre-round-20
     // stamps are equally safe)
-    val meta = PairMeta(nClusters, validatedNprobe.map(n =>
-      math.min(n.toLong, math.max(1L, nClusters)).toInt))
-    val nprobeField = meta.nprobe.map(n => s""","nprobe":$n""").getOrElse("")
-    val metaOut = fs.create(
-      new org.apache.hadoop.fs.Path(p, s"$stagingName/$PairMetaFile"), true)
-    try metaOut.write(
-      s"""{"nClusters":${meta.nClusters}$nprobeField}"""
-        .getBytes("UTF-8"))
-    finally metaOut.close()
-    publishStaged(fs, p, stagingName, next, root)
+    val nprobeField = validatedNprobe.map(n =>
+      s""","nprobe":${math.min(n.toLong, math.max(1L, nClusters))}""").getOrElse("")
+    ZStore.publishFiles(spark, root, ".build_v", Seq(
+      PairMetaFile -> s"""{"nClusters":$nClusters$nprobeField}""",
+      ZStore.ManifestFile -> ZStore.manifestJson(entries, ZStore.ZStats(0L, 0L), -1L)))
+  }
+
+  /** The parquet files directly under pool directory `dir`, as manifest
+    * entries of `kind` with their footer row counts. */
+  private def footerStamped(spark: SparkSession, root: String, dir: String,
+                            kind: Int): Seq[ZStore.ZFile] = {
+    val (fs, p) = fsOf(spark, root)
+    fs.listStatus(new org.apache.hadoop.fs.Path(p, dir)).toSeq
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .map(n => ZStore.stampFromFooter(spark, s"$root/$dir/$n",
+        ZStore.ZFile(s"$dir/$n", kind), None))
+  }
+
+  /** When `index` is the pair cache's frame of the newest committed
+    * version ∪ other rows and `centroids` that version's centroid
+    * frame: the version's manifest entries and the other rows in the
+    * stored column order and types. Recognized conservatively on the
+    * analyzed plans: the union's first side is the cached plan (the
+    * union may cast its `cluster_id` to a wider type), the other side
+    * reads no leaf of it, and both cached plans are `sameResult`. A
+    * filtered or projected scan, an older version, the same scan twice,
+    * new centroids or a plain frame gets None: the full write. */
+  private def ownRefresh(index: DataFrame, centroids: DataFrame, root: String)
+      : Option[(Seq[ZStore.ZFile], DataFrame)] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
+    val spark = index.sparkSession
+    pairCache.synchronized(Option(pairCache.get((spark, root))))
+      .filter(_.files.exists(_.bucket == BaseEntry)).flatMap { e =>
+        val own = e.index.queryExecution.analyzed
+        def isOwn(side: LogicalPlan): Boolean = side.sameResult(own) || (side match {
+          case Project(list, child) if child.sameResult(own) =>
+            list.length == child.output.length && list.zip(child.output).forall {
+              case (a: Attribute, b) => a.semanticEquals(b)
+              case (Alias(Cast(a: Attribute, _, _, _), "cluster_id"), b) => a.semanticEquals(b)
+              case _ => false
+            }
+          case _ => false
+        })
+        index.queryExecution.analyzed match {
+          case Union(Seq(side, other), _, _) if isOwn(side) &&
+              !other.collectLeaves().exists(l => own.collectLeaves().exists(_.sameResult(l))) &&
+              centroids.queryExecution.analyzed.sameResult(e.cents.queryExecution.analyzed) &&
+              committedVersions(spark, root).lastOption.contains(e.version) =>
+            Some((e.files, org.apache.spark.sql.graftbridge.ColumnBridge.frame(spark, other)
+              .toDF(index.columns.toSeq: _*)
+              .select(e.index.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)))
+          case _ => None
+        }
+      }
   }
 
   /** The staging→version publish arbitration, shared by this pair
@@ -371,17 +451,19 @@ object IndexStore {
   }
 
   /** Read the newest committed version's (index, centroids, version) —
-    * both from the SAME version directory, so a retrain that changes
-    * geometry AND cluster-id space flips atomically for readers. Fails
-    * loudly on a committed version WITHOUT a sidecar (one written by
-    * plain [[writeVersioned]]): serving against a caller-supplied
-    * centroid path is exactly the silent-mis-prune hazard this pair
-    * store exists to remove. */
+    * both named by the SAME version's manifest, so a retrain that
+    * changes geometry AND cluster-id space flips atomically for
+    * readers. The index is the base scan ∪ one scan over the delta
+    * files ([[pairIndex]]). Fails loudly on a committed version WITHOUT
+    * a centroid entry (one written by plain [[writeVersioned]], or a
+    * pair written before pair versions shared files): serving against
+    * a caller-supplied centroid path is exactly the silent-mis-prune
+    * hazard this pair store exists to remove. */
   def loadCurrentWithCentroids(spark: SparkSession, root: String)
       : (DataFrame, DataFrame, Long) = {
     val v = currentCommittedVersion(spark, root)
-    val pair = loadVersionWithCentroids(spark, root, v)
-    (pair._1, pair._2, v)
+    val pair = loadPair(spark, root, v, 0L, None)
+    (pair.index, pair.cents, v)
   }
 
   private def currentCommittedVersion(spark: SparkSession, root: String): Long = {
@@ -390,16 +472,41 @@ object IndexStore {
     vs.last
   }
 
-  private def loadVersionWithCentroids(spark: SparkSession, root: String,
-                                       v: Long): (DataFrame, DataFrame) = {
-    val (fs, p) = fsOf(spark, root)
-    val side = new org.apache.hadoop.fs.Path(p, s"v$v/$CentroidSidecar")
-    require(fs.exists(side),
+  /** One loaded pair version: its manifest entries and frames. */
+  private final case class PairEntry(version: Long, stamp: Long,
+      files: Seq[ZStore.ZFile], base: DataFrame, index: DataFrame,
+      cents: DataFrame)
+
+  /** Version `v`'s pair. A base or centroid entry that `prior` (the
+    * previous cached version) also references reuses its frame: the
+    * pool data is immutable, so a refresh's cold load lists and infers
+    * neither again. */
+  private def loadPair(spark: SparkSession, root: String, v: Long,
+                       stamp: Long, prior: Option[PairEntry]): PairEntry = {
+    val files = ZStore.manifestAt(spark, s"$root/v$v").map(_.files).getOrElse(Nil)
+    require(files.exists(_.bucket == CentroidEntry),
       s"committed version v$v under $root has no $CentroidSidecar " +
-        "sidecar — it was written by writeVersioned (index-only). " +
+        "entry — it was written by writeVersioned (index-only). " +
         "Serving needs writeVersionedWithCentroids so the index and the " +
         "centroid geometry it was assigned with flip together.")
-    (load(spark, s"$root/v$v"), spark.read.parquet(side.toString))
+    def frame(kind: Int, of: PairEntry => DataFrame): DataFrame = {
+      val f = files.find(_.bucket == kind).get
+      prior.filter(_.files.contains(f)).map(of)
+        .getOrElse(spark.read.parquet(s"$root/${f.path}"))
+    }
+    val base = frame(BaseEntry, _.base)
+    PairEntry(v, stamp, files, base, pairIndex(spark, root, base, files),
+      frame(CentroidEntry, _.cents))
+  }
+
+  /** A pair version's index: the base scan, ∪ one scan over the delta
+    * files read with the base's schema (column order, the inferred
+    * `cluster_id` type), so no footer is read for inference. */
+  private def pairIndex(spark: SparkSession, root: String, base: DataFrame,
+                        files: Seq[ZStore.ZFile]): DataFrame = {
+    val deltas = files.filter(_.bucket == DeltaEntry).map(f => s"$root/${f.path}")
+    if (deltas.isEmpty) base
+    else base.union(spark.read.schema(base.schema).parquet(deltas: _*))
   }
 
   /** The [[PairMeta]] stamped into version `v` by
@@ -520,12 +627,16 @@ object IndexStore {
     * in one session). Freshness is identical to the uncached form —
     * every call re-LISTS the committed versions (one cheap directory
     * scan, the same check CascadeServe pays per micro-batch) — only
-    * the per-version artifacts are cached: schema inference and the
-    * sidecar footer read are skipped when the newest committed version
-    * is unchanged, which is safe because versions are immutable by
-    * construction (a flip is a NEW directory, never a rewrite). A flip
-    * is picked up on the very next call; the sidecar-less refusal
-    * fires exactly as in the uncached form.
+    * the per-version frames are cached: the manifest read, listing and
+    * schema inference are skipped when the newest committed version is
+    * unchanged, which is safe because versions are immutable by
+    * construction (a flip is a NEW version, never a rewrite). A flip
+    * is picked up on the very next call; its load reuses the previous
+    * version's base and centroid frames when the new manifest names the
+    * same pool directories (a refresh commit), so it lists only the
+    * delta files. The centroid-less refusal fires exactly as in the
+    * uncached form, and a refresh commit recognizes the frames this
+    * cache hands out ([[writeVersionedWithCentroids]]).
     *
     * The freshness token is (version, `_SUCCESS` mtime), not the
     * version number alone: a root DELETED and rebuilt from scratch
@@ -557,15 +668,12 @@ object IndexStore {
         if (pairCacheSessionStopped(it.next().getKey._1)) it.remove()
       Option(pairCache.get(key))
     }
-    hit match {
-      case Some((cv, cs, i, c)) if cv == v && cs == stamp => (i, c, v)
-      case _ =>
-        val pair = loadVersionWithCentroids(spark, root, v)
-        pairCache.synchronized {
-          pairCache.put(key, (v, stamp, pair._1, pair._2))
-        }
-        (pair._1, pair._2, v)
+    val pair = hit.filter(e => e.version == v && e.stamp == stamp).getOrElse {
+      val e = loadPair(spark, root, v, stamp, hit)
+      pairCache.synchronized(pairCache.put(key, e))
+      e
     }
+    (pair.index, pair.cents, v)
   }
 
   /** Cache bound: enough for every root a session realistically serves
@@ -581,11 +689,9 @@ object IndexStore {
     s => s.sparkContext.isStopped
 
   private val pairCache =
-    new java.util.LinkedHashMap[(SparkSession, String),
-        (Long, Long, DataFrame, DataFrame)](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(SparkSession, String), PairEntry](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String),
-            (Long, Long, DataFrame, DataFrame)]): Boolean =
+          e: java.util.Map.Entry[(SparkSession, String), PairEntry]): Boolean =
         size() > PairCacheMaxEntries
     }
 
@@ -597,33 +703,15 @@ object IndexStore {
     pairCache.synchronized(pairCache.containsKey((spark, root)))
 
   /** Drop all but the newest `keep` committed versions plus any
-    * uncommitted debris older than the newest committed one. Returns
-    * the deleted version numbers. Retention is the rollback window —
-    * keep >= 2 in production so one bad build is always reversible. */
-  def pruneVersions(spark: SparkSession, root: String, keep: Int): Seq[Long] = {
-    require(keep >= 1, "must keep at least the current version")
-    val (fs, p) = fsOf(spark, root)
-    val committed = committedVersions(spark, root)
-    if (committed.isEmpty) return Seq.empty
-    val keepSet = committed.takeRight(keep).toSet
-    val doomed = allVersions(spark, root)
-      .filter(v => !keepSet.contains(v) && v < committed.last).sorted
-    doomed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, s"v$v"), true))
-    // stale pair-build staging debris: crashed writeVersionedWithCentroids
-    // attempts targeting an ALREADY-PUBLISHED number can never publish
-    // (an in-flight build always targets > committed.last, so this
-    // never races a live writer)
-    val StagingDir = "^\\.build_v(\\d+)(_.*)?$".r
-    fs.listStatus(p).toSeq.filter(_.isDirectory).foreach { s =>
-      s.getPath.getName match {
-        case StagingDir(n, _) if n.toLong <= committed.last =>
-          fs.delete(s.getPath, true)
-        case _ =>
-      }
-    }
-    doomed
-  }
+    * uncommitted debris older than the newest committed one, then
+    * delete the pool data no kept manifest references (a dropped pair
+    * version's base, centroids and deltas die with the last version
+    * naming them) — [[ZStore.prune]]'s body, one for both stores.
+    * Returns the deleted version numbers. Retention is the rollback
+    * window — keep >= 2 in production so one bad build is always
+    * reversible. */
+  def pruneVersions(spark: SparkSession, root: String, keep: Int): Seq[Long] =
+    ZStore.prune(spark, root, keep)._1
 
   /** Upsert-by-id merge (the Chroma `ids=` semantics,
     * build_vectorstore.py:239): new rows win per id. */

@@ -67,6 +67,10 @@ import graft.sources.ZOrderLayout.ZRank
   *  - **Prune** ([[prune]]): drop old versions, then garbage-collect
   *    pool files no kept manifest references.
   *
+  * [[IndexStore]]'s (index, centroids) pair versions use the same
+  * manifest, publish and prune: a pair manifest names a base
+  * directory, delta files and a centroid directory in the same pool.
+  *
   * Single-writer contract as [[IndexStore]]: concurrent publishes race
   * loudly (the rename arbitration), never corrupt; readers only ever
   * see committed manifests over immutable files.
@@ -1072,18 +1076,24 @@ object ZStore {
     ZAutoReport(ad, acted, v, why)
   }
 
-  /** Drop all but the newest `keep` committed versions, then
-    * garbage-collect pool files no kept manifest references (absorb
-    * and maintain share untouched files across versions, so files die
-    * only when the LAST manifest naming them dies) and stale staging
-    * debris. Returns (prunedVersions, deletedDataFiles).
+  /** Drop all but the newest `keep` committed versions, sweep stale
+    * staging debris, then garbage-collect pool data no kept manifest
+    * references — the one prune of both stores ([[IndexStore.pruneVersions]]
+    * is this body). Absorb and maintain share untouched files across
+    * versions, and a pair version shares its base directory, centroid
+    * directory and delta files, so pool data dies only when the LAST
+    * manifest naming it (or a directory above it) dies. Staging debris
+    * is a `.build_v<N>` (pair) or `.zbuild_v<N>` (z-store) directory
+    * for an already-published number: an in-flight build always
+    * targets a number above the newest committed one, so the sweep
+    * never races a live writer. A kept version without a manifest (an
+    * [[IndexStore.writeVersioned]] one) references no pool data.
+    * Returns (prunedVersions, deletedDataFiles).
     *
     * Single-writer contract applies HARD here: a prune racing an
-    * in-flight absorb/maintain would GC the files its staged-but-not-
-    * yet-committed manifest references (they are in no committed
-    * manifest yet) — the same build-vs-prune exclusion
-    * [[IndexStore.pruneVersions]] documents; the scheduler, not the
-    * store, serializes them. */
+    * in-flight write would GC the pool data its staged-but-not-yet-
+    * committed manifest references (they are in no committed manifest
+    * yet); the scheduler, not the store, serializes them. */
   def prune(spark: SparkSession, root: String, keep: Int)
       : (Seq[Long], Long) = {
     require(keep >= 1, "must keep at least the current version")
@@ -1094,7 +1104,7 @@ object ZStore {
     val doomed = IndexStore.allVersions(spark, root)
       .filter(v => !keepSet.contains(v) && v < committed.last).sorted
     doomed.foreach(v => fs.delete(new Path(p, s"v$v"), true))
-    val StagingDir = "^\\.zbuild_v(\\d+)(_.*)?$".r
+    val StagingDir = "^\\.z?build_v(\\d+)(_.*)?$".r
     fs.listStatus(p).toSeq.filter(_.isDirectory).foreach { s =>
       s.getPath.getName match {
         case StagingDir(n, _) if n.toLong <= committed.last =>
@@ -1102,63 +1112,49 @@ object ZStore {
         case _ =>
       }
     }
-    // GC: pool files referenced by NO kept manifest. Paths are
-    // relativized against the QUALIFIED root — the walk returns
-    // fully-qualified paths, so stripping a relative root string would
-    // relativize NOTHING and this loop would delete every live file
-    // (a relative `root` works for init/absorb/read, so the first
-    // warning would have been the destroyed store; spec-pinned on a
-    // relative root). The walk is a plain listStatus recursion, NOT
+    // GC: pool data referenced by NO kept manifest, as a file or as a
+    // directory above it. Paths are relativized against the QUALIFIED
+    // root — the listing returns fully-qualified paths, so stripping a
+    // relative root string would relativize NOTHING and this walk would
+    // delete every live file (a relative `root` works for init/absorb/
+    // read, so the first warning would have been the destroyed store;
+    // spec-pinned on a relative root); a path that fails to relativize
+    // is left alone. The walk is a plain listStatus recursion, NOT
     // `fs.listFiles(recursive)` — the located-status iterator fetches
     // BLOCK LOCATIONS per file, which the GC never reads, and at high
     // bucket counts that metadata is the whole cost (measured: 45 s to
     // walk 4k files at bucketBits=10, ~0.1 s via listStatus — the
-    // round-20 1024-bucket probe caught prune dominating every batch).
+    // round-20 1024-bucket probe caught prune dominating every batch);
+    // a referenced directory (a pair's base) is not walked at all.
     val referenced = keepSet.toSeq.flatMap(v =>
-      readManifest(spark, root, v).map(_.path)).toSet
-    val dataRoot = new Path(p, "data")
+      manifestAt(spark, s"$root/v$v").toSeq.flatMap(_.files.map(_.path))).toSet
+    def live(rel: String): Boolean =
+      rel.split('/').inits.exists(s => s.nonEmpty && referenced(s.mkString("/")))
+    val rootUri = fs.makeQualified(p).toUri.getPath.stripSuffix("/")
     var deleted = 0L
-    if (fs.exists(dataRoot)) {
-      def walkFiles(d: Path): Seq[Path] =
-        fs.listStatus(d).toSeq.flatMap { st =>
-          if (st.isDirectory) walkFiles(st.getPath) else Seq(st.getPath)
-        }
-      val rootUri = fs.makeQualified(p).toUri.getPath.stripSuffix("/")
-      // files sitting DIRECTLY under data/ (no pool dir) are swept with
-      // the same relativize-and-check rule — the recursive listFiles
-      // walk this listStatus walk replaced covered them, and without
-      // this pass such a stray would leak forever (round 22, closing
-      // the r20 advice note)
-      fs.listStatus(dataRoot).filterNot(_.isDirectory).foreach { st =>
-        val fp = fs.makeQualified(st.getPath).toUri.getPath
-        if (st.getPath.getName.endsWith(".parquet") &&
-            fp.startsWith(rootUri + "/") &&
-            !referenced.contains(fp.stripPrefix(rootUri).stripPrefix("/"))) {
+    // whether `d` still holds referenced (or unrelativizable) data; a
+    // subdirectory that holds none is deleted whole (a pool dir keeps
+    // its write-time _SUCCESS marker, so "empty" means "no data files
+    // left under it"), and files sitting directly under data/ are swept
+    // by the same rule
+    def sweep(d: Path): Boolean = fs.listStatus(d).toSeq.map { st =>
+      val fp = fs.makeQualified(st.getPath).toUri.getPath
+      if (!fp.startsWith(rootUri + "/") ||
+          live(fp.stripPrefix(rootUri + "/"))) true
+      else if (st.isDirectory) {
+        val kept = sweep(st.getPath)
+        if (!kept) fs.delete(st.getPath, true)
+        kept
+      } else {
+        if (st.getPath.getName.endsWith(".parquet")) {
           fs.delete(st.getPath, false)
           deleted += 1
         }
+        false
       }
-      fs.listStatus(dataRoot).filter(_.isDirectory).foreach { u =>
-        var live = false
-        walkFiles(u.getPath).foreach { f =>
-          val fp = fs.makeQualified(f).toUri.getPath
-          if (f.getName.endsWith(".parquet")) {
-            // only delete what provably relativizes under the root AND
-            // is unreferenced — a path that fails to relativize is
-            // left alone
-            if (fp.startsWith(rootUri + "/") &&
-                !referenced.contains(fp.stripPrefix(rootUri).stripPrefix("/"))) {
-              fs.delete(f, false)
-              deleted += 1
-            } else live = true
-          }
-        }
-        // sweep pool directories holding no parquet anymore (a uuid
-        // dir keeps its write-time _SUCCESS marker, so "empty" means
-        // "no data files left under it", not literally empty)
-        if (!live) fs.delete(u.getPath, true)
-      }
-    }
+    }.foldLeft(false)(_ || _)
+    val dataRoot = new Path(p, "data")
+    if (fs.exists(dataRoot)) sweep(dataRoot)
     (doomed, deleted)
   }
 
@@ -1290,7 +1286,7 @@ object ZStore {
     * any id". String statistics compare in parquet's unsigned-byte
     * order = Spark's = the locate pruning's [[utf8Compare]], so the
     * three can never disagree. */
-  private def stampFromFooter(spark: SparkSession, fullPath: String,
+  private[graft] def stampFromFooter(spark: SparkSession, fullPath: String,
                               f: ZFile,
                               statId: Option[(String, String)]): ZFile = {
     import scala.jdk.CollectionConverters._
@@ -1335,23 +1331,28 @@ object ZStore {
     files.foreach(f => fs.delete(new Path(p, f.path), false))
   }
 
-  /** Publish (meta, manifest) as the next version: both JSON files
-    * plus the `_SUCCESS` marker are fully written into an invisible
-    * `.zbuild_v<N>_<attempt>` staging dir, then handed to the SHARED
-    * [[IndexStore.publishStaged]] arbitration (one copy of the
-    * rename-race semantics for both stores). */
+  /** Publish (meta, manifest) as the next version through
+    * [[publishFiles]]. */
   private def publish(spark: SparkSession, root: String, meta: ZMeta,
                       manifest: Seq[ZFile], stats: ZStats,
-                      lastBatchId: Long): Long = {
+                      lastBatchId: Long): Long =
+    publishFiles(spark, root, ".zbuild_v", Seq("_zmeta.json" -> metaJson(meta),
+      ManifestFile -> manifestJson(manifest, stats, lastBatchId)))
+
+  /** Publish a metadata-only version: `files` (name -> content) plus the
+    * `_SUCCESS` marker are fully written into an invisible
+    * `<stagingPrefix><N>_<attempt>` staging dir, then handed to the
+    * SHARED [[IndexStore.publishStaged]] arbitration (one copy of the
+    * rename-race semantics for both stores). */
+  private[graft] def publishFiles(spark: SparkSession, root: String,
+      stagingPrefix: String, files: Seq[(String, String)]): Long = {
     val next = (IndexStore.allVersions(spark, root) :+ 0L).max + 1
     val (fs, p) = IndexStore.fsOf(spark, root)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val stagingName = s".zbuild_v${next}_$attempt"
+    val stagingName = s"$stagingPrefix${next}_$attempt"
     val staging = new Path(p, stagingName)
     fs.mkdirs(staging)
-    writeString(fs, new Path(staging, "_zmeta.json"), metaJson(meta))
-    writeString(fs, new Path(staging, "_manifest.json"),
-      manifestJson(manifest, stats, lastBatchId))
+    files.foreach { case (name, body) => writeString(fs, new Path(staging, name), body) }
     fs.create(new Path(staging, "_SUCCESS"), true).close()
     IndexStore.publishStaged(fs, p, stagingName, next, root)
   }
@@ -1462,9 +1463,20 @@ object ZStore {
   private def readMeta(spark: SparkSession, root: String, v: Long): ZMeta =
     parseMeta(readString(spark, root, s"v$v/_zmeta.json"))
 
+  private[graft] val ManifestFile = "_manifest.json"
+
   private def manifestOf(spark: SparkSession, root: String,
                          v: Long): ZManifest =
-    parseManifest(readString(spark, root, s"v$v/_manifest.json"))
+    parseManifest(readString(spark, root, s"v$v/$ManifestFile"))
+
+  /** The manifest in version directory `dir`; None when it holds none
+    * (an [[IndexStore.writeVersioned]] version). */
+  private[graft] def manifestAt(spark: SparkSession, dir: String)
+      : Option[ZManifest] = {
+    val (fs, p) = IndexStore.fsOf(spark, dir)
+    if (!fs.exists(new Path(p, ManifestFile))) None
+    else Some(parseManifest(readString(spark, dir, ManifestFile)))
+  }
 
   private def readManifest(spark: SparkSession, root: String,
                            v: Long): Seq[ZFile] =

@@ -132,7 +132,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchStore scans only the probed cluster partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_").toString
+    val dir = QueriesShared.tempDir("ivf_store_").toString
     val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
@@ -152,7 +152,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchStoreAdaptive: probe count covers the candidate target, cap binds, result = fixed-nprobe twin") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_adapt_").toString
+    val dir = QueriesShared.tempDir("ivf_adapt_").toString
     val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
@@ -184,7 +184,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchStoreBatch: row-identical to ivfSearchBatch, scan pruned to the probed union") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_batch_").toString
+    val dir = QueriesShared.tempDir("ivf_store_batch_").toString
     // three clusters so a 2-query batch probing nprobe=1 each leaves
     // one cluster UNPROBED — pruning must be visible, not vacuous
     val cents3 = Seq((0L, Array(0.0f, 0.0f)), (1L, Array(100.0f, 100.0f)),
@@ -225,7 +225,7 @@ class AnnSpec extends SparkSpec {
     // the unstamped twin served at 1 — the batch consumer adopted the
     // budget the committed geometry was validated at, not the stale
     // config. Opt-out (the default) keeps configured-budget semantics.
-    val base = java.nio.file.Files.createTempDirectory("ivf_floor_").toString
+    val base = QueriesShared.tempDir("ivf_floor_").toString
     val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id",
       cents, "cid", "cvec")
     val stampedRoot = s"$base/stamped"
@@ -270,7 +270,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchStoreWhere: filtered top-k, both prunings visible in ONE scan") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_f_").toString
+    val dir = QueriesShared.tempDir("ivf_store_f_").toString
     // give every vector a label so the predicate has survivors + victims
     val labeled = corpus.withColumn("label", (col("vec_id") % 3).cast("int"))
     val assigned = Ann.ivfAssignBig(labeled, "embedding", "vec_id", cents, "cid", "cvec")
@@ -297,7 +297,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfSearchStoreExcluding: tombstoned ids never surface, cut exact over live rows") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_t_").toString
+    val dir = QueriesShared.tempDir("ivf_store_t_").toString
     val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
     graft.sources.IndexStore.write(assigned, dir)
     val qv = typedlit(Seq(0.05, 0.1))
@@ -353,7 +353,7 @@ class AnnSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val (cents, corpus) = (tieCents, tieCorpus)
     val assigned = Ann.ivfAssignBig(corpus, "embedding", "vec_id", cents, "cid", "cvec")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_tie_").toString
+    val dir = QueriesShared.tempDir("ivf_tie_").toString
     graft.sources.IndexStore.write(assigned, dir)
     val sizes = Ann.clusterSizes(spark, dir)
     // one code per 1-dim subspace value: ADC is exact on this grid
@@ -621,7 +621,7 @@ class AnnSpec extends SparkSpec {
       kCodes = 16, seed = 7L)
     val qv = pqCorpus.filter($"vec_id" === 0L).select("embedding")
       .as[Seq[Double]].head().toArray
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_codes_").toString
+    val dir = QueriesShared.tempDir("graft_pq_codes_").toString
     // index-build time: persist codes WITHOUT the fp vectors
     Ann.pqEncodeBig(pqCorpus, "embedding", cb)
       .select("vec_id", "pq_codes").write.parquet(s"$dir/codes")
@@ -644,7 +644,7 @@ class AnnSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val qv = typedlit(qcorpus.filter($"vec_id" === 0L)
       .select("embedding").as[Seq[Double]].head())
-    val dir = java.nio.file.Files.createTempDirectory("graft_int8_").toString
+    val dir = QueriesShared.tempDir("graft_int8_").toString
     // index-build time: persist codes + (mn, scale), never fp vectors
     Ann.quantizedEncode(qcorpus, "embedding", "vec_id")
       .write.parquet(s"$dir/codes")
@@ -676,7 +676,7 @@ class AnnSpec extends SparkSpec {
       .as[Seq[Double]].head().toArray
     // index-build time: cluster-keyed codes, partitioned by cluster —
     // the probe semi-join must then prune at the reader
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
+    val dir = QueriesShared.tempDir("graft_ivfpq_").toString
     Ann.pqEncodeBig(assigned, "embedding", cb)
       .select("cluster_id", "vec_id", "pq_codes")
       .write.partitionBy("cluster_id").parquet(s"$dir/codes")

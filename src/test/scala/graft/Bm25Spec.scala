@@ -88,7 +88,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("an on-disk index partitioned by term bucket serves with partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
+    val dir = QueriesShared.tempDir("graft_bm25_idx").toString
     try {
       Bm25.buildPostings(corpus, "doc_id", "text")
         .withColumn("tb", graft.operators.Curation.hashBucket(col("term"), 8))

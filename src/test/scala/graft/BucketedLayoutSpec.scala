@@ -14,7 +14,7 @@ class BucketedLayoutSpec extends SparkSpec {
   private lazy val (ordersTbl, itemsTbl) = {
     val db = "graft_bltest"
     BucketedLayout.ensureDatabase(spark, db,
-      Files.createTempDirectory("graft_bltest_").toString)
+      QueriesShared.tempDir("graft_bltest_").toString)
     val orders = (1L to 200L).map(k => (k, s"P${k % 5}")).toDF("o_orderkey", "o_pri")
     val items = (1L to 200L).flatMap(k =>
       (1 to (k % 4 + 1).toInt).map(i => (k, i, k * 0.5 + i))
@@ -65,7 +65,7 @@ class BucketedLayoutSpec extends SparkSpec {
   }
 
   test("ensureDatabase survives an apostrophe-bearing location and quotes the db") {
-    val loc = Files.createTempDirectory("graft_bl_q_").resolve("it's a dir")
+    val loc = QueriesShared.tempDir("graft_bl_q_").resolve("it's a dir")
     Files.createDirectory(loc)
     BucketedLayout.ensureDatabase(spark, "graft_bltest_q", loc.toString)
     assert(spark.catalog.databaseExists("graft_bltest_q"))

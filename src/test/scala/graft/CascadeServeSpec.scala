@@ -31,7 +31,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
     fallbackThreshold = 6, fallbackK = 5, finalN = 4)
 
   private def setup(): (String, String) = {
-    val base = Files.createTempDirectory("graft_cserve_").toString
+    val base = QueriesShared.tempDir("graft_cserve_").toString
     val root = s"$base/index"
     val assigned = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec")
@@ -188,7 +188,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
 
   test("a stamp that also records indexRows parses; a commit counts only the centroids") {
     // stamps written while the index row count was recorded too
-    val dir = Files.createTempDirectory("graft_meta_rows").toFile
+    val dir = QueriesShared.tempDir("graft_meta_rows").toFile
     Files.writeString(new java.io.File(dir, "_meta.json").toPath,
       """{"indexRows":7,"nClusters":3,"nprobe":2}""")
     assert(IndexStore.pairMetaAt(spark, dir.toString)
@@ -200,7 +200,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
     // a commit writes the index and the centroids and reads back the
     // centroid count; the index is not read again (counting it cost
     // three jobs more)
-    val root = Files.createTempDirectory("graft_commit_jobs").toString
+    val root = QueriesShared.tempDir("graft_commit_jobs").toString
     val assigned = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec").localCheckpoint(true)
     val (_, jobs) = jobsOf(
@@ -254,7 +254,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
     // end to end: one root stamped at nprobe 3 served with a config of
     // 1 must equal the UNstamped root served at 3 — the sink adopted
     // the committed geometry's validated budget, not the stale config
-    val base = Files.createTempDirectory("graft_cs_np").toString
+    val base = QueriesShared.tempDir("graft_cs_np").toString
     val assigned = Ann.ivfAssignBig(corpusRows.toDF("doc_id", "text", "embedding"),
       "embedding", "doc_id", cents, "cid", "cvec")
     val stampedRoot = s"$base/stamped"
@@ -284,7 +284,7 @@ class CascadeServeSpec extends SparkSpec with JobCount {
 
   test("pairMetaAtCached re-reads a _meta.json rewritten with the same mtime but a new length") {
     import IndexStore.PairMeta
-    val dir = Files.createTempDirectory("graft_meta_token").toFile
+    val dir = QueriesShared.tempDir("graft_meta_token").toFile
     val meta = new java.io.File(dir, "_meta.json")
     val mtime = 1700000000000L
     def stamp(json: String): Unit = {

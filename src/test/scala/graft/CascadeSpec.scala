@@ -160,8 +160,7 @@ class CascadeSpec extends SparkSpec with JobCount {
     // {0, 1} — doc 5 (cluster 9) must be invisible to EVERY stage,
     // and the stage plan must prune to the probed partitions
     // (PartitionFilters), not scan-then-filter.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cascade_idx_").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_cascade_idx_").toString + "/idx"
     graft.sources.IndexStore.write(
       corpus.withColumn("cluster_id",
         when(col("doc_id") === 5, 9L).otherwise(col("doc_id") % 2)), dir)

@@ -89,7 +89,7 @@ class DedupSpec extends SparkSpec {
     val batch = Seq((10L, base), (11L, near),
       (12L, "unrelated words that overlap with nothing else at all"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_band_idx").toFile
+    val root = QueriesShared.tempDir("graft_band_idx").toFile
     val dir = root.toString + "/bands"
     try {
       // NON-default scheme: the reader must pick it up from _graft_meta,
@@ -118,7 +118,7 @@ class DedupSpec extends SparkSpec {
     val docs = (0L until 60L)
       .map(i => (i, s"document number $i alpha beta gamma ${i % 7} delta"))
       .toDF("doc_id", "text").repartition(8)
-    val root = java.nio.file.Files.createTempDirectory("graft_fpb").toFile
+    val root = QueriesShared.tempDir("graft_fpb").toFile
     // AQE coalesces this toy shuffle's salt groups into one task per
     // bucket (the contract allows FEWER files, never more) — disable
     // coalescing so the salt's fan-out is observable at test scale
@@ -190,7 +190,7 @@ class DedupSpec extends SparkSpec {
     val corpus = Seq((3L, big), (4L, far)).toDF("doc_id", "text")
     val batch = Seq((10L, base), (11L, "totally different payload again"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_sh_idx").toFile
+    val root = QueriesShared.tempDir("graft_sh_idx").toFile
     val dir = root.toString + "/posts"
     try {
       // NON-default scheme: the reader must pick it up from _graft_meta
@@ -214,7 +214,7 @@ class DedupSpec extends SparkSpec {
   test("shingle index read is partition-pruned to the requested buckets") {
     val docs = (0L until 40L).map(i => (i, s"doc $i words ${"x " * i.toInt}"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_sh_prune").toFile
+    val root = QueriesShared.tempDir("graft_sh_prune").toFile
     val dir = root.toString + "/posts"
     try {
       Dedup.writeShingleIndex(docs, "doc_id", "text", dir,
@@ -241,7 +241,7 @@ class DedupSpec extends SparkSpec {
     // read the method is built on.
     val docs = (0L until 40L).map(i => (i, s"doc $i words ${"x " * i.toInt}"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_prune").toFile
+    val root = QueriesShared.tempDir("graft_prune").toFile
     val dir = root.toString + "/bands"
     try {
       Dedup.writeBandIndex(docs, "doc_id", "text", dir,

@@ -36,7 +36,7 @@ class EndToEndSpec extends SparkSpec {
          |${posting(2, "merge 보조", "row region", "merge and hash work in the row area")},
          |${posting(3, "경비원", "line zone", "totally unrelated guard duty")}
          |]}""".stripMargin
-    val f = Files.createTempDirectory("graft_e2e").resolve("jobs.json")
+    val f = QueriesShared.tempDir("graft_e2e").resolve("jobs.json")
     Files.writeString(f, json)
     f.toString
   }
@@ -88,7 +88,7 @@ class EndToEndSpec extends SparkSpec {
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val assigned = graft.operators.Ann.ivfAssignBig(
       corpus, "embedding", "vec_id", cents, "cid", "cvec")
-    val dir = Files.createTempDirectory("graft_e2e_ivf").toString
+    val dir = QueriesShared.tempDir("graft_e2e_ivf").toString
     graft.sources.IndexStore.write(assigned, dir)
 
     val qv = typedlit(Seq(0.5, 0.5, 0.5, 0.5))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Ann, IndexMaintenance}
 import graft.sources.IndexStore
 import org.apache.spark.sql.functions._
@@ -22,7 +20,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   private def freshStore(base: org.apache.spark.sql.DataFrame): String = {
-    val root = Files.createTempDirectory("graft_maint").toString
+    val root = QueriesShared.tempDir("graft_maint").toString
     val cents = Ann.trainCentroids(base, "embedding", k = 2)
     IndexStore.writeVersioned(
       Ann.ivfAssignBig(base, "embedding", "vec_id", cents, "cid", "cvec"), root)
@@ -154,7 +152,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (blob ++ far).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 10.0)))
       .toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_rebal").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_rebal").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -204,7 +202,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     def freshPairRoot(docs: org.apache.spark.sql.DataFrame,
                       cents: org.apache.spark.sql.DataFrame,
                       tag: String): String = {
-      val root = Files.createTempDirectory(s"graft_loop_$tag").toString + "/idx"
+      val root = QueriesShared.tempDir(s"graft_loop_$tag").toString + "/idx"
       IndexStore.writeVersionedWithCentroids(
         Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
         cents, root)
@@ -301,7 +299,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (a1 ++ a2 ++ b).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(2.5, 0.0)), (1L, Array(100.45, 0.0)))
       .toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_adaptnp").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_adaptnp").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -368,7 +366,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (a1 ++ a2 ++ b).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(2.5, 0.0)), (1L, Array(100.45, 0.0)))
       .toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_dblveto").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_dblveto").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -399,7 +397,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (aPts ++ bPts ++ cPts).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.1, 0.0)), (1L, Array(10.0, 0.0)),
       (2L, Array(4.1, 0.0))).toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_compact").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_compact").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -474,7 +472,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (blob ++ far).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 10.0)))
       .toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_loop_compact").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_loop_compact").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -512,7 +510,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (f ++ h ++ s).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.5, 0.0)), (1L, Array(10.0, 10.0)),
       (2L, Array(10.6, 10.0))).toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_rightsize").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_rightsize").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -558,7 +556,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (a ++ b ++ c).toDF("vec_id", "embedding")
     val cents = Seq((0L, Array(0.45, 0.0)), (1L, Array(2.3, 0.0)),
       (2L, Array(10.0, 10.0))).toDF("cid", "cvec")
-    val root = Files.createTempDirectory("graft_rightsize2").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_rightsize2").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec"),
       cents, root)
@@ -588,7 +586,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // used to throw: pair root → rebalance (serves the pair) →
     // maintain-with-retrain → serve the pair again.
     val base = corpus(0)
-    val root = Files.createTempDirectory("graft_maint_pair").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_maint_pair").toString + "/idx"
     val cents = Ann.trainCentroids(base, "embedding", k = 2)
     IndexStore.writeVersionedWithCentroids(
       Ann.ivfAssignBig(base, "embedding", "vec_id", cents, "cid", "cvec"),
@@ -620,7 +618,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   test("applyDelta: deletes fold in, re-embedded doc moves cluster, counts reconcile") {
     // plain (non-versioned) store — the in-place path applyDelta serves
     val base = corpus(0)
-    val path = Files.createTempDirectory("graft_delta").toString + "/idx"
+    val path = QueriesShared.tempDir("graft_delta").toString + "/idx"
     val cents = Ann.trainCentroids(base, "embedding", k = 2)
     IndexStore.write(
       Ann.ivfAssignBig(base, "embedding", "vec_id", cents, "cid", "cvec")
@@ -659,7 +657,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val docs = (Seq((1L, Array(0.1f, 0.1f)), (2L, Array(0.2f, 0.2f))) ++
       Seq((10L, Array(50.0f, 50.0f)), (11L, Array(50.2f, 50.2f))))
       .toDF("vec_id", "embedding")
-    val path = Files.createTempDirectory("graft_delta_empty").toString + "/idx"
+    val path = QueriesShared.tempDir("graft_delta_empty").toString + "/idx"
     val cents = Ann.trainCentroids(docs, "embedding", k = 2)
     IndexStore.write(
       Ann.ivfAssignBig(docs, "embedding", "vec_id", cents, "cid", "cvec")

@@ -51,7 +51,7 @@ class JobCorpusSpec extends SparkSpec {
         |    }
         |  ]
         |}""".stripMargin
-    val dir = Files.createTempDirectory("graft_jobs")
+    val dir = QueriesShared.tempDir("graft_jobs")
     val f = dir.resolve("jobs.json")
     Files.writeString(f, json)
     f.toString
@@ -69,7 +69,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("a malformed corpus file yields zero rows, not a failure") {
-    val dir = Files.createTempDirectory("graft_badjson")
+    val dir = QueriesShared.tempDir("graft_badjson")
     val f = dir.resolve("bad.json")
     Files.writeString(f, "{ this is not json")
     assert(JobCorpus.readPostings(spark, f.toString).count() == 0)
@@ -97,7 +97,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("IndexStore round trip with cluster partitioning and upsert") {
-    val dir = Files.createTempDirectory("graft_index").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_index").toString + "/idx"
     val idx = Seq((1L, 0L, "a"), (2L, 0L, "b"), (3L, 1L, "c"))
       .toDF("id", "cluster_id", "payload")
     IndexStore.write(idx, dir)
@@ -130,18 +130,18 @@ class JobCorpusSpec extends SparkSpec {
     def rowsOf(dir: String) = IndexStore.load(spark, dir)
       .select(col("vec_id"), col("cluster_id").cast("long"))
       .as[(Long, Long)].collect().toSet
-    val d0 = Files.createTempDirectory("graft_fpc0").toString + "/idx"
+    val d0 = QueriesShared.tempDir("graft_fpc0").toString + "/idx"
     IndexStore.write(idx, d0, filesPerCell = 0)
     val legacy = dataFiles(d0)
     assert(legacy > 4, s"expected task-fan-out in the write-through layout, got $legacy")
     // the DEFAULT (conf unset) is one file per cell — the measured
     // 2M A/B won on both the write and the read side
-    val d1 = Files.createTempDirectory("graft_fpc1").toString + "/idx"
+    val d1 = QueriesShared.tempDir("graft_fpc1").toString + "/idx"
     IndexStore.write(idx, d1)
     assert(dataFiles(d1) == 4, s"one file per cell, got ${dataFiles(d1)}")
     assert(rowsOf(d1) == rowsOf(d0), "layout must not change rows")
     // conf opt-out: 0 restores the write-through layout
-    val dOpt = Files.createTempDirectory("graft_fpc_opt").toString + "/idx"
+    val dOpt = QueriesShared.tempDir("graft_fpc_opt").toString + "/idx"
     spark.conf.set(IndexStore.FilesPerCellConf, "0")
     try IndexStore.write(idx, dOpt)
     finally spark.conf.unset(IndexStore.FilesPerCellConf)
@@ -151,7 +151,7 @@ class JobCorpusSpec extends SparkSpec {
     // production volume the shuffle never coalesces below the target;
     // when it does, files can only get FEWER — the knob's upper bound
     // is cells x filesPerCell either way)
-    val d3 = Files.createTempDirectory("graft_fpc3").toString + "/idx"
+    val d3 = QueriesShared.tempDir("graft_fpc3").toString + "/idx"
     val aqePrior = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try IndexStore.write(idx, d3, filesPerCell = 3)
@@ -161,12 +161,15 @@ class JobCorpusSpec extends SparkSpec {
     assert(rowsOf(d3) == rowsOf(d0))
     // the session conf reaches writeVersionedWithCentroids through the
     // shared write path — the maintenance loops inherit it unmodified
-    val root = Files.createTempDirectory("graft_fpc_pair").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_fpc_pair").toString + "/idx"
     spark.conf.set(IndexStore.FilesPerCellConf, "1")
     try assert(IndexStore.writeVersionedWithCentroids(idx,
       Seq((0L, Seq(0.0))).toDF("cid", "cvec"), root) == 1L)
     finally spark.conf.unset(IndexStore.FilesPerCellConf)
-    assert(dataFiles(s"$root/v1") == 4)
+    // the pair version's cells live in its base directory in the pool
+    val base = graft.sources.ZStore.manifestAt(spark, s"$root/v1").get.files
+      .find(_.bucket == IndexStore.BaseEntry).get.path
+    assert(dataFiles(s"$root/$base") == 4)
     assert(IndexStore.loadCurrentWithCentroids(spark, root)._1.count() == 800)
     // the partition-scoped rewrites share the layout: a delta touching
     // one cluster leaves that directory at one file, not one per merge
@@ -188,7 +191,7 @@ class JobCorpusSpec extends SparkSpec {
     // NumberFormatException deep inside a maintenance commit
     spark.conf.set(IndexStore.FilesPerCellConf, "1.0")
     val eConf = try intercept[IllegalArgumentException] {
-      IndexStore.write(idx, Files.createTempDirectory("graft_fpc_bad").toString)
+      IndexStore.write(idx, QueriesShared.tempDir("graft_fpc_bad").toString)
     } finally spark.conf.unset(IndexStore.FilesPerCellConf)
     assert(eConf.getMessage.contains(IndexStore.FilesPerCellConf), eConf.getMessage)
     // a NEGATIVE conf value fails the same way — naming the session
@@ -196,20 +199,20 @@ class JobCorpusSpec extends SparkSpec {
     // deep inside a maintenance commit
     spark.conf.set(IndexStore.FilesPerCellConf, "-1")
     val eNeg = try intercept[IllegalArgumentException] {
-      IndexStore.write(idx, Files.createTempDirectory("graft_fpc_neg").toString)
+      IndexStore.write(idx, QueriesShared.tempDir("graft_fpc_neg").toString)
     } finally spark.conf.unset(IndexStore.FilesPerCellConf)
     assert(eNeg.getMessage.contains(IndexStore.FilesPerCellConf), eNeg.getMessage)
     // salted fan-out survives an unhashable (map) column: the salt
     // prefers atomic non-cluster columns and never touches the map
     val mapIdx = spark.range(100).select((col("id") % 2).as("cluster_id"),
       col("id").as("vec_id"), map(lit("k"), col("id")).as("meta"))
-    val dMap = Files.createTempDirectory("graft_fpc_map").toString + "/idx"
+    val dMap = QueriesShared.tempDir("graft_fpc_map").toString + "/idx"
     IndexStore.write(mapIdx, dMap, filesPerCell = 2)
     assert(IndexStore.load(spark, dMap).count() == 100)
   }
 
   test("versioned store: commit marker gates visibility, prune keeps rollback window") {
-    val root = Files.createTempDirectory("graft_vidx").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_vidx").toString + "/idx"
     val v1 = IndexStore.writeVersioned(
       Seq((1L, "a")).toDF("id", "payload"), root)
     val v2 = IndexStore.writeVersioned(
@@ -237,7 +240,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("versioned pair store: index + centroids flip atomically, marker last, sidecar-less versions refused") {
-    val root = Files.createTempDirectory("graft_pidx").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_pidx").toString + "/idx"
     val centsA = Seq((0L, Array(0.0, 0.0)), (1L, Array(4.0, 0.0)))
       .toDF("cid", "cvec")
     val idxA = Seq((1L, 0L, "a"), (2L, 0L, "b"), (3L, 1L, "c"))
@@ -281,7 +284,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("cached pair load: repeat calls reuse the pair, a version flip is picked up immediately") {
-    val root = Files.createTempDirectory("graft_pcache").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_pcache").toString + "/idx"
     val centsA = Seq((0L, Array(0.0, 0.0))).toDF("cid", "cvec")
     val idxA = Seq((1L, 0L, "a"), (2L, 0L, "b"))
       .toDF("id", "cluster_id", "payload")
@@ -303,7 +306,7 @@ class JobCorpusSpec extends SparkSpec {
     assert(v2 == 2L && i2.count() == 1 && c2.count() == 2)
     assert(!(i2 eq i1))
     // distinct roots do not collide in the cache
-    val root2 = Files.createTempDirectory("graft_pcache2").toString + "/idx"
+    val root2 = QueriesShared.tempDir("graft_pcache2").toString + "/idx"
     IndexStore.writeVersionedWithCentroids(idxA, centsA, root2)
     assert(IndexStore.loadCurrentWithCentroidsCached(spark, root2)._3 == 1L)
     assert(IndexStore.loadCurrentWithCentroidsCached(spark, root)._3 == 2L)
@@ -314,7 +317,7 @@ class JobCorpusSpec extends SparkSpec {
     // freshness token would hand back the cached plan over files that
     // no longer exist — a confusing downstream FileNotFoundException
     // instead of a reload
-    val root = Files.createTempDirectory("graft_prebuild").toString + "/idx"
+    val root = QueriesShared.tempDir("graft_prebuild").toString + "/idx"
     val cents = Seq((0L, Array(0.0, 0.0))).toDF("cid", "cvec")
     val idxA = Seq((1L, 0L, "old")).toDF("id", "cluster_id", "payload")
     IndexStore.writeVersionedWithCentroids(idxA, cents, root)
@@ -343,7 +346,7 @@ class JobCorpusSpec extends SparkSpec {
     // LRU, and an evicted root just pays one uncached reload
     val cents = Seq((0L, Array(0.0, 0.0))).toDF("cid", "cvec")
     val idx = Seq((1L, 0L, "x")).toDF("id", "cluster_id", "payload")
-    val base = Files.createTempDirectory("graft_pbound").toString
+    val base = QueriesShared.tempDir("graft_pbound").toString
     (0 until IndexStore.PairCacheMaxEntries + 5).foreach { i =>
       val r = s"$base/idx$i"
       IndexStore.writeVersionedWithCentroids(idx, cents, r)
@@ -376,7 +379,7 @@ class JobCorpusSpec extends SparkSpec {
     // the documented recovery contract: a corrupt path must fail every
     // retry loudly — silently treating it as empty would overwrite the
     // index with just the current batch
-    val dir = Files.createTempDirectory("graft_corrupt").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_corrupt").toString + "/idx"
     new java.io.File(dir).mkdirs()
     Files.writeString(java.nio.file.Path.of(dir, "part-00000.parquet"),
       "this is not a parquet file")
@@ -390,7 +393,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("upsertPartitioned rewrites only the affected cluster partitions") {
-    val dir = Files.createTempDirectory("graft_index_dyn").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_index_dyn").toString + "/idx"
     IndexStore.write(Seq(
       (1L, 0L, "a"), (2L, 0L, "b"), (11L, 1L, "x"), (12L, 1L, "y"))
       .toDF("id", "cluster_id", "payload"), dir)
@@ -418,7 +421,7 @@ class JobCorpusSpec extends SparkSpec {
   test("upsertReassigned purges the OLD cluster's copy when an id moves") {
     // the re-embedded-doc hazard upsertPartitioned documents away:
     // id 2 moves cluster 0 -> 2; its old copy must vanish from 0
-    val dir = Files.createTempDirectory("graft_index_move").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_index_move").toString + "/idx"
     IndexStore.write(Seq(
       (1L, 0L, "a"), (2L, 0L, "b"), (11L, 1L, "x"), (21L, 2L, "p"))
       .toDF("id", "cluster_id", "payload"), dir)
@@ -455,7 +458,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("compactPartitioned drops tombstoned rows and emptied directories") {
-    val dir = Files.createTempDirectory("graft_index_compact").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_index_compact").toString + "/idx"
     IndexStore.write(Seq(
       (1L, 0L, "a"), (2L, 0L, "b"), (11L, 1L, "x"), (21L, 2L, "p"))
       .toDF("id", "cluster_id", "payload"), dir)
@@ -486,7 +489,7 @@ class JobCorpusSpec extends SparkSpec {
   }
 
   test("compactPartitioned refuses to empty the WHOLE index (unloadable layout)") {
-    val dir = Files.createTempDirectory("graft_index_empty").toString + "/idx"
+    val dir = QueriesShared.tempDir("graft_index_empty").toString + "/idx"
     IndexStore.write(Seq((1L, 0L, "a"), (2L, 1L, "b"))
       .toDF("id", "cluster_id", "payload"), dir)
     // tombstoning every id would leave zero data files — load() would

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.IncrementalAgg
 import graft.sources.IndexStore
 import graft.streaming.MvMaintain
@@ -20,7 +18,7 @@ class MvMaintainSpec extends SparkSpec {
   private val ck = "ckpt-a"
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_mv_").toString + "/state"
+    QueriesShared.tempDir("graft_mv_").toString + "/state"
 
   private def rows: Seq[(String, Long)] = Seq(
     ("a", 1L), ("a", 4L), ("b", 10L), ("b", 2L), ("c", 7L),

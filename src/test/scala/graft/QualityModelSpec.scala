@@ -59,7 +59,7 @@ class QualityModelSpec extends SparkSpec {
     assert(served == oneShot && served.nonEmpty)
     // a persisted-then-loaded model serves identically (the artifact
     // round-trip the t21 harness exercises)
-    val p = java.nio.file.Files.createTempDirectory("qm_spec_").toString + "/m"
+    val p = QueriesShared.tempDir("qm_spec_").toString + "/m"
     model.write.overwrite().save(p)
     val loaded = org.apache.spark.ml.classification.LogisticRegressionModel.load(p)
     val reServed = QualityModel.scoreEval(loaded, df, "doc_id", "text", "label")

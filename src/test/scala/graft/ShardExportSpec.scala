@@ -27,7 +27,7 @@ class ShardExportSpec extends SparkSpec {
   }
 
   test("writeShards: one file per shard dir, deterministic order, complete union, true manifest") {
-    val out = Files.createTempDirectory("graft_shards").toString
+    val out = QueriesShared.tempDir("graft_shards").toString
     val mf = ShardExport.writeShards(docs, "doc_id", "text", out, 8)
       .orderBy("shard")
       .as[(Int, Long, Long)].collect().toSeq
@@ -58,7 +58,7 @@ class ShardExportSpec extends SparkSpec {
     assert(mf.map(_._2).sum == 500)
     // deterministic read order: a second export yields the identical
     // per-shard row sequence (the reproducible-global-shuffle claim)
-    val out2 = Files.createTempDirectory("graft_shards2").toString
+    val out2 = QueriesShared.tempDir("graft_shards2").toString
     ShardExport.writeShards(docs, "doc_id", "text", out2, 8)
     for (s <- mf.map(_._1)) {
       def seqOf(o: String) = spark.read.parquet(s"$o/shard=$s")
@@ -74,7 +74,7 @@ class ShardExportSpec extends SparkSpec {
 
   test("upsertShards rewrites only affected shard dirs; result row-identical to a full rewrite") {
     import java.io.File
-    val out = Files.createTempDirectory("graft_upsert").toString
+    val out = QueriesShared.tempDir("graft_upsert").toString
     ShardExport.writeShards(docs, "doc_id", "text", out, 8)
     def listing(s: Int): Set[(String, Long, Long)] = {
       val d = new File(out, s"shard=$s")
@@ -105,7 +105,7 @@ class ShardExportSpec extends SparkSpec {
     // row-identity with a from-scratch export of the merged corpus,
     // including intra-shard order (the deterministic-order claim)
     val mergedDocs = docs.filter(col("doc_id") =!= 5L).unionByName(delta)
-    val out2 = Files.createTempDirectory("graft_full").toString
+    val out2 = QueriesShared.tempDir("graft_full").toString
     ShardExport.writeShards(mergedDocs, "doc_id", "text", out2, 8)
     for (s <- 0 until 8) {
       def rows(o: String) = spark.read.parquet(s"$o/shard=$s")
@@ -115,7 +115,7 @@ class ShardExportSpec extends SparkSpec {
   }
 
   test("upsertShards is idempotent: re-applying the same delta changes nothing") {
-    val out = Files.createTempDirectory("graft_idem").toString
+    val out = QueriesShared.tempDir("graft_idem").toString
     ShardExport.writeShards(docs, "doc_id", "text", out, 8)
     val delta = Seq((5L, "doc 5 REVISED"), (1000L, "new doc")).toDF("doc_id", "text")
     def state() = spark.read.parquet(out)
@@ -141,7 +141,7 @@ class ShardExportSpec extends SparkSpec {
   }
 
   test("upsertShards refuses an nShards that differs from the export's recorded modulus") {
-    val out = Files.createTempDirectory("graft_modulus").toString
+    val out = QueriesShared.tempDir("graft_modulus").toString
     ShardExport.writeShards(docs, "doc_id", "text", out, 8)
     val delta = Seq((5L, "doc 5 REVISED")).toDF("doc_id", "text")
     // re-bucketing under 16 would strand the stale doc 5 in its
@@ -157,7 +157,7 @@ class ShardExportSpec extends SparkSpec {
   test("a crashed upsert is completed from its journal, from every crash window") {
     import java.nio.file.{Files => F, Paths => P, StandardCopyOption}
     // expected end state: a real, uninterrupted upsert
-    val outDone = F.createTempDirectory("graft_crash_done").toString
+    val outDone = QueriesShared.tempDir("graft_crash_done").toString
     ShardExport.writeShards(docs, "doc_id", "text", outDone, 8)
     val delta = Seq((5L, "doc 5 REVISED body"), (1000L, "new doc body"),
       (1001L, "second new doc"), (1002L, "third new doc"))
@@ -173,7 +173,7 @@ class ShardExportSpec extends SparkSpec {
       .orderBy("shard").as[(Int, Long, Long)].collect().toSeq
     // crash scene: fresh export + staged merge + journal, flips torn
     // at three different points
-    val out = F.createTempDirectory("graft_crash").toString
+    val out = QueriesShared.tempDir("graft_crash").toString
     ShardExport.writeShards(docs, "doc_id", "text", out, 8)
     def copyDir(src: String, dst: String): Unit = {
       F.createDirectories(P.get(dst))
@@ -230,14 +230,14 @@ class ShardExportSpec extends SparkSpec {
     assert(src.contains("_graft_tmp_upsert"), "staging dir marker missing")
     // and a crash-leftover staging dir must not poison later reads:
     // leading-underscore dirs are invisible to partition discovery
-    val out = Files.createTempDirectory("graft_tmpvis").toString
+    val out = QueriesShared.tempDir("graft_tmpvis").toString
     ShardExport.writeShards(docs, "doc_id", "text", out, 4)
     Files.createDirectory(Paths.get(out, "_graft_tmp_upsert"))
     assert(spark.read.parquet(out).count() == 500)
   }
 
   test("writeShardsJsonl: one gz part per shard, content round-trips, manifest true to files") {
-    val out = Files.createTempDirectory("graft_jsonl").toString + "/export"
+    val out = QueriesShared.tempDir("graft_jsonl").toString + "/export"
     val mf = ShardExport.writeShardsJsonl(docs, "doc_id", "text", out, 4)
       .orderBy("shard")
       .select(col("shard").cast("long"), col("n_docs"), col("n_tokens"))
@@ -271,7 +271,7 @@ class ShardExportSpec extends SparkSpec {
     // through the pinned read-back faithfully
     val numericTexts = (0L until 40L).map(i => (i, s"${i * 11} ${i * 7}"))
       .toDF("doc_id", "text")
-    val out = Files.createTempDirectory("graft_jsonl_meta").toString + "/export"
+    val out = QueriesShared.tempDir("graft_jsonl_meta").toString + "/export"
     val mf = ShardExport.writeShardsJsonl(numericTexts, "doc_id", "text", out, 3)
     // same modulus sidecar as the parquet sink
     val meta = spark.read.parquet(s"$out/_graft_meta")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.streaming.EventStream
@@ -150,7 +149,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.IngestPipeline
     import graft.sources.IndexStore
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_ingest").toString + "/corpus"
+    val root = QueriesShared.tempDir("graft_ingest").toString + "/corpus"
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val near = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
     val far = "one two three four five six seven eight nine ten"
@@ -183,7 +182,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.IngestPipeline
     import graft.sources.IndexStore
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_qgate").toString + "/corpus"
+    val root = QueriesShared.tempDir("graft_qgate").toString + "/corpus"
     // passes the (relaxed-minWords) Gopher rules: prose-like, has
     // stop words, sane word lengths
     val good = "the quick brown fox jumps over the lazy dog and then " +
@@ -223,7 +222,7 @@ class StreamingSpec extends SparkSpec {
   test("dedupedPartitionedSink rewrites only the batch's cluster partitions") {
     import graft.streaming.IngestPipeline
     implicit val sqlCtx = spark.sqlContext
-    val path = Files.createTempDirectory("graft_part_ingest").toString + "/corpus"
+    val path = QueriesShared.tempDir("graft_part_ingest").toString + "/corpus"
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val near = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
     val far = "one two three four five six seven eight nine ten"
@@ -318,7 +317,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsertBatch: insert then overwrite-by-id") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/index"
+    val dir = QueriesShared.tempDir("graft_upsert").toString + "/index"
     EventStream.upsertBatch(dir, "id")(
       Seq((1L, "v1"), (2L, "v1")).toDF("id", "payload"), 0L)
     EventStream.upsertBatch(dir, "id")(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.ZOrderLayout
 import org.apache.spark.sql.functions._
 
@@ -53,7 +51,7 @@ class ZOrderLayoutSpec extends SparkSpec {
       (col("id") % 60).cast("double").as("x"),
       (col("id") / 60).cast("double").as("y"),
       col("id").as("rid")).repartition(16)
-    val dZ = Files.createTempDirectory("graft_zorder").toString + "/t"
+    val dZ = QueriesShared.tempDir("graft_zorder").toString + "/t"
     ZOrderLayout.writeZOrdered(grid, Seq("x", "y"), dZ, nFiles = 16)
     val back = spark.read.parquet(dZ)
     // row identity: the layout is invisible in the data
@@ -67,7 +65,7 @@ class ZOrderLayoutSpec extends SparkSpec {
     // both dimensions' spans shrink together — the min/max statistics
     // parquet row-group pruning feeds on. (A single-column sort would
     // shrink one dimension and leave the other at full span.)
-    val dP = Files.createTempDirectory("graft_plain").toString + "/t"
+    val dP = QueriesShared.tempDir("graft_plain").toString + "/t"
     grid.write.parquet(dP)
     def meanSpan(path: String, c: String): Double = {
       val spans = spark.read.parquet(path)
@@ -135,7 +133,7 @@ class ZOrderLayoutSpec extends SparkSpec {
     // laid out, the string dimension's per-file distinct-tenant count
     // shrinks vs scattered — the dimension genuinely clusters now
     // (the round-17 cast-to-double form ranked it constant 0)
-    val dZ = Files.createTempDirectory("graft_zdict").toString + "/t"
+    val dZ = QueriesShared.tempDir("graft_zdict").toString + "/t"
     ZOrderLayout.writeZOrdered(df, Seq("tenant", "ts"), dZ, nFiles = 12,
       bits = 4)
     val back = spark.read.parquet(dZ)
@@ -235,7 +233,7 @@ class ZOrderLayoutSpec extends SparkSpec {
     assert(dOcc >= 8, s"equal-depth occupied only $dOcc of 16 buckets")
     // layout with equal depth: per-file spans on the UNIFORM dimension
     // still shrink (the skewed dim no longer eats the whole key space)
-    val dD = Files.createTempDirectory("graft_zdepth").toString + "/t"
+    val dD = QueriesShared.tempDir("graft_zdepth").toString + "/t"
     ZOrderLayout.writeZOrdered(skewed, Seq("rev", "u"), dD, nFiles = 16,
       bits = 4, equalDepth = true)
     val back = spark.read.parquet(dD)

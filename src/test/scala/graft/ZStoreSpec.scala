@@ -29,7 +29,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("init -> absorb -> maintain: row identity throughout, spans stay bucket-bounded, versions flip atomically") {
-    val root = Files.createTempDirectory("graft_zstore").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zstore").toString + "/t"
     val v1 = ZStore.init(grid(0, 3600), Seq("x", "y"), root,
       bits = 4, bucketBits = 4)
     assert(v1 == 1L)
@@ -135,7 +135,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("absorb: envelope clamps are counted, schema drift refuses, crash debris stays invisible") {
-    val root = Files.createTempDirectory("graft_zstore2").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zstore2").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     // a batch beyond the stamped [0, 59] envelope: clamps into the
     // edge bucket, queryable, counted in the report
@@ -166,7 +166,7 @@ class ZStoreSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root, ".zbuild_v1_dead")))
     // no committed version: loud
     intercept[IllegalArgumentException] {
-      ZStore.read(spark, Files.createTempDirectory("graft_zempty").toString)
+      ZStore.read(spark, QueriesShared.tempDir("graft_zempty").toString)
     }
     // TYPE drift with matching names refuses too — a name-only gate
     // would publish parquet files the pool's union read cannot
@@ -180,7 +180,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("advice: persisted clamp counters drive the relayout/maintain/healthy decision without a data scan") {
-    val root = Files.createTempDirectory("graft_zadvice").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zadvice").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     assert(ZStore.stats(spark, root) == ZStore.ZStats(0L, 0L))
     val a0 = ZStore.advice(spark, root, minAbsorbed = 100)
@@ -220,7 +220,7 @@ class ZStoreSpec extends SparkSpec {
   test("ZIngest: micro-batches absorb O(batch), compaction triggers on the advice, versions self-prune") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_zingest").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zingest").toString + "/t"
     // the store must exist before the stream starts (the layout's
     // envelopes come from a representative base, not the first batch)
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 3)
@@ -278,7 +278,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("relayout: fresh envelopes absorb the clamped mass; equal-depth init persists Depth ranks") {
-    val root = Files.createTempDirectory("graft_zrelayout").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zrelayout").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     // a batch far outside the stamped [0, 59] envelope piles into the
     // edge bucket — the drift relayout exists for
@@ -305,7 +305,7 @@ class ZStoreSpec extends SparkSpec {
     val r2 = ZStore.absorb(spark, root, far.withColumn("rid", col("rid") + 1000))
     assert(r2.outOfEnvelopeRows == 0, r2.toString)
     // equal-depth init: Depth ranks persist through the JSON round trip
-    val rootD = Files.createTempDirectory("graft_zdepthstore").toString + "/t"
+    val rootD = QueriesShared.tempDir("graft_zdepthstore").toString + "/t"
     val skewed = spark.range(2000).select(
       when(col("id") % 20 === 0, (col("id") % 100) * lit(10000.0))
         .otherwise((col("id") % 100).cast("double")).as("rev"),
@@ -325,7 +325,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("a string dimension rides the lifecycle: dictionary envelopes persist in _zmeta and unseen values clamp") {
-    val root = Files.createTempDirectory("graft_zstore3").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zstore3").toString + "/t"
     val tenants = Seq("acme", "bravo", "corex", "delta")
     val docs = spark.range(800).select(
       element_at(typedlit(tenants), (col("id") % 4 + 1).cast("int"))
@@ -354,7 +354,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("delete/upsert by id: copy-on-write touches only affected buckets, upsert is idempotent, gates refuse loudly") {
-    val root = Files.createTempDirectory("graft_zdelete").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zdelete").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 4)
     val (_, man0, _) = ZStore.loadCurrent(spark, root)
     val nBuckets0 = man0.map(_.bucket).distinct.length
@@ -449,7 +449,7 @@ class ZStoreSpec extends SparkSpec {
     // FILE granularity (round 20): ids living only in absorbed files
     // leave the INIT files of the very same buckets untouched — a
     // bucket-granular rewrite would rewrite them all
-    val rootF = Files.createTempDirectory("graft_zfilegran").toString + "/t"
+    val rootF = QueriesShared.tempDir("graft_zfilegran").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), rootF, bits = 4, bucketBits = 4)
     val (_, manInit, _) = ZStore.loadCurrent(spark, rootF)
     ZStore.absorb(spark, rootF, grid(3600, 7200))
@@ -464,7 +464,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("absorb batchId: a replayed batch no-ops, the persisted id survives maintain/relayout/prune, the sink is effectively-once") {
-    val root = Files.createTempDirectory("graft_zreplay").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zreplay").toString + "/t"
     ZStore.init(grid(0, 1200), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     assert(ZStore.lastAbsorbedBatchId(spark, root) == -1L)
     val r0 = ZStore.absorb(spark, root, grid(1200, 1500), batchId = Some(0L))
@@ -511,19 +511,19 @@ class ZStoreSpec extends SparkSpec {
       when(col("id") % 20 === 0, ((col("id") / 20) % 15 + 1) * lit(100000.0))
         .otherwise((col("id") % 50).cast("double")).as("x"),
       col("id").as("rid"))
-    val root = Files.createTempDirectory("graft_zskewadv").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zskewadv").toString + "/t"
     ZStore.init(skewed(4000), Seq("x"), root, bits = 4, bucketBits = 4)
     val a = ZStore.advice(spark, root)
     assert(a.occupancySkew.exists(_ > 8.0), a.toString)
     assert(a.equalDepth, a.toString)
     assert(a.reason.contains("equalDepth"), a.reason)
     // a uniform store recommends nothing
-    val rootU = Files.createTempDirectory("graft_zuniadv").toString + "/t"
+    val rootU = QueriesShared.tempDir("graft_zuniadv").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), rootU, bits = 4, bucketBits = 4)
     val au = ZStore.advice(spark, rootU)
     assert(!au.equalDepth && au.occupancySkew.exists(_ < 8.0), au.toString)
     // a depth-ranked store has no width dimension to switch — no hint
-    val rootD = Files.createTempDirectory("graft_zdepadv").toString + "/t"
+    val rootD = QueriesShared.tempDir("graft_zdepadv").toString + "/t"
     ZStore.init(skewed(4000), Seq("x"), rootD, bits = 4, bucketBits = 4,
       equalDepth = true)
     val ad = ZStore.advice(spark, rootD)
@@ -540,7 +540,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("maintain folds only the k dirtiest buckets per call and discloses the deferral; bounded calls converge") {
-    val root = Files.createTempDirectory("graft_zfoldk").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zfoldk").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 4)
     (1 to 3).foreach(i =>
       ZStore.absorb(spark, root, grid(3600L * i, 3600L * (i + 1))))
@@ -574,7 +574,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("ZIngest: relayout advice pending offline still folds fragmentation inline") {
-    val root = Files.createTempDirectory("graft_zpend").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zpend").toString + "/t"
     ZStore.init(grid(0, 1200), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     val sink = graft.streaming.ZIngest.absorbingSink(root,
       maxFilesPerBucket = 1, clampFloor = 0.01, minAbsorbed = 10,
@@ -599,7 +599,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("ZIngest.upsertingSink: streamed upserts replace by id, replays skip, housekeeping and retention run") {
-    val root = Files.createTempDirectory("graft_zupsink").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zupsink").toString + "/t"
     ZStore.init(grid(0, 2400), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     val sink = graft.streaming.ZIngest.upsertingSink(root, "rid",
       maxFilesPerBucket = 2, keepVersions = 2) _
@@ -641,7 +641,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("writeFanOut: contiguous sub-range files per bucket — parallel writes, envelopes tighter not looser") {
-    val root = Files.createTempDirectory("graft_zfan").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zfan").toString + "/t"
     ZStore.init(grid(0, 7200), Seq("x", "y"), root, bits = 4, bucketBits = 3,
       writeFanOut = 4)
     val (_, man, _) = ZStore.loadCurrent(spark, root)
@@ -655,7 +655,7 @@ class ZStoreSpec extends SparkSpec {
     assert(fanned.count() == 7200)
     assert(fanned.select("rid").as[Long].collect().toSet ==
       (0L until 7200L).toSet)
-    val rootRef = Files.createTempDirectory("graft_zfanref").toString + "/t"
+    val rootRef = QueriesShared.tempDir("graft_zfanref").toString + "/t"
     ZStore.init(grid(0, 7200), Seq("x", "y"), rootRef, bits = 4, bucketBits = 3)
     assert(meanSpan(fanned, "x") <= meanSpan(ZStore.read(spark, rootRef), "x")
       + 1e-9,
@@ -686,7 +686,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("readRange: manifest-level bucket pruning is conservative-correct, skips real files, and honors dictionary clamp mass") {
-    val root = Files.createTempDirectory("graft_zrange").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zrange").toString + "/t"
     ZStore.init(grid(0, 7200), Seq("x", "y"), root, bits = 4, bucketBits = 4)
     val (meta, man, _) = ZStore.loadCurrent(spark, root)
     // identity: readRange == read().filter(...) for a grid of boxes,
@@ -718,7 +718,7 @@ class ZStoreSpec extends SparkSpec {
       element_at(typedlit(tenants), (col("id") % 4 + 1).cast("int"))
         .as("tenant"),
       (col("id") % 100).cast("double").as("ts"), col("id").as("rid"))
-    val rootD = Files.createTempDirectory("graft_zrangedict").toString + "/t"
+    val rootD = QueriesShared.tempDir("graft_zrangedict").toString + "/t"
     ZStore.init(docs, Seq("tenant", "ts"), rootD, bits = 4, bucketBits = 3)
     assert(ZStore.readRange(spark, rootD,
       Map("tenant" -> ("x", "z"))).count() == 0)
@@ -742,7 +742,7 @@ class ZStoreSpec extends SparkSpec {
     // 3600-row period — a shorter slice would stamp a narrow y
     // envelope and turn the next absorb into clamp-driven relayout
     // advice instead of the fragmentation case this stage pins.)
-    val rootH = Files.createTempDirectory("graft_zauto1").toString + "/t"
+    val rootH = QueriesShared.tempDir("graft_zauto1").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), rootH, bits = 4, bucketBits = 3)
     val rH = ZStore.autoMaintain(spark, rootH, minAbsorbed = 100)
     assert(rH.acted == "none" && rH.version.isEmpty, rH.toString)
@@ -757,7 +757,7 @@ class ZStoreSpec extends SparkSpec {
       when(col("id") % 20 === 0, ((col("id") / 20) % 15 + 1) * lit(100000.0))
         .otherwise((col("id") % 50).cast("double")).as("x"),
       col("id").as("rid"))
-    val rootD = Files.createTempDirectory("graft_zauto2").toString + "/t"
+    val rootD = QueriesShared.tempDir("graft_zauto2").toString + "/t"
     // the pile comes from the BODY (95% of rows in width bucket 0);
     // the relayout signal from a far-out-of-envelope absorbed batch
     ZStore.init(skewed, Seq("x"), rootD, bits = 4, bucketBits = 4)
@@ -776,7 +776,7 @@ class ZStoreSpec extends SparkSpec {
     assert(ZStore.read(spark, rootD).count() == 4200)
     // relayout withheld: folds fragmentation meanwhile (the streaming
     // sinks' pending-relayout fallback, batch form)
-    val rootW = Files.createTempDirectory("graft_zauto3").toString + "/t"
+    val rootW = QueriesShared.tempDir("graft_zauto3").toString + "/t"
     ZStore.init(grid(0, 1200), Seq("x", "y"), rootW, bits = 4, bucketBits = 3)
     val far = spark.range(300).select(
       (col("id") + 5000).cast("double").as("x"), lit(5.0).as("y"),
@@ -792,7 +792,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("id statistics: the locate scan prunes by manifest arithmetic; scattered stores degrade conservatively; null ids refuse") {
-    val root = Files.createTempDirectory("graft_zidstat").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zidstat").toString + "/t"
     // layout on the id itself: curve buckets are contiguous id
     // ranges — the monotone-id regime the pruning exists for
     val rows = spark.range(0, 8000).select(
@@ -851,13 +851,13 @@ class ZStoreSpec extends SparkSpec {
     // a fractional id is not an identity — init refuses by name
     val eI = intercept[IllegalArgumentException] {
       ZStore.init(rows, Seq("x"),
-        Files.createTempDirectory("graft_zidbad").toString + "/t",
+        QueriesShared.tempDir("graft_zidbad").toString + "/t",
         bits = 6, bucketBits = 4, idCol = Some("x"))
     }
     assert(eI.getMessage.contains("x"), eI.getMessage)
     // string identities stamp (parquet Binary footer stats) and prune
     // in UTF-8 byte order end to end
-    val rootS = Files.createTempDirectory("graft_zidstr").toString + "/t"
+    val rootS = QueriesShared.tempDir("graft_zidstr").toString + "/t"
     val srows = spark.range(0, 2000).select(
       col("id").cast("double").as("x"),
       format_string("doc%06d", col("id")).as("sid"))
@@ -878,7 +878,7 @@ class ZStoreSpec extends SparkSpec {
 
   test("readRange: temporal bounds rank through the epoch mirror, the residual predicate stays typed, numbers refuse") {
     import java.sql.Timestamp
-    val root = Files.createTempDirectory("graft_ztemp").toString + "/t"
+    val root = QueriesShared.tempDir("graft_ztemp").toString + "/t"
     val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
     val rows = spark.range(0, 5000).select(
       (lit(t0) + col("id") * 3600).cast("timestamp").as("ts"),
@@ -919,7 +919,7 @@ class ZStoreSpec extends SparkSpec {
     assert(viaInstant == got)
     // a DATE layout dimension takes LocalDate/Date bounds (ranked at
     // session-zone midnight, exactly as the layout ranked the data)
-    val rootD = Files.createTempDirectory("graft_zdate").toString + "/t"
+    val rootD = QueriesShared.tempDir("graft_zdate").toString + "/t"
     val drows = spark.range(0, 2000).select(
       date_add(lit("2024-01-01").cast("date"),
         (col("id") % 500).cast("int")).as("d"),
@@ -942,7 +942,7 @@ class ZStoreSpec extends SparkSpec {
   }
 
   test("autoMaintain and the streaming fold thread writeFanOut: folded buckets land as fanOut sub-range files") {
-    val root = Files.createTempDirectory("graft_zautofan").toString + "/t"
+    val root = QueriesShared.tempDir("graft_zautofan").toString + "/t"
     ZStore.init(grid(0, 3600), Seq("x", "y"), root, bits = 4, bucketBits = 3)
     ZStore.absorb(spark, root, grid(3600, 7200))
     ZStore.absorb(spark, root, grid(7200, 10800))
