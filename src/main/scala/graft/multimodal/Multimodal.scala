@@ -85,8 +85,7 @@ object Multimodal {
       .filter(col("__df") <= maxFrameDf)
       .select("frame_key")
     // lazy localCheckpoint: the capped key pipeline feeds the sizes agg
-    // AND both sides of the self-join — same shared-subtree shape as
-    // duplicateSpans (no cross-subtree CSE in one plan)
+    // AND both sides of the self-join (no cross-subtree CSE in one plan)
     val kept = keys.join(rare, Seq("frame_key")).localCheckpoint(false)
     val sizes = kept.groupBy("doc").agg(count(lit(1)).as("n"))
     val a = kept.select(col("doc").as("doc_a"), col("frame_key"))

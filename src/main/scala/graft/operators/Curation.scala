@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -378,64 +378,104 @@ object Curation {
     * document pair sharing a run of ≥ `minTokens` consecutive tokens,
     * report the maximal shared spans (start positions + token length).
     *
-    * Plan shape: positional k-grams (tight-loop UDF) → equality join
-    * on the GRAM → per-(pair, diagonal) islands via one window + one
-    * aggregation. Matching positions of a shared run all sit on one
-    * diagonal (pos_a − pos_b), so consecutive pos_a values collapse to
-    * a single span with the classic row_number gaps-and-islands trick.
-    * All exchanges are keyed on grams or (pair, diag) — never all-pairs.
+    * Plan shape: positional k-grams (tight-loop UDF) → ONE exchange
+    * keyed on the GRAM, whose tasks gather each gram's (doc, pos)
+    * postings and emit its cross-doc position pairs ([[gramPairs]]) →
+    * per-(pair, diagonal) islands via one window + one aggregation.
+    * Matching positions of a shared run all sit on one diagonal
+    * (pos_a − pos_b), so consecutive pos_a values collapse to a single
+    * span with the classic row_number gaps-and-islands trick. All
+    * exchanges are keyed on grams or (pair, diag) — never all-pairs.
+    * The gram and window exchanges are fixed-count repartitions at
+    * `defaultParallelism`: both feed CPU-heavy per-row work on few
+    * bytes, which AQE would otherwise coalesce into one task.
     *
     * `maxGramDf` drops grams appearing in more than that many docs
-    * before the join (boilerplate/stop-gram guard): a gram shared by m
-    * docs creates O(m²) candidate rows, so at corpus scale the cap is
-    * what bounds the join — same role as the band-width cap in the
-    * MinHash pipeline. Spans consisting ONLY of such ubiquitous grams
-    * are dropped; that is the documented trade (suffix dedup pipelines
-    * apply the same frequency cut). */
+    * (boilerplate/stop-gram guard): a gram shared by m docs creates
+    * O(m²) candidate rows, so at corpus scale the cap is what bounds
+    * the pairs — same role as the band-width cap in the MinHash
+    * pipeline — and a dropped gram's postings are never buffered past
+    * maxGramDf + 1 docs. Spans consisting ONLY of such ubiquitous
+    * grams are dropped; that is the documented trade (suffix dedup
+    * pipelines apply the same frequency cut). */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      k: Int, minTokens: Int,
                      maxGramDf: Int = 1000): DataFrame = {
     require(minTokens >= k, "a span must be at least one k-gram long")
-    val spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    // lazy localCheckpoint (round 21; re-adjudicated round 22): the
-    // gram rows feed BOTH the df census and the join back against it —
-    // two structurally different subtrees, so ReuseExchange cannot
-    // fire. Under AQE the two consumers race on duplicate posexplode
-    // passes (profiled: 12.3 s + 7.8 s copies of the gram stage), but
-    // an interleaved min-over-3 A/B measured the EAGER form slower on
-    // wall (d9 2.75 vs 2.31 s): on an under-utilized box the racing
-    // duplicate is wall-free while the eager job serializes. Kept
-    // lazy.
-    val grams = spread.select(col(idCol).cast("long").as("doc_id"),
+    spansOf(spread(df.select(col(idCol), col(textCol))),
+      idCol, textCol, k, minTokens, maxGramDf)
+  }
+
+  /** `df` over `defaultParallelism` partitions: single-file sources scan
+    * as ONE partition, and the per-row gram generation after it costs
+    * ∝ corpus, not partitions. */
+  private def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** [[duplicateSpans]] over an already-[[spread]] (id, text) frame. */
+  private def spansOf(docs: DataFrame, idCol: String, textCol: String,
+                      k: Int, minTokens: Int, maxGramDf: Int): DataFrame = {
+    val n = docs.sparkSession.sparkContext.defaultParallelism
+    val pairs = docs
+      .select(col(idCol).cast("long").as("doc_id"),
         posexplode(ngramsFast(col(textCol), k)).as(Seq("pos0", "gram")))
-      .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("gram"))
-      .localCheckpoint(false)
-    // df >= 2 (round 21): a gram seen in exactly one document cannot
-    // produce a cross-doc match (the self-join requires doc_a < doc_b),
-    // so keeping it only inflates the checkpointed frame and the join
-    // build — measured 255k -> 83k kept rows at sf0.1, identical spans
-    // (the d14 rare-window precedent; the DuckDB oracle keeps df=1
-    // grams and they contribute no pairs there either).
-    val rare = grams.groupBy("gram")
-      .agg(countDistinct(col("doc_id")).as("__df"))
-      .filter(col("__df") >= 2 && col("__df") <= maxGramDf)
-      .select("gram")
-    // lazy localCheckpoint: the gram+df-cap pipeline feeds BOTH sides
-    // of the self-join and would execute twice (no cross-subtree CSE);
-    // lazy per the same A/B as `grams` above.
-    val kept = grams.join(rare, Seq("gram")).localCheckpoint(false)
-    val a = kept.select(col("gram"), col("doc_id").as("doc_a"), col("pos").as("pos_a"))
-    val b = kept.select(col("gram"), col("doc_id").as("doc_b"), col("pos").as("pos_b"))
+      .filter(col("doc_id").isNotNull)
+      .select(col("gram"), col("doc_id"), (col("pos0") + 1).as("pos"))
+      .repartition(n, col("gram"))
+      .sortWithinPartitions("gram", "doc_id", "pos")
+      .mapPartitions(gramPairs(maxGramDf) _)(Encoders.tuple(
+        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaInt))
+      .toDF("doc_a", "doc_b", "pos_a", "pos_b")
+    // the (doc_a, doc_b, diag) repartition also satisfies the
+    // aggregation's grouping, so the islands cost this one exchange
     val w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    a.join(b, Seq("gram"))
-      .filter(col("doc_a") < col("doc_b"))
+    pairs
       .withColumn("diag", col("pos_a") - col("pos_b"))
+      .repartition(n, col("doc_a"), col("doc_b"), col("diag"))
       .withColumn("grp", col("pos_a") - row_number().over(w))
       .groupBy("doc_a", "doc_b", "diag", "grp")
       .agg(min("pos_a").as("start_a"), min("pos_b").as("start_b"),
         (count(lit(1)) + (k - 1)).cast("long").as("span_tokens"))
       .filter(col("span_tokens") >= minTokens)
       .select("doc_a", "doc_b", "start_a", "start_b", "span_tokens")
+  }
+
+  /** The (doc_a, doc_b, pos_a, pos_b) position pairs of the grams in
+    * `rows` — (gram, doc_id, pos) rows sorted by (gram, doc_id), so a
+    * gram's postings arrive together and its docs in order. A gram
+    * pairs every posting with every posting of a LATER doc (doc_a <
+    * doc_b; repeats inside one doc never pair with each other), and
+    * only when it occurs in 2..maxGramDf distinct docs: a df-1 gram
+    * has no cross-doc pair, and once a gram reaches maxGramDf + 1 docs
+    * its buffered postings are dropped and its remaining rows skipped. */
+  private def gramPairs(maxGramDf: Int)(rows: Iterator[Row])
+      : Iterator[(Long, Long, Int, Int)] = {
+    val in = rows.buffered
+    val docs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val poss = scala.collection.mutable.ArrayBuffer.empty[Int]
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val gram = in.head.getString(0)
+      docs.clear(); poss.clear()
+      var nDocs = 0
+      while (in.hasNext && in.head.getString(0) == gram) {
+        val r = in.next()
+        if (nDocs <= maxGramDf) {
+          val d = r.getLong(1)
+          if (docs.isEmpty || docs.last != d) nDocs += 1
+          if (nDocs > maxGramDf) { docs.clear(); poss.clear() }
+          else { docs += d; poss += r.getInt(2) }
+        }
+      }
+      if (nDocs < 2 || nDocs > maxGramDf) Iterator.empty
+      else {
+        val (ds, ps) = (docs.toArray, poss.toArray)
+        ds.indices.iterator.flatMap { i =>
+          var j = i + 1
+          while (j < ds.length && ds(j) == ds(i)) j += 1
+          (j until ds.length).iterator.map(jj => (ds(i), ds(jj), ps(i), ps(jj)))
+        }
+      }
+    }
   }
 
   /** Apply-side duplicate-SPAN dedup (d9's ACTION): emit the CLEANED
@@ -455,34 +495,37 @@ object Curation {
     * untouched docs keep their text byte-identical, so the transform
     * is surgical, not a corpus rewrite.
     *
-    * Scale shape: detection is [[duplicateSpans]]'s (gram-keyed, df-
+    * Scale shape: the (id, text) input is materialized ONCE (an eager
+    * localCheckpoint of its [[spread]]), and detection and the rebuild
+    * both read that copy, so the caller's lineage runs once however
+    * costly it is. Detection is [[duplicateSpans]]'s (gram-keyed, df-
     * capped, never all-pairs); everything after is bounded by the
     * AFFECTED set — intervals are span-pair-count rows, only affected
     * docs explode to tokens (left-semi prune BEFORE posexplode), the
     * interval anti-join broadcasts the merged-interval table, and the
-    * rebuild groups by doc id. A 100 TB corpus with sparse duplication
-    * pays the detector plus work proportional to the duplicated docs
-    * only.
+    * rebuild groups by doc id (a fixed-count repartition, like the
+    * detector's exchanges). A 100 TB corpus with sparse duplication
+    * pays the input copy and the detector plus work proportional to
+    * the duplicated docs only.
     *
     * Returns the FULL corpus: (idCol, textCol cleaned-or-original,
     * n_removed_tokens). */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                            k: Int, minTokens: Int,
                            maxGramDf: Int = 1000): DataFrame = {
-    val spans = duplicateSpans(df, idCol, textCol, k, minTokens, maxGramDf)
+    val input = spread(df.select(col(idCol), col(textCol))).localCheckpoint(true)
+    val spans = spansOf(input, idCol, textCol, k, minTokens, maxGramDf)
     // removal intervals for the LATER doc of each pair, 1-based
     // inclusive [s, e]; merge overlaps per doc so double-counted
     // tokens (a position covered by two pairs) are cut exactly once
     val iv = spans.select(col("doc_b").as("__mdoc"), col("start_b").as("__s"),
       (col("start_b") + col("span_tokens") - 1).as("__e"))
     val w = Window.partitionBy("__mdoc").orderBy("__s", "__e")
-    // EAGER localCheckpoint (round 22, was lazy): `merged` feeds BOTH
-    // the affected set and the broadcast anti-join below — without it
-    // the whole span DETECTOR (gram join + window) re-executes once per
-    // consumer (kept's checkpoint shields only the gram pipeline, not
-    // the join/window above it), and lazily the two consumers race on
-    // that re-execution. Merged intervals are span-pair-bounded and
-    // tiny, so the materialization is free.
+    // EAGER localCheckpoint: `merged` feeds BOTH the affected set and
+    // the broadcast anti-join below — without it the whole span
+    // DETECTOR (gram exchange + window) re-executes once per consumer,
+    // and lazily the two consumers race on that re-execution. Merged
+    // intervals are span-pair-bounded and tiny.
     val merged = iv
       .withColumn("__pmax",
         max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1)))
@@ -495,10 +538,14 @@ object Curation {
       .localCheckpoint(true)
     val affected = merged.select(col("__mdoc").as("__adoc")).distinct()
     // token surgery ONLY for affected docs: semi-join prune first, so
-    // the posexplode never runs over the untouched corpus
-    val affToks = df
+    // the posexplode never runs over the untouched corpus. The affected
+    // ids broadcast (no more rows than `merged`, broadcast below): a
+    // shuffled semi-join would move the whole input by id, and its
+    // id partitioning would stand in for the rebuild's repartition
+    // below, which AQE then coalesces into one task.
+    val affToks = input
       .select(col(idCol).cast("long").as("__doc"), col(textCol).as("__t"))
-      .join(affected, col("__doc") === col("__adoc"), "left_semi")
+      .join(broadcast(affected), col("__doc") === col("__adoc"), "left_semi")
       .select(col("__doc"),
         posexplode(split(trim(col("__t")), Ws)).as(Seq("__p0", "__tok")))
       .select(col("__doc"), (col("__p0") + 1).as("__pos"), col("__tok"))
@@ -506,7 +553,11 @@ object Curation {
       col("__doc") === col("__mdoc") &&
         col("__pos") >= col("__s") && col("__pos") <= col("__e"),
       "left_anti")
-    val rebuilt = kept.groupBy("__doc")
+    // fixed-count repartition, as the detector's: the per-doc sort and
+    // re-join is CPU work on few bytes, which AQE would coalesce into
+    // one task
+    val rebuilt = kept.repartition(df.sparkSession.sparkContext.defaultParallelism, col("__doc"))
+      .groupBy("__doc")
       .agg(
         array_join(transform(
           array_sort(collect_list(struct(col("__pos"), col("__tok")))),
@@ -520,7 +571,7 @@ object Curation {
       .select(col("__adoc"),
         coalesce(col("__ctext"), lit("")).as("__ctext"),
         coalesce(col("__nkept"), lit(0L)).as("__nkept"))
-    df.withColumn("__ntok", size(split(trim(col(textCol)), Ws)).cast("long"))
+    input.withColumn("__ntok", size(split(trim(col(textCol)), Ws)).cast("long"))
       .join(cleaned, col(idCol).cast("long") === col("__adoc"), "left")
       .select(col(idCol),
         when(col("__adoc").isNotNull, col("__ctext"))

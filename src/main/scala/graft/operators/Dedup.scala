@@ -76,12 +76,13 @@ object Dedup {
     * whole shingle pipeline re-executes per subtree (measured 3× at
     * sf0.1). persist (not localCheckpoint) keeps LINEAGE: on executor
     * loss a lost block recomputes from the scan, where a
-    * localCheckpoint's truncated lineage would fail the job. NOTE:
-    * Dataset.persist entries are pinned by the session CacheManager
-    * (the ContextCleaner does NOT free them while the session lives) —
-    * callers that run many dedup pipelines in one session should
-    * `spark.catalog.clearCache()` between them, as Bench and Verify
-    * both do. `doPersist = false` skips the materialization for
+    * localCheckpoint's truncated lineage would fail the job. Dataset.
+    * persist entries are pinned by the session CacheManager (the
+    * ContextCleaner does NOT free them while the session lives), so
+    * every caller owns the frame's lifetime: it computes its result
+    * eagerly (a localCheckpoint of the pairs, or the index write) and
+    * unpersists the frame before returning — no entry outlives the
+    * call. `doPersist = false` skips the materialization for
     * single-consumer plans (e.g. [[writeBandIndex]], whose bands are
     * derived in one pass and never re-read). */
   private def shinglePipeline(df: DataFrame, idCol: String, textCol: String,
@@ -92,16 +93,16 @@ object Dedup {
         explode(TextAnalysis.shinglesFast(col("__text"), shingleK)).as("s"))
     if (doPersist) {
       rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // NOTE (round 22): persist() alone caches blocks only as jobs
-      // happen to compute them, so the concurrent consumer subtrees
-      // (df census, band/posting joins, verify sides) race and
-      // recompute the explode (profiled on d14: five ~7-13 s copies,
-      // 50.8 s executor total for a 3.3 s query). An upfront count()
-      // eliminates the duplicates but measured SLOWER on wall clock at
-      // sf0.1 (d2 1.67 vs 1.14 s, d4 2.04 vs 1.37 s, d14 2.35 vs
-      // 2.20 s, min-of-3 interleaved): duplicate concurrent compute is
-      // free on an under-utilized box while the serial count adds its
-      // full wall cost. So the materialization stays lazy.
+      // NOTE: persist() caches blocks only as jobs compute them. Where
+      // the first job reads the rows in one stage, that job fills the
+      // cache and the later consumers read it ([[minhashNearDups]]:
+      // the band-table count). Where the first job reads them in
+      // several concurrent stages (df census, posting joins, verify
+      // sides), those stages race and recompute the explode (profiled
+      // on d14: five ~7-13 s copies, 50.8 s executor total for a 3.3 s
+      // query); a separate upfront count() removed the copies but
+      // measured SLOWER on wall clock at sf0.1 in round 22 (d14 2.35
+      // vs 2.20 s, min-of-3 interleaved), so no form adds one.
     }
     rows
   }
@@ -135,7 +136,7 @@ object Dedup {
         }: _*)).as(Seq("band_idx", "band_sig")))
   }
 
-  /** Corpus-row threshold for [[minhashNearDups]]' verify-shape gate
+  /** Shingled-doc threshold for [[minhashNearDups]]' verify-shape gate
     * (see the note in its body). Round-22 interleaved min-over-3 A/B on
     * a quiet box: 5k docs (sf0.1) collect_set 0.95–1.12 s vs join-count
     * 1.17–1.42 s; 20k docs (4×-replicated, dup-heavy) join-count
@@ -165,7 +166,13 @@ object Dedup {
     * contract [[minhashNearDupsAgainst]] states). `threshold` must be
     * in (0, 1]: threshold = 0 (previously accepted, returning
     * zero-intersection pairs at jaccard 0.0) now fails loudly — the
-    * join-count verify structurally cannot emit inter = 0 pairs. */
+    * join-count verify structurally cannot emit inter = 0 pairs.
+    *
+    * The verified pairs are computed EAGERLY (localCheckpoint; they
+    * are candidate-bounded and small by the collision math above) so
+    * the persisted shingle rows and band table are released before
+    * returning, as in the `Against` forms: no CacheManager entry
+    * outlives the call. */
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bandRows: Int = 4,
@@ -173,30 +180,36 @@ object Dedup {
     require(numHashes % bandRows == 0, "bands must tile the signature")
     require(threshold > 0 && threshold <= 1,
       s"threshold $threshold must be in (0, 1]")
+    val shingleRows = shinglePipeline(df, idCol, textCol, shingleK)
+    // The band table materializes once, eagerly: both sides of the
+    // self-join are alias projections of it, which defeat exchange
+    // reuse, so a lazy table ran its stage once per side. Its count
+    // also fills the shingle cache in one stage, before any consumer
+    // of the shingle rows runs.
+    val bands = minhashBandsOf(shingleRows, numHashes, bandRows)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shingledDocs = bands.count() / (numHashes / bandRows)
     // Verify-shape gate (round 22, closing the r21 verdict's task #1):
     // the round-21 join-count verify REGRESSED at sf0.1 in both bench
     // windows (d2 1.18→1.37 builder / 1.89 driver) while winning at a
     // 4×-replicated dup-heavy corpus — the corpus-wide collect_set is
     // an in-memory aggregate over the persisted shingle frame and beats
     // the extra join chain while the corpus is small, and loses once
-    // ObjectHashAggregate arrays for every doc outgrow it. Gate by a
-    // bounded limit-probe (the components()/batchPrelude idiom — never
-    // a full count of a big input): small corpus → collect_set verify,
-    // large → join-count. Both verifies are oracle-bit-identical (each
-    // was hash-green across rounds 20/21; integer-valued counts divide
-    // identically in IEEE doubles), so the gate can never change rows.
-    val useJoinCount =
-      df.select(col(idCol)).limit(JoinCountVerifyMinDocs.toInt + 1).count() >
-        JoinCountVerifyMinDocs
-    val shingleRows = shinglePipeline(df, idCol, textCol, shingleK)
-    val bands = minhashBandsOf(shingleRows, numHashes, bandRows)
+    // ObjectHashAggregate arrays for every doc outgrow it. The gate
+    // reads the band table's row count (docs with a shingle × bands),
+    // which the materialization above computes anyway: small corpus →
+    // collect_set verify, large → join-count. Both verifies are
+    // oracle-bit-identical (each was hash-green across rounds 20/21;
+    // integer-valued counts divide identically in IEEE doubles), so
+    // the gate can never change rows.
+    val useJoinCount = shingledDocs > JoinCountVerifyMinDocs
     val cand = bands.select(col("band_idx"), col("band_sig"), col("doc_id").as("doc_a"))
       .join(bands.select(col("band_idx"), col("band_sig"), col("doc_id").as("doc_b")),
         Seq("band_idx", "band_sig"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    if (!useJoinCount) {
+    val verified = if (!useJoinCount) {
       // Small-corpus exact verify (the round-20 shape): one
       // explode+join+collect_list pass reassembles each candidate
       // pair's two shingle sets from the persisted shingle frame
@@ -233,6 +246,10 @@ object Dedup {
         .filter(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
     }
+    val out = verified.localCheckpoint(true)
+    bands.unpersist()
+    shingleRows.unpersist()
+    out
   }
 
   /** Exact-verify reassembly shared by [[minhashNearDups]]' small-
@@ -685,7 +702,7 @@ object Dedup {
     // lazy localCheckpoint: the assignment pass (the k-way argmin over
     // the corpus — the dominant per-row cost) feeds BOTH sides of the
     // self-join below and would execute twice (no cross-subtree CSE;
-    // the duplicateSpans/frameDedupPairs shared-subtree pattern)
+    // the frameDedupPairs shared-subtree pattern)
     val assigned = Ann.ivfAssignBig(
         df.select(col(idCol), col(embCol)), embCol, idCol,
         centroids, cidCol, cvecCol)
@@ -729,10 +746,8 @@ object Dedup {
     * alone contribute n²/4 candidate pairs and zero containment
     * signal, while a genuinely nested pair shares MANY rare shingles
     * (every shingle of the nested doc that isn't global boilerplate).
-    * Exact set intersection then runs on candidate pairs only, with
-    * the same single-subtree reassembly as [[minhashNearDups]] —
-    * containment under min is pair-symmetric, so the collect_list
-    * order is harmless.
+    * Exact |A∩B| then runs on the candidate pairs that survive an
+    * upper-bound prune, by join-count (see the notes in the body).
     *
     * Candidate-recall contract: a pair is missed only if the smaller
     * doc has fewer than `minShared` shingles rarer than `maxDf` —
@@ -742,6 +757,10 @@ object Dedup {
     * `idCol` values must be UNIQUE (round 22, per the r21 advice): the
     * join-count exact verify equates row counts with set sizes, so a
     * duplicated id would inflate the intersection and size terms.
+    *
+    * The pairs are computed EAGERLY (localCheckpoint; the prune leaves
+    * few) and the persisted shingle rows are released before
+    * returning, as in [[minhashNearDups]].
     *
     * Reference behavior: dedup families in SURVEY.md §2.7; containment
     * as distinct from resemblance per Broder, "On the resemblance and
@@ -813,7 +832,7 @@ object Dedup {
     // pair) so the pruned subtree is referenced exactly once. Every
     // pruned pair shares >= minShared >= 1 shingles, so the inner join
     // cannot drop a surviving pair.
-    pruned
+    val out = pruned
       .join(shingleRows.select(col("doc_id").as("doc_a"), col("s")), Seq("doc_a"))
       .join(shingleRows.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
       .groupBy("doc_a", "doc_b", "__minsz")
@@ -826,6 +845,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         col("__minsz").cast("long").as("n_small"),
         round(col("containment"), 6).as("containment"))
+      .localCheckpoint(true)
+    shingleRows.unpersist()
+    out
   }
 
   /** Incremental containment: which docs of an incoming batch are

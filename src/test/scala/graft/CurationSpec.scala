@@ -146,6 +146,28 @@ class CurationSpec extends SparkSpec {
     assert(got == Seq((0L, 1L, 5, 5, 6L)))
   }
 
+  test("duplicateSpans: in-doc repeats, df = maxGramDf kept, df = maxGramDf + 1 and df 1 dropped") {
+    val df = Seq(
+      (0L, "p q p q z0"),  // "p q" twice in one doc; "q p", "q z0": df 1
+      (1L, "p q y1"),
+      (2L, "k m a2"),      // "k m": df 3 = maxGramDf, kept
+      (3L, "b3 k m"),
+      (4L, "k m"),
+      (5L, "d e"),         // "d e": df 4 = maxGramDf + 1, dropped
+      (6L, "d e"),
+      (7L, "d e"),
+      (8L, "d e")
+    ).toDF("doc_id", "text")
+    val got = Curation.duplicateSpans(df, "doc_id", "text", k = 2,
+        minTokens = 2, maxGramDf = 3)
+      .orderBy("doc_a", "doc_b", "start_a", "start_b")
+      .as[(Long, Long, Int, Int, Long)].collect().toSeq
+    // each occurrence of "p q" in doc 0 pairs with doc 1's; the two
+    // occurrences never pair with each other
+    assert(got == Seq((0L, 1L, 1, 1, 2L), (0L, 1L, 3, 1, 2L),
+      (2L, 3L, 1, 2, 2L), (2L, 4L, 1, 1, 2L), (3L, 4L, 2, 1, 2L)))
+  }
+
   test("removeDuplicateSpans cuts doc_b's span keep-first, keeps others byte-identical") {
     val df = Seq(
       (0L, "a b c d e f g h i j"),
@@ -178,6 +200,20 @@ class CurationSpec extends SparkSpec {
       (0L, "a b c d e f g h", 0L),
       (1L, "c d e f g h i j", 0L),
       (2L, "", 8L)))
+  }
+
+  test("removeDuplicateSpans evaluates each input row once") {
+    val rows = spark.sparkContext.longAccumulator("span input rows")
+    val touch = udf { (t: String) => rows.add(1); t }
+    val df = Seq(
+      (0L, "a b c d e f g h i j"),
+      (1L, "x x c d e f g h i j"),
+      (2L, "k l m n o")
+    ).toDF("doc_id", "text").select(col("doc_id"), touch(col("text")).as("text"))
+    val got = Curation.removeDuplicateSpans(df, "doc_id", "text",
+      k = 3, minTokens = 8).collect()
+    assert(got.length == 3)
+    assert(rows.value == 3L, s"${rows.value} input rows evaluated for 3")
   }
 
   test("mixtureSample: weighted thresholds, weight-0 exclusion, nested in the budget") {

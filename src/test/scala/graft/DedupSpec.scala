@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** A1 keep-first dedup + the corpus-scale dedup family (SURVEY.md §2.6,
   * north-star dedup operators). */
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with ExecutedPlans {
   import spark.implicits._
 
   test("keepFirst: earlier stage wins, then ascending distance") {
@@ -51,6 +51,55 @@ class DedupSpec extends SparkSpec {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))      // identical: jaccard 1.0
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L)) // unrelated never verified in
+  }
+
+  test("minhashNearDups: past JoinCountVerifyMinDocs shingled docs the join-count verify runs, row-identical") {
+    // JoinCountVerifyMinDocs + 1 shingled docs: every 50th doc has a
+    // near copy (jaccard 3/5) and every 100th an exact one; the rest,
+    // and the last doc (a group head with no copy), pair with nothing.
+    // Without the last doc the corpus sits AT the threshold and takes
+    // the collect_set verify.
+    val n = Dedup.JoinCountVerifyMinDocs.toInt + 1
+    val docs = (0 until n).map { i =>
+      val b = i - i % 50
+      val text =
+        if (i % 50 == 1) s"a$b b$b c$b d$b e$b g$b"
+        else if (i % 100 == 2) s"a$b b$b c$b d$b e$b f$b"
+        else if (i % 50 == 0) s"a$b b$b c$b d$b e$b f$b"
+        else s"u$i v$i w$i x$i"
+      (i.toLong, text)
+    }
+    def run(df: org.apache.spark.sql.DataFrame) = plansOf(
+      Dedup.minhashNearDups(df, "doc_id", "text")
+        .as[(Long, Long, Double)].collect().toSet)
+    val (big, bigPlans) = run(docs.toDF("doc_id", "text"))
+    val (small, smallPlans) = run(docs.init.toDF("doc_id", "text"))
+    assert(bigPlans.nonEmpty && !bigPlans.exists(_.toString.contains("collect_set")),
+      s"join-count verify expected:\n${bigPlans.mkString("\n")}")
+    assert(smallPlans.exists(_.toString.contains("collect_set")),
+      s"collect_set verify expected:\n${smallPlans.mkString("\n")}")
+    assert(big.exists(_._3 == 1.0) && big.exists(_._3 == 0.6))
+    assert(big == small)
+  }
+
+  test("minhashNearDups and containmentPairs release what they persist") {
+    val df = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta epsilon"),
+        (3L, "one two three four five"))
+      .toDF("doc_id", "text")
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    Seq[() => org.apache.spark.sql.DataFrame](
+      () => Dedup.minhashNearDups(df, "doc_id", "text"),
+      () => Dedup.containmentPairs(df, "doc_id", "text", minShared = 1)
+    ).foreach { op =>
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val pairs = op()
+      // no CacheManager entry outlives the call; of the RDDs, at most
+      // the pairs' checkpoint does (other suites' lazy checkpoints aside)
+      assert(cacheManager.isEmpty)
+      assert(spark.sparkContext.getPersistentRDDs.size <= before + 1)
+      assert(pairs.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+    }
   }
 
   test("minhashNearDupsAgainst equals the self-join restricted to cross-side pairs") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * waiting for a bench diff. Runs at sf0.001 — planning cost only
   * (plus the bounded driver-side collects some entries perform by
   * design). */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with ExecutedPlans {
   private val sf = "/root/testdata/sf0.001"
 
   test("no harness query plans a CartesianProduct (every cross join broadcasts)") {
@@ -278,13 +278,60 @@ class PlanAuditSpec extends SparkSpec {
     // The df-capped inverted index keeps every stage equi-keyed: a
     // BroadcastNestedLoopJoin (corpus side broadcast) or a
     // SinglePartition exchange would mean candidate generation
-    // degenerated into an all-pairs or single-node shape.
-    val plan = SparkEntry.queries("d14_containment")(spark, sf)
-      .queryExecution.executedPlan.toString
+    // degenerated into an all-pairs or single-node shape. The pairs
+    // are an eager checkpoint, so audit every plan the query runs.
+    val (_, plans) = plansOf(SparkEntry.queries("d14_containment")(spark, sf).collect())
+    val plan = plans.mkString("\n")
+    assert(plans.length >= 2, s"the pair checkpoint and the query:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"containment must never broadcast a corpus-sized side:\n$plan")
     assert(!plan.contains("Exchange SinglePartition"),
       s"no stage of containment may collapse to one partition:\n$plan")
+  }
+
+  test("d9/d16 span detector: one gram-keyed exchange, no gram join, fixed-count repartitions") {
+    // The detector gathers each gram's postings in ONE gram-keyed
+    // exchange (no df census joined back, no gram self-join), and its
+    // gram and island-window exchanges are fixed-count repartitions:
+    // a session's AQE coalescing (parallelismFirst=false) would
+    // otherwise shrink the CPU-heavy stages after them to one task. d9
+    // returns the detector's plan; d16 runs it inside its eager
+    // interval checkpoint, so audit every plan d16 runs.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Walk extends AdaptiveSparkPlanHelper
+    def keyedOn(plans: Seq[SparkPlan], names: String*) = plans.flatMap(p => Walk.collect(p) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map {
+          case a: Attribute => a.name
+          case other => other.toString
+        } == names
+        case _ => false
+      }) => e
+    })
+    val d9 = Seq(SparkEntry.queries("d9_dup_spans")(spark, sf).queryExecution.executedPlan)
+    val (_, d16) = plansOf(SparkEntry.queries("d16_span_dedup_apply")(spark, sf).collect())
+    Seq("d9" -> d9, "d16" -> d16).foreach { case (q, plans) =>
+      val text = plans.mkString("\n")
+      val gram = keyedOn(plans, "gram")
+      assert(gram.length == 1, s"$q: one gram-keyed exchange, saw ${gram.length}:\n$text")
+      val window = keyedOn(plans, "doc_a", "doc_b", "diag")
+      assert(window.length == 1, s"$q: one island-window exchange, saw ${window.length}:\n$text")
+      assert((gram ++ window).forall(_.shuffleOrigin == REPARTITION_BY_NUM),
+        s"$q: the gram and window exchanges must be fixed-count repartitions:\n$text")
+      val gramJoins = plans.flatMap(p => Walk.collect(p) {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "gram")) => j
+      })
+      assert(gramJoins.isEmpty, s"$q: no join on the gram:\n$text")
+    }
+    // d16's rebuild (a per-doc sort and re-join) is pinned the same way
+    val rebuild = keyedOn(d16, "__doc")
+    assert(rebuild.length == 1 && rebuild.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"d16: the rebuild's exchange must be a fixed-count repartition:\n${d16.mkString("\n")}")
   }
 
   test("batch serving plans get the map-side WindowGroupLimit partial") {
